@@ -47,18 +47,6 @@ def split_inserts_updates(
     return inserts, updates
 
 
-def flag_updates(df: DataFrame, flag: str = "Y", col_name: str = "Is_updated") -> DataFrame:
-    """Attach the CDC propagation flag (P6 input, main.py:128-135)."""
-    return df.withColumn(col_name, F.lit(flag))
-
-
-def union_splits(inserts: DataFrame, updates: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """SO2: union of the insert/update streams with a stable column
-    order; by-name union is safer than the reference's positional one."""
-    out = inserts.unionByName(updates)
-    return out.select(*columns) if columns else out
-
-
 def keyed_changes(
     before: DataFrame,
     after: DataFrame,

@@ -7,8 +7,8 @@ Reference lifecycle (``/root/reference/main.py``):
   manual 4-filter pivot (106-114) → cast manifest (119-135) →
   7-way left-join star assembly (213-229) → Delta write partitioned by
   Year/Month (235) → incremental: snapshot subtract (89-93) +
-  yesterday split (128-135, 201-208) + 8 MERGEs (138-199) →
-  enterprise/DW upsert with surrogate keys (252-304).
+  yesterday split (128-135, 201-208) + 8 MERGEs (138-199) + append
+  (208) → enterprise/DW upsert with surrogate keys (252-304).
 
 Differences by design (each justified in SURVEY.md §7):
 - pivot is ONE ``groupBy().pivot()`` (single shuffle) instead of four
@@ -24,12 +24,19 @@ Differences by design (each justified in SURVEY.md §7):
   today against yesterday;
 - the ``main.py:203`` ``!=``-vs-``==`` inconsistency for
   excess_mortality inserts is normalized to ``==`` (insert = the
-  yesterday slice), matching the other four sources' semantics.
+  yesterday slice), matching the other four sources' semantics;
+- the incremental day's 8 MERGEs and append are one Spark plan and one
+  curated commit: the per-source updates are broadcast left joins onto
+  the touched Year partitions, the new day's slice is unioned in, and
+  the result replaces just those partitions, so the snapshots are
+  scanned and diffed once per day rather than once per commit.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -179,6 +186,47 @@ def assemble_metrics_fact(
     )
 
 
+def apply_updates(
+    curated: DataFrame,
+    update_frames: list[tuple[list[str], DataFrame]],
+    run_date: dt.date,
+    run_ts: dt.datetime | None = None,
+) -> DataFrame:
+    """The update-only MERGEs of main.py:138-199 as one lazy plan over
+    the curated fact, restricted to the Year partitions that the update
+    keys and the anchor day (``run_date`` - 1, where the insert slice
+    lands) touch.
+
+    Each ``(cols, frame)`` is a source keyed by (CodeISO, Date), joined
+    in by broadcast. Its values carry the full refresh's null → 0 fill,
+    so NULL after the join means the source has no row for that key
+    (for the pivoted hospitalizations: no row for that indicator). A
+    column takes its source's value only where that row is present;
+    ``_TF_LAST_UPDATE`` and ``Is_updated='Y'`` are set where any source
+    matched.
+    """
+    keys = ["CodeISO", "Date"]
+    ts = F.lit(run_ts).cast("timestamp") if run_ts is not None else F.current_timestamp()
+    anchor = F.date_sub(F.lit(run_date).cast("date"), 1)
+    years = curated.sparkSession.range(1).select(F.year(anchor).alias("Year"))
+    for _, frame in update_frames:
+        years = years.union(frame.select(F.year("Date").alias("Year")))
+    out = curated.join(F.broadcast(years.distinct()), "Year", "left_semi")
+
+    new = {c: f"__new_{c}" for cols, _ in update_frames for c in cols}
+    for cols, frame in update_frames:
+        src = frame.select(*keys, *[F.col(c).alias(new[c]) for c in cols])
+        out = out.join(F.broadcast(src), keys, "left")
+    matched = functools.reduce(operator.or_, [F.col(n).isNotNull() for n in new.values()])
+    return out.withColumns(
+        {
+            **{c: F.coalesce(F.col(n), F.col(c)) for c, n in new.items()},
+            "_TF_LAST_UPDATE": F.when(matched, ts).otherwise(F.col("_TF_LAST_UPDATE")),
+            "Is_updated": F.when(matched, F.lit("Y")).otherwise(F.col("Is_updated")),
+        }
+    ).drop(*new.values())
+
+
 @dataclass
 class CovidPipeline:
     """Entry points A/B/C (SURVEY.md §3) over parquet-backed targets."""
@@ -223,27 +271,18 @@ class CovidPipeline:
         run_date: dt.date,
         run_ts: dt.datetime | None = None,
     ) -> None:
-        """FULLMODE='N' (main.py:89-208): snapshot diff per source;
-        prior-date corrections MERGE-update the curated fact; the
-        yesterday slice re-runs the star assembly and appends."""
+        """FULLMODE='N' (main.py:89-208) as one Spark plan and one
+        curated commit. Each source is diffed against yesterday's
+        snapshot. Corrections to prior dates update the curated fact
+        (:func:`apply_updates`); the yesterday slice goes through the
+        star assembly, with surrogate keys continuing past the current
+        max. The two streams are unioned and committed by ``overwrite``,
+        which on the Year-partitioned curated table replaces only the
+        partitions present: those the corrections and the new day
+        touch."""
         today = typed_sources(load_sources(self.spark, raw_today))
         yesterday = typed_sources(load_sources(self.spark, raw_yesterday))
         changed = {n: snapshot_diff(today[n], yesterday[n]) for n in today}
-
-        # Update stream: one update-only merge per source, mirroring the
-        # reference's 8 per-source MERGE blocks (main.py:138-199) but
-        # against the assembled fact columns.
-        mapping = countries_mapping(today["owid_covid_data"])
-        update_frames = self._update_frames(changed, mapping, run_date)
-        for cols, frame in update_frames:
-            src = frame.withColumn("_TF_LAST_UPDATE", F.lit(run_ts).cast("timestamp") if run_ts else F.current_timestamp())
-            src = src.withColumn("Is_updated", F.lit("Y"))
-            self.curated.merge(
-                src,
-                on=["CodeISO", "Date"],
-                update_cols=[*cols, "_TF_LAST_UPDATE", "Is_updated"],
-                when_not_matched_insert=False,
-            )
 
         # Insert stream: the yesterday slice through the full assembly.
         inserts_typed = {}
@@ -261,17 +300,31 @@ class CovidPipeline:
             key_col="_SK_METRICS_FACT",
             start_from=start,
             mode="distributed",
-        ).withColumn("Is_updated", F.lit("Y"))
-        self.curated.append(fact_new.select(*FACT_ORDER))
+        ).withColumn("Is_updated", F.lit("Y")).select(*FACT_ORDER)
+
+        if self.curated.exists():
+            mapping = countries_mapping(today["owid_covid_data"])
+            updated = apply_updates(
+                self.curated.read(), self._update_frames(changed, mapping, run_date), run_date, run_ts
+            )
+            fact_new = updated.select(*FACT_ORDER).unionByName(fact_new)
+        self.curated.overwrite(fact_new)
 
     def _update_frames(self, changed, mapping, run_date):
         """(update_cols, frame keyed by CodeISO/Date) per source —
-        the declarative equivalent of main.py:138-189's merge specs."""
+        the declarative equivalent of main.py:138-189's merge specs.
+
+        Changed rows get the full refresh's null → 0 fill before they
+        are shaped, so a value is NULL only where its source has no
+        row. The hospitalizations pivot is filled per long row, so each
+        indicator stays its own source, as the reference's per-indicator
+        MERGEs are: a correction to one indicator updates that column
+        only."""
         out = []
         anchor = F.date_sub(F.lit(run_date).cast("date"), 1)
 
         def updates_of(df):
-            return df.filter(F.col("date") != anchor)
+            return df.filter(F.col("date") != anchor).na.fill(0)
 
         owid = updates_of(changed["owid_covid_data"]).withColumnsRenamed(
             {

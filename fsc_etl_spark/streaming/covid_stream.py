@@ -5,8 +5,9 @@ The reference emulates a stream in batch: daily snapshot diff + MERGE
 an actual stream: a drop directory receives owid-shaped correction
 CSVs (each file = one upstream revision batch); a file-source
 readStream casts them through the same manifest and a ``foreachBatch``
-sink applies the same update-only MERGE the batch pipeline uses —
-exactly-once per epoch against the idempotent merge target.
+sink applies them as an update-only MERGE — the batch pipeline's owid
+update semantics, including the null → 0 fill — exactly-once per epoch
+against the idempotent merge target.
 
 At scale this is the production topology: object-store notifications
 feed micro-batches, the merge shuffles only on the (CodeISO, Date)
@@ -73,11 +74,12 @@ def run_streaming_corrections(
     MERGEs to the curated fact table; returns its final state.
 
     Matches the batch semantics of ``CovidPipeline.run_incremental``'s
-    update stream: matched (CodeISO, Date) rows get the six owid
-    metric columns plus the audit timestamp and ``Is_updated='Y'``;
-    unmatched correction rows are DROPPED (whenMatchedUpdate only,
-    main.py:191-199). Within a micro-batch, later files win via the
-    max-timestamp dedup before the merge.
+    owid updates: matched (CodeISO, Date) rows get the six owid
+    metric columns, with the full refresh's null → 0 fill, plus the
+    audit timestamp and ``Is_updated='Y'``; unmatched correction rows
+    are DROPPED (whenMatchedUpdate only, main.py:191-199). Within a
+    micro-batch, later files win via the max-timestamp dedup before
+    the merge.
     """
     corrections = stream_owid_corrections(spark, drop_dir)
 
@@ -97,6 +99,7 @@ def run_streaming_corrections(
         src = (
             ranked.filter(F.col("__rn") == 1)
             .drop("__rn")
+            .na.fill(0, OWID_UPDATE_COLS)
             .withColumn("_TF_LAST_UPDATE", F.lit(run_ts).cast("timestamp"))
             .withColumn("Is_updated", F.lit("Y"))
         )

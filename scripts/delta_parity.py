@@ -2,7 +2,8 @@
 
 Runs the same op sequence (overwrite, upsert merge, update-only merge,
 delta-col-conditioned merge, schema-evolving merge, append,
-update_flag, delete_all) against BOTH targets and asserts the visible
+update_flag, delete_all, and on a partitioned table a one-partition
+overwrite) against BOTH targets and asserts the visible
 table state matches after every step — proving the parquet stand-in
 that the rest of the suite exercises is semantics-identical to the
 real Delta path (VERDICT r2 "What's missing" #1).
@@ -23,6 +24,7 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Row, SparkSession
+from pyspark.sql import functions as F
 
 
 def build_delta_session() -> SparkSession:
@@ -64,10 +66,10 @@ def run_matrix(spark: SparkSession) -> None:
     def df(rows):
         return spark.createDataFrame(rows)
 
-    def both(opname, fn):
-        fn(delta_t)
-        fn(parq_t)
-        d, p = snapshot(delta_t), snapshot(parq_t)
+    def both(opname, fn, targets=(delta_t, parq_t)):
+        for t in targets:
+            fn(t)
+        d, p = (snapshot(t) for t in targets)
         assert d == p, f"{opname}: delta={sorted(d)[:5]} parquet={sorted(p)[:5]}"
         print(f"OK {opname}: {len(d)} rows identical")
 
@@ -95,7 +97,7 @@ def run_matrix(spark: SparkSession) -> None:
     both("append", lambda t: t.append(df([r(9, "z", 1)])))
     both(
         "update_flag",
-        lambda t: t.update_flag("v", "flagged", "k = 9"),
+        lambda t: t.update_flag("v", "flagged", F.expr("k = 9")),
     )
     r2 = Row("k", "v", "ts", "extra")
     both(
@@ -106,9 +108,27 @@ def run_matrix(spark: SparkSession) -> None:
     )
     for t in (delta_t, parq_t):
         t.delete_all()
-    assert delta_t.read().count() == 0 or not delta_t.exists()
-    assert parq_t.read().count() == 0 or not parq_t.exists()
+    assert not delta_t.exists() or delta_t.read().count() == 0
+    assert not parq_t.exists() or parq_t.read().count() == 0
     print("OK delete_all: both empty")
+
+    # Partitioned overwrite replaces only the partitions in the frame.
+    parts = (
+        DeltaMergeTarget(spark, f"{base}/delta_ptbl", partition_cols=["day"]),
+        ParquetMergeTarget(spark, f"{base}/parq_ptbl", partition_cols=["day"]),
+    )
+    rp = Row("k", "day", "v")
+    both(
+        "partitioned_overwrite",
+        lambda t: t.overwrite(df([rp(1, "d1", "a"), rp(2, "d2", "b")])),
+        parts,
+    )
+    both(
+        "partitioned_overwrite_one_partition",
+        lambda t: t.overwrite(df([rp(3, "d1", "c")])),
+        parts,
+    )
+    assert snapshot(parts[1]) == {("d1", "3", "c"), ("d2", "2", "b")}
 
 
 def main() -> int:

@@ -2,15 +2,19 @@
 
 Full-mode output is compared cell-for-cell against a DuckDB golden
 that independently re-implements the Metrics_Fact contract
-(FIXTURES.md §2) from the same fixture CSVs. Incremental mode is
-checked behaviorally: corrections update in place, the new day
-appends with continuing surrogate keys, and a no-change rerun is a
-no-op (idempotency property, SURVEY §5 item 4).
+(FIXTURES.md §2) from the same fixture CSVs. One incremental day on
+yesterday's refresh must reproduce the same golden over today's
+snapshot. Incremental mode is also checked behaviorally: corrections
+update in place, the new day appends with continuing surrogate keys,
+and a no-change rerun is a no-op (idempotency property, SURVEY §5
+item 4).
 """
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
+import os
 
 import duckdb
 import pytest
@@ -129,6 +133,105 @@ def test_full_mode_matches_golden(spark, pipeline, fixture_dirs):
     _csv_views(con, fixture_dirs["today"])
     try:
         compare_with_oracle(fact, con, GOLDEN_SQL, name="metrics_fact_full")
+    finally:
+        con.close()
+
+
+def test_incremental_day_matches_golden_in_one_commit(spark, pipeline, fixture_dirs, monkeypatch):
+    """A full refresh of yesterday's snapshot plus one incremental day
+    equals a full refresh of today's snapshot on every column but the
+    surrogate key and the two audit columns, and the day is a single
+    commit of the curated table."""
+    pipeline.run_full(fixture_dirs["yesterday"], run_ts=RUN_TS)
+    commits = []
+    for method in ("merge", "overwrite", "append", "update_flag", "delete_all"):
+        inner = getattr(pipeline.curated, method)
+
+        def counted(*args, _inner=inner, _method=method, **kwargs):
+            commits.append(_method)
+            return _inner(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline.curated, method, counted)
+    pipeline.run_incremental(
+        fixture_dirs["today"], fixture_dirs["yesterday"], run_date=RUN_DATE, run_ts=RUN_TS
+    )
+    monkeypatch.undo()
+    assert commits == ["overwrite"]
+
+    skip = ["_SK_METRICS_FACT", "_TF_LAST_UPDATE", "Is_updated"]
+    con = duckdb.connect()
+    _csv_views(con, fixture_dirs["today"])
+    try:
+        compare_with_oracle(
+            pipeline.curated.read().drop(*skip),
+            con,
+            f"SELECT * EXCLUDE ({', '.join(skip)}) FROM ({GOLDEN_SQL})",
+            name="metrics_fact_incremental",
+        )
+    finally:
+        con.close()
+
+
+def _multi_year_snapshots(root: str) -> dict[str, str]:
+    """The fixture snapshots spread over three Years: January's days
+    move to 2019, February's to 2020, and the new day (1 March) stays
+    in 2021. Yesterday's corrections are kept only in 2020, so the
+    2019 rows are the same in both snapshots."""
+    dirs = generate(root)
+    anchor = (RUN_DATE - dt.timedelta(days=1)).isoformat()
+    moved = {"2021-01": "2019", "2021-02": "2020"}
+
+    def read(path):
+        with open(path, newline="") as f:
+            return list(csv.reader(f))
+
+    def move(rows, i):
+        for r in rows:
+            r[i] = moved.get(r[i][:7], r[i][:4]) + r[i][4:]
+        return rows
+
+    for name in ("owid_covid_data", "vaccinations", "hospitalizations", "excess_mortality", "full_data"):
+        paths = [os.path.join(dirs[d], f"{name}.csv") for d in ("today", "yesterday")]
+        (header, *today), (_, *yday) = map(read, paths)
+        i = header.index("date")
+        kept = [r for r in today if r[i] != anchor]
+        assert [r[i] for r in kept] == [r[i] for r in yday]
+        yday = [t if t[i].startswith("2021-01") else y for t, y in zip(kept, yday)]
+        for path, rows in zip(paths, (today, yday)):
+            with open(path, "w", newline="") as f:
+                csv.writer(f).writerows([header, *move(rows, i)])
+    return dirs
+
+
+def test_incremental_day_rewrites_only_touched_years(spark, tmp_path):
+    """On a curated lake spanning several Years, a day whose corrections
+    land in 2020 and whose new slice lands in 2021 leaves the 2019
+    partition's files as they were, and the table still equals the
+    full refresh of today's snapshot."""
+    dirs = _multi_year_snapshots(str(tmp_path / "raw"))
+    root = tmp_path / "lake"
+    pipe = covid.CovidPipeline(
+        spark, curated_root=str(root / "curated"), enterprise_root=str(root / "enterprise")
+    )
+    pipe.run_full(dirs["yesterday"], run_ts=RUN_TS)
+    untouched = _partition_files(pipe.curated_root, "Year=2019")
+
+    pipe.run_incremental(dirs["today"], dirs["yesterday"], run_date=RUN_DATE, run_ts=RUN_TS)
+
+    assert _partition_files(pipe.curated_root, "Year=2019") == untouched
+    fact = pipe.curated.read()
+    flagged = {r.Year: r["count"] for r in fact.filter(F.col("Is_updated") == "Y").groupBy("Year").count().collect()}
+    assert set(flagged) == {2020, 2021} and flagged[2020] > 0
+    skip = ["_SK_METRICS_FACT", "_TF_LAST_UPDATE", "Is_updated"]
+    con = duckdb.connect()
+    _csv_views(con, dirs["today"])
+    try:
+        compare_with_oracle(
+            fact.drop(*skip),
+            con,
+            f"SELECT * EXCLUDE ({', '.join(skip)}) FROM ({GOLDEN_SQL})",
+            name="metrics_fact_multi_year",
+        )
     finally:
         con.close()
 
@@ -268,3 +371,32 @@ def test_partitioned_merge_new_partition_inserts(spark, tmp_path):
     assert os.path.isdir(os.path.join(root, "current", "day=d3"))
     got = sorted((r.id, r.day, r.v) for r in tgt.read().collect())
     assert got == [(1, "d1", 10), (2, "d3", 30)]
+
+
+def _partition_files(root: str, part: str) -> list[tuple]:
+    """(name, inode, mtime) of every file in one partition directory of
+    a parquet merge target."""
+    pdir = os.path.join(root, "current", part)
+    return sorted(
+        (f, os.stat(os.path.join(pdir, f)).st_ino, os.stat(os.path.join(pdir, f)).st_mtime_ns)
+        for f in os.listdir(pdir)
+    )
+
+
+def test_partitioned_overwrite_replaces_only_its_partitions(spark, tmp_path):
+    """Dynamic partition overwrite: a frame holding one partition
+    replaces that partition and leaves every other partition's files
+    on disk as they were (same inode and mtime)."""
+    from fsc_etl_spark.operators.merge import ParquetMergeTarget
+
+    root = str(tmp_path / "ptbl3")
+    tgt = ParquetMergeTarget(spark, root, partition_cols=["day"])
+    tgt.overwrite(
+        spark.createDataFrame([(1, "d1", 10), (2, "d2", 20)], "id int, day string, v int")
+    )
+    untouched_before = _partition_files(root, "day=d2")
+    tgt.overwrite(spark.createDataFrame([(3, "d1", 30)], "id int, day string, v int"))
+
+    assert _partition_files(root, "day=d2") == untouched_before, "untouched partition rewritten"
+    got = sorted((r.id, r.day, r.v) for r in tgt.read().collect())
+    assert got == [(2, "d2", 20), (3, "d1", 30)]

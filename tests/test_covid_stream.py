@@ -99,3 +99,30 @@ def test_streaming_corrections_merge_and_checkpoint(spark, curated):
     run_streaming_corrections(spark, drop_dir, curated, STREAM_TS, checkpoint_dir=ckpt)
     assert _metric(curated, "FRA", target_date, "Population")["Population"] == 888
     assert curated.read().count() == n_before
+
+
+def test_streaming_correction_fills_empty_fields_with_zero(spark, curated):
+    """An empty or non-numeric field in a streamed correction becomes 0,
+    the full refresh's null fill, never a NULL in the curated fact."""
+    base = tempfile.mkdtemp(prefix="fsc_covid_stream_fill_")
+    drop_dir = os.path.join(base, "drop")
+    os.makedirs(drop_dir)
+    row = curated.read().filter(F.col("CodeISO") == "DEU").select("Date").orderBy("Date").first()
+    target_date = row["Date"].isoformat()
+
+    _drop_file(
+        drop_dir,
+        "corr.csv",
+        [["Germany", "DEU", target_date, "42.0", "", "9", "9", "N/A", "456"]],
+    )
+    run_streaming_corrections(
+        spark, drop_dir, curated, STREAM_TS, checkpoint_dir=os.path.join(base, "ckpt")
+    )
+
+    got = (
+        curated.read()
+        .filter((F.col("CodeISO") == "DEU") & (F.col("Date") == F.lit(target_date).cast("date")))
+        .select("Stringency_index", "Population", "New_tests", "Total_tests", "Is_updated")
+        .collect()
+    )
+    assert [tuple(r) for r in got] == [(42.0, 0, 0, 456, "Y")]
