@@ -129,18 +129,3 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
     )
 
-
-def word_shingles(col: Column, n: int) -> Column:
-    """Word n-gram shingles as an array<string> (space-joined).
-
-    Convenience single-expression form (one tokenization per shingle
-    via slice); hot paths should materialize ``tokens(col)`` in a
-    projection and use :func:`shingles_from_tokens` (see its
-    docstring for why).
-    """
-    toks = tokens(col)
-    count = F.size(toks) - F.lit(n - 1)
-    positions = F.when(count >= 1, F.sequence(F.lit(1), count)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(positions, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fsc_etl_spark.functions.text import fingerprint_md5, shingles_from_tokens, tokens
+from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism
 
 
 def exact_dedup_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -42,10 +43,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     fp = docs.withColumn("fp", fingerprint_md5(F.col(text_col)))
     keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
     return fp.join(keep, ["fp", id_col], "left_semi").drop("fp")
-
-
-def _salted_min(shingle_col: Column, salt: int) -> Column:
-    return F.min(F.md5(F.concat(F.lit(f"s{salt}:"), shingle_col)))
 
 
 def _paired_min_exprs(k: int) -> list[Column]:
@@ -157,28 +154,10 @@ def lsh_candidate_pairs(
         long.groupBy("band_idx", "band_sig")
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
-        # round-robin to full shuffle parallelism before the expansion
-        # (r14): AQE coalesces the small bucket aggregate by BYTES and
-        # the quadratic-in-bucket explosion behind it is invisible to
-        # that estimate (the _basket_pairs lesson; a keyed repartition
-        # would be pruned as redundant with the groupBy partitioning)
-        .repartition(
-            int(signatures.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        )
+        .repartition(shuffle_parallelism(signatures))
     )
-    # in-task i<j expansion of the SORTED bucket (r14): emits each
-    # bucket's C(k,2) ordered pairs directly — the former two-step
-    # explode materialised all k² combinations and filtered half away
     return (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), y -> "
-                    "struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
+        buckets.select(expand_pairs("ids", "id_a", "id_b").alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
     )

@@ -27,10 +27,10 @@ merge is provided twice:
 
 Scale: the merge is ONE full outer-shaped pass expressed as
 anti-join ∪ source-resolved rows, both shuffled on the merge key. With
-``partition_cols`` the wrapper reads, merges and rewrites only the
-partitions the source touches, and ``overwrite`` replaces only the
-partitions present in its frame; finer, file-level pruning inside a
-partition is left to a real table format.
+``partition_cols`` the wrapper's ``merge`` reads, merges and rewrites
+only the partitions the source touches; ``overwrite`` and ``append``
+rewrite the whole table. Finer, file-level pruning inside a partition
+is left to a real table format.
 """
 
 from __future__ import annotations
@@ -160,16 +160,12 @@ class ParquetMergeTarget:
     (``col=value/...``) and :meth:`merge` rewrites ONLY the partitions
     the source touches (the file-level pruning a real table format
     gives you) — at scale a daily merge then costs O(touched
-    partitions), not O(table). On an existing partitioned table,
-    :meth:`overwrite` is Spark's dynamic partition overwrite: it
-    replaces the partitions present in the frame and leaves every other
-    partition's files as they are, so a full reset is
-    :meth:`delete_all` then :meth:`overwrite`. Constraints, documented
-    not enforced: a key's partition value must be stable across merges
-    and partition overwrites (true for date-partitioned facts merged on
-    (date, id)), and partition column types should round-trip
-    directory encoding (strings/ints; timestamps re-infer as dates on
-    read).
+    partitions), not O(table). :meth:`overwrite` replaces the whole
+    table. Constraints, documented not enforced: a key's partition
+    value must be stable across merges (true for date-partitioned
+    facts merged on (date, id)), and partition column types should
+    round-trip directory encoding (strings/ints; timestamps re-infer
+    as dates on read).
     """
 
     def __init__(
@@ -378,10 +374,7 @@ class ParquetMergeTarget:
         shutil.rmtree(staged, ignore_errors=True)
 
     def overwrite(self, df: DataFrame) -> None:
-        if self.partition_cols and self.exists():
-            self._swap_partitions(df)
-        else:
-            self._commit(df, op="overwrite")
+        self._commit(df, op="overwrite")
 
     def append(self, df: DataFrame) -> None:
         if self.exists():
@@ -558,22 +551,13 @@ class DeltaMergeTarget:  # pragma: no cover — needs delta-spark jars
         return self.spark.read.format("delta").load(self.root)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Replace the table; on a partitioned table only the
-        partitions present in ``df`` (``partitionOverwriteMode=dynamic``).
-
-        Delta rejects ``overwriteSchema`` in dynamic mode, so a
-        partitioned overwrite keeps the table's schema. ``delete_all``
-        keeps the Delta table (and its schema), so a full refresh that
-        changes a partitioned table's schema fails here, where the
-        parquet stand-in, whose ``delete_all`` removes the table,
-        accepts it."""
-        writer = df.write.format("delta").mode("overwrite")
+        writer = (
+            df.write.format("delta")
+            .mode("overwrite")
+            .option("overwriteSchema", "true")
+        )
         if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols).option(
-                "partitionOverwriteMode", "dynamic"
-            )
-        else:
-            writer = writer.option("overwriteSchema", "true")
+            writer = writer.partitionBy(*self.partition_cols)
         writer.save(self.root)
 
     def append(self, df: DataFrame) -> None:

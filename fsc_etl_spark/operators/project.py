@@ -26,8 +26,3 @@ def select_alias(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     The reference uses this to disambiguate join keys up front
     (``iso_code`` → ``iso_code_vaccs`` etc., main.py:76-79)."""
     return df.select(*[F.col(src).alias(dst) for src, dst in mapping.items()])
-
-
-def drop_columns(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """Column drop (P8); silently ignores absent names like the reference."""
-    return df.drop(*columns)

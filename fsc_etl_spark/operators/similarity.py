@@ -146,10 +146,6 @@ def lit_bigint_array(vals) -> Column:
     return F.expr("array(" + ",".join(f"{int(v)}L" for v in vals) + ")")
 
 
-def _pq_lit_arr(vals: list[float]) -> Column:
-    return lit_double_array(vals)
-
-
 def _argmin_code(
     vec: Column, centers: list[list[float]], norm: Column | None = None
 ) -> Column:

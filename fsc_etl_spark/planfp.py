@@ -1,4 +1,4 @@
-"""Normalized physical-plan fingerprints (VERDICT r11 #7).
+"""Normalized physical-plan fingerprints.
 
 The repo asserts plan properties piecemeal (no-exchange bucketed join,
 DPP expression, bounded global windows — tests/test_plan_quality.py).
@@ -29,21 +29,22 @@ build time and return a checkpointed frame whose visible plan is a
 ``Scan ExistingRDD``; their fingerprint covers the final readout
 stage only, and says so via the ``scan_existing_rdd`` marker — the
 per-round plan shape for those is pinned by their dedicated plan
-tests instead. ONE-SHOT eager builders (a single lazy plan with an
-eager-checkpoint-then-unpersist cache-release tail: basket_pair_
-support, graph_adamic_adar, graph_common_neighbors, pmi_top_bigrams,
-graph_assortativity) consult :func:`plan_only_mode` and skip the tail
-under :func:`plan_only`, exposing the full pre-checkpoint plan to the
-gate (ADVICE r12 — the tail had collapsed basket_pair_support's
-fingerprint to ``Scan:ExistingRDD``, blinding the gate to broadcast
-flips or extra exchanges in the real plan). The tail only releases a
-cache after the result is materialized; skipping it cannot change the
-fingerprinted plan, and the fingerprint context never executes the
-frame.
+tests instead. ONE-SHOT eager builders (a single lazy plan whose
+small result is materialised so its caches can be released) end in
+:func:`checkpoint_and_release`, the only reader of the flag. Those are
+basket_pair_support, basket_triple_support, assoc_rules_parts,
+pmi_top_bigrams, graph_common_neighbors, graph_assortativity,
+community_modularity and graph_conductance. Under :func:`plan_only`
+the helper skips the tail and returns the full pre-checkpoint plan;
+otherwise the checkpoint would collapse the fingerprint to
+``Scan:ExistingRDD`` and hide broadcast flips or extra exchanges in
+the real plan. The tail only releases caches after the result is
+materialized, so skipping it cannot change the fingerprinted plan,
+and the fingerprint context never executes the frame.
 
 Both halves of the gate (scripts/gen_plan_fingerprints.py and
 tests/test_plan_fingerprints.py) take their session config and
-fixture dir from THIS module (ADVICE r12): ``GATE_SHUFFLE_PARTITIONS``
+fixture dir from THIS module: ``GATE_SHUFFLE_PARTITIONS``
 pins the one config axis the two previously disagreed on (generator
 on session defaults = 32, gate on the conftest fixture's 8 — the
 fingerprints happened to be partition-invariant, but a future
@@ -78,13 +79,6 @@ def gate_sf_dir() -> str:
 _PLAN_ONLY = False
 
 
-def plan_only_mode() -> bool:
-    """True inside :func:`plan_only` — one-shot eager builders skip
-    their eager-checkpoint-then-unpersist cache-release tail so the
-    fingerprint sees the real plan, not ``Scan:ExistingRDD``."""
-    return _PLAN_ONLY
-
-
 @contextmanager
 def plan_only():
     """Fingerprint context: builders return lazy, un-checkpointed
@@ -98,6 +92,24 @@ def plan_only():
         yield
     finally:
         _PLAN_ONLY = prev
+
+
+def checkpoint_and_release(out: DataFrame, *cached: DataFrame) -> DataFrame:
+    """The cache-release tail of a one-shot eager builder: materialise
+    the small result ``out`` with an eager local checkpoint, then
+    unpersist ``cached``, the frames its plan read from cache.
+
+    Inside :func:`plan_only` it returns ``out`` unchanged and leaves
+    the caches persisted, so the fingerprint sees the real plan, not
+    ``Scan:ExistingRDD``.
+    """
+    if _PLAN_ONLY:
+        return out
+    out = out.localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    return out
+
 
 #: Strip the explain tree-drawing prefix: spaces, ':', '+', '-', '*',
 #: and the whole-stage-codegen marker '*(N) '.

@@ -14,7 +14,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fsc_etl_spark import planfp
 from fsc_etl_spark.operators.joins import asof_join, range_join
+from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
 
@@ -626,34 +628,19 @@ def assoc_rules_parts(spark: SparkSession, sf: str) -> DataFrame:
     builds its co-occurrence edges from.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # Per-basket collect_set over the RAW lineitem stream (r14; the
-    # basket_pair_support rework): set semantics absorb the former
-    # distinct — which, unpersisted, re-ran once per consumer — and
-    # the pair self-join becomes an in-task expansion of the sorted
-    # set. The basket frame is read three times (n_orders, item
-    # supports, pair expansion) — persist, released after the bounded
-    # top-20 materialises below.
+    # One sorted part set per basket, as in basket_pair_support. The
+    # basket frame is read three times (n_orders, item supports, pair
+    # expansion), so it is persisted and released once the bounded
+    # top-20 is materialised.
     bsk = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        # full-parallelism cache + expansion (r14; the
-        # basket_pair_support lesson — AQE would coalesce the small
-        # set exchange and pin the cache nearly serial; keyed
-        # repartition would be pruned as redundant with the groupBy)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(shuffle_parallelism(li))
         .persist()
     )
     n_orders = bsk.agg(F.count(F.lit(1)).cast("long").alias("__n"))
     pair_support = (
-        bsk.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps) - i - 1), y -> "
-                    "struct(x AS x, y AS y))))"
-                )
-            ).alias("p")
-        )
+        bsk.select(expand_pairs("ps", "x", "y").alias("p"))
         .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
         .agg(F.count(F.lit(1)).cast("long").alias("s_xy"))
     )
@@ -663,8 +650,7 @@ def assoc_rules_parts(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("s_item"))
     )
     rules = (
-        # both directed rules in ONE pass over the pair aggregate (the
-        # union form re-ran the whole pair expansion per branch — r14)
+        # both directed rules in ONE pass over the pair aggregate
         pair_support.select(
             F.explode(
                 F.array(
@@ -698,16 +684,7 @@ def assoc_rules_parts(spark: SparkSession, sf: str) -> DataFrame:
         F.col("antecedent").asc(),
         F.col("consequent").asc(),
     ).limit(20)
-    from fsc_etl_spark import planfp
-
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate
-    # eager-checkpoint-then-unpersist (the basket_pair_support
-    # pattern): the top-20 is tiny, so materialising it here lets the
-    # basket cache release instead of leaking in a long session
-    out = out.localCheckpoint(eager=True)
-    bsk.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, bsk)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

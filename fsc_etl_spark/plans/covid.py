@@ -27,9 +27,9 @@ Differences by design (each justified in SURVEY.md §7):
   yesterday slice), matching the other four sources' semantics;
 - the incremental day's 8 MERGEs and append are one Spark plan and one
   curated commit: the per-source updates are broadcast left joins onto
-  the touched Year partitions, the new day's slice is unioned in, and
-  the result replaces just those partitions, so the snapshots are
-  scanned and diffed once per day rather than once per commit.
+  the curated fact, the new day's slice is unioned in, and the result
+  overwrites the table, so the snapshots are scanned and diffed once
+  per day rather than once per commit.
 """
 
 from __future__ import annotations
@@ -189,13 +189,10 @@ def assemble_metrics_fact(
 def apply_updates(
     curated: DataFrame,
     update_frames: list[tuple[list[str], DataFrame]],
-    run_date: dt.date,
     run_ts: dt.datetime | None = None,
 ) -> DataFrame:
     """The update-only MERGEs of main.py:138-199 as one lazy plan over
-    the curated fact, restricted to the Year partitions that the update
-    keys and the anchor day (``run_date`` - 1, where the insert slice
-    lands) touch.
+    the curated fact.
 
     Each ``(cols, frame)`` is a source keyed by (CodeISO, Date), joined
     in by broadcast. Its values carry the full refresh's null → 0 fill,
@@ -207,12 +204,7 @@ def apply_updates(
     """
     keys = ["CodeISO", "Date"]
     ts = F.lit(run_ts).cast("timestamp") if run_ts is not None else F.current_timestamp()
-    anchor = F.date_sub(F.lit(run_date).cast("date"), 1)
-    years = curated.sparkSession.range(1).select(F.year(anchor).alias("Year"))
-    for _, frame in update_frames:
-        years = years.union(frame.select(F.year("Date").alias("Year")))
-    out = curated.join(F.broadcast(years.distinct()), "Year", "left_semi")
-
+    out = curated
     new = {c: f"__new_{c}" for cols, _ in update_frames for c in cols}
     for cols, frame in update_frames:
         src = frame.select(*keys, *[F.col(c).alias(new[c]) for c in cols])
@@ -276,10 +268,8 @@ class CovidPipeline:
         snapshot. Corrections to prior dates update the curated fact
         (:func:`apply_updates`); the yesterday slice goes through the
         star assembly, with surrogate keys continuing past the current
-        max. The two streams are unioned and committed by ``overwrite``,
-        which on the Year-partitioned curated table replaces only the
-        partitions present: those the corrections and the new day
-        touch."""
+        max. The two streams are unioned and committed by one full-table
+        ``overwrite``."""
         today = typed_sources(load_sources(self.spark, raw_today))
         yesterday = typed_sources(load_sources(self.spark, raw_yesterday))
         changed = {n: snapshot_diff(today[n], yesterday[n]) for n in today}
@@ -305,7 +295,7 @@ class CovidPipeline:
         if self.curated.exists():
             mapping = countries_mapping(today["owid_covid_data"])
             updated = apply_updates(
-                self.curated.read(), self._update_frames(changed, mapping, run_date), run_date, run_ts
+                self.curated.read(), self._update_frames(changed, mapping, run_date), run_ts
             )
             fact_new = updated.select(*FACT_ORDER).unionByName(fact_new)
         self.curated.overwrite(fact_new)

@@ -16,7 +16,7 @@ bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark.operators.graph import (
@@ -31,6 +31,7 @@ from fsc_etl_spark.operators.graph import (
     triangle_counts_per_node,
     triangle_stats,
 )
+from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism, sym_edges
 from fsc_etl_spark import planfp
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
@@ -38,67 +39,48 @@ _PR_ITERS = 5
 _TOPK = 20
 
 
-def _shuffle_parallelism(df: DataFrame) -> int:
-    """The session's configured shuffle-partition count — the same
-    scale-parameterised knob session.get_spark sizes to the cluster
-    (r14). Used to pin bounded-set expansion stages at full
-    parallelism where AQE's byte-based coalescing would serialise
-    them (set rows are small; their explosion is not)."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _sym_edges(cp: DataFrame, a: str, b: str, w: str | None = None) -> DataFrame:
-    """Symmetrising explode: both edge directions in ONE pass over the
-    (usually persisted) canonical pair list ``cp`` (r14). The former
-    union-of-two-selects form scheduled 2x tasks that raced each other
-    against the still-unbuilt cache partitions — each pass either
-    recomputed the pair build or blocked on the sibling's block lock.
-    Same rows, same structural-uniqueness argument (the two directions
-    cannot collide when a != b per row), so ``assume_distinct``
-    call-site justifications carry over unchanged.
-    """
-    cols = lambda x, y: [F.col(x).alias("src"), F.col(y).alias("dst")] + (
-        [F.col(w).alias("w")] if w else []
-    )
-    return cp.select(
-        F.explode(F.array(F.struct(*cols(a, b)), F.struct(*cols(b, a)))).alias("e")
-    ).select("e.*")
-
-
 def _basket_pairs(df: DataFrame, key: str, item: str) -> DataFrame:
-    """Within-basket co-occurrence pairs ``(lo < hi)`` via per-basket
-    ``collect_set`` + in-task pair expansion (r14, guide §2.4): one
-    keyed aggregation replaces the basket self-join — the explode
-    emits each basket's C(k,2) pairs map-side with intra-basket
-    duplicates already removed by the set semantics. Per-basket work
-    is bounded by the basket size cap (TPC-H baskets are <= 7 lines;
-    a real catalog applies an item cap upstream), so the expansion is
-    never the skew term. Output is NOT globally distinct — callers
-    dedup across baskets exactly as they did after the self-join.
+    """Within-basket co-occurrence pairs ``(lo < hi)`` from one
+    per-basket ``collect_set`` expanded in-task (operators/pairs).
+    Per-basket work is bounded by the basket size (TPC-H baskets are
+    <= 7 lines; a real catalog applies an item cap upstream). Output
+    is NOT globally distinct: callers dedup across baskets.
     """
     return (
         df.groupBy(key)
         .agg(F.array_sort(F.collect_set(item)).alias("ps"))
-        # Round-robin to the session's full shuffle parallelism: AQE
-        # coalesces the small aggregated-set exchange (a few MB) down
-        # to 1-2 partitions, and the C(k,2) explosion — invisible to
-        # AQE's byte estimate — would then run nearly serial (r14:
-        # measured 2-task expansion stages writing 8.7M rows). A keyed
-        # repartition is pruned as redundant with the groupBy
-        # partitioning, so round-robin with the scale-parameterised
-        # partition count is the form that survives the planner; the
-        # extra exchange moves only the bounded set rows.
-        .repartition(_shuffle_parallelism(df))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps) - i - 1), y -> "
-                    "struct(x AS lo, y AS hi))))"
-                )
-            ).alias("p")
-        )
+        .repartition(shuffle_parallelism(df))
+        .select(expand_pairs("ps", "lo", "hi").alias("p"))
         .select("p.lo", "p.hi")
+    )
+
+
+def _copurchase(spark: SparkSession, sf: str) -> DataFrame:
+    """Distinct customer—part purchase pairs ``(cnode, pnode)``,
+    persisted; the caller unpersists. Nodes are BIGINT: 2·custkey for
+    customers, 2·partkey+1 for parts, so the two overlapping TPC-H key
+    spaces stay distinct nodes and iterative builders shuffle longs,
+    not formatted strings (:func:`render_node` turns them back into
+    labels)."""
+    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            (F.col("o_custkey") * 2).alias("cnode"),
+            (F.col("l_partkey") * 2 + 1).alias("pnode"),
+        )
+        .distinct()
+        .persist()
+    )
+
+
+def render_node(name: str) -> Column:
+    """The 'c<custkey>' / 'p<partkey>' label of a BIGINT node column."""
+    c = F.col(name)
+    return F.concat(
+        F.when(c % 2 == 0, F.lit("c")).otherwise(F.lit("p")),
+        F.shiftright(c, 1).cast("string"),
     )
 
 
@@ -116,18 +98,8 @@ def pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     strings — and render to the 'c…'/'p…' labels only in the final
     20-row projection, where the oracle's string tiebreak applies.
     """
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        .persist()  # the symmetrising union + degree build re-read cp
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     # symmetrised graph -> every node has in-edges, so the dense
     # fast path (no per-iteration nodes join) is exact here; the
     # parity-keyed symmetrising explode of distinct cp pairs is
@@ -137,12 +109,8 @@ def pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
         edges, iters=_PR_ITERS, every_node_has_inflow=True, assume_distinct=True
     )
     cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
-    label = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string")))
     return (
-        ranks.select(label.alias("node"), "rank")
+        ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
         .limit(_TOPK)
     )
@@ -167,7 +135,7 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .persist()
     )
-    edges = _sym_edges(cp, "cnode", "pnode", w="w")
+    edges = sym_edges(cp, "cnode", "pnode", w="w")
     # validate=False: (src, dst) uniqueness is structural (groupBy
     # above) and weights are bounded lineitem multiplicities, so the
     # validation aggregate would re-prove an invariant the plan
@@ -180,12 +148,8 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf: str) -> DataFrame:
         validate=False,
     )
     cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
-    label = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string")))
     return (
-        ranks.select(label.alias("node"), "rank")
+        ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
         .limit(_TOPK)
     )
@@ -203,8 +167,7 @@ def triangle_count_coparts(spark: SparkSession, sf: str) -> DataFrame:
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     # raw basket pairs (lo < hi, intra-basket deduped): triangle_stats
-    # canonicalises + distincts internally, so the former query-side
-    # distinct was a second full pair shuffle for nothing (r14)
+    # canonicalises + distincts internally
     pairs = _basket_pairs(li, "l_orderkey", "l_partkey").select(
         F.col("lo").alias("src"), F.col("hi").alias("dst")
     )
@@ -251,8 +214,7 @@ def ktruss_coparts(spark: SparkSession, sf: str) -> DataFrame:
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     # raw basket pairs: ktruss_support canonicalises + distincts
-    # internally (r14 — same double-distinct removal as the triangle
-    # census)
+    # internally
     pairs = _basket_pairs(li, "l_orderkey", "l_partkey").select(
         F.col("lo").alias("src"), F.col("hi").alias("dst")
     )
@@ -289,34 +251,21 @@ def graph_common_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     so per-block pair work is ≤ fanout² no matter how the corpus
     grows; degrees and common counts are two keyed aggregations, the
     degree table joins the count-REDUCED pair aggregate (not the raw
-    pair stream — see the r11 probe note below), and the top-k is a
-    TakeOrdered heap, never a global sort. All integers end to end."""
+    pair stream), and the top-k is a TakeOrdered heap, never a global
+    sort. All integers end to end."""
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # Per-part collect_set over the RAW incidence stream (r14): the set
-    # semantics absorb the former (cust, part) distinct, the fanout cap
-    # becomes a size() filter on the aggregated row (no count-agg +
-    # semi join back), and the a⋈b pair self-join becomes an in-task
-    # expansion of the sorted set — one keyed aggregation replaces
-    # three exchanges + one join. Per-part work stays bounded by the
-    # fanout cap (≤ C(50,2) pairs), the same stop-word posture as
-    # before; the r11 probe note still applies — the degree table joins
-    # the count-REDUCED pair aggregate, never the raw pair stream.
+    # One sorted customer set per part: the set absorbs the (cust,
+    # part) distinct and the fanout cap is a size() filter. The
+    # round-robin comes before the persist so the cache itself, not
+    # only the expansion, runs at full parallelism.
     parts = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy(F.col("l_partkey").alias("part"))
         .agg(F.array_sort(F.collect_set("o_custkey")).alias("cs"))
         .filter(F.size("cs") <= _CN_MAX_PART_FANOUT)
-        # round-robin before persisting: AQE coalesces the small set
-        # exchange to 1-2 partitions, which would pin the CACHE at
-        # that parallelism and run the C(50,2)-per-part expansion
-        # nearly serial (r14, the _basket_pairs lesson — a keyed
-        # repartition is pruned as redundant with the groupBy)
-        .repartition(_shuffle_parallelism(li))
-        # read twice (degree build + pair expansion) — persist so the
-        # orders⋈lineitem aggregation runs once; released via the
-        # eager-checkpoint-then-unpersist tail below.
-        .persist()
+        .repartition(shuffle_parallelism(li))
+        .persist()  # read twice: degree build and pair expansion
     )
     deg = (
         parts.select(F.explode("cs").alias("cust"))
@@ -324,15 +273,7 @@ def graph_common_neighbors(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     common = (
-        parts.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(cs, (x, i) -> "
-                    "transform(slice(cs, i + 2, size(cs) - i - 1), y -> "
-                    "struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
+        parts.select(expand_pairs("cs", "id_a", "id_b").alias("p"))
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
@@ -361,17 +302,7 @@ def graph_common_neighbors(spark: SparkSession, sf: str) -> DataFrame:
         )
         .limit(_CN_TOPK)
     )
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate (ADVICE r12)
-    # eager-checkpoint-then-unpersist (the assortativity pattern,
-    # ADVICE r11): the top-50 is tiny, so materialising it here
-    # lets the incidence cache release immediately instead of
-    # leaking in a long driver session that never clearCache()s —
-    # the in-session inflation that flagged CN 19.9x in the r12
-    # full-surface probe before isolated rechecks refuted it.
-    out = out.localCheckpoint(eager=True)
-    parts.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, parts)
 
 
 # Adamic–Adar weights as PINNED INTEGER LITERALS (the pinned-codebook
@@ -417,38 +348,23 @@ def graph_adamic_adar(spark: SparkSession, sf: str) -> DataFrame:
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     warr = F.array(*[F.lit(w) for w in _AA_WEIGHTS])
-    # Per-part collect_set over the RAW incidence stream (r14; the
-    # graph_common_neighbors rework): set semantics absorb the
-    # (cust, part) distinct, the fanout band becomes a size() filter,
-    # n_cust IS the set size (so the weight lookup stays a map-side
-    # literal-array index), and the a⋈b pair self-join becomes an
-    # in-task expansion of the sorted set — one keyed aggregation
-    # replaces two exchanges + one join. Per-part pair work stays
-    # bounded by the fanout cap; no persist needed — the expansion is
-    # the only consumer.
+    # One sorted customer set per part, as in graph_common_neighbors;
+    # n_cust is the set size, so the weight is a map-side index into
+    # the literal array. The expansion is the only consumer: nothing
+    # is persisted, so there is no cache to release.
     parts = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .groupBy(F.col("l_partkey").alias("part"))
         .agg(F.array_sort(F.collect_set("o_custkey")).alias("cs"))
         .filter((F.size("cs") >= 2) & (F.size("cs") <= _CN_MAX_PART_FANOUT))
-        # full-parallelism expansion (r14, the _basket_pairs lesson)
-        .repartition(_shuffle_parallelism(li))
+        .repartition(shuffle_parallelism(li))
         .select(
             "cs",
             F.element_at(warr, (F.size("cs") - 1).cast("int")).alias("w"),
         )
     )
     out = (
-        parts.select(
-            "w",
-            F.explode(
-                F.expr(
-                    "flatten(transform(cs, (x, i) -> "
-                    "transform(slice(cs, i + 2, size(cs) - i - 1), y -> "
-                    "struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p"),
-        )
+        parts.select("w", expand_pairs("cs", "id_a", "id_b").alias("p"))
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(
             F.sum("w").cast("bigint").alias("aa_micro"),
@@ -463,9 +379,6 @@ def graph_adamic_adar(spark: SparkSession, sf: str) -> DataFrame:
         )
         .limit(_AA_TOPK)
     )
-    # nothing persisted (r14): the pair expansion is the aggregated
-    # incidence's only consumer, so the plan runs end to end with no
-    # cache to release — no checkpoint tail needed either.
     return out
 
 
@@ -478,35 +391,17 @@ def bfs_hops_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     bounded-depth recursive-CTE oracle that takes MIN(d) over all
     enumerated paths instead.
 
-    Nodes travel as BIGINT (2·custkey / 2·partkey+1 — the pagerank/
-    kcore lesson, applied here in r13: three rounds of shuffling longs
-    instead of formatted strings) and render to 'c…'/'p…' labels
-    BEFORE the final per-distance aggregate, so the min/max node
-    readout keeps its original STRING ordering bit-for-bit.
+    Nodes travel as BIGINT (2·custkey / 2·partkey+1) and render to
+    'c…'/'p…' labels BEFORE the final per-distance aggregate, so the
+    min/max node readout keeps its original STRING ordering bit-for-bit.
     """
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        # the symmetrising union reads cp twice and every BFS round
-        # re-joins the edge list — persist so orders⋈lineitem runs once
-        .persist()
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     src = spark.range(1).select(F.lit(0).cast("long").alias("node"))  # 'c0'
     reached = bfs_hops(edges, src, max_hops=3)
     cp.unpersist()  # reached is checkpointed eagerly; the cache is done
-    label = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string")))
     return (
-        reached.select(label.alias("node"), "dist")
+        reached.select(render_node("node").alias("node"), "dist")
         .groupBy("dist")
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
@@ -559,18 +454,8 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
     Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
     'c…'/'p…' labels only in the final top-20 projection.
     """
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     seeds = (
         t(spark, sf, "customer")
         .filter(F.col("c_nationkey") == 0)
@@ -582,12 +467,8 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
         edges, seeds, iters=_PPR_ITERS, symmetric=True, assume_distinct=True
     )
     cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
-    label = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string")))
     return (
-        ranks.select(label.alias("node"), "rank")
+        ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
         .limit(_TOPK)
     )
@@ -606,21 +487,10 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     Bit-reproducible (ties to the LARGEST label under the integer
     order), so the 3-round unrolled-CTE oracle hash-matches.
 
-    Nodes iterate as BIGINT (2·custkey / 2·partkey+1 — the kcore
-    lesson: three rounds of shuffling longs, not strings) and render
-    to 'c…'/'p…' labels only in the final projection."""
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
+    'c…'/'p…' labels only in the final projection."""
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     # structurally distinct: cp is distinct and the two union branches
     # can't collide (cnode even, pnode odd) — skip LPA's edge shuffle
     labels = label_propagation(edges, rounds=_LPA_ROUNDS, assume_distinct=True)
@@ -628,17 +498,9 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("community_size")
     )
-
-    def render(name: str):
-        c = F.col(name)
-        return F.concat(
-            F.when(c % 2 == 0, F.lit("c")).otherwise(F.lit("p")),
-            F.shiftright(c, 1).cast("string"),
-        )
-
     return labels.join(sizes, "label").select(
-        render("node").alias("node"),
-        render("label").alias("label"),
+        render_node("node").alias("node"),
+        render_node("label").alias("label"),
         "community_size",
     )
 
@@ -647,7 +509,7 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     """Newman modularity readout of the LPA communities over the
     symmetrised co-parts graph — parts are linked when some order
     contains both (the `triangle_count_coparts` / `ktruss_coparts`
-    projection) — round 13: the quality-of-partition scalar that
+    projection): the quality-of-partition scalar that
     tells a curation pipeline whether its community grouping is
     better than chance before it samples per-community.
     Q = Σ_c [e_c/2m − (d_c/2m)²] over a 3-round deterministic
@@ -679,26 +541,23 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     two label-attach joins shuffling on node, one label-keyed count,
     one degree agg + label-keyed sum, and a 1-row reduce — everything
     linear in edges, no windows, no sorts. The 1-row result
-    eager-checkpoints so the pair cache releases (the assortativity
-    pattern); planfp sees the lazy readout plan via plan_only
-    (ADVICE r12). Note the fingerprinted plan still ends at LPA's own
-    internal checkpoint — the per-round LPA shape is pinned by its
-    dedicated plan test, not this fingerprint.
+    eager-checkpoints so the pair cache releases; planfp sees the lazy
+    readout plan via plan_only. Note the fingerprinted plan still ends
+    at LPA's own internal checkpoint — the per-round LPA shape is
+    pinned by its dedicated plan test, not this fingerprint.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # per-basket collect_set pair expansion (r14, _basket_pairs): one
-    # keyed aggregation + map-side explode replaces the basket
-    # self-join; the cross-basket distinct stays (LPA's
-    # assume_distinct contract needs unique canonical pairs)
+    # the cross-basket distinct gives LPA's assume_distinct contract
+    # its unique canonical pairs
     cp = _basket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
-    edges = _sym_edges(cp, "lo", "hi")
+    edges = sym_edges(cp, "lo", "hi")
     # structurally distinct (cp is distinct lo<hi; the swap can't
     # collide) — skip LPA's defensive edge shuffle
     labels = label_propagation(
         edges, rounds=_LPA_ROUNDS, assume_distinct=True
     )  # eager, checkpointed
     # Readout over the HALF-SIZE canonical pair list instead of the
-    # symmetrised union (r13): every directed quantity is recovered
+    # symmetrised union: every directed quantity is recovered
     # exactly — e_c counts directed intra-community edges = 2x the
     # internal lo<hi pairs; deg(v) = #directed edges with src v = v's
     # appearances across both cp endpoints; 2m = 2·|cp|. Same values,
@@ -713,7 +572,7 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
         .agg((2 * F.count(F.lit(1))).alias("e_c"))
     )
     deg = (
-        # both endpoints in ONE pass over the cp cache (r14)
+        # both endpoints in ONE pass over the cp cache
         cp.select(F.explode(F.array("lo", "hi")).alias("src"))
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -726,10 +585,9 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.sum(F.col("d").cast("decimal(19,0)")).alias("d_c"))
         .join(internal, "label", "left")
     )
-    # two_m == Σ_c d_c (r14): every node carries exactly one label, so
+    # two_m == Σ_c d_c: every node carries exactly one label, so
     # summing per-community degree mass over all communities counts
-    # every directed edge-endpoint exactly once — the former separate
-    # cp.count() pass + broadcast crossJoin is algebraically free here.
+    # every directed edge-endpoint exactly once.
     g = comm.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n_comm"),
         F.sum(
@@ -749,11 +607,7 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
             " div (two_m * two_m) AS BIGINT) END"
         ).alias("q_ppm"),
     )
-    if planfp.plan_only_mode():
-        return out  # lazy readout plan for the fingerprint gate
-    out = out.localCheckpoint(eager=True)
-    cp.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, cp)
 
 
 _COND_TOPK = 20
@@ -762,7 +616,7 @@ _COND_TOPK = 20
 def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
     """Per-community conductance of the LPA partition over the
     symmetrised co-parts graph — the cut-quality twin of
-    `community_modularity` (round 13): modularity asks "denser inside
+    `community_modularity`: modularity asks "denser inside
     than chance?", conductance asks "how leaky is each community's
     boundary?" — φ(c) = cut(c) / min(vol(c), 2m − vol(c)) (Kannan,
     Vempala & Vetta 2004). A curation pipeline reads both before
@@ -785,22 +639,20 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
     LPA, two label-attach joins, then label-keyed aggs; the readout
     adds only a 20-row TakeOrdered (no global sort). The pair cache
     releases via the eager-checkpoint-then-unpersist tail; planfp
-    fingerprints the lazy readout via plan_only (ADVICE r12).
+    fingerprints the lazy readout via plan_only.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # per-basket collect_set pair expansion (r14, _basket_pairs): one
-    # keyed aggregation + map-side explode replaces the basket
-    # self-join; the cross-basket distinct stays (LPA's
-    # assume_distinct contract needs unique canonical pairs)
+    # the cross-basket distinct gives LPA's assume_distinct contract
+    # its unique canonical pairs
     cp = _basket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
-    edges = _sym_edges(cp, "lo", "hi")
+    edges = sym_edges(cp, "lo", "hi")
     # structurally distinct (cp is distinct lo<hi; the swap can't
     # collide) — skip LPA's defensive edge shuffle
     labels = label_propagation(
         edges, rounds=_LPA_ROUNDS, assume_distinct=True
     )  # eager, checkpointed
-    # Readout over the HALF-SIZE canonical pair list (r13, the
-    # community_modularity rewrite): e_c = 2x internal lo<hi pairs,
+    # Readout over the HALF-SIZE canonical pair list, as in
+    # community_modularity: e_c = 2x internal lo<hi pairs,
     # deg from both cp endpoints, 2m = 2·|cp| — identical values,
     # half the rows through the two label-attach joins.
     ll = labels.select(F.col("node").alias("lo"), F.col("label").alias("ls"))
@@ -813,7 +665,7 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
         .agg((2 * F.count(F.lit(1))).alias("e_c"))
     )
     deg = (
-        # both endpoints in ONE pass over the cp cache (r14)
+        # both endpoints in ONE pass over the cp cache
         cp.select(F.explode(F.array("lo", "hi")).alias("src"))
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -852,11 +704,7 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("community_size").desc(), "label")
         .limit(_COND_TOPK)
     )
-    if planfp.plan_only_mode():
-        return out  # lazy readout plan for the fingerprint gate
-    out = out.localCheckpoint(eager=True)
-    cp.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, cp)
 
 
 def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
@@ -886,7 +734,7 @@ def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     # raw basket pairs: triangle_counts_per_node canonicalises +
-    # distincts internally (r14 — double-distinct removal)
+    # distincts internally
     pairs = _basket_pairs(li, "l_orderkey", "l_partkey").select(
         F.col("lo").alias("src"), F.col("hi").alias("dst")
     )
@@ -950,12 +798,8 @@ def kcore_copurchase(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     deg = kcore_degrees(cp, k=_KCORE_K, rounds=_KCORE_ROUNDS)
-    label = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), F.expr("node div 2").cast("string")),
-    ).otherwise(F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string")))
     return (
-        deg.select(label.alias("node"), "core_deg")
+        deg.select(render_node("node").alias("node"), "core_deg")
         .groupBy("core_deg")
         .agg(
             F.count(F.lit(1)).alias("n_nodes"),
@@ -1259,16 +1103,14 @@ def hits_copurchase(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     auth, hubs = hits_integer(edges, iters=_HITS_ITERS)
-    plabel = F.concat(F.lit("p"), F.expr("(node - 1) div 2").cast("string"))
-    clabel = F.concat(F.lit("c"), F.expr("node div 2").cast("string"))
     top_a = (
-        auth.select(F.lit("auth").alias("kind"), plabel.alias("node"),
+        auth.select(F.lit("auth").alias("kind"), render_node("node").alias("node"),
                     F.col("auth").alias("score"))
         .orderBy(F.col("score").desc(), F.col("node").asc())
         .limit(_HITS_TOPK)
     )
     top_h = (
-        hubs.select(F.lit("hub").alias("kind"), clabel.alias("node"),
+        hubs.select(F.lit("hub").alias("kind"), render_node("node").alias("node"),
                     F.col("hub").alias("score"))
         .orderBy(F.col("score").desc(), F.col("node").asc())
         .limit(_HITS_TOPK)
@@ -1282,12 +1124,10 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     y = deg(dst); one row of moments (m, Σx, Σx², Σxy) plus the
     Pearson correlation in exact ppm. Accumulation is exact
     DECIMAL(38,0) internally (both engines cast the degree BEFORE the
-    products, so no pre-cast LONG/HUGEINT overflow divergence — ADVICE
-    r10), but the FINAL schema emits BIGINT: DECIMAL(38,0) outputs
-    were the r10 driver red (hash canonicalization had never seen the
-    type; VERDICT r10 #1), and the repo-wide final-schema gate in
-    tests/test_plan_quality.py now pins every final column to the
-    proven type surface. The BIGINT casts have ~10 orders of magnitude
+    products, so no pre-cast LONG/HUGEINT overflow divergence), but
+    the FINAL schema emits BIGINT: the repo-wide final-schema gate in
+    tests/test_plan_quality.py pins every final column to the proven
+    type surface, which has no DECIMAL(38,0). The BIGINT casts have ~10 orders of magnitude
     of headroom at gate scale; at true 100 TB emit the raw moments
     pre-reduced per shard or as strings. Because the edge list is
     symmetric, both marginals are identical, so the usual sqrt in
@@ -1305,18 +1145,8 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     (each shuffles on its key), one scalar moment aggregate. Nothing
     super-linear, no windows.
     """
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ds = deg.select(F.col("src").alias("__s"), F.col("d").alias("dx"))
     dd = deg.select(F.col("src").alias("__d"), F.col("d").alias("dy"))
@@ -1345,11 +1175,7 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
             " div (m * sum_xx - sum_x * sum_x) AS BIGINT) END"
         ).alias("r_ppm"),
     )
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate (ADVICE r12)
-    out = out.localCheckpoint(eager=True)
-    cp.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, cp)
 
 
 _BALL_SEEDS = 20
@@ -1374,18 +1200,8 @@ def graph_seed_ball_sizes(spark: SparkSession, sf: str) -> DataFrame:
     """
     from fsc_etl_spark.operators.graph import multi_source_ball_sizes
 
-    o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges = _sym_edges(cp, "cnode", "pnode")
+    cp = _copurchase(spark, sf)
+    edges = sym_edges(cp, "cnode", "pnode")
     seeds = (
         t(spark, sf, "customer")
         .select((F.col("c_custkey") * 2).alias("node"))
@@ -1395,7 +1211,7 @@ def graph_seed_ball_sizes(spark: SparkSession, sf: str) -> DataFrame:
     balls = multi_source_ball_sizes(edges, seeds, max_hops=_BALL_HOPS)
     cp.unpersist()
     return balls.select(
-        F.concat(F.lit("c"), F.expr("(seed div 2)").cast("string")).alias("seed"),
+        render_node("seed").alias("seed"),
         F.col("dist").cast("bigint").alias("dist"),
         F.col("n_nodes").cast("bigint").alias("n_nodes"),
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark import planfp
+from fsc_etl_spark.operators.pairs import expand_pairs, expand_triples, shuffle_parallelism
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
 
@@ -368,28 +369,21 @@ def basket_pair_support(spark: SparkSession, sf: str) -> DataFrame:
     TPC-H baskets are ≤ 7 lines so the cap is inert at gate scale,
     but a real catalog has mega-baskets) — per-basket pair work is
     ≤ cap², so the expansion is linear in orders. One collect_set
-    aggregation dedups and caps each basket (r14 — the former
-    distinct + cap-window + pair self-join in one exchange); item
+    aggregation dedups and caps each basket in one exchange; item
     counts and pair supports are keyed aggregations over in-task
     explodes of the cached set frame; n_baskets is a 1-row
     broadcast; the top-k is a TakeOrdered heap, never a global
     sort."""
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # Per-basket collect_set over the RAW lineitem stream (r14): the
-    # set semantics absorb the former distinct, the item cap becomes a
-    # size() filter on the aggregated row (no window re-shuffle), and
-    # the a⋈b pair self-join becomes an in-task expansion of the
-    # sorted set — one keyed aggregation replaces the distinct + cap
-    # window + pair join. Per-basket pair work stays <= cap².
+    # One sorted part set per basket: the set absorbs the distinct and
+    # the item cap is a size() filter on the aggregated row. The
+    # round-robin comes before the persist so the cache itself, not
+    # only the expansion, runs at full parallelism.
     bk = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
         .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
-        # round-robin before persisting: without it AQE coalesces the
-        # small set exchange to a couple of partitions and the cache —
-        # and every expansion over it — runs nearly serial; a keyed
-        # repartition is pruned as redundant with the groupBy (r14)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(shuffle_parallelism(li))
         .persist()  # read three times: n_baskets, item counts, pairs
     )
     nb = bk.agg(F.count(F.lit(1)).alias("n_baskets"))
@@ -399,15 +393,7 @@ def basket_pair_support(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     sup = (
-        bk.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "transform(slice(ps, i + 2, size(ps) - i - 1), y -> "
-                    "struct(x AS part_a, y AS part_b))))"
-                )
-            ).alias("p")
-        )
+        bk.select(expand_pairs("ps", "part_a", "part_b").alias("p"))
         .groupBy(F.col("p.part_a").alias("part_a"), F.col("p.part_b").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("support"))
     )
@@ -435,24 +421,16 @@ def basket_pair_support(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("support").desc(), F.col("part_a").asc(), F.col("part_b").asc())
         .limit(_BASKET_TOPK)
     )
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate (ADVICE r12)
-    # eager-checkpoint-then-unpersist (the assortativity pattern,
-    # ADVICE r11): the top-k is tiny, so materialising it here
-    # lets the basket cache release immediately instead of leaking
-    # in a long driver session that never clearCache()s
-    out = out.localCheckpoint(eager=True)
-    bk.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, bk)
 
 
 _TRIPLE_TOPK = 50
 
 
 def basket_triple_support(spark: SparkSession, sf: str) -> DataFrame:
-    """Market-basket 3-itemset mining (round 13 — the C3 candidate
-    pass of A-Priori, Agrawal & Srikant 1994, extending
-    basket_pair_support's L2): top-50 part triples by co-occurrence
+    """Market-basket 3-itemset mining (the C3 candidate pass of
+    A-Priori, Agrawal & Srikant 1994, extending basket_pair_support's
+    L2): top-50 part triples by co-occurrence
     support with ALL-CONFIDENCE in ppm (Omiecinski 2003) —
     all_conf(abc) = support / max(cnt_a, cnt_b, cnt_c), the
     null-invariant interestingness measure that, unlike triple lift
@@ -463,27 +441,22 @@ def basket_triple_support(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the same basket-capped expansion as the pair pass —
     one collect_set aggregation dedups and caps each basket, and the
-    sorted set expands its i < j < k triples in-task (r14; formerly
-    the C3 = L2 ⋈ items pair-extension joins), so per-basket triple
-    work is ≤ C(cap,3) (TPC-H baskets ≤ 7 lines → ≤ 35 triples
+    sorted set expands its i < j < k triples in-task, so per-basket
+    triple work is ≤ C(cap,3) (TPC-H baskets ≤ 7 lines → ≤ 35 triples
     each); two keyed aggs for supports, one broadcast item-count
     attach per slot, TakeOrdered heap. Top-k by
     (support DESC, part_a, part_b, part_c) — a total integer order.
-    Eager-checkpoint-then-unpersist tail (the basket_pair_support
-    pattern); planfp sees the lazy plan via plan_only.
+    Eager-checkpoint-then-unpersist tail; planfp sees the lazy plan
+    via plan_only.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # Per-basket collect_set + in-task triple expansion (r14; the
-    # basket_pair_support rework): one keyed aggregation replaces the
-    # distinct + cap window + two pair-extension joins. The nested
-    # slice expansion emits exactly the i < j < k combinations of the
-    # sorted set, so per-basket work stays <= C(cap, 3).
+    # the capped basket sets of basket_pair_support; per-basket work
+    # stays <= C(cap, 3)
     bk = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
         .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
-        # full-parallelism cache + expansion (r14; see pair variant)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(shuffle_parallelism(li))
         .persist()  # read twice: item counts, triple expansion
     )
     item = (
@@ -492,16 +465,7 @@ def basket_triple_support(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     sup = (
-        bk.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> "
-                    "flatten(transform(slice(ps, i + 2, size(ps) - i - 1), (y, j) -> "
-                    "transform(slice(ps, i + j + 3, size(ps) - i - j - 2), z -> "
-                    "struct(x AS part_a, y AS part_b, z AS part_c))))))"
-                )
-            ).alias("p")
-        )
+        bk.select(expand_triples("ps", "part_a", "part_b", "part_c").alias("p"))
         .groupBy(
             F.col("p.part_a").alias("part_a"),
             F.col("p.part_b").alias("part_b"),
@@ -541,11 +505,7 @@ def basket_triple_support(spark: SparkSession, sf: str) -> DataFrame:
         )
         .limit(_TRIPLE_TOPK)
     )
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate
-    out = out.localCheckpoint(eager=True)
-    bk.unpersist()
-    return out
+    return planfp.checkpoint_and_release(out, bk)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -2023,14 +2023,8 @@ def pmi_top_bigrams(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("pmi_score").desc(), F.col("bigram"))
         .limit(20)
     )
-    if planfp.plan_only_mode():
-        return out  # expose the real plan to the fingerprint gate (ADVICE r12)
-    # materialise the 20-row result so the token cache (read by the
-    # unigram, bigram, and Nb branches) can be released immediately
-    # — long-lived sessions must not accumulate executor storage
-    out = out.localCheckpoint(eager=True)
-    toked.unpersist()
-    return out
+    # the token cache is read by the unigram, bigram and Nb branches
+    return planfp.checkpoint_and_release(out, toked)
 
 
 def udtf_ngram_topk(spark: SparkSession, sf: str) -> DataFrame:

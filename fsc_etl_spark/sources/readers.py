@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fsc_etl_spark import schemas
+from fsc_etl_spark.operators.pairs import shuffle_parallelism
 
 
 def read_csv(
@@ -113,7 +114,7 @@ def parallel_scan(df, key: str | None = None):
     one driver-side plan of the scan; layout never changes
     mid-process.
     """
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = shuffle_parallelism(df)
     memo_key = (key, n) if key is not None else None
     under = _SCAN_UNDERSPLIT_CACHE.get(memo_key) if memo_key else None
     if under is None:
@@ -173,12 +174,6 @@ def _events_ts_is_long_uncached(spark: SparkSession, path: str) -> bool:
 def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = None) -> dict[str, DataFrame]:
     """Load several synthetic tables as a dict of DataFrames."""
     return {n: read_parquet_table(spark, sf_dir, n) for n in (names or schemas.TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: Sequence[str] | None = None) -> None:
-    """Register the synthetic tables as temp views for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
 
 
 def read_json(

@@ -80,11 +80,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read back a managed (e.g. bucketed) table by name."""
-    return spark.table(table)
-
-
 # Spark-SQL simpleString -> ANSI DDL type, for engine-side staging DDL.
 _JDBC_DDL_TYPES = {
     "bigint": "BIGINT",

@@ -2,8 +2,8 @@
 
 Runs the same op sequence (overwrite, upsert merge, update-only merge,
 delta-col-conditioned merge, schema-evolving merge, append,
-update_flag, delete_all, and on a partitioned table a one-partition
-overwrite) against BOTH targets and asserts the visible
+update_flag, delete_all, and on a partitioned table an overwrite by a
+frame that covers fewer partitions) against BOTH targets and asserts the visible
 table state matches after every step — proving the parquet stand-in
 that the rest of the suite exercises is semantics-identical to the
 real Delta path (VERDICT r2 "What's missing" #1).
@@ -112,7 +112,8 @@ def run_matrix(spark: SparkSession) -> None:
     assert not parq_t.exists() or parq_t.read().count() == 0
     print("OK delete_all: both empty")
 
-    # Partitioned overwrite replaces only the partitions in the frame.
+    # A partitioned overwrite replaces the whole table, including the
+    # partitions absent from the frame.
     parts = (
         DeltaMergeTarget(spark, f"{base}/delta_ptbl", partition_cols=["day"]),
         ParquetMergeTarget(spark, f"{base}/parq_ptbl", partition_cols=["day"]),
@@ -128,7 +129,7 @@ def run_matrix(spark: SparkSession) -> None:
         lambda t: t.overwrite(df([rp(3, "d1", "c")])),
         parts,
     )
-    assert snapshot(parts[1]) == {("d1", "3", "c"), ("d2", "2", "b")}
+    assert snapshot(parts[1]) == {("d1", "3", "c")}
 
 
 def main() -> int:
