@@ -29,7 +29,12 @@ Differences by design (each justified in SURVEY.md §7):
   curated commit: the per-source updates are broadcast left joins onto
   the curated fact, the new day's slice is unioned in, and the result
   overwrites the table, so the snapshots are scanned and diffed once
-  per day rather than once per commit.
+  per day rather than once per commit;
+- slices of one date (the day's new curated rows and the day's
+  enterprise inserts, one row per location) are numbered by a single
+  ``row_number`` window; only whole-table numbering range-partitions
+  first (``mode="distributed"``), whose bounds sampling would re-run
+  the day's upstream plan in an extra job.
 """
 
 from __future__ import annotations
@@ -230,18 +235,18 @@ class CovidPipeline:
     def __post_init__(self) -> None:
         # Real Delta tables when delta-spark is on the classpath;
         # parquet stand-in otherwise (same interface).
-        # Partition layouts chosen for pruned merges with stable
-        # key→partition mapping: curated by Year (int — directory
-        # round-trip safe; Month is a zero-padded STRING that dir
-        # inference would corrupt to int), enterprise by Date (date
-        # values round-trip). Daily incremental merges then rewrite
-        # only the touched year / the corrected dates.
+        # Curated is partitioned by Year (an int, so it survives the
+        # directory round trip; Month is a zero-padded STRING that
+        # directory inference would turn into an int). The enterprise
+        # table is unpartitioned, as the reference writes it (SURVEY.md
+        # S10, load_functions.py:124): one Date directory per day would
+        # make every read list the whole history, and at the paper's
+        # size (~250 locations x ~1,100 days) rewriting the table is
+        # cheaper than that listing.
         self.curated = make_merge_target(
             self.spark, self.curated_root, partition_cols=["Year"]
         )
-        self.enterprise = make_merge_target(
-            self.spark, self.enterprise_root, partition_cols=["Date"]
-        )
+        self.enterprise = make_merge_target(self.spark, self.enterprise_root)
 
     # -- entry A: full refresh ------------------------------------------------
     def run_full(self, raw_dir: str, run_ts: dt.datetime | None = None) -> None:
@@ -289,7 +294,7 @@ class CovidPipeline:
             order_by=["CodeISO", "Date"],
             key_col="_SK_METRICS_FACT",
             start_from=start,
-            mode="distributed",
+            mode="window",
         ).withColumn("Is_updated", F.lit("Y")).select(*FACT_ORDER)
 
         if self.curated.exists():
@@ -391,7 +396,13 @@ class CovidPipeline:
         """Main.py:252-304: split curated into updates (Is_updated='Y',
         existing enterprise keys) and inserts (yesterday slice or all in
         full mode), continue surrogate keys from the enterprise max,
-        upsert, then reset the curated flag."""
+        upsert, then reset the curated flag.
+
+        The enterprise table is unpartitioned, so the day's upsert is a
+        full-table merge: one read of the table and one rewrite. The
+        full load numbers every curated row with ``mode="distributed"``;
+        the day's inserts are one date, one row per location, and are
+        numbered by a single window."""
         curated = self.curated.read().drop("Year", "Month")
 
         # Full mode rebuilds the DW from scratch (the reference resets
@@ -423,7 +434,7 @@ class CovidPipeline:
             order_by=["CodeISO", "Date"],
             key_col="_SK_METRICS_FACT",
             start_from=start,
-            mode="distributed",
+            mode="distributed" if full_mode else "window",
         )
 
         payload = updates.unionByName(inserts.select(*updates.columns)).drop("Is_updated")

@@ -242,7 +242,7 @@ def test_q13_zero_order_customers_via_left_join(spark, sf_smoke):
 
 
 def test_covid_surrogate_keys_distributed_no_global_window(spark, sf_smoke):
-    """The covid pipeline assigns keys with mode="distributed": the
+    """The covid full refresh assigns keys with mode="distributed": the
     fact rows are range-partitioned and numbered within partitions
     (plus broadcast offsets), so no window over the DATA runs in a
     single partition. Only the per-partition counts frame — one row

@@ -361,3 +361,15 @@ def test_incremental_lsh_dedup_shuffle_fallback_identical(spark, sf_smoke):
         key=key,
     )
     assert base == fallback
+
+
+def test_char_trigram_flush_matches_oracle(spark, sf_smoke, monkeypatch):
+    """A tiny flush bound makes every kernel task emit its partial
+    (source, gram) counts many times, in batches capped at the bound;
+    the downstream sum adds them back, so the query still equals its
+    oracle."""
+    from fsc_etl_spark.plans import corpus_stats
+    from fsc_etl_spark.testing import check_query
+
+    monkeypatch.setattr(corpus_stats, "TRIGRAM_FLUSH_ROWS", 50)
+    check_query(spark, sf_smoke, "char_trigram_diversity")
