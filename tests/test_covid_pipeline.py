@@ -264,28 +264,6 @@ def test_enterprise_day_matches_golden(spark, fixture_dirs, tmp_path):
     assert not [d for _, dirs, _ in os.walk(ent_root) for d in dirs if d.startswith("Date=")]
 
 
-def test_window_and_distributed_keys_agree_past_an_offset(spark, fixture_dirs):
-    """Numbering continued from a max key gives the same (key, sk)
-    pairs by a single window and by range partitions, on a one-date
-    slice of the covid fact and on a frame spread over several
-    partitions."""
-    from fsc_etl_spark.operators.keys import surrogate_keys
-
-    typed = covid.typed_sources(covid.load_sources(spark, fixture_dirs["today"]))
-    last_day = F.lit((RUN_DATE - dt.timedelta(days=1)).isoformat()).cast("date")
-    one_date = covid.assemble_metrics_fact(typed, run_ts=RUN_TS).filter(F.col("Date") == last_day)
-    spread = spark.range(0, 2000, numPartitions=4).select(
-        (F.col("id") % 7).alias("CodeISO"), ((F.col("id") * 7919) % 2000).alias("Date")
-    )
-    for df, k in ((one_date, 1200), (spread, 17)):
-        pairs = {}
-        for mode in ("window", "distributed"):
-            out = surrogate_keys(df, order_by=["CodeISO", "Date"], key_col="sk", start_from=k, mode=mode)
-            pairs[mode] = sorted((r.CodeISO, r.Date, r.sk) for r in out.select("CodeISO", "Date", "sk").collect())
-        assert pairs["window"] == pairs["distributed"]
-        assert [sk for *_, sk in pairs["window"]] == list(range(k + 1, k + 1 + df.count()))
-
-
 @pytest.mark.slow
 def test_incremental_updates_and_inserts(spark, pipeline, fixture_dirs):
     # Start from yesterday's snapshot as the curated state.

@@ -241,17 +241,25 @@ def test_q13_zero_order_customers_via_left_join(spark, sf_smoke):
     assert "LeftOuter" in plan
 
 
-def test_covid_surrogate_keys_distributed_no_global_window(spark, sf_smoke):
+def test_covid_surrogate_keys_distributed_no_global_window(spark, sf_smoke, tmp_path):
     """The covid full refresh assigns keys with mode="distributed": the
     fact rows are range-partitioned and numbered within partitions
     (plus broadcast offsets), so no window over the DATA runs in a
     single partition. Only the per-partition counts frame — one row
     per partition — may cross a single-partition exchange. Values must
-    be identical to the exact global-window mode by construction."""
+    be identical to the exact global-window mode by construction, also
+    when numbering continues past a max key: on a one-date slice of
+    the covid fact and on a two-column key spread over several
+    partitions."""
     import contextlib
+    import datetime as dt
     import io
 
+    from pyspark.sql import functions as F
+
+    from covid_fixtures import RUN_DATE, generate
     from fsc_etl_spark.operators.keys import surrogate_keys
+    from fsc_etl_spark.plans import covid
     from fsc_etl_spark.sources.readers import read_parquet_table
 
     df = read_parquet_table(spark, sf_smoke, "orders").select("o_orderkey")
@@ -268,6 +276,26 @@ def test_covid_surrogate_keys_distributed_no_global_window(spark, sf_smoke):
     assert sorted((r.o_orderkey, r.sk) for r in dist.collect()) == sorted(
         (r.o_orderkey, r.sk) for r in exact.collect()
     )
+
+    typed = covid.typed_sources(covid.load_sources(spark, generate(str(tmp_path))["today"]))
+    last_day = F.lit((RUN_DATE - dt.timedelta(days=1)).isoformat()).cast("date")
+    one_date = covid.assemble_metrics_fact(typed, run_ts=dt.datetime(2021, 3, 2, 6)).filter(F.col("Date") == last_day)
+    spread = spark.range(0, 2000, numPartitions=4).select(
+        (F.col("id") % 7).alias("CodeISO"), ((F.col("id") * 7919) % 2000).alias("Date")
+    )
+    for frame, k in ((one_date, 1200), (spread, 17)):
+        pairs = {
+            mode: sorted(
+                tuple(r)
+                for r in surrogate_keys(
+                    frame, order_by=["CodeISO", "Date"], key_col="sk", start_from=k, mode=mode
+                ).select("CodeISO", "Date", "sk").collect()
+            )
+            for mode in ("window", "distributed")
+        }
+        n = frame.count()
+        assert n > 1 and pairs["window"] == pairs["distributed"]
+        assert [sk for *_, sk in pairs["window"]] == list(range(k + 1, k + 1 + n))
 
 
 def test_contamination_benchmark_grams_broadcast(spark, sf_smoke):
