@@ -279,16 +279,25 @@ def label_propagation(
     at least one neighbor each round.
 
     Scale shape (the Pregel lowering): per round one join of the
-    label frame against the pre-hashed persisted edge list (only the
-    label side shuffles) + ONE exchange of the joined votes on dst —
-    both keyed aggregations ((node, label) counts, then the per-node
-    argmax via one struct-max) run exchange-free on top of it, since
-    HashPartitioning(dst) satisfies both groupings. Work per round is
-    O(edges), rounds are fixed. (r14: the former two-exchange agg
-    chain — partial-agg on (dst, label), exchange, then a second
-    exchange on dst — measured 1.3x slower at sf0.1 and 2.2x slower
-    at the 10x probe than this single raw-vote exchange; the two
-    stage barriers cost more than the partial aggregation saves.)
+    label frame against the edge list + ONE exchange of the joined
+    votes on dst — both keyed aggregations ((node, label) counts, then
+    the per-node argmax via one struct-max) run exchange-free on top
+    of it, since HashPartitioning(dst) satisfies both groupings. Work
+    per round is O(edges), rounds are fixed. (r14: the former
+    two-exchange agg chain — partial-agg on (dst, label), exchange,
+    then a second exchange on dst — measured 1.3x slower at sf0.1 and
+    2.2x slower at the 10x probe than this single raw-vote exchange;
+    the two stage barriers cost more than the partial aggregation
+    saves.)
+
+    The result is a lazy plan: building it runs no Spark job, and the
+    rounds execute with the caller's query. The rounds share the edge
+    list's exchanges, which adaptive execution reuses, so its inputs
+    are scanned once per query. A caller that reads the labels more
+    than once persists them itself and releases the cache after its
+    result is materialised. Synchronous LPA need not converge (it
+    oscillates on near-bipartite graphs), so the rounds are a fixed
+    unroll with no early exit.
 
     ``assume_distinct=True`` skips the defensive ``distinct()`` — ONLY
     safe when the caller constructs unique (src, dst) pairs
@@ -303,7 +312,6 @@ def label_propagation(
     edges = edges.select("src", "dst")
     if not assume_distinct:
         edges = edges.distinct()
-    edges = edges.repartition(F.col("src")).persist()
     # ROUND 1 collapses algebraically (r13): with identity
     # initialization every neighbor contributes exactly ONE distinct
     # label (its own id) over the distinct edge list — all counts are
@@ -331,26 +339,7 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("cnt"), F.col("lab"))).alias("m"))
             .select("node", F.col("m.lab").alias("label"))
         )
-    # NOTE (r11): per-round eager localCheckpoint — the cadence that
-    # pays off for pagerank/kcore/bfs — was measured SLOWER here
-    # (isolated warm floors 5.45 s vs 4.63 s at sf0.1): at 3 rounds
-    # the lazy plan is shallow enough that one end-to-end execution
-    # beats three materialization barriers. Re-evaluate if rounds
-    # ever grows past ~5 (plan depth is 3 stages/round).
-    # NOTE (r12, VERDICT r11 #3): a converged-frontier early exit —
-    # oracle-safe only at a FIXPOINT (labels_{r+1} == labels_r) — can
-    # NEVER fire on the co-purchase graph: synchronous LPA oscillates
-    # on (near-)bipartite structure, and the sf0.1 probe
-    # (scripts/lpa_convergence_probe.py) measured a CONSTANT 34,999
-    # changed labels in every one of 6 rounds — no fixpoint inside or
-    # anywhere near the 3-round contract. The per-round changed-count
-    # check (a join + count materializing each round) would be pure
-    # added cost, so the fixed unroll stands. kcore/ktruss/bfs keep
-    # their early exits (their peels/frontiers are monotone; LPA is
-    # not).
-    out = labels.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    return labels
 
 
 def triangle_stats(edges: DataFrame) -> DataFrame:
@@ -1034,8 +1023,9 @@ def skyline_2d(
     the classic sort + prefix-max sweep — but two-phase, so no single
     task sees the whole table: range-partition on the minimised
     column, per-partition prefix max within each range, plus a
-    broadcast prefix max of earlier partitions' totals (same shape as
-    keys.surrogate_keys(mode="distributed")). The kept set is
+    broadcast prefix max of earlier partitions' totals. Both passes
+    read the same two columns of one range exchange, which Spark
+    reuses, so they see the same partition ids. The kept set is
     invariant to the (sampled, nondeterministic) range boundaries
     because "earlier partition" == "strictly smaller minimise key"
     after the distinct-collapse.

@@ -22,14 +22,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark import schemas
 from fsc_etl_spark.functions.casting import cast_types
 from fsc_etl_spark.operators.cdc import snapshot_diff
 from fsc_etl_spark.operators.joins import anti_join, dim_join, key_membership_join, star_left_join
-from fsc_etl_spark.operators.keys import surrogate_keys
 from fsc_etl_spark.operators.merge import merge_frames
 from fsc_etl_spark.operators.pivot import pivot_indicator
 from fsc_etl_spark.operators.windows import (
@@ -329,19 +328,47 @@ def merge_upsert_state(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def surrogate_key_assign(spark: SparkSession, sf: str) -> DataFrame:
-    """R2 made deterministic: row_number over a stable total order
-    (replaces rdd.zipWithIndex; stays in Tungsten).
+#: Order-preserving buckets of :func:`bucketed_keys`.
+_KEY_BUCKETS = 64
 
-    mode="distributed": per-partition counts + offset cumsum, so no
-    single-partition WindowExec over the whole fact table — hash-
-    identical to the window mode (tests/test_plan_quality.py asserts
-    equality) but scales to arbitrarily large inputs.
-    """
-    orders = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    return surrogate_keys(
-        orders, order_by=["o_orderkey"], key_col="sk", start_from=1000, mode="distributed"
+
+def bucketed_keys(df: DataFrame, key: str, key_col: str, start_from: int) -> DataFrame:
+    """Contiguous keys ``start_from + 1 .. n`` in the order of the
+    unique integer column ``key``, with no window over all rows: each
+    row falls into one of 64 equal-width buckets of the key's
+    [min, max] range, is numbered by a window within its bucket, and
+    is shifted by the row count of the lower buckets. The bucket is a
+    deterministic, order-preserving expression of the row, so the
+    count pass and the numbering pass always agree on it (sampled range
+    partitions, planned once per pass, do not)."""
+    k = F.col(key)
+    span = df.agg(F.min(k).alias("__lo"), F.max(k).alias("__hi"))
+    width = (F.col("__hi") - F.col("__lo") + 1).cast("double") / _KEY_BUCKETS
+    b = df.crossJoin(F.broadcast(span)).withColumn(
+        "__b", F.floor((k - F.col("__lo")).cast("double") / width)
     )
+    lower = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        b.groupBy("__b")
+        .count()
+        .select("__b", F.coalesce(F.sum("count").over(lower), F.lit(0)).alias("__off"))
+    )
+    within = Window.partitionBy("__b").orderBy(k)
+    return b.join(F.broadcast(offsets), "__b").select(
+        *df.columns,
+        (F.row_number().over(within) + F.col("__off") + F.lit(start_from))
+        .cast("long")
+        .alias(key_col),
+    )
+
+
+def surrogate_key_assign(spark: SparkSession, sf: str) -> DataFrame:
+    """R2 made deterministic: contiguous keys over a stable total order
+    (replaces rdd.zipWithIndex; stays in Tungsten). The order is one
+    integer column, so :func:`bucketed_keys` numbers it without a
+    single-partition window over the whole table."""
+    orders = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    return bucketed_keys(orders, "o_orderkey", key_col="sk", start_from=1000)
 
 
 def window_topk_per_group(spark: SparkSession, sf: str) -> DataFrame:

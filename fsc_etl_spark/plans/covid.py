@@ -30,12 +30,11 @@ Differences by design (each justified in SURVEY.md §7):
   the curated fact, the new day's slice is unioned in, and the result
   overwrites the table, so the snapshots are scanned and diffed once
   per day rather than once per commit;
-- the day's new curated rows and every enterprise load are numbered
-  by a single ``row_number`` window. A day's slice is one date, one
-  row per location; a full enterprise load of 100k rows took no longer
-  by window than range-partitioned. Only the full refresh
-  range-partitions first (``mode="distributed"``); on a day, its bounds
-  sampling would re-run the upstream plan in an extra job.
+- the full refresh, the day's new curated rows and every enterprise
+  load are numbered by a single ``row_number`` window
+  (:func:`~fsc_etl_spark.operators.keys.surrogate_keys`). A day's slice
+  is one date, one row per location; a full load of 100k rows took no
+  longer by window than range-partitioned.
 """
 
 from __future__ import annotations
@@ -257,9 +256,7 @@ class CovidPipeline:
         today's snapshot, write partitioned by Year/Month."""
         typed = typed_sources(load_sources(self.spark, raw_dir))
         fact = assemble_metrics_fact(typed, run_ts=run_ts)
-        fact = surrogate_keys(
-            fact, order_by=["CodeISO", "Date"], key_col="_SK_METRICS_FACT", mode="distributed"
-        )
+        fact = surrogate_keys(fact, order_by=["CodeISO", "Date"], key_col="_SK_METRICS_FACT")
         self.curated.delete_all()
         self.curated.overwrite(fact.select(*FACT_ORDER))
 
@@ -297,7 +294,6 @@ class CovidPipeline:
             order_by=["CodeISO", "Date"],
             key_col="_SK_METRICS_FACT",
             start_from=start,
-            mode="window",
         ).withColumn("Is_updated", F.lit("Y")).select(*FACT_ORDER)
 
         if self.curated.exists():
@@ -436,7 +432,6 @@ class CovidPipeline:
             order_by=["CodeISO", "Date"],
             key_col="_SK_METRICS_FACT",
             start_from=start,
-            mode="window",
         )
 
         payload = updates.unionByName(inserts.select(*updates.columns)).drop("Is_updated")

@@ -56,12 +56,12 @@ def _basket_pairs(df: DataFrame, key: str, item: str) -> DataFrame:
 
 
 def _copurchase(spark: SparkSession, sf: str) -> DataFrame:
-    """Distinct customer—part purchase pairs ``(cnode, pnode)``,
-    persisted; the caller unpersists. Nodes are BIGINT: 2·custkey for
-    customers, 2·partkey+1 for parts, so the two overlapping TPC-H key
-    spaces stay distinct nodes and iterative builders shuffle longs,
-    not formatted strings (:func:`render_node` turns them back into
-    labels)."""
+    """Distinct customer—part purchase pairs ``(cnode, pnode)``, as a
+    lazy plan; a caller that reads them more than once persists them
+    and unpersists them. Nodes are BIGINT: 2·custkey for customers,
+    2·partkey+1 for parts, so the two overlapping TPC-H key spaces stay
+    distinct nodes and iterative builders shuffle longs, not formatted
+    strings (:func:`render_node` turns them back into labels)."""
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     return (
@@ -71,7 +71,6 @@ def _copurchase(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("l_partkey") * 2 + 1).alias("pnode"),
         )
         .distinct()
-        .persist()
     )
 
 
@@ -98,7 +97,7 @@ def pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     strings — and render to the 'c…'/'p…' labels only in the final
     20-row projection, where the oracle's string tiebreak applies.
     """
-    cp = _copurchase(spark, sf)
+    cp = _copurchase(spark, sf).persist()
     edges = sym_edges(cp, "cnode", "pnode")
     # symmetrised graph -> every node has in-edges, so the dense
     # fast path (no per-iteration nodes join) is exact here; the
@@ -395,7 +394,7 @@ def bfs_hops_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     'c…'/'p…' labels BEFORE the final per-distance aggregate, so the
     min/max node readout keeps its original STRING ordering bit-for-bit.
     """
-    cp = _copurchase(spark, sf)
+    cp = _copurchase(spark, sf).persist()
     edges = sym_edges(cp, "cnode", "pnode")
     src = spark.range(1).select(F.lit(0).cast("long").alias("node"))  # 'c0'
     reached = bfs_hops(edges, src, max_hops=3)
@@ -454,7 +453,7 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
     Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
     'c…'/'p…' labels only in the final top-20 projection.
     """
-    cp = _copurchase(spark, sf)
+    cp = _copurchase(spark, sf).persist()
     edges = sym_edges(cp, "cnode", "pnode")
     seeds = (
         t(spark, sf, "customer")
@@ -488,20 +487,20 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     order), so the 3-round unrolled-CTE oracle hash-matches.
 
     Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
-    'c…'/'p…' labels only in the final projection."""
-    cp = _copurchase(spark, sf)
-    edges = sym_edges(cp, "cnode", "pnode")
+    'c…'/'p…' labels only in the final projection. The whole query is
+    one lazy plan: the community size is a count over a window on the
+    label, so the labels are read once and nothing is cached."""
+    edges = sym_edges(_copurchase(spark, sf), "cnode", "pnode")
     # structurally distinct: cp is distinct and the two union branches
     # can't collide (cnode even, pnode odd) — skip LPA's edge shuffle
     labels = label_propagation(edges, rounds=_LPA_ROUNDS, assume_distinct=True)
-    cp.unpersist()  # labels is checkpointed eagerly; the cache is done
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("community_size")
-    )
-    return labels.join(sizes, "label").select(
+    return labels.select(
         render_node("node").alias("node"),
         render_node("label").alias("label"),
-        "community_size",
+        F.count(F.lit(1))
+        .over(Window.partitionBy("label"))
+        .cast("bigint")
+        .alias("community_size"),
     )
 
 
@@ -540,11 +539,10 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     (operators/graph.label_propagation); the modularity readout adds
     two label-attach joins shuffling on node, one label-keyed count,
     one degree agg + label-keyed sum, and a 1-row reduce — everything
-    linear in edges, no windows, no sorts. The 1-row result
-    eager-checkpoints so the pair cache releases; planfp sees the lazy
-    readout plan via plan_only. Note the fingerprinted plan still ends
-    at LPA's own internal checkpoint — the per-round LPA shape is
-    pinned by its dedicated plan test, not this fingerprint.
+    linear in edges, no windows, no sorts. The readout reads the
+    labels three times, so they are persisted; the 1-row result
+    eager-checkpoints so the pair and label caches release, and planfp
+    sees the whole lazy plan, LPA rounds included, via plan_only.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     # the cross-basket distinct gives LPA's assume_distinct contract
@@ -555,7 +553,7 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     # collide) — skip LPA's defensive edge shuffle
     labels = label_propagation(
         edges, rounds=_LPA_ROUNDS, assume_distinct=True
-    )  # eager, checkpointed
+    ).persist()
     # Readout over the HALF-SIZE canonical pair list instead of the
     # symmetrised union: every directed quantity is recovered
     # exactly — e_c counts directed intra-community edges = 2x the
@@ -607,7 +605,7 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
             " div (two_m * two_m) AS BIGINT) END"
         ).alias("q_ppm"),
     )
-    return planfp.checkpoint_and_release(out, cp)
+    return planfp.checkpoint_and_release(out, cp, labels)
 
 
 _COND_TOPK = 20
@@ -637,9 +635,10 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: identical skeleton to community_modularity — basket-
     blocked pair generation, the documented one-edge-shuffle-per-round
     LPA, two label-attach joins, then label-keyed aggs; the readout
-    adds only a 20-row TakeOrdered (no global sort). The pair cache
-    releases via the eager-checkpoint-then-unpersist tail; planfp
-    fingerprints the lazy readout via plan_only.
+    adds only a 20-row TakeOrdered (no global sort). The readout reads
+    the labels three times, so they are persisted; the pair and label
+    caches release via the eager-checkpoint-then-unpersist tail, and
+    planfp fingerprints the whole lazy plan via plan_only.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     # the cross-basket distinct gives LPA's assume_distinct contract
@@ -650,7 +649,7 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
     # collide) — skip LPA's defensive edge shuffle
     labels = label_propagation(
         edges, rounds=_LPA_ROUNDS, assume_distinct=True
-    )  # eager, checkpointed
+    ).persist()
     # Readout over the HALF-SIZE canonical pair list, as in
     # community_modularity: e_c = 2x internal lo<hi pairs,
     # deg from both cp endpoints, 2m = 2·|cp| — identical values,
@@ -704,7 +703,7 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("community_size").desc(), "label")
         .limit(_COND_TOPK)
     )
-    return planfp.checkpoint_and_release(out, cp)
+    return planfp.checkpoint_and_release(out, cp, labels)
 
 
 def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
@@ -1145,7 +1144,7 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     (each shuffles on its key), one scalar moment aggregate. Nothing
     super-linear, no windows.
     """
-    cp = _copurchase(spark, sf)
+    cp = _copurchase(spark, sf).persist()
     edges = sym_edges(cp, "cnode", "pnode")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ds = deg.select(F.col("src").alias("__s"), F.col("d").alias("dx"))
@@ -1200,7 +1199,7 @@ def graph_seed_ball_sizes(spark: SparkSession, sf: str) -> DataFrame:
     """
     from fsc_etl_spark.operators.graph import multi_source_ball_sizes
 
-    cp = _copurchase(spark, sf)
+    cp = _copurchase(spark, sf).persist()
     edges = sym_edges(cp, "cnode", "pnode")
     seeds = (
         t(spark, sf, "customer")

@@ -744,3 +744,43 @@ def test_assume_distinct_call_sites_pass_unique_edges(spark, sf_smoke, monkeypat
         ).save()
     # every wired call site actually exercised the guard
     assert len(checked) == len(wired), (checked, wired)
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _checkpoint_rdd_id(df) -> int:
+    """Id of the RDD under a frame returned by ``localCheckpoint``."""
+    return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+
+def test_label_propagation_query_builds_lazily_and_caches_nothing(spark, sf_smoke):
+    """graph_label_propagation is one lazy plan: building it starts no
+    Spark job, and once it has run and the cache is cleared no RDD is
+    left persisted that was not persisted before."""
+    import fsc_etl_spark.plans.graph_ops as gops
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    persisted = _persisted_rdd_ids(spark)
+    df = gops.QUERIES["graph_label_propagation"](spark, sf_smoke)
+    assert set(tracker.getJobIdsForGroup(None)) == jobs, "the builder ran a Spark job"
+    assert df.collect()
+    spark.catalog.clearCache()
+    assert _persisted_rdd_ids(spark) - persisted == set()
+
+
+@pytest.mark.parametrize("name", ["community_modularity", "graph_conductance"])
+def test_label_readouts_release_every_cache_but_their_result(spark, sf_smoke, name):
+    """community_modularity and graph_conductance cache the pairs and
+    the labels they read several times; after the query has run, the
+    checkpoint of the returned frame is the only RDD it leaves
+    persisted."""
+    import fsc_etl_spark.plans.graph_ops as gops
+
+    persisted = _persisted_rdd_ids(spark)
+    df = gops.QUERIES[name](spark, sf_smoke)
+    df.collect()
+    spark.catalog.clearCache()
+    assert _persisted_rdd_ids(spark) - persisted == {_checkpoint_rdd_id(df)}

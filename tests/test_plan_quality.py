@@ -241,61 +241,46 @@ def test_q13_zero_order_customers_via_left_join(spark, sf_smoke):
     assert "LeftOuter" in plan
 
 
-def test_covid_surrogate_keys_distributed_no_global_window(spark, sf_smoke, tmp_path):
-    """The covid full refresh assigns keys with mode="distributed": the
-    fact rows are range-partitioned and numbered within partitions
-    (plus broadcast offsets), so no window over the DATA runs in a
-    single partition. Only the per-partition counts frame — one row
-    per partition — may cross a single-partition exchange. Values must
-    be identical to the exact global-window mode by construction, also
-    when numbering continues past a max key: on a one-date slice of
-    the covid fact and on a two-column key spread over several
-    partitions."""
-    import contextlib
+def test_surrogate_keys_contiguous_and_complete(spark, sf_smoke, tmp_path):
+    """Surrogate keys are exactly ``start_from+1 .. start_from+n`` in
+    the order of the natural key, and every row is kept: on 120,000
+    rows over 8 partitions (large enough for AQE to coalesce shuffle
+    partitions), on a one-date slice of the covid fact and on a
+    two-column key spread over 4 partitions. The bucketed numbering of
+    ``surrogate_key_assign`` must give the same keys on the large
+    frame."""
     import datetime as dt
-    import io
 
     from pyspark.sql import functions as F
 
     from covid_fixtures import RUN_DATE, generate
     from fsc_etl_spark.operators.keys import surrogate_keys
     from fsc_etl_spark.plans import covid
-    from fsc_etl_spark.sources.readers import read_parquet_table
+    from fsc_etl_spark.plans.analytics import bucketed_keys
 
-    df = read_parquet_table(spark, sf_smoke, "orders").select("o_orderkey")
-    dist = surrogate_keys(df, order_by=["o_orderkey"], key_col="sk", mode="distributed")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        dist.explain("formatted")
-    plan = buf.getvalue()
-    assert "rangepartitioning" in plan.lower(), "distributed mode must range-partition"
-    assert plan.count("Exchange SinglePartition") <= 1, (
-        "only the tiny per-partition counts may single-partition"
+    n_big = 120_000
+    big = spark.range(0, n_big, numPartitions=8).select(
+        ((F.col("id") * 7919) % n_big * 3 + 5).alias("CodeISO"), F.lit(0).alias("Date")
     )
-    exact = surrogate_keys(df, order_by=["o_orderkey"], key_col="sk")
-    assert sorted((r.o_orderkey, r.sk) for r in dist.collect()) == sorted(
-        (r.o_orderkey, r.sk) for r in exact.collect()
-    )
-
     typed = covid.typed_sources(covid.load_sources(spark, generate(str(tmp_path))["today"]))
     last_day = F.lit((RUN_DATE - dt.timedelta(days=1)).isoformat()).cast("date")
-    one_date = covid.assemble_metrics_fact(typed, run_ts=dt.datetime(2021, 3, 2, 6)).filter(F.col("Date") == last_day)
+    one_date = covid.assemble_metrics_fact(typed, run_ts=dt.datetime(2021, 3, 2, 6)).filter(
+        F.col("Date") == last_day
+    )
     spread = spark.range(0, 2000, numPartitions=4).select(
         (F.col("id") % 7).alias("CodeISO"), ((F.col("id") * 7919) % 2000).alias("Date")
     )
-    for frame, k in ((one_date, 1200), (spread, 17)):
-        pairs = {
-            mode: sorted(
-                tuple(r)
-                for r in surrogate_keys(
-                    frame, order_by=["CodeISO", "Date"], key_col="sk", start_from=k, mode=mode
-                ).select("CodeISO", "Date", "sk").collect()
-            )
-            for mode in ("window", "distributed")
-        }
-        n = frame.count()
-        assert n > 1 and pairs["window"] == pairs["distributed"]
-        assert [sk for *_, sk in pairs["window"]] == list(range(k + 1, k + 1 + n))
+    numbered = [
+        (frame, k, surrogate_keys(frame, order_by=["CodeISO", "Date"], key_col="sk", start_from=k))
+        for frame, k in ((big, 1000), (one_date, 1200), (spread, 17))
+    ]
+    numbered.append((big, 1000, bucketed_keys(big, "CodeISO", key_col="sk", start_from=1000)))
+    for frame, k, keyed in numbered:
+        want = sorted(tuple(r) for r in frame.select("CodeISO", "Date").collect())
+        got = sorted(tuple(r) for r in keyed.select("CodeISO", "Date", "sk").collect())
+        assert len(want) > 1
+        assert [r[:2] for r in got] == want, "rows lost or repeated"
+        assert [r[2] for r in got] == list(range(k + 1, k + 1 + len(want)))
 
 
 def test_contamination_benchmark_grams_broadcast(spark, sf_smoke):
