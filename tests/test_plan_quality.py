@@ -244,11 +244,10 @@ def test_q13_zero_order_customers_via_left_join(spark, sf_smoke):
 def test_surrogate_keys_contiguous_and_complete(spark, sf_smoke, tmp_path):
     """Surrogate keys are exactly ``start_from+1 .. start_from+n`` in
     the order of the natural key, and every row is kept: on 120,000
-    rows over 8 partitions (large enough for AQE to coalesce shuffle
-    partitions), on a one-date slice of the covid fact and on a
-    two-column key spread over 4 partitions. The bucketed numbering of
-    ``surrogate_key_assign`` must give the same keys on the large
-    frame."""
+    rows over 8 partitions, on a one-date slice of the covid fact and
+    on a two-column key spread over 4 partitions. The bucketed
+    numbering of ``surrogate_key_assign`` must give the same keys on
+    the large frame."""
     import datetime as dt
 
     from pyspark.sql import functions as F
