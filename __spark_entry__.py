@@ -67,12 +67,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     rows and 6 of the 7 r6-vintage rows in alphabetical order. After
     r13 the oldest driver rows anywhere are vocab_coverage_stats (r6,
     the displaced alphabetical tail) and the 19 r7-vintage rows —
-    they lead the r14 window. (The five
-    one-shot eager builders gained a planfp.plan_only branch this
-    round — ADVICE r12 — but their DRIVER-context execution is
-    byte-identical, so only graph_common_neighbors, whose tail is
-    new, needs re-verification; basket_pair_support and
-    graph_adamic_adar carry green r12 rows for the same tail.)
+    they lead the r14 window. (Outside operators.cache.plan_only, the
+    fingerprint context, the one-shot eager builders run as before, so
+    only graph_common_neighbors, whose cache release was new, needed
+    re-verification.)
     Keep tests/test_entry_contract.py's prefix-pin test in sync: it
     derives the never-sampled set from committed CORRECTNESS_r*.json
     automatically.

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from fsc_etl_spark.operators.cache import cache_scope
+
 
 def quantize(col: Column, scale: int = 127) -> Column:
     """float array -> exact int64 array: floor(x * scale). One float
@@ -260,7 +262,7 @@ def kcenter_greedy(
     # k must not exceed the input row count: once every point is a
     # center all residual distances are 0 and the (md DESC, id ASC)
     # argmax would silently re-pick the lowest-id point each remaining
-    # round, returning duplicate centers (ADVICE r10). One bounded
+    # round, returning duplicate centers. One bounded
     # count — the operator already does k driver-side argmax rounds.
     n = q.count()
     if n == 0:
@@ -270,17 +272,20 @@ def kcenter_greedy(
     seed_rows = q.orderBy("__id").limit(1).collect()  # bounded: 1 row
     seed = seed_rows[0]
     picked: list[tuple[int, int, int]] = [(1, seed["__id"], 0)]
-    state = q.withColumn(
-        "md", _dist_to(F.col("q"), list(seed["q"]))
-    ).localCheckpoint(eager=True)
-    for r in range(2, k + 1):
-        far = state.orderBy(
-            F.col("md").desc(), F.col("__id").asc()
-        ).limit(1).collect()[0]  # bounded: 1 row
-        picked.append((r, far["__id"], far["md"]))
-        state = state.withColumn(
-            "md", F.least(F.col("md"), _dist_to(F.col("q"), list(far["q"])))
-        ).localCheckpoint(eager=True)
+    with cache_scope() as cs:
+        state = cs.checkpoint(q.withColumn("md", _dist_to(F.col("q"), list(seed["q"]))))
+        for r in range(2, k + 1):
+            far = state.orderBy(
+                F.col("md").desc(), F.col("__id").asc()
+            ).limit(1).collect()[0]  # bounded: 1 row
+            picked.append((r, far["__id"], far["md"]))
+            nxt = cs.checkpoint(
+                state.withColumn(
+                    "md", F.least(F.col("md"), _dist_to(F.col("q"), list(far["q"])))
+                )
+            )
+            cs.release(state)
+            state = nxt
     return spark.createDataFrame(
         picked, schema="sel_round int, center_id bigint, sel_dist_sq bigint"
     )

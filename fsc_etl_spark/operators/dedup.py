@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fsc_etl_spark.functions.text import fingerprint_md5, shingles_from_tokens, tokens
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism
 
 
@@ -217,18 +218,19 @@ def jaccard_token_pairs(
         # the bitmap path pays no further vocabulary jobs.
         vocab = [r["tok"] for r in toks.select("tok").distinct().limit(63).collect()]
         if len(vocab) <= 62:
-            # Second guard (VERDICT r9 #3): the bitmap's pairing is m²
-            # on DISTINCT masks — bounded by the vocab only as 2^62.
-            # Materialize the mask frame once (eager localCheckpoint:
-            # the guard count and the pairing reuse it) and fall back
-            # to the prefix path when m² would dominate. An explicit
+            # Second guard: the bitmap's pairing is m² on DISTINCT
+            # masks — bounded by the vocab only as 2^62. Materialize
+            # the mask frame once (eager localCheckpoint: the guard
+            # count and the pairing reuse it) and fall back to the
+            # prefix path when m² would dominate. An explicit
             # strategy="bitmap" is honored regardless (caller's call).
-            bm = _doc_masks(toks, id_col, sorted(vocab)).localCheckpoint()
-            if (
-                strategy == "bitmap"
-                or bm.select("mask").distinct().count() <= mask_limit
-            ):
-                return _jaccard_bitmap(bm, threshold, id_col)
+            with cache_scope() as cs:
+                bm = cs.checkpoint(_doc_masks(toks, id_col, sorted(vocab)))
+                if (
+                    strategy == "bitmap"
+                    or bm.select("mask").distinct().count() <= mask_limit
+                ):
+                    return cs.result(_jaccard_bitmap(bm, threshold, id_col))
         elif strategy == "bitmap":
             raise ValueError(f"bitmap strategy needs vocabulary <= 62 tokens, got more")
     return _jaccard_prefix(toks, threshold, id_col)
@@ -508,71 +510,74 @@ def connected_components_min_label(
     at web scale, swap in :func:`connected_components_star` (O(log n)
     rounds) — same join/groupBy primitives, identical output.
     """
-    # both directions in ONE pass over the pair subtree (r14): the
-    # union-of-two-selects form re-ran the whole LSH candidate build
-    # once per branch (Catalyst does not reuse it across branches)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    # Propagate only over nodes that touch an edge: near-dup graphs
-    # are a sliver of the corpus, so the per-round label table (and
-    # its checkpoint) is edge-subgraph-sized, not corpus-sized.
-    # Singletons re-enter as their own root in the final left join.
-    labels = (
-        edges.select(F.col("src").alias(id_col))
-        .distinct()
-        .select(F.col(id_col), F.col(id_col).alias("root"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iters):
-        lbl_src = labels.select(F.col(id_col).alias("src"), F.col("root").alias("src_root"))
-        nbr = edges.join(lbl_src, "src").groupBy("dst").agg(F.min("src_root").alias("nbr_root"))
-        # The changed flag rides along in the propagation select, so
-        # the convergence probe is a limit(1) scan of the round's
-        # already-checkpointed output — not a second labels join.
-        nxt = (
-            labels.join(nbr, F.col(id_col) == F.col("dst"), "left")
-            .select(
-                F.col(id_col),
-                F.least(F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))).alias(
-                    "root"
-                ),
-                (F.coalesce(F.col("nbr_root"), F.col("root")) < F.col("root")).alias(
-                    "__changed"
-                ),
+    with cache_scope() as cs:
+        # both directions in ONE pass over the pair subtree: the
+        # union-of-two-selects form re-ran the whole LSH candidate build
+        # once per branch (Catalyst does not reuse it across branches)
+        edges = cs.checkpoint(
+            pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                    )
+                ).alias("e")
             )
-            # lazy checkpoint: the convergence probe right below is the
-            # materializing action, so round + checkpoint run as ONE
-            # job instead of two (r13 — per-round driver latency was
-            # the measured cost of the CC loops, not task work)
-            .localCheckpoint(eager=False)
+            .select("e.src", "e.dst")
+            .distinct(),
+            eager=False,
         )
-        converged = nxt.filter(F.col("__changed")).limit(1).count() == 0
-        labels = nxt.drop("__changed")
-        if converged:
-            break
-    if not converged:
-        # Same contract as connected_components_star: an intermediate
-        # label table is WRONG cluster roots, not approximate ones —
-        # a component whose diameter exceeds max_iters would be split.
-        # Fail loudly instead of silently returning partial labels.
-        raise RuntimeError(
-            f"connected_components_min_label did not converge within "
-            f"max_iters={max_iters} rounds (graph diameter too large); "
-            f"labels would be incorrect — raise max_iters or use "
-            f"connected_components_star (O(log n) rounds)"
+        converged = False
+        # Propagate only over nodes that touch an edge: near-dup graphs
+        # are a sliver of the corpus, so the per-round label table (and
+        # its checkpoint) is edge-subgraph-sized, not corpus-sized.
+        # Singletons re-enter as their own root in the final left join.
+        labels = prev = cs.checkpoint(
+            edges.select(F.col("src").alias(id_col))
+            .distinct()
+            .select(F.col(id_col), F.col(id_col).alias("root")),
+            eager=False,
         )
+        for _ in range(max_iters):
+            lbl_src = labels.select(F.col(id_col).alias("src"), F.col("root").alias("src_root"))
+            nbr = edges.join(lbl_src, "src").groupBy("dst").agg(F.min("src_root").alias("nbr_root"))
+            # The changed flag rides along in the propagation select, so
+            # the convergence probe is a limit(1) scan of the round's
+            # already-checkpointed output — not a second labels join.
+            # Lazy checkpoint: the probe right below is the
+            # materializing action, so round + checkpoint run as ONE job
+            # instead of two (per-round driver latency was the measured
+            # cost of the CC loops, not task work).
+            nxt = cs.checkpoint(
+                labels.join(nbr, F.col(id_col) == F.col("dst"), "left").select(
+                    F.col(id_col),
+                    F.least(F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))).alias(
+                        "root"
+                    ),
+                    (F.coalesce(F.col("nbr_root"), F.col("root")) < F.col("root")).alias(
+                        "__changed"
+                    ),
+                ),
+                eager=False,
+            )
+            converged = nxt.filter(F.col("__changed")).limit(1).count() == 0
+            cs.release(prev)  # nxt is materialised; the last round is done
+            prev = nxt
+            labels = nxt.drop("__changed")
+            if converged:
+                break
+        if not converged:
+            # Same contract as connected_components_star: an intermediate
+            # label table is WRONG cluster roots, not approximate ones —
+            # a component whose diameter exceeds max_iters would be split.
+            # Fail loudly instead of silently returning partial labels.
+            raise RuntimeError(
+                f"connected_components_min_label did not converge within "
+                f"max_iters={max_iters} rounds (graph diameter too large); "
+                f"labels would be incorrect — raise max_iters or use "
+                f"connected_components_star (O(log n) rounds)"
+            )
+        labels = cs.result(nxt).drop("__changed")
     return (
         nodes.select(F.col(id_col))
         .join(labels.withColumnRenamed("root", "__root"), id_col, "left")
@@ -615,17 +620,15 @@ def connected_components_star(
     """
     # Canonical directed form: (child src, parent dst), parent < child.
     # greatest/least computes the kept orientation directly in ONE pass
-    # (r14) — the former symmetrize-union + filter re-ran the whole
-    # LSH pair subtree once per branch just to throw half away.
-    edges = (
+    # — the former symmetrize-union + filter re-ran the whole LSH pair
+    # subtree once per branch just to throw half away.
+    canon = (
         pairs.select(
             F.greatest("id_a", "id_b").alias("src"),
             F.least("id_a", "id_b").alias("dst"),
         )
         .filter(F.col("dst") < F.col("src"))
         .distinct()
-        # lazy: the first stats_of() probe materializes it (r13)
-        .localCheckpoint(eager=False)
     )
 
     def star_round(e: DataFrame, large: bool) -> DataFrame:
@@ -637,7 +640,7 @@ def connected_components_star(
         # Only the small-star (iteration-final) output is dedup'd:
         # duplicate edges between the sub-rounds cannot change a window
         # MIN, so the large-star distinct would be a wasted shuffle.
-        # Both adjacency directions via ONE explode (r14): the union
+        # Both adjacency directions via ONE explode: the union
         # form re-ran this sub-round's INPUT subtree per branch — for
         # the small-star that input is the whole un-checkpointed
         # large-star (window included), i.e. the round cost doubled.
@@ -661,7 +664,7 @@ def connected_components_star(
         # smaller-link (dst, m) when dst < src, PLUS the self-link
         # (src, m) on every adjacency row — one conditional-array
         # explode instead of a two-branch union that re-ran the window
-        # per branch (r14); the trailing distinct collapses duplicates.
+        # per branch; the trailing distinct collapses duplicates.
         emitted = sm.select(
             F.explode(
                 F.when(
@@ -694,30 +697,37 @@ def connected_components_star(
         ).first()
         return row["n"], row["hs"]
 
-    prev_stats = stats_of(edges)
-    converged = False
-    for _ in range(max_iters):
-        # lazy checkpoint: stats_of() below is the materializing action
-        # — round + checkpoint run as ONE job instead of two (r13)
-        after = star_round(star_round(edges, large=True), large=False).localCheckpoint(
-            eager=False
-        )
-        cur_stats = stats_of(after)
-        if cur_stats == prev_stats and after.exceptAll(edges).limit(1).count() == 0:
-            edges = after
-            converged = True
-            break
-        edges, prev_stats = after, cur_stats
-    if not converged:
-        # The docstring promises output identical to min-label; an
-        # intermediate edge set silently returned here would be WRONG
-        # labels, not approximate ones. O(log n) rounds means 25 covers
-        # graphs far beyond 2^25 nodes — hitting this is a bug or a
-        # pathological input, so fail loudly.
-        raise RuntimeError(
-            f"connected_components_star did not reach the star fixpoint "
-            f"within max_iters={max_iters}; labels would be incorrect"
-        )
+    with cache_scope() as cs:
+        # lazy: the first stats_of() probe materializes it
+        edges = cs.checkpoint(canon, eager=False)
+        prev_stats = stats_of(edges)
+        converged = False
+        for _ in range(max_iters):
+            # lazy checkpoint: stats_of() below is the materializing
+            # action — round + checkpoint run as ONE job instead of two
+            after = cs.checkpoint(
+                star_round(star_round(edges, large=True), large=False), eager=False
+            )
+            cur_stats = stats_of(after)
+            converged = (
+                cur_stats == prev_stats
+                and after.exceptAll(edges).limit(1).count() == 0
+            )
+            cs.release(edges)  # after is materialised; the last round is done
+            edges, prev_stats = after, cur_stats
+            if converged:
+                break
+        if not converged:
+            # The docstring promises output identical to min-label; an
+            # intermediate edge set silently returned here would be WRONG
+            # labels, not approximate ones. O(log n) rounds means 25 covers
+            # graphs far beyond 2^25 nodes — hitting this is a bug or a
+            # pathological input, so fail loudly.
+            raise RuntimeError(
+                f"connected_components_star did not reach the star fixpoint "
+                f"within max_iters={max_iters}; labels would be incorrect"
+            )
+        edges = cs.result(edges)
 
     roots = (
         edges.groupBy("src")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fsc_etl_spark.operators.cache import cache_scope
+
 #: fixed-point scale for integer PageRank: rank 1.0 == 10^9 units.
 RANK_SCALE = 10**9
 
@@ -104,162 +106,148 @@ def pagerank_integer(
         edges = edges.select(
             "src", "dst", F.col(weight_col).cast("long").alias("__w")
         )
-    # distinct/weighted edges persist: the edge-degree build and
-    # (general path) the nodes union re-read this
-    edges = edges.persist()
+    with cache_scope() as cs:
+        # distinct/weighted edges persist: the edge-degree build and
+        # (general path) the nodes union re-read this
+        edges = cs.persist(edges)
 
-    if weight_col is not None and validate:
-        chk = edges.agg(
-            F.count(F.lit(1)).alias("ne"),
-            F.count_distinct(F.struct("src", "dst")).alias("nd"),
-            F.max("__w").alias("mw"),
-        ).first()
-        if chk["ne"] and chk["nd"] != chk["ne"]:
-            edges.unpersist()
-            raise ValueError(
-                f"weighted PageRank requires unique (src, dst) pairs: "
-                f"{chk['ne'] - chk['nd']} duplicate edge(s) found"
-            )
-        # rank(v) <= sum(ranks) <= n_nodes*init <= 2*n_edges*init, so
-        # rank*w stays in BIGINT if max_w * 2*ne * init < 2^63.
-        if chk["mw"] is not None and chk["mw"] * 2 * chk["ne"] * init_rank >= 2**63:
-            edges.unpersist()
-            raise ValueError(
-                "weighted PageRank rank*weight may overflow BIGINT: "
-                f"max_w={chk['mw']}, n_edges={chk['ne']}, init={init_rank} — "
-                "rescale weights or init_rank, or cast the rank chain to decimal"
-            )
-
-    # Built once, reused by every iteration — pre-hashed on src so the
-    # per-iteration rank join only shuffles the (small) rank side: the
-    # cached InMemoryRelation's HashPartitioning(src) satisfies the
-    # join's distribution requirement, so no edge re-shuffle per round.
-    # Degree attaches via a src-partitioned window over the SAME
-    # exchange (measured round-10, hash-identical): the former
-    # groupBy+join+repartition build cost two edge-sized exchanges —
-    # and at cluster scale the degree side of that join is node-sized,
-    # NOT broadcastable, so it would shuffle too; one exchange + an
-    # in-partition sort replaces all of it.
-    from pyspark.sql import Window as _W
-
-    edges_deg = (
-        edges.repartition(F.col("src"))
-        .withColumn("deg", F.sum("__w").over(_W.partitionBy("src")))
-        .persist()
-    )
-
-    dangling_nodes = None
-    n_nodes = None
-    if every_node_has_inflow:
-        # symmetrised contract: src set == dst set == node set, so the
-        # out-edge owners ARE the nodes and dangling is impossible.
-        nodes = edges_deg.select(F.col("src").alias("node")).distinct()
-    else:
-        nodes = (
-            # both endpoints in one pass over the edge cache (r14)
-            edges.select(F.explode(F.array("src", "dst")).alias("node"))
-            .distinct()
-            .persist()
-        )
-        dangling_nodes = nodes.join(
-            edges_deg.select(F.col("src").alias("node")), "node", "left_anti"
-        ).persist()
-        if dangling != "drop":
-            n_dangling = dangling_nodes.count()
-            if n_dangling and dangling == "error":
-                for df in (edges, edges_deg, nodes, dangling_nodes):
-                    df.unpersist()
+        if weight_col is not None and validate:
+            chk = edges.agg(
+                F.count(F.lit(1)).alias("ne"),
+                F.count_distinct(F.struct("src", "dst")).alias("nd"),
+                F.max("__w").alias("mw"),
+            ).first()
+            if chk["ne"] and chk["nd"] != chk["ne"]:
                 raise ValueError(
-                    f"{n_dangling} node(s) have no out-edge; their rank mass "
-                    "would be lost. Pass dangling='drop' to accept that, "
-                    "dangling='redistribute' for exact even redistribution, "
-                    "or symmetrise the graph."
+                    f"weighted PageRank requires unique (src, dst) pairs: "
+                    f"{chk['ne'] - chk['nd']} duplicate edge(s) found"
                 )
-            if dangling == "redistribute":
-                n_nodes = nodes.count()
+            # rank(v) <= sum(ranks) <= n_nodes*init <= 2*n_edges*init, so
+            # rank*w stays in BIGINT if max_w * 2*ne * init < 2^63.
+            if chk["mw"] is not None and chk["mw"] * 2 * chk["ne"] * init_rank >= 2**63:
+                raise ValueError(
+                    "weighted PageRank rank*weight may overflow BIGINT: "
+                    f"max_w={chk['mw']}, n_edges={chk['ne']}, init={init_rank} — "
+                    "rescale weights or init_rank, or cast the rank chain to decimal"
+                )
 
-    base = ((damping_den - damping_num) * init_rank) // damping_den
-    ranks = nodes.withColumn("rank", F.lit(init_rank).cast("long"))
-    redistribute = (
-        dangling == "redistribute" and dangling_nodes is not None and n_nodes
-    )
-    for it in range(iters):
-        if it == 0:
-            # ROUND 1 collapses algebraically (r13): every node's rank
-            # is the init constant, so the rank join is a no-op —
-            # inline the constant instead of shuffling the node-sized
-            # rank frame. Same floor arithmetic, bit-identical.
-            contrib = (
-                edges_deg.select(
-                    F.col("dst").alias("node"),
-                    F.expr(
-                        f"(CAST({init_rank} AS BIGINT) * __w) div deg"
-                    ).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
+        # Built once, reused by every iteration — pre-hashed on src so the
+        # per-iteration rank join only shuffles the (small) rank side: the
+        # cached InMemoryRelation's HashPartitioning(src) satisfies the
+        # join's distribution requirement, so no edge re-shuffle per round.
+        # Degree attaches via a src-partitioned window over the SAME
+        # exchange (measured hash-identical): the former
+        # groupBy+join+repartition build cost two edge-sized exchanges —
+        # and at cluster scale the degree side of that join is node-sized,
+        # NOT broadcastable, so it would shuffle too; one exchange + an
+        # in-partition sort replaces all of it.
+        edges_deg = cs.persist(
+            edges.repartition(F.col("src")).withColumn(
+                "deg", F.sum("__w").over(Window.partitionBy("src"))
             )
-        else:
-            r = ranks.select(
-                F.col("node").alias("__rn"), F.col("rank").alias("__rr")
-            )
-            contrib = (
-                edges_deg.join(r, edges_deg["src"] == r["__rn"])
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr("(__rr * __w) div deg").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-        damped = (
-            F.lit(base)
-            + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
-        ).cast("long")
+        )
+
+        dangling_nodes = None
+        n_nodes = None
         if every_node_has_inflow:
-            ranks = contrib.select("node", damped.alias("rank"))
-        elif redistribute:
-            # total dangling rank this round, spread evenly: one tiny
-            # aggregate (dangling set is persisted) broadcast to all.
-            share = ranks.join(dangling_nodes, "node", "left_semi").agg(
-                F.expr(f"coalesce(sum(rank), 0L) div {n_nodes}").alias("__share")
+            # symmetrised contract: src set == dst set == node set, so the
+            # out-edge owners ARE the nodes and dangling is impossible.
+            nodes = edges_deg.select(F.col("src").alias("node")).distinct()
+        else:
+            # both endpoints in one pass over the edge cache
+            nodes = cs.persist(
+                edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
             )
-            ranks = (
-                nodes.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(share))
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.expr(
-                            f"({damping_num} * (coalesce(inflow, 0L) + __share)) "
-                            f"div {damping_den}"
-                        )
-                    ).cast("long").alias("rank"),
+            dangling_nodes = cs.persist(
+                nodes.join(
+                    edges_deg.select(F.col("src").alias("node")), "node", "left_anti"
                 )
             )
-        else:
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node", damped.alias("rank")
-            )
-        if redistribute:
-            # share + next round's contrib each re-read ranks: without
-            # a per-round materialisation the lineage doubles per
-            # iteration (2^iters re-evaluation). Lazy — the next
-            # round's share broadcast materializes it (r13).
-            ranks = ranks.localCheckpoint(eager=False)
-    # Materialise the result and release every interned cache so a
-    # long-lived session doesn't accumulate executor storage (the
-    # returned frame's lineage is truncated, so it no longer needs
-    # them).
-    out = ranks.localCheckpoint(eager=True)
-    edges.unpersist()
-    edges_deg.unpersist()
-    if not every_node_has_inflow:
-        nodes.unpersist()
-    if dangling_nodes is not None:
-        dangling_nodes.unpersist()
-    return out
+            if dangling != "drop":
+                n_dangling = dangling_nodes.count()
+                if n_dangling and dangling == "error":
+                    raise ValueError(
+                        f"{n_dangling} node(s) have no out-edge; their rank mass "
+                        "would be lost. Pass dangling='drop' to accept that, "
+                        "dangling='redistribute' for exact even redistribution, "
+                        "or symmetrise the graph."
+                    )
+                if dangling == "redistribute":
+                    n_nodes = nodes.count()
+
+        base = ((damping_den - damping_num) * init_rank) // damping_den
+        ranks = nodes.withColumn("rank", F.lit(init_rank).cast("long"))
+        redistribute = (
+            dangling == "redistribute" and dangling_nodes is not None and n_nodes
+        )
+        for it in range(iters):
+            if it == 0:
+                # ROUND 1 collapses algebraically: every node's rank is
+                # the init constant, so the rank join is a no-op —
+                # inline the constant instead of shuffling the node-sized
+                # rank frame. Same floor arithmetic, bit-identical.
+                contrib = (
+                    edges_deg.select(
+                        F.col("dst").alias("node"),
+                        F.expr(
+                            f"(CAST({init_rank} AS BIGINT) * __w) div deg"
+                        ).alias("c"),
+                    )
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("inflow"))
+                )
+            else:
+                r = ranks.select(
+                    F.col("node").alias("__rn"), F.col("rank").alias("__rr")
+                )
+                contrib = (
+                    edges_deg.join(r, edges_deg["src"] == r["__rn"])
+                    .select(
+                        F.col("dst").alias("node"),
+                        F.expr("(__rr * __w) div deg").alias("c"),
+                    )
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("inflow"))
+                )
+            damped = (
+                F.lit(base)
+                + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
+            ).cast("long")
+            if every_node_has_inflow:
+                ranks = contrib.select("node", damped.alias("rank"))
+            elif redistribute:
+                # total dangling rank this round, spread evenly: one tiny
+                # aggregate (dangling set is persisted) broadcast to all.
+                share = ranks.join(dangling_nodes, "node", "left_semi").agg(
+                    F.expr(f"coalesce(sum(rank), 0L) div {n_nodes}").alias("__share")
+                )
+                ranks = (
+                    nodes.join(contrib, "node", "left")
+                    .crossJoin(F.broadcast(share))
+                    .select(
+                        "node",
+                        (
+                            F.lit(base)
+                            + F.expr(
+                                f"({damping_num} * (coalesce(inflow, 0L) + __share)) "
+                                f"div {damping_den}"
+                            )
+                        ).cast("long").alias("rank"),
+                    )
+                )
+            else:
+                ranks = nodes.join(contrib, "node", "left").select(
+                    "node", damped.alias("rank")
+                )
+            if redistribute:
+                # share + next round's contrib each re-read ranks: without
+                # a per-round materialisation the lineage doubles per
+                # iteration (2^iters re-evaluation). Lazy — the final
+                # checkpoint materialises every round in one chain.
+                ranks = cs.checkpoint(ranks, eager=False)
+        # Eager also under plan_only: the fingerprint of an iterative
+        # builder is its readout over this checkpoint.
+        return cs.result(cs.checkpoint(ranks))
 
 
 def label_propagation(
@@ -356,94 +344,86 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     the census costs a single groupBy + scalar agg beyond the triangle
     enumeration itself.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
+    with cache_scope() as cs:
+        canon = cs.persist(
+            edges.select(
+                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
+            )
+            .filter(F.col("lo") < F.col("hi"))
+            .distinct()
         )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .persist()
-    )
-    deg = (
-        # both endpoints in ONE pass over the canon cache (r14): the
-        # union-of-two-selects form raced 2x tasks against the unbuilt
-        # cache partitions — explode reads each partition once.
-        canon.select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
-    )
-    census = deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.coalesce(F.expr("sum(d) div 2"), F.lit(0).cast("long")).alias("n_edges"),
-        F.coalesce(
-            F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0).cast("long")
-        ).alias("n_wedges"),
-    )
-    # Degree-oriented counting (compact-forward): orient every edge
-    # from its lower-(degree, id) endpoint to the higher one, then for
-    # each oriented edge (u, v) count |N+(u) ∩ N+(v)| by intersecting
-    # the two SORTED forward-adjacency arrays — each triangle is
-    # counted exactly once, at its lowest-ordered vertex. Max forward
-    # degree in this orientation is O(sqrt(m)), so adjacency rows stay
-    # bounded under hubs, and the intersection form never materialises
-    # the wedge set at all (the wedge-pair join this replaces shuffled
-    # ~m^1.5 rows — 41M at sf0.1 — before the closing semi join; the
-    # intersection does the same work inside a map-side expression
-    # over the m oriented edges).
-    dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
-    dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
-    lo_first = (F.col("dlo") < F.col("dhi")) | (
-        (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
-    )
-    oriented = (
-        canon.join(dl, "lo")
-        .join(dh, "hi")
-        .select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+        deg = cs.persist(
+            # both endpoints in ONE pass over the canon cache: the
+            # union-of-two-selects form raced 2x tasks against the unbuilt
+            # cache partitions — explode reads each partition once.
+            canon.select(F.explode(F.array("lo", "hi")).alias("node"))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
         )
-        # read three times (adjacency build + both join streams) and
-        # adj itself feeds two differently-keyed exchanges — without
-        # the persists each consumer re-ran the canon⋈deg⋈deg
-        # orientation from scratch (r14, measured ~25 task-s of
-        # duplicate work at sf0.1).
-        .persist()
-    )
-    adj = (
-        oriented.groupBy("u")
-        .agg(F.sort_array(F.collect_list("v")).alias("nb"))
-        .persist()
-    )
-    a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
-    a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
-    closed = (
-        # shuffle-hash, not sort-merge: the adjacency side is one
-        # bounded-width row per node (build side), while sorting would
-        # buffer every edge row WITH its attached O(sqrt m) arrays —
-        # that sort buffer is what blows small heaps, and at cluster
-        # scale it's pure wasted width through two sorts. Hash build
-        # on the per-node side streams the edges untouched.
-        oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
-        # inner join: an edge whose head has no forward neighbours
-        # contributes zero triangles and may drop
-        .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
-        .select(F.size(F.array_intersect("__nbu", "__nbv")).alias("k"))
-    )
-    n_tri = closed.agg(
-        F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
-    )
-    # One-row result: materialise it and drop the canon/deg/oriented/adj
-    # caches so repeated calls in a long-lived session don't leak storage.
-    out = census.crossJoin(n_tri).localCheckpoint(eager=True)
-    for df in (canon, deg, oriented, adj):
-        df.unpersist()
-    return out
+        census = deg.agg(
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.coalesce(F.expr("sum(d) div 2"), F.lit(0).cast("long")).alias("n_edges"),
+            F.coalesce(
+                F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0).cast("long")
+            ).alias("n_wedges"),
+        )
+        # Degree-oriented counting (compact-forward): orient every edge
+        # from its lower-(degree, id) endpoint to the higher one, then for
+        # each oriented edge (u, v) count |N+(u) ∩ N+(v)| by intersecting
+        # the two SORTED forward-adjacency arrays — each triangle is
+        # counted exactly once, at its lowest-ordered vertex. Max forward
+        # degree in this orientation is O(sqrt(m)), so adjacency rows stay
+        # bounded under hubs, and the intersection form never materialises
+        # the wedge set at all (the wedge-pair join this replaces shuffled
+        # ~m^1.5 rows — 41M at sf0.1 — before the closing semi join; the
+        # intersection does the same work inside a map-side expression
+        # over the m oriented edges).
+        dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
+        dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
+        lo_first = (F.col("dlo") < F.col("dhi")) | (
+            (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
+        )
+        oriented = cs.persist(
+            canon.join(dl, "lo")
+            .join(dh, "hi")
+            .select(
+                F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
+                F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+            )
+            # read three times (adjacency build + both join streams) and
+            # adj itself feeds two differently-keyed exchanges — without
+            # the persists each consumer re-ran the canon⋈deg⋈deg
+            # orientation from scratch (measured ~25 task-s of duplicate
+            # work at sf0.1).
+        )
+        adj = cs.persist(
+            oriented.groupBy("u")
+            .agg(F.sort_array(F.collect_list("v")).alias("nb"))
+        )
+        a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
+        a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
+        closed = (
+            # shuffle-hash, not sort-merge: the adjacency side is one
+            # bounded-width row per node (build side), while sorting would
+            # buffer every edge row WITH its attached O(sqrt m) arrays —
+            # that sort buffer is what blows small heaps, and at cluster
+            # scale it's pure wasted width through two sorts. Hash build
+            # on the per-node side streams the edges untouched.
+            oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
+            # inner join: an edge whose head has no forward neighbours
+            # contributes zero triangles and may drop
+            .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
+            .select(F.size(F.array_intersect("__nbu", "__nbv")).alias("k"))
+        )
+        n_tri = closed.agg(
+            F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
+        )
+        return cs.result(cs.checkpoint(census.crossJoin(n_tri)))
 
 
 def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts of an undirected graph —
-    the node-resolved sibling of :func:`triangle_stats` (round 13),
+    the node-resolved sibling of :func:`triangle_stats`,
     feeding local-clustering-coefficient readouts.
 
     Same compact-forward orientation (orient each edge toward the
@@ -458,101 +438,93 @@ def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     degree; triangles 0 when none), eager-checkpointed with the
     canon/deg caches released.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
+    with cache_scope() as cs:
+        canon = cs.persist(
+            edges.select(
+                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
+            )
+            .filter(F.col("lo") < F.col("hi"))
+            .distinct()
         )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .persist()
-    )
-    deg = (
-        # both endpoints in ONE pass over the canon cache (r14; see
-        # triangle_stats — same union-races-the-unbuilt-cache fix)
-        canon.select(F.explode(F.array("lo", "hi")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
-    )
-    dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
-    dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
-    lo_first = (F.col("dlo") < F.col("dhi")) | (
-        (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
-    )
-    oriented = (
-        canon.join(dl, "lo")
-        .join(dh, "hi")
-        .select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+        deg = cs.persist(
+            # both endpoints in ONE pass over the canon cache (see
+            # triangle_stats — same union-races-the-unbuilt-cache fix)
+            canon.select(F.explode(F.array("lo", "hi")).alias("node"))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("d"))
         )
-        # consumed by the adjacency build AND the join stream; adj by
-        # two differently-keyed exchanges — persist both or every
-        # consumer re-runs the orientation joins (r14, triangle_stats
-        # rationale)
-        .persist()
-    )
-    adj = (
-        oriented.groupBy("u")
-        .agg(F.sort_array(F.collect_list("v")).alias("nb"))
-        .persist()
-    )
-    a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
-    a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
-    closed = (
-        # shuffle-hash for the same reason triangle_stats documents:
-        # the adjacency build side is one bounded-width row per node;
-        # sort-merge would buffer edge rows WITH O(sqrt m) arrays.
-        oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
-        .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
-        .select("u", "v", F.array_intersect("__nbu", "__nbv").alias("ws"))
-        .filter(F.size("ws") > 0)
-    )
-    # ONE pass over the closed-edge frame: a union of three selects
-    # would recompute the adjacency joins + intersections per branch
-    # (measured 8.75x at the 10x probe vs 3.1x for the global census);
-    # concat the u/v credits with the per-w credits into a single
-    # exploded struct array instead — map-side, joins evaluated once.
-    credits = closed.select(
-        F.explode(
-            F.concat(
-                F.array(
-                    F.struct(
-                        F.col("u").alias("node"), F.size("ws").alias("c")
+        dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
+        dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
+        lo_first = (F.col("dlo") < F.col("dhi")) | (
+            (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
+        )
+        oriented = cs.persist(
+            canon.join(dl, "lo")
+            .join(dh, "hi")
+            .select(
+                F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
+                F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+            )
+            # consumed by the adjacency build AND the join stream; adj by
+            # two differently-keyed exchanges — persist both or every
+            # consumer re-runs the orientation joins (triangle_stats
+            # rationale)
+        )
+        adj = cs.persist(
+            oriented.groupBy("u")
+            .agg(F.sort_array(F.collect_list("v")).alias("nb"))
+        )
+        a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
+        a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
+        closed = (
+            # shuffle-hash for the same reason triangle_stats documents:
+            # the adjacency build side is one bounded-width row per node;
+            # sort-merge would buffer edge rows WITH O(sqrt m) arrays.
+            oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
+            .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
+            .select("u", "v", F.array_intersect("__nbu", "__nbv").alias("ws"))
+            .filter(F.size("ws") > 0)
+        )
+        # ONE pass over the closed-edge frame: a union of three selects
+        # would recompute the adjacency joins + intersections per branch
+        # (measured 8.75x at the 10x probe vs 3.1x for the global census);
+        # concat the u/v credits with the per-w credits into a single
+        # exploded struct array instead — map-side, joins evaluated once.
+        credits = closed.select(
+            F.explode(
+                F.concat(
+                    F.array(
+                        F.struct(
+                            F.col("u").alias("node"), F.size("ws").alias("c")
+                        ),
+                        F.struct(
+                            F.col("v").alias("node"), F.size("ws").alias("c")
+                        ),
                     ),
-                    F.struct(
-                        F.col("v").alias("node"), F.size("ws").alias("c")
+                    F.transform(
+                        "ws",
+                        lambda w: F.struct(
+                            w.alias("node"), F.lit(1).alias("c")
+                        ),
                     ),
-                ),
-                F.transform(
-                    "ws",
-                    lambda w: F.struct(
-                        w.alias("node"), F.lit(1).alias("c")
-                    ),
+                )
+            ).alias("x")
+        ).select(F.col("x.node").alias("node"), F.col("x.c").alias("c"))
+        tri = credits.groupBy("node").agg(F.sum("c").cast("long").alias("triangles"))
+        out = (
+            deg.join(tri, "node", "left")
+            .select(
+                "node",
+                F.col("d").cast("long").alias("d"),
+                F.coalesce(F.col("triangles"), F.lit(0).cast("long")).alias(
+                    "triangles"
                 ),
             )
-        ).alias("x")
-    ).select(F.col("x.node").alias("node"), F.col("x.c").alias("c"))
-    tri = credits.groupBy("node").agg(F.sum("c").cast("long").alias("triangles"))
-    out = (
-        deg.join(tri, "node", "left")
-        .select(
-            "node",
-            F.col("d").cast("long").alias("d"),
-            F.coalesce(F.col("triangles"), F.lit(0).cast("long")).alias(
-                "triangles"
-            ),
         )
-        .localCheckpoint(eager=True)
-    )
-    for df in (canon, deg, oriented, adj):
-        df.unpersist()
-    return out
+        return cs.result(cs.checkpoint(out))
 
 
-def ktruss_support(
-    edges: DataFrame, k: int, rounds: int = 4, stats: dict | None = None
-) -> DataFrame:
+def ktruss_support(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     """k-truss of an undirected graph (Cohen 2008): the maximal
     subgraph where every edge participates in >= k-2 triangles, found
     by fixed-round support peeling — drop every edge whose current
@@ -582,108 +554,99 @@ def ktruss_support(
 
     Returns (lo, hi, sup): every truss edge with its within-truss
     support (BIGINT). Empty frame if the k-truss is empty.
-
-    ``stats``, when given, receives ``{"rounds": <executed support
-    rounds including the converging one>}`` after the peel — probe
-    instrumentation only (scripts/ktruss_probe.py), no effect on the
-    result.
     """
     if k < 3:
         raise ValueError(f"k must be >= 3, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    cur = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sup_frame = None
-    converged = False
-    executed_rounds = 0
-    for _ in range(rounds):
-        executed_rounds += 1
-        # both directed orientations in ONE pass over the survivor
-        # frame (r14 — the union form scanned it twice)
-        und = cur.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("lo").alias("u"), F.col("hi").alias("v")),
-                    F.struct(F.col("hi").alias("u"), F.col("lo").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-        deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        ud = (
-            und.join(deg, "u")
-            .join(
-                deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
+    with cache_scope() as cs:
+        cur = cs.checkpoint(
+            edges.select(
+                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
             )
+            .filter(F.col("lo") < F.col("hi"))
+            .distinct()
         )
-        # fwd feeds the adjacency build AND the triangle join stream;
-        # adj feeds two differently-keyed exchanges — persist both or
-        # each consumer re-runs the degree-orientation joins (r14, the
-        # triangle_stats rationale). Released after the round's probe
-        # (the materializing action) below.
-        fwd = ud.filter(
-            (F.col("d") < F.col("dv"))
-            | ((F.col("d") == F.col("dv")) & (F.col("u") < F.col("v")))
-        ).select("u", "v").persist()
-        adj = (
-            fwd.groupBy("u")
-            .agg(F.array_sort(F.collect_list("v")).alias("nb"))
-            .persist()
-        )
-        # every found triangle (u, v, w ∈ N+(u)∩N+(v)) contributes to
-        # its 3 member edges in ONE explode over the closed-edge rows
-        # (r14): the former tri-then-3-way-union re-ran the adjacency
-        # joins + intersections once per branch.
-        contrib = (
-            fwd.join(adj.select(F.col("u"), F.col("nb").alias("nb_u")), "u")
-            .join(
-                adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
-            )
-            .select(
+        prev: tuple[DataFrame, ...] = ()
+        for _ in range(rounds):
+            # both directed orientations in ONE pass over the survivor
+            # frame (the union form scanned it twice)
+            und = cur.select(
                 F.explode(
-                    F.expr(
-                        "flatten(transform(array_intersect(nb_u, nb_v), w ->"
-                        " array(struct(least(u, v) AS lo, greatest(u, v) AS hi),"
-                        "       struct(least(u, w) AS lo, greatest(u, w) AS hi),"
-                        "       struct(least(v, w) AS lo, greatest(v, w) AS hi))))"
+                    F.array(
+                        F.struct(F.col("lo").alias("u"), F.col("hi").alias("v")),
+                        F.struct(F.col("hi").alias("u"), F.col("lo").alias("v")),
                     )
-                ).alias("p")
+                ).alias("e")
+            ).select("e.u", "e.v")
+            deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+            ud = (
+                und.join(deg, "u")
+                .join(
+                    deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
+                )
             )
-            .select("p.lo", "p.hi")
-        )
-        s = contrib.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("sup"))
-        e = cur.join(s, ["lo", "hi"], "left").select(
-            "lo",
-            "hi",
-            F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup"),
+            # fwd feeds the adjacency build AND the triangle join stream;
+            # adj feeds two differently-keyed exchanges — persist both or
+            # each consumer re-runs the degree-orientation joins (the
+            # triangle_stats rationale). Released after the round's probe
+            # (the materializing action) below.
+            fwd = cs.persist(
+                ud.filter(
+                    (F.col("d") < F.col("dv"))
+                    | ((F.col("d") == F.col("dv")) & (F.col("u") < F.col("v")))
+                ).select("u", "v")
+            )
+            adj = cs.persist(
+                fwd.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
+            )
+            # every found triangle (u, v, w ∈ N+(u)∩N+(v)) contributes to
+            # its 3 member edges in ONE explode over the closed-edge rows:
+            # a tri-then-3-way-union would re-run the adjacency joins +
+            # intersections once per branch.
+            contrib = (
+                fwd.join(adj.select(F.col("u"), F.col("nb").alias("nb_u")), "u")
+                .join(
+                    adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
+                )
+                .select(
+                    F.explode(
+                        F.expr(
+                            "flatten(transform(array_intersect(nb_u, nb_v), w ->"
+                            " array(struct(least(u, v) AS lo, greatest(u, v) AS hi),"
+                            "       struct(least(u, w) AS lo, greatest(u, w) AS hi),"
+                            "       struct(least(v, w) AS lo, greatest(v, w) AS hi))))"
+                        )
+                    ).alias("p")
+                )
+                .select("p.lo", "p.hi")
+            )
+            s = contrib.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("sup"))
             # lazy: the under-support probe right below materializes
-            # round + checkpoint in ONE job (r13)
-        ).localCheckpoint(eager=False)
-        sup_frame = e
-        n_under = e.filter(F.col("sup") < k - 2).count()
-        fwd.unpersist()
-        adj.unpersist()
-        if n_under == 0:
-            converged = True
-            break
-        # survivors stay lazy too — next round's probe materializes
-        # them off e's already-checkpointed partitions
-        cur = e.filter(F.col("sup") >= k - 2).select("lo", "hi").localCheckpoint(
-            eager=False
-        )
-    if stats is not None:
-        stats["rounds"] = executed_rounds
-    if not converged:
+            # round + checkpoint in ONE job
+            e = cs.checkpoint(
+                cur.join(s, ["lo", "hi"], "left").select(
+                    "lo",
+                    "hi",
+                    F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup"),
+                ),
+                eager=False,
+            )
+            n_under = e.filter(F.col("sup") < k - 2).count()
+            # e is materialised: this round's inputs and the previous
+            # round's support frame (read only by cur) are done
+            cs.release(cur, fwd, adj, *prev)
+            if n_under == 0:
+                return cs.result(e)
+            # survivors stay lazy too — next round's probe materializes
+            # them off e's already-checkpointed partitions
+            cur = cs.checkpoint(
+                e.filter(F.col("sup") >= k - 2).select("lo", "hi"), eager=False
+            )
+            prev = (e,)
         raise ValueError(
             f"k-truss peel did not converge in {rounds} rounds; increase rounds"
         )
-    return sup_frame
 
 
 def bfs_hops(
@@ -704,38 +667,29 @@ def bfs_hops(
 
     Returns (node, dist) for every node within ``max_hops``.
     """
-    # pre-hashed on src once (r14): each round's frontier join reuses
-    # the cache's HashPartitioning(src), so only the (small) frontier
-    # side shuffles — the edge list never re-exchanges per round
-    edges = edges.select("src", "dst").repartition(F.col("src")).persist()
-    visited = sources.select("node").distinct().withColumn(
-        "dist", F.lit(0).cast("long")
-    )
-    frontier = visited.select("node")
-    frontiers: list[DataFrame] = []
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(h).cast("long"))
+    with cache_scope() as cs:
+        # pre-hashed on src once: each round's frontier join reuses the
+        # cache's HashPartitioning(src), so only the (small) frontier
+        # side shuffles — the edge list never re-exchanges per round
+        edges = cs.persist(edges.select("src", "dst").repartition(F.col("src")))
+        visited = sources.select("node").distinct().withColumn(
+            "dist", F.lit(0).cast("long")
+        )
+        frontier = visited.select("node")
+        for h in range(1, max_hops + 1):
             # each round's frontier is materialised once; without this
             # the visited lineage is re-evaluated 2^h times (it feeds
             # both the anti-join and the union)
-            .persist()
-        )
-        frontiers.append(nxt)
-        visited = visited.union(nxt)
-        frontier = nxt.select("node")
-    # Materialise, then release the per-round frontier caches and the
-    # edge cache — the truncated-lineage result no longer needs them,
-    # so long-lived sessions don't leak executor storage.
-    out = visited.localCheckpoint(eager=True)
-    edges.unpersist()
-    for f in frontiers:
-        f.unpersist()
-    return out
+            nxt = cs.persist(
+                frontier.join(edges, frontier["node"] == edges["src"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("dist", F.lit(h).cast("long"))
+            )
+            visited = visited.union(nxt)
+            frontier = nxt.select("node")
+        return cs.result(cs.checkpoint(visited))
 
 
 def personalized_pagerank_integer(
@@ -777,134 +731,119 @@ def personalized_pagerank_integer(
 
     Returns (node, rank), rank BIGINT.
     """
-    from pyspark.sql import Window as _W
-
     edges = edges.select("src", "dst")
     if not assume_distinct:
         edges = edges.distinct()
-    edges = edges.persist()
-    # Degree attaches via a src-partitioned window over the one
-    # pre-hash exchange (round-10; see pagerank_integer — the former
-    # groupBy+join+repartition build cost two edge-sized exchanges
-    # and a node-sized join side that can't broadcast at scale).
-    edges_deg = (
-        edges.repartition(F.col("src"))
-        .withColumn(
-            "deg", F.count(F.lit(1)).over(_W.partitionBy("src")).cast("long")
+    with cache_scope() as cs:
+        edges = cs.persist(edges)
+        # Degree attaches via a src-partitioned window over the one
+        # pre-hash exchange (see pagerank_integer — the former
+        # groupBy+join+repartition build cost two edge-sized exchanges
+        # and a node-sized join side that can't broadcast at scale).
+        edges_deg = cs.persist(
+            edges.repartition(F.col("src")).withColumn(
+                "deg", F.count(F.lit(1)).over(Window.partitionBy("src")).cast("long")
+            )
         )
-        .persist()
-    )
-    if symmetric:
-        nodes = edges_deg.select(F.col("src").alias("node")).distinct().persist()
-    else:
-        nodes = (
-            # both endpoints in one pass over the edge cache (r14)
-            edges.select(F.explode(F.array("src", "dst")).alias("node"))
-            .distinct()
-            .persist()
-        )
-        n_dangling = nodes.join(
-            edges_deg.select(F.col("src").alias("node")), "node", "left_anti"
-        ).count()
-        if n_dangling:
-            edges.unpersist()
-            edges_deg.unpersist()
-            nodes.unpersist()
-            raise ValueError(
-                f"{n_dangling} node(s) have no out-edge; personalized PageRank "
-                "would lose their rank mass — symmetrise the graph or drop sinks"
-            )
-    seed_distinct = seeds.select("node").distinct()
-    seed_nodes = seed_distinct.join(nodes, "node", "left_semi").persist()
-    # n_nodes and n_seeds in ONE action (r14): count every node row and
-    # count the non-null seed flags of the same broadcast left join —
-    # two separate .count() jobs were pure per-query driver latency.
-    counts = nodes.join(
-        F.broadcast(seed_distinct.withColumn("__s", F.lit(True))), "node", "left"
-    ).agg(
-        F.count(F.lit(1)).alias("__nn"), F.count("__s").alias("__ns")
-    ).first()
-    n_nodes, n_seeds = counts["__nn"], counts["__ns"]
-    if n_seeds == 0:
-        edges.unpersist()
-        edges_deg.unpersist()
-        nodes.unpersist()
-        seed_nodes.unpersist()
-        raise ValueError("no seed intersects the graph's node set")
-    base_seed = ((damping_den - damping_num) * init_rank * n_nodes) // (
-        damping_den * n_seeds
-    )
-    seed_flag = seed_nodes.withColumn("__is_seed", F.lit(True))
-    base = F.when(
-        F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(base_seed)
-    ).otherwise(F.lit(0)).cast("long")
-    flagged = nodes.join(F.broadcast(seed_flag), "node", "left").persist()
-    ranks = flagged.select(
-        "node",
-        F.when(
-            F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(init_rank)
-        ).otherwise(F.lit(0)).cast("long").alias("rank"),
-    )
-    for it in range(iters):
-        if it == 0:
-            # ROUND 1 collapses (r13): rank is init on seeds and 0
-            # elsewhere, so the node-sized shuffle join degenerates to
-            # a BROADCAST left join against the contract-small seed
-            # set with the init constant inlined. LEFT (not semi):
-            # every dst must keep its contrib row — the symmetric path
-            # assigns ranks = contrib, and dropping zero-inflow rows
-            # would erase non-seed-adjacent nodes' rank rows (and with
-            # them a seed's teleport base next round).
-            sflag = seed_nodes.select(
-                F.col("node").alias("__rn"), F.lit(True).alias("__s")
-            )
-            contrib = (
-                edges_deg.join(
-                    F.broadcast(sflag), edges_deg["src"] == sflag["__rn"], "left"
-                )
-                .select(
-                    F.col("dst").alias("node"),
-                    F.when(
-                        F.coalesce(F.col("__s"), F.lit(False)),
-                        F.expr(f"CAST({init_rank} AS BIGINT) div deg"),
-                    )
-                    .otherwise(F.lit(0).cast("long"))
-                    .alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-        else:
-            r = ranks.select(
-                F.col("node").alias("__rn"), F.col("rank").alias("__rr")
-            )
-            contrib = (
-                edges_deg.join(r, edges_deg["src"] == r["__rn"])
-                .select(F.col("dst").alias("node"), F.expr("__rr div deg").alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-        damped = (
-            base
-            + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
-        ).cast("long")
         if symmetric:
-            # every node has in-edges (src set == dst set == node
-            # set) and every node holds a rank row, so contrib covers
-            # the full node set each round: the seed flag attaches as
-            # a broadcast map-side join — one fewer node-sized
-            # shuffle join per round than the general path below.
-            ranks = contrib.join(F.broadcast(seed_flag), "node", "left").select(
-                "node", damped.alias("rank")
-            )
+            nodes = cs.persist(edges_deg.select(F.col("src").alias("node")).distinct())
         else:
-            ranks = flagged.join(contrib, "node", "left").select(
-                "node", damped.alias("rank")
+            # both endpoints in one pass over the edge cache
+            nodes = cs.persist(
+                edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
             )
-    out = ranks.localCheckpoint(eager=True)
-    for df in (edges, nodes, seed_nodes, edges_deg, flagged):
-        df.unpersist()
-    return out
+            n_dangling = nodes.join(
+                edges_deg.select(F.col("src").alias("node")), "node", "left_anti"
+            ).count()
+            if n_dangling:
+                raise ValueError(
+                    f"{n_dangling} node(s) have no out-edge; personalized PageRank "
+                    "would lose their rank mass — symmetrise the graph or drop sinks"
+                )
+        seed_distinct = seeds.select("node").distinct()
+        seed_nodes = cs.persist(seed_distinct.join(nodes, "node", "left_semi"))
+        # n_nodes and n_seeds in ONE action: count every node row and
+        # count the non-null seed flags of the same broadcast left join —
+        # two separate .count() jobs were pure per-query driver latency.
+        counts = nodes.join(
+            F.broadcast(seed_distinct.withColumn("__s", F.lit(True))), "node", "left"
+        ).agg(
+            F.count(F.lit(1)).alias("__nn"), F.count("__s").alias("__ns")
+        ).first()
+        n_nodes, n_seeds = counts["__nn"], counts["__ns"]
+        if n_seeds == 0:
+            raise ValueError("no seed intersects the graph's node set")
+        base_seed = ((damping_den - damping_num) * init_rank * n_nodes) // (
+            damping_den * n_seeds
+        )
+        seed_flag = seed_nodes.withColumn("__is_seed", F.lit(True))
+        base = F.when(
+            F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(base_seed)
+        ).otherwise(F.lit(0)).cast("long")
+        flagged = cs.persist(nodes.join(F.broadcast(seed_flag), "node", "left"))
+        ranks = flagged.select(
+            "node",
+            F.when(
+                F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(init_rank)
+            ).otherwise(F.lit(0)).cast("long").alias("rank"),
+        )
+        for it in range(iters):
+            if it == 0:
+                # ROUND 1 collapses: rank is init on seeds and 0
+                # elsewhere, so the node-sized shuffle join degenerates to
+                # a BROADCAST left join against the contract-small seed
+                # set with the init constant inlined. LEFT (not semi):
+                # every dst must keep its contrib row — the symmetric path
+                # assigns ranks = contrib, and dropping zero-inflow rows
+                # would erase non-seed-adjacent nodes' rank rows (and with
+                # them a seed's teleport base next round).
+                sflag = seed_nodes.select(
+                    F.col("node").alias("__rn"), F.lit(True).alias("__s")
+                )
+                contrib = (
+                    edges_deg.join(
+                        F.broadcast(sflag), edges_deg["src"] == sflag["__rn"], "left"
+                    )
+                    .select(
+                        F.col("dst").alias("node"),
+                        F.when(
+                            F.coalesce(F.col("__s"), F.lit(False)),
+                            F.expr(f"CAST({init_rank} AS BIGINT) div deg"),
+                        )
+                        .otherwise(F.lit(0).cast("long"))
+                        .alias("c"),
+                    )
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("inflow"))
+                )
+            else:
+                r = ranks.select(
+                    F.col("node").alias("__rn"), F.col("rank").alias("__rr")
+                )
+                contrib = (
+                    edges_deg.join(r, edges_deg["src"] == r["__rn"])
+                    .select(F.col("dst").alias("node"), F.expr("__rr div deg").alias("c"))
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("inflow"))
+                )
+            damped = (
+                base
+                + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
+            ).cast("long")
+            if symmetric:
+                # every node has in-edges (src set == dst set == node
+                # set) and every node holds a rank row, so contrib covers
+                # the full node set each round: the seed flag attaches as
+                # a broadcast map-side join — one fewer node-sized
+                # shuffle join per round than the general path below.
+                ranks = contrib.join(F.broadcast(seed_flag), "node", "left").select(
+                    "node", damped.alias("rank")
+                )
+            else:
+                ranks = flagged.join(contrib, "node", "left").select(
+                    "node", damped.alias("rank")
+                )
+        return cs.result(cs.checkpoint(ranks))
 
 
 def kcore_degrees(
@@ -955,59 +894,67 @@ def kcore_degrees(
         .filter(F.col("lo") < F.col("hi"))
         .distinct()
     )
-    # symmetric directed form: degree(v) == out-degree(v), and removing
-    # a node means dropping rows where it appears on EITHER side. Both
-    # directions in ONE pass over the canonical list (r14), then
-    # pre-hashed on src ONCE: every peel round's degree aggregate
-    # reuses the checkpoint's HashPartitioning(src) exchange-free, and
-    # the (small) peel sets anti-join as broadcasts that preserve it —
-    # so the per-round exchange disappears entirely.
-    cur = canon.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("lo").alias("src"), F.col("hi").alias("dst")),
-                F.struct(F.col("hi").alias("src"), F.col("lo").alias("dst")),
+    with cache_scope() as cs:
+        # symmetric directed form: degree(v) == out-degree(v), and removing
+        # a node means dropping rows where it appears on EITHER side. Both
+        # directions in ONE pass over the canonical list, then pre-hashed
+        # on src ONCE: every peel round's degree aggregate reuses the
+        # checkpoint's HashPartitioning(src) exchange-free, and the
+        # (small) peel sets anti-join as broadcasts that preserve it — so
+        # the per-round exchange disappears entirely.
+        cur = cs.checkpoint(
+            canon.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("lo").alias("src"), F.col("hi").alias("dst")),
+                        F.struct(F.col("hi").alias("src"), F.col("lo").alias("dst")),
+                    )
+                ).alias("e")
             )
-        ).alias("e")
-    ).select("e.src", "e.dst").repartition(F.col("src")).localCheckpoint(eager=True)
-    converged = False
-    # The survivor checkpoint is LAZY (r13): the next round's
-    # bad.count() — or the final degree aggregate — is the
-    # materializing action, so peel + checkpoint run as ONE job per
-    # round instead of two. The previous round's `bad` cache must
-    # outlive that materialization (the lazy plan anti-joins it), so
-    # its unpersist is deferred one round.
-    prev_bad = None
-    for _ in range(rounds):
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        bad = deg.filter(F.col("d") < k).select(F.col("src").alias("__bad")).persist()
-        n_bad = bad.count()  # materializes the pending lazy checkpoint
-        if prev_bad is not None:
-            prev_bad.unpersist()
-            prev_bad = None
-        if n_bad == 0:
-            bad.unpersist()
-            converged = True
-            break
-        cur = (
-            cur.join(bad, cur["src"] == bad["__bad"], "left_anti")
-            .join(bad, cur["dst"] == bad["__bad"], "left_anti")
-            .localCheckpoint(eager=False)
+            .select("e.src", "e.dst")
+            .repartition(F.col("src"))
         )
-        prev_bad = bad
-    out = cur.groupBy("src").agg(F.count(F.lit(1)).alias("core_deg")).select(
-        F.col("src").alias("node"), F.col("core_deg").cast("long").alias("core_deg")
-    ).localCheckpoint(eager=True)
-    if prev_bad is not None:
-        prev_bad.unpersist()
-    if not converged:
-        low = out.agg(F.min("core_deg").alias("m")).first()["m"]
-        if low is not None and low < k:
-            raise ValueError(
-                f"k-core peel did not converge in {rounds} rounds "
-                f"(minimum surviving degree {low} < k={k}); increase rounds"
+        converged = False
+        # The survivor checkpoint is LAZY: the next round's bad.count()
+        # — or the final degree aggregate — is the materializing action,
+        # so peel + checkpoint run as ONE job per round instead of two.
+        # The previous round (its survivors and its `bad` cache) must
+        # outlive that materialization, so its release is deferred one
+        # round.
+        prev: tuple[DataFrame, ...] = ()
+        for _ in range(rounds):
+            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+            bad = cs.persist(
+                deg.filter(F.col("d") < k).select(F.col("src").alias("__bad"))
             )
-    return out
+            n_bad = bad.count()  # materializes the pending lazy checkpoint
+            cs.release(*prev)
+            if n_bad == 0:
+                converged = True
+                break
+            prev = (cur, bad)
+            cur = cs.checkpoint(
+                cur.join(bad, cur["src"] == bad["__bad"], "left_anti").join(
+                    bad, cur["dst"] == bad["__bad"], "left_anti"
+                ),
+                eager=False,
+            )
+        out = cs.checkpoint(
+            cur.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("core_deg"))
+            .select(
+                F.col("src").alias("node"),
+                F.col("core_deg").cast("long").alias("core_deg"),
+            )
+        )
+        if not converged:
+            low = out.agg(F.min("core_deg").alias("m")).first()["m"]
+            if low is not None and low < k:
+                raise ValueError(
+                    f"k-core peel did not converge in {rounds} rounds "
+                    f"(minimum surviving degree {low} < k={k}); increase rounds"
+                )
+        return cs.result(out)
 
 
 def skyline_2d(
@@ -1091,59 +1038,58 @@ def hits_integer(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    edges = edges.select("src", "dst").distinct().persist()
-    e_by_src = edges.repartition(F.col("src")).persist()
-    e_by_dst = edges.repartition(F.col("dst")).persist()
+    with cache_scope() as cs:
+        edges = cs.persist(edges.select("src", "dst").distinct())
+        e_by_src = cs.persist(edges.repartition(F.col("src")))
+        e_by_dst = cs.persist(edges.repartition(F.col("dst")))
 
-    def _normalize(raw: DataFrame) -> DataFrame:
-        # read by total AND join; lazy — the total's broadcast build
-        # is the materializing action, one job instead of two (r13)
-        raw = raw.localCheckpoint(eager=False)
-        tot = raw.agg(
-            F.sum(F.col("raw").cast("decimal(38,0)")).alias("__tot")
-        )
-        return raw.crossJoin(F.broadcast(tot)).select(
-            "node",
-            F.expr(
-                f"CAST((CAST(raw AS DECIMAL(38,0)) * {scale}) div __tot AS BIGINT)"
-            ).alias("score"),
-        )
+        def _normalize(raw: DataFrame) -> DataFrame:
+            # read by total AND join; lazy — the total's broadcast build
+            # is the materializing action, one job instead of two
+            raw = cs.checkpoint(raw, eager=False)
+            tot = raw.agg(
+                F.sum(F.col("raw").cast("decimal(38,0)")).alias("__tot")
+            )
+            return raw.crossJoin(F.broadcast(tot)).select(
+                "node",
+                F.expr(
+                    f"CAST((CAST(raw AS DECIMAL(38,0)) * {scale}) div __tot AS BIGINT)"
+                ).alias("score"),
+            )
 
-    hubs = e_by_src.select(F.col("src").alias("node")).distinct().withColumn(
-        "score", F.lit(scale).cast("long")
-    )
-    auth = None
-    for it in range(iters):
-        if it == 0:
-            # ROUND 1 collapses (r13): every hub score is the init
-            # constant, so sum(__hs) per dst == in-count * scale —
-            # skip both the hub-init distinct and the join. Same
-            # integer arithmetic, bit-identical.
-            auth = _normalize(
-                e_by_src.groupBy(F.col("dst").alias("node")).agg(
-                    (F.count(F.lit(1)) * F.lit(scale).cast("long")).alias("raw")
+        hubs = e_by_src.select(F.col("src").alias("node")).distinct().withColumn(
+            "score", F.lit(scale).cast("long")
+        )
+        auth = None
+        for it in range(iters):
+            if it == 0:
+                # ROUND 1 collapses: every hub score is the init
+                # constant, so sum(__hs) per dst == in-count * scale —
+                # skip both the hub-init distinct and the join. Same
+                # integer arithmetic, bit-identical.
+                auth = _normalize(
+                    e_by_src.groupBy(F.col("dst").alias("node")).agg(
+                        (F.count(F.lit(1)) * F.lit(scale).cast("long")).alias("raw")
+                    )
                 )
+            else:
+                h = hubs.select(
+                    F.col("node").alias("__hn"), F.col("score").alias("__hs")
+                )
+                auth = _normalize(
+                    e_by_src.join(h, e_by_src["src"] == h["__hn"])
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum("__hs").alias("raw"))
+                )
+            a = auth.select(F.col("node").alias("__an"), F.col("score").alias("__as"))
+            hubs = _normalize(
+                e_by_dst.join(a, e_by_dst["dst"] == a["__an"])
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("__as").alias("raw"))
             )
-        else:
-            h = hubs.select(
-                F.col("node").alias("__hn"), F.col("score").alias("__hs")
-            )
-            auth = _normalize(
-                e_by_src.join(h, e_by_src["src"] == h["__hn"])
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("__hs").alias("raw"))
-            )
-        a = auth.select(F.col("node").alias("__an"), F.col("score").alias("__as"))
-        hubs = _normalize(
-            e_by_dst.join(a, e_by_dst["dst"] == a["__an"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("__as").alias("raw"))
-        )
-    out_a = auth.withColumnRenamed("score", "auth").localCheckpoint(eager=True)
-    out_h = hubs.withColumnRenamed("score", "hub").localCheckpoint(eager=True)
-    for df in (edges, e_by_src, e_by_dst):
-        df.unpersist()
-    return out_a, out_h
+        out_a = cs.checkpoint(auth.withColumnRenamed("score", "auth"))
+        out_h = cs.checkpoint(hubs.withColumnRenamed("score", "hub"))
+        return cs.result(out_a), cs.result(out_h)
 
 
 def multi_source_ball_sizes(
@@ -1170,34 +1116,28 @@ def multi_source_ball_sizes(
 
     Returns (seed, dist, n_nodes), zero rows for hops past exhaustion.
     """
-    # pre-hashed on src once (r14; the bfs_hops discipline): only the
-    # frontier side shuffles per round
-    edges = edges.select("src", "dst").repartition(F.col("src")).persist()
-    visited = (
-        seeds.select("node")
-        .distinct()
-        .select(F.col("node").alias("seed"), F.col("node"), F.lit(0).cast("long").alias("dist"))
-    )
-    frontier = visited.select("seed", "node")
-    frontiers: list[DataFrame] = []
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select("seed", F.col("dst").alias("node"))
+    with cache_scope() as cs:
+        # pre-hashed on src once (the bfs_hops discipline): only the
+        # frontier side shuffles per round
+        edges = cs.persist(edges.select("src", "dst").repartition(F.col("src")))
+        visited = (
+            seeds.select("node")
             .distinct()
-            .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("dist", F.lit(h).cast("long"))
-            .persist()
+            .select(F.col("node").alias("seed"), F.col("node"), F.lit(0).cast("long").alias("dist"))
         )
-        frontiers.append(nxt)
-        visited = visited.union(nxt)
-        frontier = nxt.select("seed", "node")
-    out = (
-        visited.groupBy("seed", "dist")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
-    for f in frontiers:
-        f.unpersist()
-    return out
+        frontier = visited.select("seed", "node")
+        for h in range(1, max_hops + 1):
+            nxt = cs.persist(
+                frontier.join(edges, frontier["node"] == edges["src"])
+                .select("seed", F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
+                .withColumn("dist", F.lit(h).cast("long"))
+            )
+            visited = visited.union(nxt)
+            frontier = nxt.select("seed", "node")
+        return cs.result(
+            cs.checkpoint(
+                visited.groupBy("seed", "dist").agg(F.count(F.lit(1)).alias("n_nodes"))
+            )
+        )

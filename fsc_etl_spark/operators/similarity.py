@@ -34,6 +34,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from fsc_etl_spark.operators.cache import cache_scope
+
 ROUND_DIGITS = 6
 
 
@@ -332,63 +334,62 @@ def mmr_select(
     lam = F.lit(lam_num) / F.lit(lam_den)
     one_minus = F.lit(lam_den - lam_num) / F.lit(lam_den)
     q = lit_double_array(query_vec)
-    cand = (
-        corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("c_vec"))
-        .withColumn("c_n", l2_norm(F.col("c_vec")))
-        .withColumn("q_vec", q)
-        .withColumn("q_n", l2_norm(F.col("q_vec")))
-        .withColumn(
-            "rel",
-            F.round(
-                dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n")),
-                ROUND_DIGITS,
-            ),
-        )
-        .select(id_col, "c_vec", "c_n", "rel")
-        .persist()
-    )
-    picked: list = []  # (id, vector, norm, rel) driver-side, bounded k rows
-    spark = corpus.sparkSession
-    for t in range(k):
-        if picked:
-            # the picked set is <= k rows of d floats — small enough to
-            # ride in the plan as literal arrays, so the per-round
-            # re-score is a pure map + TakeOrdered with NO join, NO
-            # shuffle (the earlier broadcast-join + groupBy form spent
-            # its time on join/aggregate stage launches). Arithmetic is
-            # identical: the same dot-fold against the same doubles.
-            sim_terms = [
+    with cache_scope() as cs:
+        cand = cs.persist(
+            corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("c_vec"))
+            .withColumn("c_n", l2_norm(F.col("c_vec")))
+            .withColumn("q_vec", q)
+            .withColumn("q_n", l2_norm(F.col("q_vec")))
+            .withColumn(
+                "rel",
                 F.round(
-                    dot(F.col("c_vec"), lit_double_array(p[1]))
-                    / (F.col("c_n") * F.lit(p[2])),
+                    dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n")),
                     ROUND_DIGITS,
-                )
-                for p in picked
-            ]
-            max_sim = sim_terms[0] if len(sim_terms) == 1 else F.greatest(*sim_terms)
-            sims = cand.filter(
-                ~F.col(id_col).isin([p[0] for p in picked])
-            ).withColumn("max_sim", max_sim)
-        else:
-            sims = cand.withColumn("max_sim", F.lit(0.0))
-        rows = (
-            sims.withColumn(
-                "score",
-                F.round(lam * F.col("rel") - one_minus * F.col("max_sim"), ROUND_DIGITS),
+                ),
             )
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(1)
-            .collect()
+            .select(id_col, "c_vec", "c_n", "rel")
         )
-        if not rows:
-            # k exceeds the candidate count — return the exhausted
-            # selection rather than IndexError mid-greedy.
-            break
-        best = rows[0]
-        picked.append(
-            (best[id_col], list(best["c_vec"]), best["c_n"], best["rel"], best["score"])
-        )
-    cand.unpersist()
+        picked: list = []  # (id, vector, norm, rel) driver-side, bounded k rows
+        spark = corpus.sparkSession
+        for t in range(k):
+            if picked:
+                # the picked set is <= k rows of d floats — small enough to
+                # ride in the plan as literal arrays, so the per-round
+                # re-score is a pure map + TakeOrdered with NO join, NO
+                # shuffle (the earlier broadcast-join + groupBy form spent
+                # its time on join/aggregate stage launches). Arithmetic is
+                # identical: the same dot-fold against the same doubles.
+                sim_terms = [
+                    F.round(
+                        dot(F.col("c_vec"), lit_double_array(p[1]))
+                        / (F.col("c_n") * F.lit(p[2])),
+                        ROUND_DIGITS,
+                    )
+                    for p in picked
+                ]
+                max_sim = sim_terms[0] if len(sim_terms) == 1 else F.greatest(*sim_terms)
+                sims = cand.filter(
+                    ~F.col(id_col).isin([p[0] for p in picked])
+                ).withColumn("max_sim", max_sim)
+            else:
+                sims = cand.withColumn("max_sim", F.lit(0.0))
+            rows = (
+                sims.withColumn(
+                    "score",
+                    F.round(lam * F.col("rel") - one_minus * F.col("max_sim"), ROUND_DIGITS),
+                )
+                .orderBy(F.col("score").desc(), F.col(id_col).asc())
+                .limit(1)
+                .collect()
+            )
+            if not rows:
+                # k exceeds the candidate count — return the exhausted
+                # selection rather than IndexError mid-greedy.
+                break
+            best = rows[0]
+            picked.append(
+                (best[id_col], list(best["c_vec"]), best["c_n"], best["rel"], best["score"])
+            )
     id_field = corpus.schema[id_col].dataType.simpleString()
     return spark.createDataFrame(
         [

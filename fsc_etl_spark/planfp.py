@@ -4,10 +4,10 @@ The repo asserts plan properties piecemeal (no-exchange bucketed join,
 DPP expression, bounded global windows — tests/test_plan_quality.py).
 This module generalizes that: a *fingerprint* of a query's physical
 plan — the multiset of operator kinds, the exchange count, and the
-join strategies — snapshotted per benched query in
+join strategies — snapshotted per query in
 ``docs/plan_fingerprints.json`` and gated by
 ``tests/test_plan_fingerprints.py``. An accidental broadcast→shuffle
-flip, a lost exchange reuse, or a new exchange the wall-clock band
+flip, a changed join strategy, or a new exchange the wall-clock band
 would hide now fails a deterministic test instead of drifting
 silently.
 
@@ -22,25 +22,19 @@ thresholds see different sizes there; the bench band and scale probes
 cover that axis). With AQE on, an un-executed plan prints the
 statically-planned tree under ``AdaptiveSparkPlan`` — deterministic
 given fixture + config, which is exactly what a regression gate
-needs.
+needs. It is the plan before execution, so it never shows the
+exchange reuse or the re-planned joins adaptive execution applies
+while the query runs: the ``reused_exchanges`` count is 0 in every
+snapshot, and the gate cannot see a lost ``ReusedExchange``.
 
-Iterative/eager builders (the graph family, psi) execute jobs at
-build time and return a checkpointed frame whose visible plan is a
-``Scan ExistingRDD``; their fingerprint covers the final readout
-stage only, and says so via the ``scan_existing_rdd`` marker — the
-per-round plan shape for those is pinned by their dedicated plan
-tests instead. ONE-SHOT eager builders (a single lazy plan whose
-small result is materialised so its caches can be released) end in
-:func:`checkpoint_and_release`, the only reader of the flag. Those are
-basket_pair_support, basket_triple_support, assoc_rules_parts,
-pmi_top_bigrams, graph_common_neighbors, graph_assortativity,
-community_modularity and graph_conductance. Under :func:`plan_only`
-the helper skips the tail and returns the full pre-checkpoint plan;
-otherwise the checkpoint would collapse the fingerprint to
-``Scan:ExistingRDD`` and hide broadcast flips or extra exchanges in
-the real plan. The tail only releases caches after the result is
-materialized, so skipping it cannot change the fingerprinted plan,
-and the fingerprint context never executes the frame.
+Fingerprints are taken inside ``operators.cache.plan_only``, where a
+builder that materialises its result through its cache scope returns
+the lazy plan instead, so broadcast flips and extra exchanges in that
+plan stay visible. Iterative builders (the graph family, psi) execute
+jobs at build time and return a checkpoint whose visible plan is a
+``Scan ExistingRDD``; their fingerprint covers the final readout stage
+only, and the per-round plan shape for those is pinned by their
+dedicated plan tests instead.
 
 Both halves of the gate (scripts/gen_plan_fingerprints.py and
 tests/test_plan_fingerprints.py) take their session config and
@@ -59,7 +53,6 @@ from __future__ import annotations
 import os
 import re
 from collections import Counter
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -74,41 +67,6 @@ def gate_sf_dir() -> str:
     root, overridable the same way preflight resolves it)."""
     root = os.environ.get("SPARK_GRAFT_TESTDATA_ROOT", "/root/testdata")
     return os.path.join(root, "sf0.001")
-
-
-_PLAN_ONLY = False
-
-
-@contextmanager
-def plan_only():
-    """Fingerprint context: builders return lazy, un-checkpointed
-    frames. Callers must not execute the frames and should
-    ``spark.catalog.clearCache()`` afterwards (builders' persist
-    markers are left for the tail that was skipped)."""
-    global _PLAN_ONLY
-    prev = _PLAN_ONLY
-    _PLAN_ONLY = True
-    try:
-        yield
-    finally:
-        _PLAN_ONLY = prev
-
-
-def checkpoint_and_release(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """The cache-release tail of a one-shot eager builder: materialise
-    the small result ``out`` with an eager local checkpoint, then
-    unpersist ``cached``, the frames its plan read from cache.
-
-    Inside :func:`plan_only` it returns ``out`` unchanged and leaves
-    the caches persisted, so the fingerprint sees the real plan, not
-    ``Scan:ExistingRDD``.
-    """
-    if _PLAN_ONLY:
-        return out
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
 
 
 #: Strip the explain tree-drawing prefix: spaces, ':', '+', '-', '*',

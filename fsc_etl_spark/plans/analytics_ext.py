@@ -14,7 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fsc_etl_spark import planfp
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.joins import asof_join, range_join
 from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism
 from fsc_etl_spark.sources.readers import read_parquet_table as t
@@ -198,7 +198,7 @@ def explode_doc_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
 def approx_user_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Approximate aggregates — HLL++ distinct count and quantile
-    sketch — published as ERROR-BOUNDED CONTRACTS (VERDICT r8 #6):
+    sketch — published as ERROR-BOUNDED CONTRACTS:
     sketch internals are engine-specific, so the raw estimates can
     never hash-match a DuckDB twin; the advertised ACCURACY can. The
     output carries the exact values plus booleans asserting each
@@ -215,56 +215,57 @@ def approx_user_stats(spark: SparkSession, sf: str) -> DataFrame:
     every bound. All inputs are deterministic (both sketches are
     data-order-free aggregates), so the booleans are stable."""
     ev = t(spark, sf, "events")
-    # The 5-row sketch aggregate feeds TWO branches (the rank scan's
-    # broadcast and the final join). Without a lineage break each
-    # branch re-runs the expensive sketch pass AND — the ADVICE r6
-    # hazard — AQE may instantiate percentile_approx separately per
-    # branch with different partial-merge orders, forking the
-    # estimates the contract then checks. Eager checkpoint pins one
-    # materialization of the |event_types|-row frame.
-    # countDistinct and percentile_approx must NOT share one agg:
-    # the distinct rewrite drags the typed-imperative percentile
-    # through the Expand/sort machinery (measured 6.9 s vs 0.4+0.7 s
-    # split at sf0.1). Two single-pass aggs + a 5-row join instead.
-    sketches = ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("au"),
-        F.percentile_approx("value", 0.5, 10000).alias("ap50"),
-        F.percentile_approx("value", 0.95, 10000).alias("ap95"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    exacts = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users")
-    )
-    agg = sketches.join(exacts, "event_type").localCheckpoint(eager=True)
-    ranks = (
-        ev.join(
-            F.broadcast(agg.select("event_type", "ap50", "ap95")), "event_type"
+    with cache_scope() as cs:
+        # The 5-row sketch aggregate feeds TWO branches (the rank scan's
+        # broadcast and the final join). Without a lineage break each
+        # branch re-runs the expensive sketch pass AND AQE may instantiate percentile_approx separately per
+        # branch with different partial-merge orders, forking the
+        # estimates the contract then checks. Eager checkpoint pins one
+        # materialization of the |event_types|-row frame.
+        # countDistinct and percentile_approx must NOT share one agg:
+        # the distinct rewrite drags the typed-imperative percentile
+        # through the Expand/sort machinery (measured 6.9 s vs 0.4+0.7 s
+        # split at sf0.1). Two single-pass aggs + a 5-row join instead.
+        sketches = ev.groupBy("event_type").agg(
+            F.approx_count_distinct("user_id", rsd=0.02).alias("au"),
+            F.percentile_approx("value", 0.5, 10000).alias("ap50"),
+            F.percentile_approx("value", 0.95, 10000).alias("ap95"),
+            F.count(F.lit(1)).alias("n"),
         )
-        .groupBy("event_type")
-        .agg(
-            F.sum((F.col("value") < F.col("ap50")).cast("long")).alias("lo50"),
-            F.sum((F.col("value") <= F.col("ap50")).cast("long")).alias("hi50"),
-            F.sum((F.col("value") < F.col("ap95")).cast("long")).alias("lo95"),
-            F.sum((F.col("value") <= F.col("ap95")).cast("long")).alias("hi95"),
+        exacts = ev.groupBy("event_type").agg(
+            F.countDistinct("user_id").alias("exact_users")
         )
-    )
+        agg = cs.checkpoint(sketches.join(exacts, "event_type"))
+        ranks = (
+            ev.join(
+                F.broadcast(agg.select("event_type", "ap50", "ap95")), "event_type"
+            )
+            .groupBy("event_type")
+            .agg(
+                F.sum((F.col("value") < F.col("ap50")).cast("long")).alias("lo50"),
+                F.sum((F.col("value") <= F.col("ap50")).cast("long")).alias("hi50"),
+                F.sum((F.col("value") < F.col("ap95")).cast("long")).alias("lo95"),
+                F.sum((F.col("value") <= F.col("ap95")).cast("long")).alias("hi95"),
+            )
+        )
 
-    def rank_ok(lo: str, hi: str, num: int, den: int):
-        target = F.expr(f"({num} * (n + 1)) div {den}")
-        tol = F.expr("n div 100 + 1")
-        return (F.col(lo) <= target + tol) & (F.col(hi) >= target - tol)
+        def rank_ok(lo: str, hi: str, num: int, den: int):
+            target = F.expr(f"({num} * (n + 1)) div {den}")
+            tol = F.expr("n div 100 + 1")
+            return (F.col(lo) <= target + tol) & (F.col(hi) >= target - tol)
 
-    return agg.join(ranks, "event_type").select(
-        "event_type",
-        F.col("exact_users").cast("bigint").alias("exact_users"),
-        (
-            F.abs(F.col("au") - F.col("exact_users")) * 20
-            <= F.greatest(F.lit(40), F.col("exact_users"))
-        ).alias("users_within_5pct"),
-        rank_ok("lo50", "hi50", 1, 2).alias("p50_within_tol"),
-        rank_ok("lo95", "hi95", 19, 20).alias("p95_within_tol"),
-        (F.col("ap50") <= F.col("ap95")).alias("quantiles_ordered"),
-    )
+        out = agg.join(ranks, "event_type").select(
+            "event_type",
+            F.col("exact_users").cast("bigint").alias("exact_users"),
+            (
+                F.abs(F.col("au") - F.col("exact_users")) * 20
+                <= F.greatest(F.lit(40), F.col("exact_users"))
+            ).alias("users_within_5pct"),
+            rank_ok("lo50", "hi50", 1, 2).alias("p50_within_tol"),
+            rank_ok("lo95", "hi95", 19, 20).alias("p95_within_tol"),
+            (F.col("ap50") <= F.col("ap95")).alias("quantiles_ordered"),
+        )
+        return cs.result(out)
 
 
 def dq_orders_report(spark: SparkSession, sf: str) -> DataFrame:
@@ -628,63 +629,63 @@ def assoc_rules_parts(spark: SparkSession, sf: str) -> DataFrame:
     builds its co-occurrence edges from.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # One sorted part set per basket, as in basket_pair_support. The
-    # basket frame is read three times (n_orders, item supports, pair
-    # expansion), so it is persisted and released once the bounded
-    # top-20 is materialised.
-    bsk = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .repartition(shuffle_parallelism(li))
-        .persist()
-    )
-    n_orders = bsk.agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    pair_support = (
-        bsk.select(expand_pairs("ps", "x", "y").alias("p"))
-        .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
-        .agg(F.count(F.lit(1)).cast("long").alias("s_xy"))
-    )
-    item_support = (
-        bsk.select(F.explode("ps").alias("item"))
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("long").alias("s_item"))
-    )
-    rules = (
-        # both directed rules in ONE pass over the pair aggregate
-        pair_support.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("x"), F.col("y"), F.col("s_xy")),
-                    F.struct(
-                        F.col("y").alias("x"), F.col("x").alias("y"), F.col("s_xy")
-                    ),
-                )
-            ).alias("r")
+    with cache_scope() as cs:
+        # One sorted part set per basket, as in basket_pair_support. The
+        # basket frame is read three times (n_orders, item supports, pair
+        # expansion), so it is persisted and released once the bounded
+        # top-20 is materialised.
+        bsk = cs.persist(
+            li.groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+            .repartition(shuffle_parallelism(li))
         )
-        .select("r.x", "r.y", "r.s_xy")
-        .join(F.broadcast(item_support.withColumnRenamed("item", "x")
-                          .withColumnRenamed("s_item", "s_x")), "x")
-        .join(F.broadcast(item_support.withColumnRenamed("item", "y")
-                          .withColumnRenamed("s_item", "s_y")), "y")
-        .crossJoin(F.broadcast(n_orders))
-        .filter(F.expr("1000 * s_xy >= __n"))
-        .select(
-            F.col("x").alias("antecedent"),
-            F.col("y").alias("consequent"),
-            "s_xy",
-            F.expr("(s_xy * 1000000) div s_x").cast("long").alias("confidence_ppm"),
-            F.expr("(s_xy * __n * 1000000) div (s_x * s_y)")
-            .cast("long")
-            .alias("lift_ppm"),
+        n_orders = bsk.agg(F.count(F.lit(1)).cast("long").alias("__n"))
+        pair_support = (
+            bsk.select(expand_pairs("ps", "x", "y").alias("p"))
+            .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
+            .agg(F.count(F.lit(1)).cast("long").alias("s_xy"))
         )
-    )
-    out = rules.orderBy(
-        F.col("confidence_ppm").desc(),
-        F.col("s_xy").desc(),
-        F.col("antecedent").asc(),
-        F.col("consequent").asc(),
-    ).limit(20)
-    return planfp.checkpoint_and_release(out, bsk)
+        item_support = (
+            bsk.select(F.explode("ps").alias("item"))
+            .groupBy("item")
+            .agg(F.count(F.lit(1)).cast("long").alias("s_item"))
+        )
+        rules = (
+            # both directed rules in ONE pass over the pair aggregate
+            pair_support.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("x"), F.col("y"), F.col("s_xy")),
+                        F.struct(
+                            F.col("y").alias("x"), F.col("x").alias("y"), F.col("s_xy")
+                        ),
+                    )
+                ).alias("r")
+            )
+            .select("r.x", "r.y", "r.s_xy")
+            .join(F.broadcast(item_support.withColumnRenamed("item", "x")
+                              .withColumnRenamed("s_item", "s_x")), "x")
+            .join(F.broadcast(item_support.withColumnRenamed("item", "y")
+                              .withColumnRenamed("s_item", "s_y")), "y")
+            .crossJoin(F.broadcast(n_orders))
+            .filter(F.expr("1000 * s_xy >= __n"))
+            .select(
+                F.col("x").alias("antecedent"),
+                F.col("y").alias("consequent"),
+                "s_xy",
+                F.expr("(s_xy * 1000000) div s_x").cast("long").alias("confidence_ppm"),
+                F.expr("(s_xy * __n * 1000000) div (s_x * s_y)")
+                .cast("long")
+                .alias("lift_ppm"),
+            )
+        )
+        out = rules.orderBy(
+            F.col("confidence_ppm").desc(),
+            F.col("s_xy").desc(),
+            F.col("antecedent").asc(),
+            F.col("consequent").asc(),
+        ).limit(20)
+        return cs.result(out)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

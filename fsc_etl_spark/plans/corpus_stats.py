@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark.functions.text import shingles_from_tokens, tokens
+from fsc_etl_spark.operators.cache import CacheScope, cache_scope
 from fsc_etl_spark.operators.similarity import cosine_topk
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
@@ -84,10 +85,11 @@ def lm_grams(docs: DataFrame) -> DataFrame:
     ).withColumn("w1", F.expr("split_part(g, ' ', 1)"))
 
 
-def lm_model_frames(docs: DataFrame):
+def lm_model_frames(cs: CacheScope, docs: DataFrame):
     """The frozen add-one bigram model trained on the ``lang='en'``
     slice: (bigram scores, history scores, unseen-history score
-    Column) in micro-nats.
+    Column) in micro-nats. The model frame is checkpointed in the
+    caller's cache scope ``cs``.
 
     History mass c(w1·) derives from the vocab-bounded MODEL frame,
     never a second corpus pass; V (train vocab + 1 OOV class)
@@ -102,11 +104,10 @@ def lm_model_frames(docs: DataFrame):
     # break every reference re-expands the corpus gram scan (plan
     # audit: 10 parquet scans of documents before, 4 after; the
     # covariance-screen rule).
-    model = (
+    model = cs.checkpoint(
         lm_grams(train)
         .groupBy("g")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c2"))
-        .localCheckpoint()
     )
     hist = (
         model.withColumn("hw", F.expr("split_part(g, ' ', 1)"))
@@ -208,9 +209,10 @@ def bigram_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     shuffle-correct either way.
     """
     docs = t(spark, sf, "documents", parallel=True)
-    mscore, hscore, s0 = lm_model_frames(docs)
-    per_doc = lm_per_doc(lm_grams(docs), mscore, hscore, s0)
-    return lm_final_shape(docs, per_doc)
+    with cache_scope() as cs:
+        mscore, hscore, s0 = lm_model_frames(cs, docs)
+        per_doc = lm_per_doc(lm_grams(docs), mscore, hscore, s0)
+        return cs.result(lm_final_shape(docs, per_doc))
 
 
 def ccnet_ppl_buckets(spark: SparkSession, sf: str) -> DataFrame:
@@ -236,54 +238,55 @@ def ccnet_ppl_buckets(spark: SparkSession, sf: str) -> DataFrame:
     lineage-break rule).
     """
     docs = t(spark, sf, "documents")
-    mscore, hscore, s0 = lm_model_frames(docs)
-    per_doc = lm_per_doc(lm_grams(docs), mscore, hscore, s0).localCheckpoint()
-    avg = per_doc.filter(F.col("n_bigrams") > 0).select(
-        "doc_id", F.expr("nll_e6 div n_bigrams").alias("avg_nll_e6")
-    )
-    hist = avg.groupBy("avg_nll_e6").agg(F.count(F.lit(1)).alias("cnt"))
-    cum = hist.select(
-        "avg_nll_e6",
-        F.sum("cnt")
-        .over(
-            Window.orderBy("avg_nll_e6").rowsBetween(
-                Window.unboundedPreceding, 0
+    with cache_scope() as cs:
+        mscore, hscore, s0 = lm_model_frames(cs, docs)
+        per_doc = cs.checkpoint(lm_per_doc(lm_grams(docs), mscore, hscore, s0))
+        avg = per_doc.filter(F.col("n_bigrams") > 0).select(
+            "doc_id", F.expr("nll_e6 div n_bigrams").alias("avg_nll_e6")
+        )
+        hist = avg.groupBy("avg_nll_e6").agg(F.count(F.lit(1)).alias("cnt"))
+        cum = hist.select(
+            "avg_nll_e6",
+            F.sum("cnt")
+            .over(
+                Window.orderBy("avg_nll_e6").rowsBetween(
+                    Window.unboundedPreceding, 0
+                )
+            )
+            .alias("cum_le"),
+        )
+        targets = (
+            avg.agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                "n",
+                F.explode(F.array(F.lit(333), F.lit(667))).alias("q_permille"),
+            )
+            .withColumn("k", F.expr("(q_permille * (n - 1)) div 1000 + 1"))
+        )
+        thr = (
+            cum.join(F.broadcast(targets), F.col("cum_le") >= F.col("k"))
+            .groupBy("q_permille")
+            .agg(F.min("avg_nll_e6").alias("t"))
+            .agg(
+                F.min(F.when(F.col("q_permille") == 333, F.col("t"))).alias("t_head"),
+                F.min(F.when(F.col("q_permille") == 667, F.col("t"))).alias("t_mid"),
             )
         )
-        .alias("cum_le"),
-    )
-    targets = (
-        avg.agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "n",
-            F.explode(F.array(F.lit(333), F.lit(667))).alias("q_permille"),
+        return cs.result(
+            docs.select("doc_id", "lang")
+            .join(avg, "doc_id", "left")
+            .crossJoin(F.broadcast(thr))
+            .select(
+                "doc_id",
+                "lang",
+                F.col("avg_nll_e6").cast("bigint").alias("avg_nll_e6"),
+                F.when(F.col("avg_nll_e6").isNull(), F.lit(None).cast("string"))
+                .when(F.col("avg_nll_e6") <= F.col("t_head"), F.lit("head"))
+                .when(F.col("avg_nll_e6") <= F.col("t_mid"), F.lit("middle"))
+                .otherwise(F.lit("tail"))
+                .alias("bucket"),
+            )
         )
-        .withColumn("k", F.expr("(q_permille * (n - 1)) div 1000 + 1"))
-    )
-    thr = (
-        cum.join(F.broadcast(targets), F.col("cum_le") >= F.col("k"))
-        .groupBy("q_permille")
-        .agg(F.min("avg_nll_e6").alias("t"))
-        .agg(
-            F.min(F.when(F.col("q_permille") == 333, F.col("t"))).alias("t_head"),
-            F.min(F.when(F.col("q_permille") == 667, F.col("t"))).alias("t_mid"),
-        )
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(avg, "doc_id", "left")
-        .crossJoin(F.broadcast(thr))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("avg_nll_e6").cast("bigint").alias("avg_nll_e6"),
-            F.when(F.col("avg_nll_e6").isNull(), F.lit(None).cast("string"))
-            .when(F.col("avg_nll_e6") <= F.col("t_head"), F.lit("head"))
-            .when(F.col("avg_nll_e6") <= F.col("t_mid"), F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
-    )
 
 
 def retrieval_ndcg_mrr(spark: SparkSession, sf: str) -> DataFrame:
@@ -571,114 +574,115 @@ def _incremental_lsh_dedup_impl(
     broadcast_pair_limit: int = _PAIR_BROADCAST_LIMIT,
 ) -> DataFrame:
     docs = t(spark, sf, "documents")
-    sigs = minhash_signatures(docs, k=8, shingle_n=3)
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.md5(
-                F.concat_ws("|", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-            ).alias(f"band{b}")
-            for b in range(4)
-        ],
-    )
-    long = bands.selectExpr(
-        "doc_id",
-        "stack(4, "
-        + ", ".join(f"{b}, band{b}" for b in range(4))
-        + ") as (band_idx, band_sig)",
-    )
-    buckets = (
-        long.groupBy("band_idx", "band_sig")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    # pairs is LSH-bounded (candidates only) and consumed by THREE
-    # branches (cand_ids, the verify semi join, the verdict join);
-    # sh below by three more (two self-join sides + sizes). Without
-    # lineage breaks each reference re-expands the whole signature /
-    # shingle subplan (plan audit: 30 parquet scans and 102 exchanges
-    # before the two checkpoints, 2/20 after).
-    pairs = (
-        buckets.select(F.explode("ids").alias("id_old"), "ids")
-        .select("id_old", F.explode("ids").alias("id_new"))
-        .filter(
-            (F.col("id_new") % 2 == 1)
-            & (F.col("id_old") != F.col("id_new"))
-            & ((F.col("id_old") % 2 == 0) | (F.col("id_old") < F.col("id_new")))
-        )
-        .distinct()
-        # lazy: the size-guard count right below is the materializing
-        # action — pair build + checkpoint run as ONE job (r13)
-        .localCheckpoint(eager=False)
-    )
-    # Size-guarded broadcast (VERDICT r8): the count materializes the
-    # checkpoint, so later consumers read cached partitions; an
-    # oversized (skewed-band) candidate set falls back to the
-    # shuffled semi join instead of blowing the driver.
-    pairs_semi = (
-        F.broadcast(pairs) if pairs.count() <= broadcast_pair_limit else pairs
-    )
-    # exact verification, candidate docs only
-    cand_ids = (
-        pairs.select(F.col("id_old").alias("doc_id"))
-        .union(pairs.select("id_new"))
-        .distinct()
-    )
-    tk = docs.join(cand_ids, "doc_id", "left_semi").select(
-        "doc_id", tokens(F.lower(F.col("text"))).alias("__tk")
-    )
-    sh = (
-        tk.select(
+    with cache_scope() as cs:
+        sigs = minhash_signatures(docs, k=8, shingle_n=3)
+        bands = sigs.select(
             "doc_id",
-            F.explode(shingles_from_tokens(F.col("__tk"), 3)).alias("sh"),
+            *[
+                F.md5(
+                    F.concat_ws("|", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
+                ).alias(f"band{b}")
+                for b in range(4)
+            ],
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), F.col("a.sh") == F.col("b.sh"))
-        .join(
-            pairs_semi,
-            (F.col("a.doc_id") == F.col("id_old"))
-            & (F.col("b.doc_id") == F.col("id_new")),
-            "left_semi",
+        long = bands.selectExpr(
+            "doc_id",
+            "stack(4, "
+            + ", ".join(f"{b}, band{b}" for b in range(4))
+            + ") as (band_idx, band_sig)",
         )
-        .groupBy(F.col("a.doc_id").alias("id_old"), F.col("b.doc_id").alias("id_new"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verdicts = (
-        pairs.join(inter, ["id_old", "id_new"], "left")
-        .join(sizes.withColumnRenamed("doc_id", "id_old").withColumnRenamed("sz", "sz_a"), "id_old")
-        .join(sizes.withColumnRenamed("doc_id", "id_new").withColumnRenamed("sz", "sz_b"), "id_new")
-        .select(
-            "id_old",
-            "id_new",
-            F.expr(
-                "(1000000 * coalesce(inter, 0L)) div (sz_a + sz_b - coalesce(inter, 0L))"
-            ).alias("jacc_ppm"),
+        buckets = (
+            long.groupBy("band_idx", "band_sig")
+            .agg(F.collect_list("doc_id").alias("ids"))
+            .filter(F.size("ids") >= 2)
         )
-    )
-    per_new = verdicts.groupBy("id_new").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand"),
-        F.min(
-            F.when(F.col("jacc_ppm") >= DUP_JACCARD_PPM, F.col("id_old"))
-        ).alias("dup_of"),
-    )
-    newdocs = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id")
-    return newdocs.join(
-        per_new.withColumnRenamed("id_new", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("n_cand"), F.lit(0)).cast("bigint").alias("n_cand"),
-        F.col("dup_of").cast("bigint").alias("dup_of"),
-        F.col("dup_of").isNotNull().alias("is_dup"),
-    )
+        # pairs is LSH-bounded (candidates only) and consumed by THREE
+        # branches (cand_ids, the verify semi join, the verdict join);
+        # sh below by three more (two self-join sides + sizes). Without
+        # lineage breaks each reference re-expands the whole signature /
+        # shingle subplan (plan audit: 30 parquet scans and 102 exchanges
+        # before the two checkpoints, 2/20 after).
+        pairs = cs.checkpoint(
+            buckets.select(F.explode("ids").alias("id_old"), "ids")
+            .select("id_old", F.explode("ids").alias("id_new"))
+            .filter(
+                (F.col("id_new") % 2 == 1)
+                & (F.col("id_old") != F.col("id_new"))
+                & ((F.col("id_old") % 2 == 0) | (F.col("id_old") < F.col("id_new")))
+            )
+            .distinct(),
+            # lazy: the size-guard count right below is the materializing
+            # action — pair build + checkpoint run as ONE job
+            eager=False,
+        )
+        # Size-guarded broadcast: the count materializes the
+        # checkpoint, so later consumers read cached partitions; an
+        # oversized (skewed-band) candidate set falls back to the
+        # shuffled semi join instead of blowing the driver.
+        pairs_semi = (
+            F.broadcast(pairs) if pairs.count() <= broadcast_pair_limit else pairs
+        )
+        # exact verification, candidate docs only
+        cand_ids = (
+            pairs.select(F.col("id_old").alias("doc_id"))
+            .union(pairs.select("id_new"))
+            .distinct()
+        )
+        tk = docs.join(cand_ids, "doc_id", "left_semi").select(
+            "doc_id", tokens(F.lower(F.col("text"))).alias("__tk")
+        )
+        sh = cs.checkpoint(
+            tk.select(
+                "doc_id",
+                F.explode(shingles_from_tokens(F.col("__tk"), 3)).alias("sh"),
+            )
+            .distinct()
+        )
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+        inter = (
+            sh.alias("a")
+            .join(sh.alias("b"), F.col("a.sh") == F.col("b.sh"))
+            .join(
+                pairs_semi,
+                (F.col("a.doc_id") == F.col("id_old"))
+                & (F.col("b.doc_id") == F.col("id_new")),
+                "left_semi",
+            )
+            .groupBy(F.col("a.doc_id").alias("id_old"), F.col("b.doc_id").alias("id_new"))
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        verdicts = (
+            pairs.join(inter, ["id_old", "id_new"], "left")
+            .join(sizes.withColumnRenamed("doc_id", "id_old").withColumnRenamed("sz", "sz_a"), "id_old")
+            .join(sizes.withColumnRenamed("doc_id", "id_new").withColumnRenamed("sz", "sz_b"), "id_new")
+            .select(
+                "id_old",
+                "id_new",
+                F.expr(
+                    "(1000000 * coalesce(inter, 0L)) div (sz_a + sz_b - coalesce(inter, 0L))"
+                ).alias("jacc_ppm"),
+            )
+        )
+        per_new = verdicts.groupBy("id_new").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_cand"),
+            F.min(
+                F.when(F.col("jacc_ppm") >= DUP_JACCARD_PPM, F.col("id_old"))
+            ).alias("dup_of"),
+        )
+        newdocs = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id")
+        out = newdocs.join(
+            per_new.withColumnRenamed("id_new", "doc_id"), "doc_id", "left"
+        ).select(
+            "doc_id",
+            F.coalesce(F.col("n_cand"), F.lit(0)).cast("bigint").alias("n_cand"),
+            F.col("dup_of").cast("bigint").alias("dup_of"),
+            F.col("dup_of").isNotNull().alias("is_dup"),
+        )
+        return cs.result(out)
 
 
 def minhash_jaccard_accuracy(spark: SparkSession, sf: str) -> DataFrame:
-    """Accuracy audit of the MinHash estimator itself (round 9): for
+    """Accuracy audit of the MinHash estimator itself: for
     every LSH candidate pair, the sketch's Jaccard ESTIMATE (matching
     slots / k, the unbiased per-slot collision estimator) next to the
     EXACT 3-gram Jaccard, plus the absolute error — all integer ppm.
@@ -700,96 +704,96 @@ def minhash_jaccard_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = t(spark, sf, "documents")
-    # lazy: the pairs size-guard count below is the first action — it
-    # materializes pairs AND (transitively) sigs in one job (r13)
-    sigs = minhash_signatures(docs, k=8, shingle_n=3).localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2).localCheckpoint(
-        eager=False
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(8)],
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(8)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(8)
-    )
-    # estimate = matches/8 in ppm; 1e6 div 8 = 125000 exactly, so the
-    # multiply IS the floor division.
-    est = pairs.join(a, "id_a").join(b, "id_b").select(
-        "id_a",
-        "id_b",
-        (matches * 125000).cast("bigint").alias("sig_est_ppm"),
-    )
-    cand_ids = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .union(pairs.select("id_b"))
-        .distinct()
-    )
-    sh = (
-        docs.join(cand_ids, "doc_id", "left_semi")
-        .select("doc_id", tokens(F.lower(F.col("text"))).alias("__tk"))
-        .select(
-            "doc_id",
-            F.explode(shingles_from_tokens(F.col("__tk"), 3)).alias("sh"),
+    with cache_scope() as cs:
+        # lazy: the pairs size-guard count below is the first action — it
+        # materializes pairs AND (transitively) sigs in one job
+        sigs = cs.checkpoint(minhash_signatures(docs, k=8, shingle_n=3), eager=False)
+        pairs = cs.checkpoint(
+            lsh_candidate_pairs(sigs, bands=4, rows_per_band=2), eager=False
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    # ADVICE r9: size-guard the candidate-pair broadcast exactly like
-    # incremental_lsh_dedup's _PAIR_BROADCAST_LIMIT — a skewed band
-    # can make `pairs` arbitrarily large, and pairs is already
-    # localCheckpoint-ed so the count is a cached-frame scan.
-    pairs_for_semi = (
-        F.broadcast(pairs) if pairs.count() <= _PAIR_BROADCAST_LIMIT else pairs
-    )
-    inter = (
-        sh.alias("sa")
-        .join(sh.alias("sb"), F.col("sa.sh") == F.col("sb.sh"))
-        .join(
-            pairs_for_semi,
-            (F.col("sa.doc_id") == F.col("id_a"))
-            & (F.col("sb.doc_id") == F.col("id_b")),
-            "left_semi",
+        a = sigs.select(
+            F.col("doc_id").alias("id_a"),
+            *[F.col(f"mh{i}").alias(f"a{i}") for i in range(8)],
         )
-        .groupBy(
-            F.col("sa.doc_id").alias("id_a"), F.col("sb.doc_id").alias("id_b")
+        b = sigs.select(
+            F.col("doc_id").alias("id_b"),
+            *[F.col(f"mh{i}").alias(f"b{i}") for i in range(8)],
         )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        est.join(inter, ["id_a", "id_b"], "left")
-        .join(
-            sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"),
-            "id_a",
+        matches = sum(
+            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(8)
         )
-        .join(
-            sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"),
-            "id_b",
-        )
-        .select(
+        # estimate = matches/8 in ppm; 1e6 div 8 = 125000 exactly, so the
+        # multiply IS the floor division.
+        est = pairs.join(a, "id_a").join(b, "id_b").select(
             "id_a",
             "id_b",
-            "sig_est_ppm",
-            F.expr(
-                "(1000000 * coalesce(inter, 0L)) div (sz_a + sz_b - coalesce(inter, 0L))"
-            ).cast("bigint").alias("jacc_ppm"),
-            F.abs(
-                F.col("sig_est_ppm")
-                - F.expr(
+            (matches * 125000).cast("bigint").alias("sig_est_ppm"),
+        )
+        cand_ids = (
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .union(pairs.select("id_b"))
+            .distinct()
+        )
+        sh = cs.checkpoint(
+            docs.join(cand_ids, "doc_id", "left_semi")
+            .select("doc_id", tokens(F.lower(F.col("text"))).alias("__tk"))
+            .select(
+                "doc_id",
+                F.explode(shingles_from_tokens(F.col("__tk"), 3)).alias("sh"),
+            )
+            .distinct()
+        )
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+        # Size-guard the candidate-pair broadcast exactly like
+        # incremental_lsh_dedup's _PAIR_BROADCAST_LIMIT — a skewed band
+        # can make `pairs` arbitrarily large, and pairs is already
+        # localCheckpoint-ed so the count is a cached-frame scan.
+        pairs_for_semi = (
+            F.broadcast(pairs) if pairs.count() <= _PAIR_BROADCAST_LIMIT else pairs
+        )
+        inter = (
+            sh.alias("sa")
+            .join(sh.alias("sb"), F.col("sa.sh") == F.col("sb.sh"))
+            .join(
+                pairs_for_semi,
+                (F.col("sa.doc_id") == F.col("id_a"))
+                & (F.col("sb.doc_id") == F.col("id_b")),
+                "left_semi",
+            )
+            .groupBy(
+                F.col("sa.doc_id").alias("id_a"), F.col("sb.doc_id").alias("id_b")
+            )
+            .agg(F.count(F.lit(1)).alias("inter"))
+        )
+        return cs.result(
+            est.join(inter, ["id_a", "id_b"], "left")
+            .join(
+                sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sz", "sz_a"),
+                "id_a",
+            )
+            .join(
+                sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sz", "sz_b"),
+                "id_b",
+            )
+            .select(
+                "id_a",
+                "id_b",
+                "sig_est_ppm",
+                F.expr(
                     "(1000000 * coalesce(inter, 0L)) div (sz_a + sz_b - coalesce(inter, 0L))"
-                )
-            ).cast("bigint").alias("err_ppm"),
+                ).cast("bigint").alias("jacc_ppm"),
+                F.abs(
+                    F.col("sig_est_ppm")
+                    - F.expr(
+                        "(1000000 * coalesce(inter, 0L)) div (sz_a + sz_b - coalesce(inter, 0L))"
+                    )
+                ).cast("bigint").alias("err_ppm"),
+            )
         )
-    )
 
 
 def ngram_novelty_curve(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus-growth value curve (round 9): split the corpus into 10
+    """Corpus-growth value curve: split the corpus into 10
     contiguous id-range deciles and measure, per decile, how many of
     its distinct 3-gram shingles are NEW (first seen in that decile)
     vs merely touched — novelty_ppm = 1e6·new div touched. This is
@@ -818,37 +822,38 @@ def ngram_novelty_curve(spark: SparkSession, sf: str) -> DataFrame:
     g = toked.select(
         "dec", F.explode(shingles_from_tokens(F.col("__tk"), 3)).alias("g")
     )
-    dg = g.distinct().localCheckpoint()  # (decile, gram) — read by both rollups
-    touched = dg.groupBy("dec").agg(F.count(F.lit(1)).alias("touched_grams"))
-    new = (
-        dg.groupBy("g")
-        .agg(F.min("dec").alias("dec"))
-        .groupBy("dec")
-        .agg(F.count(F.lit(1)).alias("new_grams"))
-    )
-    grid = spark.range(1, 11).select(F.col("id").cast("int").alias("decile"))
-    w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        grid.join(touched.withColumnRenamed("dec", "decile"), "decile", "left")
-        .join(new.withColumnRenamed("dec", "decile"), "decile", "left")
-        .select(
-            "decile",
-            F.coalesce("touched_grams", F.lit(0)).cast("bigint").alias(
-                "touched_grams"
-            ),
-            F.coalesce("new_grams", F.lit(0)).cast("bigint").alias("new_grams"),
+    with cache_scope() as cs:
+        dg = cs.checkpoint(g.distinct())  # (decile, gram) — read by both rollups
+        touched = dg.groupBy("dec").agg(F.count(F.lit(1)).alias("touched_grams"))
+        new = (
+            dg.groupBy("g")
+            .agg(F.min("dec").alias("dec"))
+            .groupBy("dec")
+            .agg(F.count(F.lit(1)).alias("new_grams"))
         )
-        .withColumn(
-            "novelty_ppm",
-            F.expr(
-                "CASE WHEN touched_grams = 0 THEN NULL "
-                "ELSE (1000000 * new_grams) div touched_grams END"
-            ).cast("bigint"),
+        grid = spark.range(1, 11).select(F.col("id").cast("int").alias("decile"))
+        w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
+        return cs.result(
+            grid.join(touched.withColumnRenamed("dec", "decile"), "decile", "left")
+            .join(new.withColumnRenamed("dec", "decile"), "decile", "left")
+            .select(
+                "decile",
+                F.coalesce("touched_grams", F.lit(0)).cast("bigint").alias(
+                    "touched_grams"
+                ),
+                F.coalesce("new_grams", F.lit(0)).cast("bigint").alias("new_grams"),
+            )
+            .withColumn(
+                "novelty_ppm",
+                F.expr(
+                    "CASE WHEN touched_grams = 0 THEN NULL "
+                    "ELSE (1000000 * new_grams) div touched_grams END"
+                ).cast("bigint"),
+            )
+            .withColumn(
+                "cum_new_grams", F.sum("new_grams").over(w).cast("bigint")
+            )
         )
-        .withColumn(
-            "cum_new_grams", F.sum("new_grams").over(w).cast("bigint")
-        )
-    )
 
 
 #: Fixed sample budget for the stratified sampler — a CONTRACT

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.graph import (
     RANK_SCALE,
     bfs_hops,
@@ -32,7 +33,6 @@ from fsc_etl_spark.operators.graph import (
     triangle_stats,
 )
 from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism, sym_edges
-from fsc_etl_spark import planfp
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
 _PR_ITERS = 5
@@ -58,7 +58,7 @@ def _basket_pairs(df: DataFrame, key: str, item: str) -> DataFrame:
 def _copurchase(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct customer—part purchase pairs ``(cnode, pnode)``, as a
     lazy plan; a caller that reads them more than once persists them
-    and unpersists them. Nodes are BIGINT: 2·custkey for customers,
+    in its cache scope. Nodes are BIGINT: 2·custkey for customers,
     2·partkey+1 for parts, so the two overlapping TPC-H key spaces stay
     distinct nodes and iterative builders shuffle longs, not formatted
     strings (:func:`render_node` turns them back into labels)."""
@@ -97,17 +97,17 @@ def pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     strings — and render to the 'c…'/'p…' labels only in the final
     20-row projection, where the oracle's string tiebreak applies.
     """
-    cp = _copurchase(spark, sf).persist()
-    edges = sym_edges(cp, "cnode", "pnode")
-    # symmetrised graph -> every node has in-edges, so the dense
-    # fast path (no per-iteration nodes join) is exact here; the
-    # parity-keyed symmetrising explode of distinct cp pairs is
-    # structurally unique, so the operator's defensive distinct is
-    # skipped too
-    ranks = pagerank_integer(
-        edges, iters=_PR_ITERS, every_node_has_inflow=True, assume_distinct=True
-    )
-    cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
+    with cache_scope() as cs:
+        cp = cs.persist(_copurchase(spark, sf))
+        edges = sym_edges(cp, "cnode", "pnode")
+        # symmetrised graph -> every node has in-edges, so the dense
+        # fast path (no per-iteration nodes join) is exact here; the
+        # parity-keyed symmetrising explode of distinct cp pairs is
+        # structurally unique, so the operator's defensive distinct is
+        # skipped too
+        ranks = pagerank_integer(
+            edges, iters=_PR_ITERS, every_node_has_inflow=True, assume_distinct=True
+        )
     return (
         ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
@@ -125,28 +125,27 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     """
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    cp = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_partkey") * 2 + 1).alias("pnode"),
+    with cache_scope() as cs:
+        cp = cs.persist(
+            o.join(li, o["o_orderkey"] == li["l_orderkey"])
+            .groupBy(
+                (F.col("o_custkey") * 2).alias("cnode"),
+                (F.col("l_partkey") * 2 + 1).alias("pnode"),
+            )
+            .agg(F.count(F.lit(1)).alias("w"))
         )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .persist()
-    )
-    edges = sym_edges(cp, "cnode", "pnode", w="w")
-    # validate=False: (src, dst) uniqueness is structural (groupBy
-    # above) and weights are bounded lineitem multiplicities, so the
-    # validation aggregate would re-prove an invariant the plan
-    # already guarantees.
-    ranks = pagerank_integer(
-        edges,
-        iters=_PR_ITERS,
-        every_node_has_inflow=True,
-        weight_col="w",
-        validate=False,
-    )
-    cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
+        edges = sym_edges(cp, "cnode", "pnode", w="w")
+        # validate=False: (src, dst) uniqueness is structural (groupBy
+        # above) and weights are bounded lineitem multiplicities, so the
+        # validation aggregate would re-prove an invariant the plan
+        # already guarantees.
+        ranks = pagerank_integer(
+            edges,
+            iters=_PR_ITERS,
+            every_node_has_inflow=True,
+            weight_col="w",
+            validate=False,
+        )
     return (
         ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
@@ -237,7 +236,7 @@ _CN_TOPK = 50
 
 def graph_common_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     """Common-neighbor link prediction over the customer projection of
-    the co-purchase bipartite graph (round 10): two customers are
+    the co-purchase bipartite graph: two customers are
     predicted-linked when their NON-HUB part sets overlap; score =
     common-part count and exact integer Jaccard ppm over part sets.
     Top-50 by (jaccard_ppm DESC, common DESC, id_a ASC, id_b ASC) — a
@@ -254,54 +253,54 @@ def graph_common_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     sort. All integers end to end."""
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # One sorted customer set per part: the set absorbs the (cust,
-    # part) distinct and the fanout cap is a size() filter. The
-    # round-robin comes before the persist so the cache itself, not
-    # only the expansion, runs at full parallelism.
-    parts = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy(F.col("l_partkey").alias("part"))
-        .agg(F.array_sort(F.collect_set("o_custkey")).alias("cs"))
-        .filter(F.size("cs") <= _CN_MAX_PART_FANOUT)
-        .repartition(shuffle_parallelism(li))
-        .persist()  # read twice: degree build and pair expansion
-    )
-    deg = (
-        parts.select(F.explode("cs").alias("cust"))
-        .groupBy("cust")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    common = (
-        parts.select(expand_pairs("cs", "id_a", "id_b").alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    out = (
-        common.join(
-            deg.withColumnRenamed("cust", "id_a").withColumnRenamed("deg", "deg_a"),
-            "id_a",
+    with cache_scope() as cs:
+        # One sorted customer set per part: the set absorbs the (cust,
+        # part) distinct and the fanout cap is a size() filter. The
+        # round-robin comes before the persist so the cache itself, not
+        # only the expansion, runs at full parallelism.
+        parts = cs.persist(  # read twice: degree build and pair expansion
+            o.join(li, o["o_orderkey"] == li["l_orderkey"])
+            .groupBy(F.col("l_partkey").alias("part"))
+            .agg(F.array_sort(F.collect_set("o_custkey")).alias("cs"))
+            .filter(F.size("cs") <= _CN_MAX_PART_FANOUT)
+            .repartition(shuffle_parallelism(li))
         )
-        .join(
-            deg.withColumnRenamed("cust", "id_b").withColumnRenamed("deg", "deg_b"),
-            "id_b",
+        deg = (
+            parts.select(F.explode("cs").alias("cust"))
+            .groupBy("cust")
+            .agg(F.count(F.lit(1)).alias("deg"))
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.col("common").cast("bigint").alias("common"),
-            F.expr("(1000000 * common) div (deg_a + deg_b - common)")
-            .cast("bigint")
-            .alias("jaccard_ppm"),
+        common = (
+            parts.select(expand_pairs("cs", "id_a", "id_b").alias("p"))
+            .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+            .agg(F.count(F.lit(1)).alias("common"))
         )
-        .orderBy(
-            F.col("jaccard_ppm").desc(),
-            F.col("common").desc(),
-            F.col("id_a").asc(),
-            F.col("id_b").asc(),
+        out = (
+            common.join(
+                deg.withColumnRenamed("cust", "id_a").withColumnRenamed("deg", "deg_a"),
+                "id_a",
+            )
+            .join(
+                deg.withColumnRenamed("cust", "id_b").withColumnRenamed("deg", "deg_b"),
+                "id_b",
+            )
+            .select(
+                "id_a",
+                "id_b",
+                F.col("common").cast("bigint").alias("common"),
+                F.expr("(1000000 * common) div (deg_a + deg_b - common)")
+                .cast("bigint")
+                .alias("jaccard_ppm"),
+            )
+            .orderBy(
+                F.col("jaccard_ppm").desc(),
+                F.col("common").desc(),
+                F.col("id_a").asc(),
+                F.col("id_b").asc(),
+            )
+            .limit(_CN_TOPK)
         )
-        .limit(_CN_TOPK)
-    )
-    return planfp.checkpoint_and_release(out, parts)
+        return cs.result(out)
 
 
 # Adamic–Adar weights as PINNED INTEGER LITERALS (the pinned-codebook
@@ -394,11 +393,11 @@ def bfs_hops_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     'c…'/'p…' labels BEFORE the final per-distance aggregate, so the
     min/max node readout keeps its original STRING ordering bit-for-bit.
     """
-    cp = _copurchase(spark, sf).persist()
-    edges = sym_edges(cp, "cnode", "pnode")
-    src = spark.range(1).select(F.lit(0).cast("long").alias("node"))  # 'c0'
-    reached = bfs_hops(edges, src, max_hops=3)
-    cp.unpersist()  # reached is checkpointed eagerly; the cache is done
+    with cache_scope() as cs:
+        cp = cs.persist(_copurchase(spark, sf))
+        edges = sym_edges(cp, "cnode", "pnode")
+        src = spark.range(1).select(F.lit(0).cast("long").alias("node"))  # 'c0'
+        reached = bfs_hops(edges, src, max_hops=3)
     return (
         reached.select(render_node("node").alias("node"), "dist")
         .groupBy("dist")
@@ -453,19 +452,19 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
     Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
     'c…'/'p…' labels only in the final top-20 projection.
     """
-    cp = _copurchase(spark, sf).persist()
-    edges = sym_edges(cp, "cnode", "pnode")
-    seeds = (
-        t(spark, sf, "customer")
-        .filter(F.col("c_nationkey") == 0)
-        .select((F.col("c_custkey") * 2).alias("node"))
-    )
-    # symmetrised union -> src set == node set, no dangling possible:
-    # the structural fast path skips the union-distinct + check action
-    ranks = personalized_pagerank_integer(
-        edges, seeds, iters=_PPR_ITERS, symmetric=True, assume_distinct=True
-    )
-    cp.unpersist()  # ranks is checkpointed eagerly; the cache is done
+    with cache_scope() as cs:
+        cp = cs.persist(_copurchase(spark, sf))
+        edges = sym_edges(cp, "cnode", "pnode")
+        seeds = (
+            t(spark, sf, "customer")
+            .filter(F.col("c_nationkey") == 0)
+            .select((F.col("c_custkey") * 2).alias("node"))
+        )
+        # symmetrised union -> src set == node set, no dangling possible:
+        # the structural fast path skips the union-distinct + check action
+        ranks = personalized_pagerank_integer(
+            edges, seeds, iters=_PPR_ITERS, symmetric=True, assume_distinct=True
+        )
     return (
         ranks.select(render_node("node").alias("node"), "rank")
         .orderBy(F.col("rank").desc(), F.col("node").asc())
@@ -540,72 +539,73 @@ def community_modularity(spark: SparkSession, sf: str) -> DataFrame:
     two label-attach joins shuffling on node, one label-keyed count,
     one degree agg + label-keyed sum, and a 1-row reduce — everything
     linear in edges, no windows, no sorts. The readout reads the
-    labels three times, so they are persisted; the 1-row result
-    eager-checkpoints so the pair and label caches release, and planfp
-    sees the whole lazy plan, LPA rounds included, via plan_only.
+    labels three times, so they are persisted in the query's cache
+    scope, whose eager result checkpoint lets both caches go; the plan
+    fingerprint sees the whole lazy plan, LPA rounds included.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # the cross-basket distinct gives LPA's assume_distinct contract
-    # its unique canonical pairs
-    cp = _basket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
-    edges = sym_edges(cp, "lo", "hi")
-    # structurally distinct (cp is distinct lo<hi; the swap can't
-    # collide) — skip LPA's defensive edge shuffle
-    labels = label_propagation(
-        edges, rounds=_LPA_ROUNDS, assume_distinct=True
-    ).persist()
-    # Readout over the HALF-SIZE canonical pair list instead of the
-    # symmetrised union: every directed quantity is recovered
-    # exactly — e_c counts directed intra-community edges = 2x the
-    # internal lo<hi pairs; deg(v) = #directed edges with src v = v's
-    # appearances across both cp endpoints; 2m = 2·|cp|. Same values,
-    # half the rows through the two label-attach joins.
-    ll = labels.select(F.col("node").alias("lo"), F.col("label").alias("ls"))
-    lh = labels.select(F.col("node").alias("hi"), F.col("label").alias("ld"))
-    internal = (
-        cp.join(ll, "lo")
-        .join(lh, "hi")
-        .filter(F.col("ls") == F.col("ld"))
-        .groupBy(F.col("ls").alias("label"))
-        .agg((2 * F.count(F.lit(1))).alias("e_c"))
-    )
-    deg = (
-        # both endpoints in ONE pass over the cp cache
-        cp.select(F.explode(F.array("lo", "hi")).alias("src"))
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    # per-community degree mass; LEFT join internal counts — a
-    # community every member of which points outward has e_c = 0
-    comm = (
-        labels.join(deg, labels["node"] == deg["src"])
-        .groupBy("label")
-        .agg(F.sum(F.col("d").cast("decimal(19,0)")).alias("d_c"))
-        .join(internal, "label", "left")
-    )
-    # two_m == Σ_c d_c: every node carries exactly one label, so
-    # summing per-community degree mass over all communities counts
-    # every directed edge-endpoint exactly once.
-    g = comm.agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_comm"),
-        F.sum(
-            F.coalesce(F.col("e_c"), F.lit(0)).cast("decimal(38,0)")
-        ).alias("sum_e"),
-        F.sum(F.col("d_c") * F.col("d_c")).alias("sum_d2"),
-        F.sum("d_c").cast("decimal(38,0)").alias("two_m"),
-    )
-    out = g.select(
-        F.col("n_comm").cast("bigint").alias("n_communities"),
-        F.col("two_m").cast("bigint").alias("two_m"),
-        F.col("sum_e").cast("bigint").alias("internal_edges"),
-        F.col("sum_d2").cast("bigint").alias("deg_sq_sum"),
-        F.expr(
-            "CASE WHEN two_m = 0 THEN CAST(NULL AS BIGINT)"
-            " ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * (two_m * sum_e - sum_d2))"
-            " div (two_m * two_m) AS BIGINT) END"
-        ).alias("q_ppm"),
-    )
-    return planfp.checkpoint_and_release(out, cp, labels)
+    with cache_scope() as cs:
+        # the cross-basket distinct gives LPA's assume_distinct contract
+        # its unique canonical pairs
+        cp = cs.persist(_basket_pairs(li, "l_orderkey", "l_partkey").distinct())
+        edges = sym_edges(cp, "lo", "hi")
+        # structurally distinct (cp is distinct lo<hi; the swap can't
+        # collide) — skip LPA's defensive edge shuffle
+        labels = cs.persist(
+            label_propagation(edges, rounds=_LPA_ROUNDS, assume_distinct=True)
+        )
+        # Readout over the HALF-SIZE canonical pair list instead of the
+        # symmetrised union: every directed quantity is recovered
+        # exactly — e_c counts directed intra-community edges = 2x the
+        # internal lo<hi pairs; deg(v) = #directed edges with src v = v's
+        # appearances across both cp endpoints; 2m = 2·|cp|. Same values,
+        # half the rows through the two label-attach joins.
+        ll = labels.select(F.col("node").alias("lo"), F.col("label").alias("ls"))
+        lh = labels.select(F.col("node").alias("hi"), F.col("label").alias("ld"))
+        internal = (
+            cp.join(ll, "lo")
+            .join(lh, "hi")
+            .filter(F.col("ls") == F.col("ld"))
+            .groupBy(F.col("ls").alias("label"))
+            .agg((2 * F.count(F.lit(1))).alias("e_c"))
+        )
+        deg = (
+            # both endpoints in ONE pass over the cp cache
+            cp.select(F.explode(F.array("lo", "hi")).alias("src"))
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        # per-community degree mass; LEFT join internal counts — a
+        # community every member of which points outward has e_c = 0
+        comm = (
+            labels.join(deg, labels["node"] == deg["src"])
+            .groupBy("label")
+            .agg(F.sum(F.col("d").cast("decimal(19,0)")).alias("d_c"))
+            .join(internal, "label", "left")
+        )
+        # two_m == Σ_c d_c: every node carries exactly one label, so
+        # summing per-community degree mass over all communities counts
+        # every directed edge-endpoint exactly once.
+        g = comm.agg(
+            F.count(F.lit(1)).cast("decimal(38,0)").alias("n_comm"),
+            F.sum(
+                F.coalesce(F.col("e_c"), F.lit(0)).cast("decimal(38,0)")
+            ).alias("sum_e"),
+            F.sum(F.col("d_c") * F.col("d_c")).alias("sum_d2"),
+            F.sum("d_c").cast("decimal(38,0)").alias("two_m"),
+        )
+        out = g.select(
+            F.col("n_comm").cast("bigint").alias("n_communities"),
+            F.col("two_m").cast("bigint").alias("two_m"),
+            F.col("sum_e").cast("bigint").alias("internal_edges"),
+            F.col("sum_d2").cast("bigint").alias("deg_sq_sum"),
+            F.expr(
+                "CASE WHEN two_m = 0 THEN CAST(NULL AS BIGINT)"
+                " ELSE CAST((CAST(1000000 AS DECIMAL(38,0)) * (two_m * sum_e - sum_d2))"
+                " div (two_m * two_m) AS BIGINT) END"
+            ).alias("q_ppm"),
+        )
+        return cs.result(out)
 
 
 _COND_TOPK = 20
@@ -636,74 +636,74 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
     blocked pair generation, the documented one-edge-shuffle-per-round
     LPA, two label-attach joins, then label-keyed aggs; the readout
     adds only a 20-row TakeOrdered (no global sort). The readout reads
-    the labels three times, so they are persisted; the pair and label
-    caches release via the eager-checkpoint-then-unpersist tail, and
-    planfp fingerprints the whole lazy plan via plan_only.
+    the labels three times, so they are persisted in the query's cache
+    scope, as in community_modularity.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # the cross-basket distinct gives LPA's assume_distinct contract
-    # its unique canonical pairs
-    cp = _basket_pairs(li, "l_orderkey", "l_partkey").distinct().persist()
-    edges = sym_edges(cp, "lo", "hi")
-    # structurally distinct (cp is distinct lo<hi; the swap can't
-    # collide) — skip LPA's defensive edge shuffle
-    labels = label_propagation(
-        edges, rounds=_LPA_ROUNDS, assume_distinct=True
-    ).persist()
-    # Readout over the HALF-SIZE canonical pair list, as in
-    # community_modularity: e_c = 2x internal lo<hi pairs,
-    # deg from both cp endpoints, 2m = 2·|cp| — identical values,
-    # half the rows through the two label-attach joins.
-    ll = labels.select(F.col("node").alias("lo"), F.col("label").alias("ls"))
-    lh = labels.select(F.col("node").alias("hi"), F.col("label").alias("ld"))
-    internal = (
-        cp.join(ll, "lo")
-        .join(lh, "hi")
-        .filter(F.col("ls") == F.col("ld"))
-        .groupBy(F.col("ls").alias("label"))
-        .agg((2 * F.count(F.lit(1))).alias("e_c"))
-    )
-    deg = (
-        # both endpoints in ONE pass over the cp cache
-        cp.select(F.explode(F.array("lo", "hi")).alias("src"))
-        .groupBy("src")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    comm = (
-        labels.join(deg, labels["node"] == deg["src"])
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("community_size"),
-            F.sum(F.col("d").cast("decimal(38,0)")).alias("vol"),
+    with cache_scope() as cs:
+        # the cross-basket distinct gives LPA's assume_distinct contract
+        # its unique canonical pairs
+        cp = cs.persist(_basket_pairs(li, "l_orderkey", "l_partkey").distinct())
+        edges = sym_edges(cp, "lo", "hi")
+        # structurally distinct (cp is distinct lo<hi; the swap can't
+        # collide) — skip LPA's defensive edge shuffle
+        labels = cs.persist(
+            label_propagation(edges, rounds=_LPA_ROUNDS, assume_distinct=True)
         )
-        # LEFT join: a community every member of which points outward
-        # has e_c = 0 (cut == vol)
-        .join(internal, "label", "left")
-    )
-    two_m = cp.agg((2 * F.count(F.lit(1))).cast("decimal(38,0)").alias("two_m"))
-    out = (
-        comm.crossJoin(F.broadcast(two_m))
-        .select(
-            F.col("label").cast("bigint").alias("label"),
-            "community_size",
-            F.col("vol").cast("bigint").alias("vol"),
-            (
-                F.col("vol")
-                - F.coalesce(F.col("e_c"), F.lit(0)).cast("decimal(38,0)")
+        # Readout over the HALF-SIZE canonical pair list, as in
+        # community_modularity: e_c = 2x internal lo<hi pairs,
+        # deg from both cp endpoints, 2m = 2·|cp| — identical values,
+        # half the rows through the two label-attach joins.
+        ll = labels.select(F.col("node").alias("lo"), F.col("label").alias("ls"))
+        lh = labels.select(F.col("node").alias("hi"), F.col("label").alias("ld"))
+        internal = (
+            cp.join(ll, "lo")
+            .join(lh, "hi")
+            .filter(F.col("ls") == F.col("ld"))
+            .groupBy(F.col("ls").alias("label"))
+            .agg((2 * F.count(F.lit(1))).alias("e_c"))
+        )
+        deg = (
+            # both endpoints in ONE pass over the cp cache
+            cp.select(F.explode(F.array("lo", "hi")).alias("src"))
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        comm = (
+            labels.join(deg, labels["node"] == deg["src"])
+            .groupBy("label")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("community_size"),
+                F.sum(F.col("d").cast("decimal(38,0)")).alias("vol"),
             )
-            .cast("bigint")
-            .alias("cut_edges"),
-            F.expr(
-                "CASE WHEN least(vol, two_m - vol) = 0 THEN CAST(NULL AS BIGINT)"
-                " ELSE CAST((CAST(1000000 AS DECIMAL(38,0))"
-                "   * (vol - CAST(coalesce(e_c, 0) AS DECIMAL(38,0))))"
-                "  div least(vol, two_m - vol) AS BIGINT) END"
-            ).alias("phi_ppm"),
+            # LEFT join: a community every member of which points outward
+            # has e_c = 0 (cut == vol)
+            .join(internal, "label", "left")
         )
-        .orderBy(F.col("community_size").desc(), "label")
-        .limit(_COND_TOPK)
-    )
-    return planfp.checkpoint_and_release(out, cp, labels)
+        two_m = cp.agg((2 * F.count(F.lit(1))).cast("decimal(38,0)").alias("two_m"))
+        out = (
+            comm.crossJoin(F.broadcast(two_m))
+            .select(
+                F.col("label").cast("bigint").alias("label"),
+                "community_size",
+                F.col("vol").cast("bigint").alias("vol"),
+                (
+                    F.col("vol")
+                    - F.coalesce(F.col("e_c"), F.lit(0)).cast("decimal(38,0)")
+                )
+                .cast("bigint")
+                .alias("cut_edges"),
+                F.expr(
+                    "CASE WHEN least(vol, two_m - vol) = 0 THEN CAST(NULL AS BIGINT)"
+                    " ELSE CAST((CAST(1000000 AS DECIMAL(38,0))"
+                    "   * (vol - CAST(coalesce(e_c, 0) AS DECIMAL(38,0))))"
+                    "  div least(vol, two_m - vol) AS BIGINT) END"
+                ).alias("phi_ppm"),
+            )
+            .orderBy(F.col("community_size").desc(), "label")
+            .limit(_COND_TOPK)
+        )
+        return cs.result(out)
 
 
 def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
@@ -1144,37 +1144,38 @@ def graph_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     (each shuffles on its key), one scalar moment aggregate. Nothing
     super-linear, no windows.
     """
-    cp = _copurchase(spark, sf).persist()
-    edges = sym_edges(cp, "cnode", "pnode")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    ds = deg.select(F.col("src").alias("__s"), F.col("d").alias("dx"))
-    dd = deg.select(F.col("src").alias("__d"), F.col("d").alias("dy"))
-    m = (
-        edges.join(ds, edges["src"] == ds["__s"])
-        .join(dd, edges["dst"] == dd["__d"])
-        .agg(
-            F.count(F.lit(1)).cast("decimal(38,0)").alias("m"),
-            F.sum(F.col("dx").cast("decimal(38,0)")).alias("sum_x"),
-            F.sum(
-                F.col("dx").cast("decimal(19,0)") * F.col("dx").cast("decimal(19,0)")
-            ).alias("sum_xx"),
-            F.sum(
-                F.col("dx").cast("decimal(19,0)") * F.col("dy").cast("decimal(19,0)")
-            ).alias("sum_xy"),
+    with cache_scope() as cs:
+        cp = cs.persist(_copurchase(spark, sf))
+        edges = sym_edges(cp, "cnode", "pnode")
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+        ds = deg.select(F.col("src").alias("__s"), F.col("d").alias("dx"))
+        dd = deg.select(F.col("src").alias("__d"), F.col("d").alias("dy"))
+        m = (
+            edges.join(ds, edges["src"] == ds["__s"])
+            .join(dd, edges["dst"] == dd["__d"])
+            .agg(
+                F.count(F.lit(1)).cast("decimal(38,0)").alias("m"),
+                F.sum(F.col("dx").cast("decimal(38,0)")).alias("sum_x"),
+                F.sum(
+                    F.col("dx").cast("decimal(19,0)") * F.col("dx").cast("decimal(19,0)")
+                ).alias("sum_xx"),
+                F.sum(
+                    F.col("dx").cast("decimal(19,0)") * F.col("dy").cast("decimal(19,0)")
+                ).alias("sum_xy"),
+            )
         )
-    )
-    out = m.select(
-        F.col("m").cast("bigint").alias("m"),
-        F.col("sum_x").cast("bigint").alias("sum_x"),
-        F.col("sum_xx").cast("bigint").alias("sum_xx"),
-        F.col("sum_xy").cast("bigint").alias("sum_xy"),
-        F.expr(
-            "CASE WHEN (m * sum_xx - sum_x * sum_x) = 0 THEN CAST(NULL AS BIGINT)"
-            " ELSE CAST((1000000 * (m * sum_xy - sum_x * sum_x))"
-            " div (m * sum_xx - sum_x * sum_x) AS BIGINT) END"
-        ).alias("r_ppm"),
-    )
-    return planfp.checkpoint_and_release(out, cp)
+        out = m.select(
+            F.col("m").cast("bigint").alias("m"),
+            F.col("sum_x").cast("bigint").alias("sum_x"),
+            F.col("sum_xx").cast("bigint").alias("sum_xx"),
+            F.col("sum_xy").cast("bigint").alias("sum_xy"),
+            F.expr(
+                "CASE WHEN (m * sum_xx - sum_x * sum_x) = 0 THEN CAST(NULL AS BIGINT)"
+                " ELSE CAST((1000000 * (m * sum_xy - sum_x * sum_x))"
+                " div (m * sum_xx - sum_x * sum_x) AS BIGINT) END"
+            ).alias("r_ppm"),
+        )
+        return cs.result(out)
 
 
 _BALL_SEEDS = 20
@@ -1199,16 +1200,16 @@ def graph_seed_ball_sizes(spark: SparkSession, sf: str) -> DataFrame:
     """
     from fsc_etl_spark.operators.graph import multi_source_ball_sizes
 
-    cp = _copurchase(spark, sf).persist()
-    edges = sym_edges(cp, "cnode", "pnode")
-    seeds = (
-        t(spark, sf, "customer")
-        .select((F.col("c_custkey") * 2).alias("node"))
-        .orderBy("node")
-        .limit(_BALL_SEEDS)
-    )
-    balls = multi_source_ball_sizes(edges, seeds, max_hops=_BALL_HOPS)
-    cp.unpersist()
+    with cache_scope() as cs:
+        cp = cs.persist(_copurchase(spark, sf))
+        edges = sym_edges(cp, "cnode", "pnode")
+        seeds = (
+            t(spark, sf, "customer")
+            .select((F.col("c_custkey") * 2).alias("node"))
+            .orderBy("node")
+            .limit(_BALL_SEEDS)
+        )
+        balls = multi_source_ball_sizes(edges, seeds, max_hops=_BALL_HOPS)
     return balls.select(
         render_node("seed").alias("seed"),
         F.col("dist").cast("bigint").alias("dist"),

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from fsc_etl_spark import schemas
 
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.merge import ParquetMergeTarget
 from fsc_etl_spark.streaming import (
     run_to_memory,
@@ -407,10 +408,11 @@ def streaming_ppl_gate(spark: SparkSession, sf: str) -> DataFrame:
     static_docs = read_parquet_table(spark, sf, "documents").select(
         "doc_id", "lang", "text"
     )
-    mscore, hscore, s0 = lm_model_frames(static_docs)
-    stream = stream_documents(spark, sf).select("doc_id", "text")
-    per_doc = lm_per_doc(lm_grams(stream), mscore, hscore, s0)
-    converged = run_to_memory(per_doc, output_mode="complete")
+    with cache_scope() as cs:
+        mscore, hscore, s0 = lm_model_frames(cs, static_docs)
+        stream = stream_documents(spark, sf).select("doc_id", "text")
+        per_doc = lm_per_doc(lm_grams(stream), mscore, hscore, s0)
+        converged = run_to_memory(per_doc, output_mode="complete")
     return lm_final_shape(static_docs, converged)
 
 
@@ -422,7 +424,7 @@ def segment_dedup_batch_handler(
     crash_hook=None,
 ):
     """foreachBatch handler for incremental segment dedup with
-    EXACTLY-ONCE per-epoch semantics (VERDICT r8 #10): every write is
+    EXACTLY-ONCE per-epoch semantics: every write is
     keyed by ``batch_id`` and mode=overwrite, and the seen-hash read
     filters to ``epoch < batch_id`` — so a replay of an epoch after a
     crash that landed BETWEEN the side-effect writes and the
@@ -448,32 +450,34 @@ def segment_dedup_batch_handler(
             .filter(F.col("epoch") < batch_id)
             .select("seg_hash")
         )
-        segs = (
-            segment_hashes(batch_df)
-            .withColumn("first_in_batch", F.row_number().over(w) == 1)
-            .join(seen.withColumn("in_hist", F.lit(True)), "seg_hash", "left")
-            .withColumn(
-                "keep", F.col("first_in_batch") & F.col("in_hist").isNull()
+        with cache_scope() as cs:
+            # checkpointed: the writes must not re-read `seen` after the
+            # state dir grows
+            segs = cs.checkpoint(
+                segment_hashes(batch_df)
+                .withColumn("first_in_batch", F.row_number().over(w) == 1)
+                .join(seen.withColumn("in_hist", F.lit(True)), "seg_hash", "left")
+                .withColumn(
+                    "keep", F.col("first_in_batch") & F.col("in_hist").isNull()
+                )
             )
-            .localCheckpoint()  # writes must not re-read `seen` after the state dir grows
-        )
-        (
-            segs.groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_segments"),
-                F.sum(F.col("keep").cast("bigint")).alias("n_kept"),
+            (
+                segs.groupBy("doc_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n_segments"),
+                    F.sum(F.col("keep").cast("bigint")).alias("n_kept"),
+                )
+                .write.mode("overwrite")
+                .parquet(f"{results_dir}/b{batch_id}")
             )
-            .write.mode("overwrite")
-            .parquet(f"{results_dir}/b{batch_id}")
-        )
-        (
-            segs.filter("keep")
-            .select("seg_hash")
-            .distinct()
-            .withColumn("epoch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/b{batch_id}")
-        )
+            (
+                segs.filter("keep")
+                .select("seg_hash")
+                .distinct()
+                .withColumn("epoch", F.lit(batch_id).cast("long"))
+                .write.mode("overwrite")
+                .parquet(f"{state_dir}/b{batch_id}")
+            )
         if crash_hook is not None:
             crash_hook(batch_id, "post")
 
@@ -613,37 +617,37 @@ def mg_batch_handler(
             return
         if crash_hook is not None:
             crash_hook(batch_id, "pre")
-        prior = (
-            spark.read.schema("tok string, cnt long, epoch long")
-            .parquet(f"{state_dir}/*")
-            .filter(F.col("epoch") < batch_id)
-            .localCheckpoint()  # writes must not re-list the state dir
-        )
-        latest = prior.agg(F.max("epoch").alias("e")).first()["e"]
-        prior_summ = (
-            prior.filter(F.col("epoch") == latest).select("tok", "cnt")
-            if latest is not None
-            else spark.createDataFrame([], "tok string, cnt long")
-        )
-        batch_summ = mg_frequent(
-            batch_df.select(
-                "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
-            ),
-            "tok",
-            k,
-            shard_col="doc_id",
-        ).select("tok", F.col("mg_est").alias("cnt"))
-        merged = (
-            prior_summ.unionByName(batch_summ)
-            .groupBy("tok")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        (
-            mg_prune(merged, k, key_col="tok")
-            .withColumn("epoch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/b{batch_id}")
-        )
+        with cache_scope() as cs:
+            prior = cs.checkpoint(  # writes must not re-list the state dir
+                spark.read.schema("tok string, cnt long, epoch long")
+                .parquet(f"{state_dir}/*")
+                .filter(F.col("epoch") < batch_id)
+            )
+            latest = prior.agg(F.max("epoch").alias("e")).first()["e"]
+            prior_summ = (
+                prior.filter(F.col("epoch") == latest).select("tok", "cnt")
+                if latest is not None
+                else spark.createDataFrame([], "tok string, cnt long")
+            )
+            batch_summ = mg_frequent(
+                batch_df.select(
+                    "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
+                ),
+                "tok",
+                k,
+                shard_col="doc_id",
+            ).select("tok", F.col("mg_est").alias("cnt"))
+            merged = (
+                prior_summ.unionByName(batch_summ)
+                .groupBy("tok")
+                .agg(F.sum("cnt").alias("cnt"))
+            )
+            (
+                mg_prune(merged, k, key_col="tok")
+                .withColumn("epoch", F.lit(batch_id).cast("long"))
+                .write.mode("overwrite")
+                .parquet(f"{state_dir}/b{batch_id}")
+            )
         if crash_hook is not None:
             crash_hook(batch_id, "post")
 
@@ -729,8 +733,8 @@ def streaming_mg_heavy_tokens(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def streaming_priority_sample(spark: SparkSession, sf: str) -> DataFrame:
-    """Priority sampling over a LIVE corpus stream (round 13 — the
-    streaming fold of weighted_priority_sample): top-k-by-priority is
+    """Priority sampling over a LIVE corpus stream (the streaming
+    fold of weighted_priority_sample): top-k-by-priority is
     a MERGE MONOID — top_k(A ∪ B) = top_k(top_k(A) ∪ top_k(B)) — so
     the stream keeps exactly k rows of state per epoch: each
     micro-batch computes its own top-50 (the shared priority_scores
@@ -771,33 +775,33 @@ def streaming_priority_sample(spark: SparkSession, sf: str) -> DataFrame:
         batch_sizes.append(n)
         if n == 0:
             return
-        prior = (
-            spark.read.schema(state_schema)
-            .parquet(f"{state_dir}/*")
-            .filter(F.col("epoch") < batch_id)
-            .localCheckpoint()  # writes must not re-list the state dir
-        )
-        latest = prior.agg(F.max("epoch").alias("e")).first()["e"]
-        prior_summ = (
-            prior.filter(F.col("epoch") == latest).drop("epoch")
-            if latest is not None
-            else spark.createDataFrame(
-                [], "doc_id long, n_tokens long, priority long"
+        with cache_scope() as cs:
+            prior = cs.checkpoint(  # writes must not re-list the state dir
+                spark.read.schema(state_schema)
+                .parquet(f"{state_dir}/*")
+                .filter(F.col("epoch") < batch_id)
             )
-        )
-        batch_summ = (
-            priority_scores(batch_df)
-            .orderBy(F.col("priority").desc(), F.col("doc_id").asc())
-            .limit(_PRIORITY_K)
-        )
-        (
-            prior_summ.unionByName(batch_summ)
-            .orderBy(F.col("priority").desc(), F.col("doc_id").asc())
-            .limit(_PRIORITY_K)
-            .withColumn("epoch", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/b{batch_id}")
-        )
+            latest = prior.agg(F.max("epoch").alias("e")).first()["e"]
+            prior_summ = (
+                prior.filter(F.col("epoch") == latest).drop("epoch")
+                if latest is not None
+                else spark.createDataFrame(
+                    [], "doc_id long, n_tokens long, priority long"
+                )
+            )
+            batch_summ = (
+                priority_scores(batch_df)
+                .orderBy(F.col("priority").desc(), F.col("doc_id").asc())
+                .limit(_PRIORITY_K)
+            )
+            (
+                prior_summ.unionByName(batch_summ)
+                .orderBy(F.col("priority").desc(), F.col("doc_id").asc())
+                .limit(_PRIORITY_K)
+                .withColumn("epoch", F.lit(batch_id).cast("long"))
+                .write.mode("overwrite")
+                .parquet(f"{state_dir}/b{batch_id}")
+            )
 
     run_foreach_batch(docs, handle, output_mode="append")
     if len([b for b in batch_sizes if b > 0]) < 2:

@@ -31,7 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fsc_etl_spark import planfp
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.pairs import expand_pairs, expand_triples, shuffle_parallelism
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
@@ -375,53 +375,53 @@ def basket_pair_support(spark: SparkSession, sf: str) -> DataFrame:
     broadcast; the top-k is a TakeOrdered heap, never a global
     sort."""
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # One sorted part set per basket: the set absorbs the distinct and
-    # the item cap is a size() filter on the aggregated row. The
-    # round-robin comes before the persist so the cache itself, not
-    # only the expansion, runs at full parallelism.
-    bk = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
-        .repartition(shuffle_parallelism(li))
-        .persist()  # read three times: n_baskets, item counts, pairs
-    )
-    nb = bk.agg(F.count(F.lit(1)).alias("n_baskets"))
-    item = (
-        bk.select(F.explode("ps").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    sup = (
-        bk.select(expand_pairs("ps", "part_a", "part_b").alias("p"))
-        .groupBy(F.col("p.part_a").alias("part_a"), F.col("p.part_b").alias("part_b"))
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
-    dec = "decimal(38,0)"
-    out = (
-        sup.join(
-            item.select(F.col("l_partkey").alias("part_a"), F.col("cnt").alias("cnt_a")),
-            "part_a",
+    with cache_scope() as cs:
+        # One sorted part set per basket: the set absorbs the distinct and
+        # the item cap is a size() filter on the aggregated row. The
+        # round-robin comes before the persist so the cache itself, not
+        # only the expansion, runs at full parallelism.
+        bk = cs.persist(  # read three times: n_baskets, item counts, pairs
+            li.groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+            .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
+            .repartition(shuffle_parallelism(li))
         )
-        .join(
-            item.select(F.col("l_partkey").alias("part_b"), F.col("cnt").alias("cnt_b")),
-            "part_b",
+        nb = bk.agg(F.count(F.lit(1)).alias("n_baskets"))
+        item = (
+            bk.select(F.explode("ps").alias("l_partkey"))
+            .groupBy("l_partkey")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .crossJoin(F.broadcast(nb))
-        .select(
-            "part_a",
-            "part_b",
-            F.col("support").cast("bigint").alias("support"),
-            F.expr(
-                f"CAST((CAST(1000000 AS {dec}) * CAST(support AS {dec})"
-                f" * CAST(n_baskets AS {dec}))"
-                f" div (CAST(cnt_a AS {dec}) * CAST(cnt_b AS {dec})) AS BIGINT)"
-            ).alias("lift_ppm"),
+        sup = (
+            bk.select(expand_pairs("ps", "part_a", "part_b").alias("p"))
+            .groupBy(F.col("p.part_a").alias("part_a"), F.col("p.part_b").alias("part_b"))
+            .agg(F.count(F.lit(1)).alias("support"))
         )
-        .orderBy(F.col("support").desc(), F.col("part_a").asc(), F.col("part_b").asc())
-        .limit(_BASKET_TOPK)
-    )
-    return planfp.checkpoint_and_release(out, bk)
+        dec = "decimal(38,0)"
+        out = (
+            sup.join(
+                item.select(F.col("l_partkey").alias("part_a"), F.col("cnt").alias("cnt_a")),
+                "part_a",
+            )
+            .join(
+                item.select(F.col("l_partkey").alias("part_b"), F.col("cnt").alias("cnt_b")),
+                "part_b",
+            )
+            .crossJoin(F.broadcast(nb))
+            .select(
+                "part_a",
+                "part_b",
+                F.col("support").cast("bigint").alias("support"),
+                F.expr(
+                    f"CAST((CAST(1000000 AS {dec}) * CAST(support AS {dec})"
+                    f" * CAST(n_baskets AS {dec}))"
+                    f" div (CAST(cnt_a AS {dec}) * CAST(cnt_b AS {dec})) AS BIGINT)"
+                ).alias("lift_ppm"),
+            )
+            .orderBy(F.col("support").desc(), F.col("part_a").asc(), F.col("part_b").asc())
+            .limit(_BASKET_TOPK)
+        )
+        return cs.result(out)
 
 
 _TRIPLE_TOPK = 50
@@ -446,66 +446,66 @@ def basket_triple_support(spark: SparkSession, sf: str) -> DataFrame:
     each); two keyed aggs for supports, one broadcast item-count
     attach per slot, TakeOrdered heap. Top-k by
     (support DESC, part_a, part_b, part_c) — a total integer order.
-    Eager-checkpoint-then-unpersist tail; planfp sees the lazy plan
-    via plan_only.
+    The basket cache lives in the query's cache scope, which
+    materialises the result and releases it.
     """
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    # the capped basket sets of basket_pair_support; per-basket work
-    # stays <= C(cap, 3)
-    bk = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
-        .repartition(shuffle_parallelism(li))
-        .persist()  # read twice: item counts, triple expansion
-    )
-    item = (
-        bk.select(F.explode("ps").alias("l_partkey"))
-        .groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    sup = (
-        bk.select(expand_triples("ps", "part_a", "part_b", "part_c").alias("p"))
-        .groupBy(
-            F.col("p.part_a").alias("part_a"),
-            F.col("p.part_b").alias("part_b"),
-            F.col("p.part_c").alias("part_c"),
+    with cache_scope() as cs:
+        # the capped basket sets of basket_pair_support; per-basket work
+        # stays <= C(cap, 3)
+        bk = cs.persist(  # read twice: item counts, triple expansion
+            li.groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+            .filter(F.size("ps") <= _BASKET_MAX_ITEMS)
+            .repartition(shuffle_parallelism(li))
         )
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
-    dec = "decimal(38,0)"
-    out = (
-        sup.join(
-            item.select(F.col("l_partkey").alias("part_a"), F.col("cnt").alias("cnt_a")),
-            "part_a",
+        item = (
+            bk.select(F.explode("ps").alias("l_partkey"))
+            .groupBy("l_partkey")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .join(
-            item.select(F.col("l_partkey").alias("part_b"), F.col("cnt").alias("cnt_b")),
-            "part_b",
+        sup = (
+            bk.select(expand_triples("ps", "part_a", "part_b", "part_c").alias("p"))
+            .groupBy(
+                F.col("p.part_a").alias("part_a"),
+                F.col("p.part_b").alias("part_b"),
+                F.col("p.part_c").alias("part_c"),
+            )
+            .agg(F.count(F.lit(1)).alias("support"))
         )
-        .join(
-            item.select(F.col("l_partkey").alias("part_c"), F.col("cnt").alias("cnt_c")),
-            "part_c",
+        dec = "decimal(38,0)"
+        out = (
+            sup.join(
+                item.select(F.col("l_partkey").alias("part_a"), F.col("cnt").alias("cnt_a")),
+                "part_a",
+            )
+            .join(
+                item.select(F.col("l_partkey").alias("part_b"), F.col("cnt").alias("cnt_b")),
+                "part_b",
+            )
+            .join(
+                item.select(F.col("l_partkey").alias("part_c"), F.col("cnt").alias("cnt_c")),
+                "part_c",
+            )
+            .select(
+                "part_a",
+                "part_b",
+                "part_c",
+                F.col("support").cast("bigint").alias("support"),
+                F.expr(
+                    f"CAST((CAST(1000000 AS {dec}) * CAST(support AS {dec}))"
+                    f" div CAST(greatest(cnt_a, cnt_b, cnt_c) AS {dec}) AS BIGINT)"
+                ).alias("all_conf_ppm"),
+            )
+            .orderBy(
+                F.col("support").desc(),
+                F.col("part_a").asc(),
+                F.col("part_b").asc(),
+                F.col("part_c").asc(),
+            )
+            .limit(_TRIPLE_TOPK)
         )
-        .select(
-            "part_a",
-            "part_b",
-            "part_c",
-            F.col("support").cast("bigint").alias("support"),
-            F.expr(
-                f"CAST((CAST(1000000 AS {dec}) * CAST(support AS {dec}))"
-                f" div CAST(greatest(cnt_a, cnt_b, cnt_c) AS {dec}) AS BIGINT)"
-            ).alias("all_conf_ppm"),
-        )
-        .orderBy(
-            F.col("support").desc(),
-            F.col("part_a").asc(),
-            F.col("part_b").asc(),
-            F.col("part_c").asc(),
-        )
-        .limit(_TRIPLE_TOPK)
-    )
-    return planfp.checkpoint_and_release(out, bk)
+        return cs.result(out)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -28,6 +28,7 @@ from fsc_etl_spark.functions.text import (
     tokens,
     LANG_STOPWORDS,
 )
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.dedup import (
     connected_components_min_label,
     connected_components_star,
@@ -53,7 +54,6 @@ from fsc_etl_spark.operators.similarity import (
     nearest_neighbor_within_group,
     semdedup_prune,
 )
-from fsc_etl_spark import planfp
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
 # Fixed random-hyperplane set for the LSH ANN path — seeded, embedded
@@ -1877,22 +1877,23 @@ def minhash_jaccard_estimate(spark: SparkSession, sf: str) -> DataFrame:
     projected subtrees). At corpus scale this is the "write signatures
     to a table, then join" pattern."""
     docs = t(spark, sf, "documents")
-    sigs = minhash_signatures(docs, k=8, shingle_n=3).localCheckpoint()
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    a = sigs.select(
-        F.col("doc_id").alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(8)]
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(8)]
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(8)
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(agree / F.lit(8.0), 6).alias("jaccard_est"))
-    )
+    with cache_scope() as cs:
+        sigs = cs.checkpoint(minhash_signatures(docs, k=8, shingle_n=3))
+        pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
+        a = sigs.select(
+            F.col("doc_id").alias("id_a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(8)]
+        )
+        b = sigs.select(
+            F.col("doc_id").alias("id_b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(8)]
+        )
+        agree = sum(
+            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(8)
+        )
+        return cs.result(
+            pairs.join(a, "id_a")
+            .join(b, "id_b")
+            .select("id_a", "id_b", F.round(agree / F.lit(8.0), 6).alias("jaccard_est"))
+        )
 
 
 def hash_split_counts(spark: SparkSession, sf: str) -> DataFrame:
@@ -1981,50 +1982,51 @@ def pmi_top_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     support-filtered (small) bigram side.
     """
     docs = t(spark, sf, "documents")
-    toked = docs.select(tokens(F.lower(F.col("text"))).alias("tk")).persist()
-    uni = (
-        toked.select(F.explode("tk").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("nx"))
-    )
-    n_tot = uni.agg(F.sum("nx").alias("n_total"))
-    nb_tot = toked.select(
-        F.greatest(F.size("tk") - 1, F.lit(0)).alias("nb")
-    ).agg(F.sum("nb").alias("nb_total"))
-    grams = (
-        toked.select(F.explode(shingles_from_tokens(F.col("tk"), 2)).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("nxy"))
-        .filter(F.col("nxy") >= 5)
-    )
-    parts = grams.select(
-        "bigram",
-        "nxy",
-        F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1"),
-        F.split_part(F.col("bigram"), F.lit(" "), F.lit(2)).alias("w2"),
-    )
-    u1 = uni.select(F.col("w").alias("w1"), F.col("nx").alias("nx1"))
-    u2 = uni.select(F.col("w").alias("w2"), F.col("nx").alias("nx2"))
-    dec = "decimal(38,0)"
-    joined = (
-        parts.join(u1, "w1")
-        .join(u2, "w2")
-        .join(F.broadcast(n_tot))
-        .join(F.broadcast(nb_tot))
-    )
-    score = F.expr(
-        "CAST((CAST(nxy AS DECIMAL(38,0)) * CAST(n_total AS DECIMAL(38,0))"
-        " * CAST(n_total AS DECIMAL(38,0)) * 100)"
-        " div (CAST(nx1 AS DECIMAL(38,0)) * CAST(nx2 AS DECIMAL(38,0))"
-        " * CAST(nb_total AS DECIMAL(38,0))) AS BIGINT)"
-    )
-    out = (
-        joined.select("bigram", "nxy", score.alias("pmi_score"))
-        .orderBy(F.col("pmi_score").desc(), F.col("bigram"))
-        .limit(20)
-    )
-    # the token cache is read by the unigram, bigram and Nb branches
-    return planfp.checkpoint_and_release(out, toked)
+    with cache_scope() as cs:
+        toked = cs.persist(docs.select(tokens(F.lower(F.col("text"))).alias("tk")))
+        uni = (
+            toked.select(F.explode("tk").alias("w"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("nx"))
+        )
+        n_tot = uni.agg(F.sum("nx").alias("n_total"))
+        nb_tot = toked.select(
+            F.greatest(F.size("tk") - 1, F.lit(0)).alias("nb")
+        ).agg(F.sum("nb").alias("nb_total"))
+        grams = (
+            toked.select(F.explode(shingles_from_tokens(F.col("tk"), 2)).alias("bigram"))
+            .groupBy("bigram")
+            .agg(F.count(F.lit(1)).alias("nxy"))
+            .filter(F.col("nxy") >= 5)
+        )
+        parts = grams.select(
+            "bigram",
+            "nxy",
+            F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1"),
+            F.split_part(F.col("bigram"), F.lit(" "), F.lit(2)).alias("w2"),
+        )
+        u1 = uni.select(F.col("w").alias("w1"), F.col("nx").alias("nx1"))
+        u2 = uni.select(F.col("w").alias("w2"), F.col("nx").alias("nx2"))
+        dec = "decimal(38,0)"
+        joined = (
+            parts.join(u1, "w1")
+            .join(u2, "w2")
+            .join(F.broadcast(n_tot))
+            .join(F.broadcast(nb_tot))
+        )
+        score = F.expr(
+            "CAST((CAST(nxy AS DECIMAL(38,0)) * CAST(n_total AS DECIMAL(38,0))"
+            " * CAST(n_total AS DECIMAL(38,0)) * 100)"
+            " div (CAST(nx1 AS DECIMAL(38,0)) * CAST(nx2 AS DECIMAL(38,0))"
+            " * CAST(nb_total AS DECIMAL(38,0))) AS BIGINT)"
+        )
+        out = (
+            joined.select("bigram", "nxy", score.alias("pmi_score"))
+            .orderBy(F.col("pmi_score").desc(), F.col("bigram"))
+            .limit(20)
+        )
+        # the token cache is read by the unigram, bigram and Nb branches
+        return cs.result(out)
 
 
 def udtf_ngram_topk(spark: SparkSession, sf: str) -> DataFrame:

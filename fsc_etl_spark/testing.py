@@ -135,8 +135,9 @@ def compare_with_oracle(
         )
 
 
-def check_query(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Run one registered query against its oracle at ``sf_dir``."""
+def check_query(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Run one registered query against its oracle at ``sf_dir``;
+    returns the query's frame."""
     import __spark_entry__ as entrymod
 
     qfn = entrymod.queries()[name]
@@ -157,9 +158,16 @@ def check_query(spark: SparkSession, sf_dir: str, name: str) -> None:
     df = qfn(spark, sf_dir)
     if sql is None:
         assert df.count() >= 0  # rows-only check, like the driver
-        return
+        return df
     con = duckdb_connection(sf_dir)
     try:
         compare_with_oracle(df, con, sql, name=name)
     finally:
         con.close()
+    return df
+
+
+def persisted_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of every RDD the session keeps persisted: DataFrame caches
+    and local checkpoints alike."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}

@@ -35,15 +35,15 @@ def main() -> int:
     spark = get_spark(app_name=f"dump_plans_{tag}")
     queries = entrymod.queries()
     rc = 0
-    from fsc_etl_spark import planfp
+    from fsc_etl_spark.operators.cache import plan_only
 
     for name in names:
         try:
-            # plan_only: queries with an eager-checkpoint-then-unpersist
-            # tail return the LAZY readout plan instead of a one-line
-            # ExistingRDD scan (r14) — operator-INTERNAL checkpoints
-            # still truncate, as the r13 dumps documented.
-            with planfp.plan_only():
+            # plan_only: queries whose cache scope materialises the
+            # result return the LAZY readout plan instead of a one-line
+            # ExistingRDD scan — operator-INTERNAL checkpoints still
+            # truncate.
+            with plan_only():
                 df = queries[name](spark, SF)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):

@@ -6,7 +6,7 @@ at the pinned sf0.001 gate fixture under the shared gate config
 (planfp.GATE_SHUFFLE_PARTITIONS; ADVICE r12: the generator and the
 gate test previously ran under different shuffle-partition settings).
 One-shot eager builders expose their pre-checkpoint plan via
-planfp.plan_only() (ADVICE r12); iterative builders (graph family,
+operators.cache.plan_only(); iterative builders (graph family,
 streaming) still fingerprint their checkpointed readout and are
 additionally pinned by dedicated plan tests.
 tests/test_plan_fingerprints.py fails on any drift from this
@@ -32,6 +32,7 @@ OUT = REPO_ROOT / "docs" / "plan_fingerprints.json"
 def main() -> None:
     import __spark_entry__ as entrymod
     from fsc_etl_spark import planfp
+    from fsc_etl_spark.operators.cache import plan_only
     from fsc_etl_spark.planfp import plan_fingerprint
     from fsc_etl_spark.session import get_spark
 
@@ -43,7 +44,7 @@ def main() -> None:
     queries = entrymod.queries()
     fps: dict[str, dict] = {}
     t0 = time.time()
-    with planfp.plan_only():
+    with plan_only():
         for i, name in enumerate(sorted(queries), 1):
             spark.catalog.clearCache()
             fps[name] = plan_fingerprint(queries[name](spark, sf_dir))

@@ -11,7 +11,8 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from fsc_etl_spark.testing import check_query
+from fsc_etl_spark.operators.cache import checkpoint_rdd_ids
+from fsc_etl_spark.testing import check_query, persisted_rdd_ids
 
 QUERY_NAMES = sorted(entrymod.queries().keys())
 
@@ -31,7 +32,18 @@ def test_every_query_has_callable():
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, sf_smoke, name):
-    check_query(spark, sf_smoke, name)
+    """The query matches its oracle, and once it has run and the
+    DataFrame cache is cleared, the only RDDs it leaves persisted are
+    the local checkpoints its returned frame reads: every other cache
+    it made is released."""
+    before = persisted_rdd_ids(spark)
+    df = check_query(spark, sf_smoke, name)
+    spark.catalog.clearCache()
+    left = persisted_rdd_ids(spark) - before
+    assert left <= checkpoint_rdd_ids(df), (
+        f"{name} left {len(left - checkpoint_rdd_ids(df))} RDD(s) persisted "
+        "that its result does not read"
+    )
 
 
 # Every DuckDB result-column type with a driver-green precedent.
@@ -111,10 +123,8 @@ def test_driver_sample_prefix_covers_priority_groups():
     # must sit in the sample window so the driver re-verifies them:
     # round 13 — the eager-checkpoint-then-unpersist cache lifecycle
     # applied to the leaked pair cache (VERDICT r12 #2; results
-    # unchanged). The five planfp.plan_only branches added this round
-    # (ADVICE r12) are inert in driver context and need no window
-    # slot beyond this one (basket/adamic-adar carry green r12 rows
-    # for the identical tail).
+    # unchanged). The operators.cache.plan_only context changes no
+    # query result and needs no window slot beyond this one.
     changed_this_round = {
         "graph_common_neighbors",
     }

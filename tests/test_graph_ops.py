@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from fsc_etl_spark.operators.cache import checkpoint_rdd_ids
 from fsc_etl_spark.operators.graph import (
     bfs_hops,
     kcore_degrees,
@@ -20,6 +21,7 @@ from fsc_etl_spark.operators.graph import (
     skyline_2d,
     triangle_stats,
 )
+from fsc_etl_spark.testing import persisted_rdd_ids
 
 
 def _edges(spark, pairs):
@@ -746,15 +748,6 @@ def test_assume_distinct_call_sites_pass_unique_edges(spark, sf_smoke, monkeypat
     assert len(checked) == len(wired), (checked, wired)
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _checkpoint_rdd_id(df) -> int:
-    """Id of the RDD under a frame returned by ``localCheckpoint``."""
-    return int(df._jdf.queryExecution().analyzed().rdd().id())
-
-
 def test_label_propagation_query_builds_lazily_and_caches_nothing(spark, sf_smoke):
     """graph_label_propagation is one lazy plan: building it starts no
     Spark job, and once it has run and the cache is cleared no RDD is
@@ -763,12 +756,12 @@ def test_label_propagation_query_builds_lazily_and_caches_nothing(spark, sf_smok
 
     tracker = spark.sparkContext.statusTracker()
     jobs = set(tracker.getJobIdsForGroup(None))
-    persisted = _persisted_rdd_ids(spark)
+    persisted = persisted_rdd_ids(spark)
     df = gops.QUERIES["graph_label_propagation"](spark, sf_smoke)
     assert set(tracker.getJobIdsForGroup(None)) == jobs, "the builder ran a Spark job"
     assert df.collect()
     spark.catalog.clearCache()
-    assert _persisted_rdd_ids(spark) - persisted == set()
+    assert persisted_rdd_ids(spark) - persisted == set()
 
 
 @pytest.mark.parametrize("name", ["community_modularity", "graph_conductance"])
@@ -779,8 +772,8 @@ def test_label_readouts_release_every_cache_but_their_result(spark, sf_smoke, na
     persisted."""
     import fsc_etl_spark.plans.graph_ops as gops
 
-    persisted = _persisted_rdd_ids(spark)
+    persisted = persisted_rdd_ids(spark)
     df = gops.QUERIES[name](spark, sf_smoke)
     df.collect()
     spark.catalog.clearCache()
-    assert _persisted_rdd_ids(spark) - persisted == {_checkpoint_rdd_id(df)}
+    assert persisted_rdd_ids(spark) - persisted == checkpoint_rdd_ids(df)

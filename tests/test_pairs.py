@@ -1,5 +1,4 @@
-"""The shared set-expansion kernels (operators/pairs) and the eager
-cache-release tail (planfp.checkpoint_and_release)."""
+"""The shared set-expansion kernels (operators/pairs)."""
 
 from __future__ import annotations
 
@@ -7,7 +6,6 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
-from fsc_etl_spark import planfp
 from fsc_etl_spark.operators.pairs import expand_pairs, expand_triples
 
 SIZES = (0, 1, 2, 3, 7)
@@ -43,26 +41,3 @@ def test_expand_triples_matches_combinations(spark):
     for row in out.select("k", "p.a", "p.b", "p.c").collect():
         got[row.k].append((row.a, row.b, row.c))
     assert got == _expected(3)
-
-
-def test_checkpoint_and_release_under_plan_only_keeps_plan_and_caches(spark):
-    cached = spark.range(10).persist()
-    out = cached.filter("id % 2 = 0")
-    with planfp.plan_only():
-        got = planfp.checkpoint_and_release(out, cached)
-    try:
-        assert got is out
-        assert cached.is_cached
-    finally:
-        cached.unpersist()
-
-
-def test_checkpoint_and_release_materialises_and_unpersists(spark):
-    a = spark.range(10).persist()
-    b = spark.range(5).persist()
-    out = a.join(b, "id")
-    got = planfp.checkpoint_and_release(out, a, b)
-    assert not a.is_cached and not b.is_cached
-    plan = got._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "Scan ExistingRDD" in plan and "Range" not in plan
-    assert sorted(r.id for r in got.collect()) == [0, 1, 2, 3, 4]

@@ -5,8 +5,10 @@ Every queries() entry's physical-plan fingerprint (operator kinds +
 exchange count + join strategies, normalized — see
 fsc_etl_spark/planfp.py) must match the committed snapshot in
 docs/plan_fingerprints.json. Catches the drift class the wall-clock
-band hides: an accidental broadcast→shuffle flip, a lost
-ReusedExchange, an extra exchange from a refactor.
+band hides in the statically planned (un-executed) plan: an
+accidental broadcast→shuffle flip, a changed join strategy, an extra
+exchange from a refactor. Exchange reuse is decided while an adaptive
+query runs, so the gate cannot see a lost ReusedExchange.
 
 Both halves of the gate share their config through planfp (ADVICE
 r12): the test pins spark.sql.shuffle.partitions to
@@ -65,6 +67,7 @@ def test_plan_fingerprints_match_snapshot(spark):
     sys.path.insert(0, str(REPO_ROOT))
     import __spark_entry__ as entrymod
     from fsc_etl_spark import planfp
+    from fsc_etl_spark.operators.cache import plan_only
     from fsc_etl_spark.planfp import plan_fingerprint
 
     snap = json.loads(SNAPSHOT.read_text())
@@ -76,7 +79,7 @@ def test_plan_fingerprints_match_snapshot(spark):
     )
     drift: list[str] = []
     try:
-        with planfp.plan_only():
+        with plan_only():
             for name in sorted(snap):
                 spark.catalog.clearCache()
                 got = plan_fingerprint(queries[name](spark, sf_dir))
