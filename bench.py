@@ -1,11 +1,12 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs the benched queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query executes end-to-end through the noop sink — full plan
-execution (scan → shuffle → agg) without driver-side collection, so
-timings measure the engine, not result transfer.
+The bench runs every ``queries()`` entry not in ``OFF_BENCH``, in
+``queries()`` order. Each executes end-to-end through the noop sink —
+full plan execution (scan → shuffle → agg) without driver-side
+collection, so timings measure the engine, not result transfer.
 """
 
 from __future__ import annotations
@@ -15,467 +16,56 @@ import os
 import time
 
 import __spark_entry__ as entrymod
+from fsc_etl_spark.plans import streaming_queries
 from fsc_etl_spark.session import get_spark
 
-BENCH_QUERIES = [
-    # core analytics (original headline set — keep names/order stable
-    # across rounds for BENCH_r{N} comparability)
-    "q1_pricing_summary",
-    "q5_region_volume",
-    "star_assembly",
-    "pivot_event_types",
-    "window_topk_per_group",
-    "window_running_sum",
-    "rollup_returnflag",
-    "sessionize_events",
-    "hourly_event_rollup",
-    "cdc_snapshot_diff",
-    "merge_upsert_state",
-    "surrogate_key_assign",
-    # §2.12 gap operators
-    "q3_shipping_priority",
-    "q6_revenue_forecast",
-    "cube_order_stats",
-    "json_event_props",
-    "asof_click_purchase",
-    "range_join_recent_views",
-    # training-data pipeline (dedup / similarity / text / multimodal)
-    "text_token_stats",
-    "doc_fingerprint",
-    "dedup_exact_groups",
-    "minhash_signature",
-    "lsh_near_dup_candidates",
-    "ngram_jaccard_pairs",
-    "simhash_signature",
-    "embed_cosine_topk",
-    "embed_lsh_topk",
-    "multimodal_features",
-    # round-1 additions (appended — earlier names/order unchanged)
-    "q4_priority_exists",
-    "q10_returned_items",
-    "q12_priority_by_status",
-    "q14_promo_revenue",
-    "scalar_subquery_bigspenders",
-    "sliding_window_rollup",
-    "multi_distinct_by_flag",
-    "median_price_by_status",
-    "embed_cosine_topk_pandas",
-    "user_trend_slope",  # built-in exact-sum path; *_pandas twin off-bench
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q19_disjunctive_predicates",
-    "q21_waiting_supplier",
-    "q22_idle_customers",
-    "window_frames_breadth",
-    "scd2_user_value_history",
-    "hash_stratified_sample",
-    "token_vocab_topk",
-    "array_funcs_breadth",
-    "sql_direct_q6",
-    "map_funcs_breadth",
-    "stats_moments_breadth",
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q16_supplier_count",
-    "q20_excess_stock_suppliers",
-    "pack_chunks_by_source",
-    "simhash_neardup_pairs",
-    "timeseries_gapfill",
-    "histogram_price_buckets",
-    "timeseries_locf",
-    "dedup_cluster_assign",
-    # round-2 additions (appended — earlier names/order unchanged).
-    # streaming_multibatch_sessionize stays off-bench: its 5 staged
-    # micro-batches + checkpointing measure the harness, not the engine.
-    "minhash_jaccard_estimate",
-    "bigram_topk",
-    "source_doc_stats",
-    "embed_norm_stats",
-    "user_funnel",
-    "hash_split_counts",
-    "contamination_overlap",
-    "doc_repetition_stats",
-    "pii_redact_stats",
-    "domain_mix_weights",
-    "length_quantile_filter",
-    "cluster_canonical_doc",
-    "tfidf_top_terms",
-    "containment_pairs",
-    "dq_orders_report",
-    "rollup_incremental_merge",
-    "hll_daily_users",
-    "embed_quantize_stats",
-    # round-2 scale patterns
-    "bloom_pruned_join",
-    "heavy_hitter_users",
-    "reservoir_sample_per_source",
-    # round-2 tail (appended — earlier names/order unchanged).
-    # dedup_cluster_assign_star stays off-bench: it re-times the same
-    # pair-generation + clustering shape dedup_cluster_assign covers.
-    "zorder_key_demo",
-    "fuzzy_name_match",
-    "mixture_resample_to_min",
-    "full_outer_reconcile",
-    "event_pattern_match",
-    "cohort_retention",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "embed_truncate_norms",
-    # round-3 additions (appended — earlier names/order unchanged)
-    "decile_bucket_scalable",
-    "multimodal_resize_codec",
-    "multimodal_frame_decode",
-    "segment_dedup_mask",
-    "bigram_lm_quality",
-    "audio_clip_stats",
-    "audio_downsample_stats",
-    "vocab_coverage_stats",
-    "udtf_ngram_topk",
-    "orc_roundtrip_stats",
-    "binary_file_ingest",
-    "kmeans_cluster_stats",
-    # graph / frontier / anomaly additions (appended)
-    "bfs_hops_copurchase",
-    "pagerank_copurchase",
-    "triangle_count_coparts",
-    "recursive_ancestor_depth",
-    "skyline_orders",
-    "value_anomaly_events",
-    "dpp_pruned_rollup",
-    "variant_props_stats",
-    "sql_scripting_trimmed_mean",
-    "lateral_topk_orders",
-    "xml_roundtrip_stats",
-    "session_window_stats",
-    "ewma_user_value",
-    "file_provenance_stats",
-    "table_checksum_buckets",
-    "incremental_join_maintenance",
-    "pit_feature_join",
-    "partition_backfill_rewrite",
-    "merge_schema_read",
-    "k_anonymity_audit",
-    "mixture_temperature_sample",
-    "shuffle_hash_join_stats",
-    "pagerank_weighted_copurchase",
-    "json_roundtrip_stats",
-    "nested_roundtrip_stats",
-    "holt_user_forecast",
-    "embed_dim_median_stats",
-    "value_drift_buckets",
-    "inverted_index_stats",
-    "pmi_top_bigrams",
-    # round-4 additions (appended — earlier names/order unchanged)
-    "pagerank_dangling_redistribute",
-    "embed_pq_topk",
-    "chunk_overlap_docs",
-    "padding_waste_stats",
-    "table_profile_stats",
-    "kcore_copurchase",
-    "cms_topk_users",
-    "hll_register_build",
-    "pps_token_sample",
-    "bucketed_join_rollup",
-    "hll_estimate_users",
-    "hll_merge_halves",
-    "csv_corrupt_quarantine",
-    "embed_mmr_select",
-    "cms_merge_halves",
-    "token_budget_schedule",
-    "token_simpson_quality",
-    "assoc_rules_parts",
-    "ppr_copurchase_seeds",
-    # round-4 full-surface expansion: every remaining batch query, so
-    # the bench covers the whole queries() surface. Still off-bench,
-    # each with a documented reason: the streaming_* queries (their
-    # staged micro-batches + checkpoint dirs measure the harness, not
-    # the engine), dedup_cluster_assign_star and user_trend_slope_pandas
-    # (twin paths re-timing shapes already on the bench; equivalence is
-    # gated by scripts/twin_sweep.py), and ntile_customer_deciles
-    # (now the same plan as decile_bucket_scalable, which is benched).
-    "proj_alias",
-    "filter_status",
-    "filter_date_split",
-    "distinct_dim",
-    "agg_minmax",
-    "cast_manifest_roundtrip",
-    "dim_join_broadcast",
-    "semi_join_membership",
-    "anti_join_orphans",
-    "union_insert_update",
-    "global_topk_orders",
-    "event_transition_matrix",
-    "event_burst_islands",
-    "grouping_sets_priority",
-    "intersect_customers",
-    "except_all_priorities",
-    "approx_user_stats",
-    "unpivot_lineitem_metrics",
-    "explode_doc_tokens",
-    "correlated_above_avg",
-    "window_lag_delta",
-    "array_agg_cust_years",
-    "string_funcs_breadth",
-    "date_funcs_breadth",
-    "q15_top_supplier",
-    "regex_null_funcs_breadth",
-    "text_quality",
-    "lang_id_heuristic",
-    "text_bpe_tokens",
-    "dedup_embed_neardup",
-    "embed_nn_within_label",
-    "embed_ivf_topk",
-    "corpus_curation",
-    "synth_docs_source",
-    "salted_source_stats",
-    # round-6 additions (appended): audited pinned-codebook ANN tiers
-    # and benchmark decontamination. training_mix_manifest stays
-    # OFF-bench: it composes five gates benched individually (quality,
-    # lang-id, contamination, repetition, dedup) and would re-time
-    # ~9 s of already-measured shapes — same exclusion class as the
-    # twin re-timings above. cluster_soft_dedup_sample likewise: its
-    # cost IS the dedup_cluster_assign machinery already on the bench;
-    # the only new physical work is one keyed count + a map-side rule.
-    "embed_ivf_pinned_topk",
-    "embed_pq_pinned_topk",
-    "eval_contamination_flags",
-    "repetition_ngram_quality",
-    # embed_semdedup_prune IS benched: the cell-blocked pairwise join
-    # is a new physical shape (the other dedup benches block on label
-    # or LSH band, not on a literal-codebook assignment).
-    "embed_semdedup_prune",
-    # dsir_importance_weights IS benched: the explode -> B-row
-    # partial-agg -> broadcast-score -> doc-keyed sum pipeline is a
-    # new shape (the other gram benches either stay per-row or join
-    # doc-keyed only).
-    "dsir_importance_weights",
-    # embed_knn_label_audit: cell-blocked pair join feeding TWO
-    # ranking windows (k-NN rank + majority vote) — the window-over-
-    # pair-join shape is not otherwise benched.
-    "embed_knn_label_audit",
-    # source_overlap_matrix: gram-keyed distinct self-join (the other
-    # gram joins are broadcast or doc-keyed) with |sources|^2-bounded
-    # fan-out.
-    "source_overlap_matrix",
-    # dup_span_stats: hash-count + colocated flag join + islands
-    # windows — the span-merge shape is not otherwise benched.
-    "dup_span_stats",
-    # winnow_fingerprints: two frame windows + distinct over one
-    # doc-keyed shuffle — the sliding-frame selection shape is new.
-    "winnow_fingerprints",
-    # round-7: embed_semdedup_trained IS benched — distributed Lloyd
-    # training (2 rounds of Arrow-matmul partial sums) + broadcast-
-    # codebook Arrow assignment is a new physical shape vs the
-    # literal-expression pinned tier above. embed_knn_audit_trained
-    # is OFF-bench: identical training + assignment stages as
-    # embed_semdedup_trained and identical downstream windows as
-    # embed_knn_label_audit — no new physical shape, only their
-    # composition. embed_int8_quant_stats is OFF-bench for the same
-    # reason: one scalar agg + map-side transforms, physically the
-    # embed_truncate_norms shape already priced by the expression
-    # benches. embed_hard_negatives is the benched embed_cosine_topk
-    # shape with a label predicate; bpe_pair_counts is the benched
-    # bigram_topk two-phase count with a vocab-bounded second explode;
-    # lang_pred_quality is the benched lang_id_heuristic scan plus
-    # three |langs|-row aggregations. dup_span_trim_stats shuffles on
-    # the same seg_hash key as the benched dup_span_stats (window
-    # instead of count) — same physical shape.
-    "embed_semdedup_trained",
-    # round-8: bm25_topk_docs IS benched — collected-control-row
-    # corpus stats + conditional-aggregate tf/dl in one shuffle +
-    # heap-merge top-k is a new physical shape (tfidf_top_terms joins
-    # df/N back instead). embed_covariance_topk IS benched — the
-    # mapInPandas O(d^2)-int-matrix partial reduction (Q^T Q per
-    # partition) is a new shape; its eager localCheckpoint is part of
-    # the cost. rrf_fused_topk is OFF-bench: it composes the benched
-    # bm25 pipeline with the benched embed_cosine_topk shape plus a
-    # 50x50-bounded join. gopher_quality_flags is OFF-bench: pure
-    # per-row token-array expressions, physically the text_quality
-    # scan already benched. quality_calibration_bins is OFF-bench:
-    # the decile_bucket_scalable histogram decomposition already
-    # benched, over a docs-sized input.
-    "bm25_topk_docs",
-    "embed_covariance_topk",
-    # round-8 second batch: exact_quantiles_scalable IS benched — the
-    # 4-target non-equi range-join rank pick over the value histogram
-    # is a new shape (decile_bucket_scalable buckets every row
-    # instead). heaps_law_vocab_growth IS benched — the min-doc-per-
-    # token agg + checkpoint fold differs from token_vocab_topk's
-    # count-ranked top-k. embed_matryoshka_recall is OFF-bench (two
-    # passes of the benched cosine shape + a 10x10 join);
-    # bm25_prf_expansion is OFF-bench (the benched bm25 pipeline +
-    # the benched tfidf df-shuffle, composed). embed_power_iteration
-    # is OFF-bench: its data-sized stage is the SAME mapInPandas
-    # d×d-moment partial reduction already benched as
-    # embed_covariance_topk (diag_k differs only); the remaining work
-    # is an O(d²) driver-side iteration independent of corpus size.
-    "exact_quantiles_scalable",
-    "heaps_law_vocab_growth",
-    # round-8 third batch: bigram_lm_perplexity IS benched — the
-    # model-train + two vocab-keyed scoring joins + doc-keyed agg is
-    # a new physical shape (nothing else joins a trained model table
-    # back onto a corpus-sized gram stream). retrieval_ndcg_mrr is
-    # OFF-bench (the benched cosine ranking + 50-row metric joins);
-    # zipf_rank_frequency is OFF-bench (the token-freq shuffle +
-    # TakeOrdered heap already benched as bigram_topk/token_vocab
-    # shapes; the 1000-row fit is constant work);
-    # source_length_drift is OFF-bench (two |sources|x20-row aggs +
-    # a broadcast join — the lang_pred_quality class of tiny-agg
-    # rollups).
-    "bigram_lm_perplexity",
-    # round-8 fourth batch: incremental_lsh_dedup IS benched — the
-    # restricted band-bucket pair expansion + exact-Jaccard verify
-    # over candidate-only shingle sets is a new physical shape (the
-    # benched lsh_near_dup_candidates stops at candidates; this adds
-    # the bounded verification join). ccnet_ppl_buckets is OFF-bench
-    # (the benched bigram_lm_perplexity scoring plan + the benched
-    # exact-quantiles histogram pick, composed); tokenizer_fertility
-    # _stats is OFF-bench (one pure-codegen scan + |langs|-row agg,
-    # the lang_pred_quality class); streaming_ppl_gate is OFF-bench
-    # (streaming queries are excluded as a family — micro-batch
-    # setup dominates at sf0.1).
-    "incremental_lsh_dedup",
-    # round-9: embed_ann_recall_matrix is OFF-bench — it composes the
-    # five ALREADY-BENCHED ANN tiers plus the benched exact-cosine
-    # shape; the recall layer adds only a 25-row broadcast semi join
-    # and a |tiers|-row aggregate (the embed_knn_audit_trained
-    # exclusion class). approx_user_stats / hll_daily_users keep
-    # their bench slots with their new error-bounded-contract
-    # schemas (each gained one exact aggregate over the same scan).
-    # ngram_novelty_curve IS benched — the corpus-wide (decile, gram)
-    # distinct + gram-keyed min rollup is a heavier shape than
-    # heaps_law's token-level min agg. graph_label_propagation IS
-    # benched — per-round (node,label)-count + struct-argmax double
-    # aggregation is a new iterative shape (PageRank rounds are
-    # join+single-agg). minhash_jaccard_accuracy is OFF-bench: pair
-    # generation + candidate-only exact-Jaccard verify are the
-    # benched incremental_lsh_dedup shapes; the slot-compare join
-    # touches only the candidate pairs. stratified_sample_exact is
-    # OFF-bench: physically the reservoir_sample_per_source shape
-    # (per-group md5-rank window + filter) plus a |strata|-row
-    # allocation.
-    "ngram_novelty_curve",
-    "graph_label_propagation",
-    # daily_value_autocorr is OFF-bench: its data-sized stage is the
-    # benched hourly_event_rollup scan+agg shape; the lag join runs
-    # over the |types|x|days| daily frame. ivf_cell_balance is
-    # OFF-bench: composes the benched integer-Lloyd training
-    # (kmeans_cluster_stats shape) with the benched literal-expression
-    # assignment scan (embed_semdedup_prune) and a k-row rollup.
-    # round-10: graph_common_neighbors IS benched — the fanout-capped
-    # part-blocked pair join + double degree join + heap top-k is a
-    # new physical shape (the other pair benches block on band/cell/
-    # order, none caps per-block fanout then re-joins degrees).
-    # char_trigram_diversity IS benched — the char-gram explode is a
-    # ~3x heavier map-side expansion than any token bench and the
-    # (source, gram) -> source two-level rollup is its own shape.
-    # ivf_nprobe_recall_curve is OFF-bench: five settings of the
-    # BENCHED pinned-IVF pipeline + the benched exact shape, joined
-    # by a 25-row broadcast semi (the embed_ann_recall_matrix
-    # exclusion class). dedup_embed_neardup / embed_nn_within_label
-    # keep their bench slots with the new trained-cell blocking
-    # (their cost now includes the 2-round Lloyd training).
-    "graph_common_neighbors",
-    "char_trigram_diversity",
-    # round-10 batch 2: hits_copurchase IS benched — alternating
-    # authority/hub rounds each with an L1-total scalar broadcast +
-    # renormalize projection are a new iterative shape (PageRank
-    # rounds have no per-round scalar stage). graph_assortativity IS
-    # benched — the full-edge-list double degree-attach join + scalar
-    # moment agg (common_neighbors caps fanout first; this doesn't).
-    # mg_frequent_tokens IS benched — shard-partitioned window prunes
-    # over (shard, token) counts + the exact-count audit join is a
-    # new two-level-summary shape. embed_kcenter_coreset is OFF-bench:
-    # physically the embed_mmr_select class (k driver-paced
-    # TakeOrdered rounds over literal-fold scores, corpus-linear per
-    # round).
-    "hits_copurchase",
-    "graph_assortativity",
-    "mg_frequent_tokens",
-    # round-11: basket_pair_support IS benched — the basket-blocked
-    # pair expansion feeds THREE keyed aggregations (item counts, pair
-    # supports, n_baskets scalar) and two count-attach joins, a wider
-    # shape than the graph pair queries. rolling_distinct_users IS
-    # benched — bounded contribution-expansion explode + double
-    # distinct is a new sliding-distinct shape (no window, no range
-    # join). graph_adamic_adar is OFF-bench: physically identical to
-    # the benched graph_common_neighbors (part-blocked pair expansion
-    # + keyed agg + TakeOrdered heap) with a map-side literal-array
-    # weight lookup added.
-    "basket_pair_support",
-    "rolling_distinct_users",
-    # cusum_changepoint IS benched — the type-partitioned scaled-CUSUM
-    # walk over the bounded daily frame is a new drift shape (psi is a
-    # keyed-agg score; this is an ordered prefix walk + argmax pick).
-    "cusum_changepoint",
-    # ktruss_coparts is OFF-bench: 8 peel rounds x the benched
-    # triangle enumeration shape = ~73 s at sf0.1 — a deliberately
-    # heavy cohesive-subgraph operator whose cost IS round-count x
-    # the already-benched triangle stage; benching it would only
-    # re-measure triangle_count_coparts eight times.
-    # round-12: cluster_leakage_split IS benched — the star-CC cluster
-    # build (dedup_cluster_assign shape) plus a doc-keyed token-count
-    # attach join and a two-level (cluster_root -> split) audit
-    # rollup is a new composed survivorship/routing shape (canonical
-    # doc picks a row per cluster via a window; this aggregates
-    # per-cluster audits into |splits| rows with no window).
-    "cluster_leakage_split",
-    # round-13: community_modularity IS benched — LPA's benched
-    # iterative double-aggregation rounds now run over the CO-PARTS
-    # pair-expansion graph (a different, denser edge build than the
-    # benched bipartite LPA) and feed a new readout: two label-attach
-    # joins over the full edge list + a label-keyed internal-edge
-    # count + degree-mass rollup + 1-row decimal Q reduce.
-    # weighted_priority_sample is OFF-bench: its data-sized stage is a
-    # pure map-side projection (md5 + whitespace token count + one
-    # integer division) feeding a TakeOrdered heap — physically the
-    # benched global_topk_orders shape over the benched text-scan
-    # projections (hash_stratified_sample / text_token_stats class).
-    "community_modularity",
-    # round-13: local_clustering_coeff IS benched — per-node triangle
-    # CREDITS are a new data-sized stage past the benched global
-    # census: the intersection arrays explode to 3·n_triangles credit
-    # rows that shuffle into a per-node SUM before the bucket rollup
-    # (triangle_count_coparts reduces the same intersections to one
-    # scalar map-side).
-    # graph_conductance is OFF-bench: it re-runs community_modularity's
-    # benched skeleton (co-parts pair expansion + LPA rounds + the two
-    # label-attach joins + label-keyed aggs) verbatim — only the final
-    # bounded readout differs (per-community cut arithmetic + a 20-row
-    # TakeOrdered vs the 1-row Q reduce); benching it would re-measure
-    # the modularity row.
-    "local_clustering_coeff",
-    # round-13: sorted_neighborhood_pairs IS benched — a third
-    # blocking-family physical shape: block-partitioned window with
-    # TWO array-typed lead offsets exploded from one struct array,
-    # then array intersect/union Jaccard per candidate pair (no other
-    # benched query windows over array columns).
-    "sorted_neighborhood_pairs",
-    # round-13: maxsim_late_interaction IS benched — multi-vector
-    # late-interaction scoring is a new data-sized shape: map-side
-    # subvector posexplode (4x corpus rows), 80 in-task 16-dim folds
-    # per doc against the broadcast query slots, then a two-level
-    # (MAX-then-SUM) keyed agg before the per-query top-k window (no
-    # other benched query aggregates over an exploded subvector axis).
-    "maxsim_late_interaction",
-    # round-13: basket_triple_support IS benched — the A-Priori C3
-    # expansion is a new data-sized stage past the benched pair pass:
-    # a second within-basket join extends every pair with a third
-    # item (<= cap^3 per basket) before a three-key agg and a triple
-    # item-count attach.
-    # weak_label_agreement is OFF-bench: its data-sized stage is ONE
-    # map-side token-count projection feeding a 1-row global agg —
-    # physically the benched single-scan text class
-    # (text_token_stats / gopher_quality_flags); the 21-row stack is
-    # driver-trivial.
-    "basket_triple_support",
-]
+#: Registered queries left off the bench, each with the reason: most
+#: re-time a physical shape a benched query already measures.
+OFF_BENCH = {
+    **dict.fromkeys(
+        streaming_queries.QUERIES,
+        "streaming: micro-batch setup and checkpoint dirs time the harness, not the engine",
+    ),
+    "weighted_priority_sample": "md5 + token-count projection into a TakeOrdered heap: the global_topk_orders shape",
+    "graph_conductance": "community_modularity's pair expansion, LPA rounds and label joins; only the readout differs",
+    "weak_label_agreement": "one token-count projection into a 1-row agg: the text_token_stats scan",
+    "user_trend_slope_pandas": "pandas twin of user_trend_slope; scripts/twin_sweep.py checks they agree",
+    "ntile_customer_deciles": "the same plan as decile_bucket_scalable",
+    "dedup_cluster_assign_star": "twin of dedup_cluster_assign's pair generation and clustering",
+    "embed_knn_audit_trained": "embed_semdedup_trained's training plus embed_knn_label_audit's windows",
+    "embed_ann_recall_matrix": "the five ANN tiers and the exact-cosine shape plus a 25-row semi join",
+    "ivf_nprobe_recall_curve": "five settings of embed_ivf_pinned_topk plus the exact-cosine shape",
+    "ivf_cell_balance": "kmeans_cluster_stats' Lloyd training plus embed_semdedup_prune's assignment scan",
+    "embed_hard_negatives": "the embed_cosine_topk shape with a label predicate",
+    "bpe_pair_counts": "bigram_topk's two-phase count with a vocab-bounded second explode",
+    "lang_pred_quality": "the lang_id_heuristic scan plus three |langs|-row aggregations",
+    "dup_span_trim_stats": "shuffles on dup_span_stats' seg_hash key, a window instead of a count",
+    "training_mix_manifest": "composes five gates that are benched one by one",
+    "embed_int8_quant_stats": "one scalar agg and map-side transforms: the embed_truncate_norms shape",
+    "embed_kcenter_coreset": "driver-paced TakeOrdered rounds: the embed_mmr_select shape",
+    "cluster_soft_dedup_sample": "dedup_cluster_assign's clustering plus one keyed count",
+    "daily_value_autocorr": "the hourly_event_rollup scan and agg; the lag join runs over a |types|x|days| frame",
+    "psi_value_drift": "the value_drift_buckets (type, bucket) counts, scored over |types|x10 rows",
+    "graph_seed_ball_sizes": "frontier-join BFS rounds of bfs_hops_copurchase over 20 seeds",
+    "graph_adamic_adar": "graph_common_neighbors' pair expansion and heap with a weight lookup",
+    "ktruss_coparts": "8 peel rounds of triangle_count_coparts' enumeration",
+    "rrf_fused_topk": "bm25_topk_docs and embed_cosine_topk composed with a 50x50 join",
+    "gopher_quality_flags": "per-row token-array expressions: the text_quality scan",
+    "quality_calibration_bins": "decile_bucket_scalable's histogram over a docs-sized input",
+    "embed_matryoshka_recall": "two passes of the embed_cosine_topk shape plus a 10x10 join",
+    "bm25_prf_expansion": "bm25_topk_docs and tfidf_top_terms' df shuffle, composed",
+    "embed_power_iteration": "embed_covariance_topk's d×d moment reduction plus an O(d²) driver loop",
+    "ccnet_ppl_buckets": "bigram_lm_perplexity's scoring and exact_quantiles_scalable's pick, composed",
+    "retrieval_ndcg_mrr": "the embed_cosine_topk ranking plus 50-row metric joins",
+    "zipf_rank_frequency": "bigram_topk's frequency shuffle and heap; the 1000-row fit is constant",
+    "source_length_drift": "two |sources|x20-row aggs and a broadcast join",
+    "tokenizer_fertility_stats": "one scan plus a |langs|-row agg: the lang_pred_quality shape",
+    "minhash_jaccard_accuracy": "incremental_lsh_dedup's pair generation and exact verify",
+    "stratified_sample_exact": "reservoir_sample_per_source's rank window plus a |strata|-row allocation",
+}
 
 ALL_QUERIES = entrymod.queries()
+BENCH_QUERIES = [name for name in ALL_QUERIES if name not in OFF_BENCH]
 
 
 def run_query(spark, name: str, sf_dir: str) -> float:
@@ -488,55 +78,33 @@ def run_query(spark, name: str, sf_dir: str) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    load_start = round(os.getloadavg()[0], 1)
+    # Host 1-min loadavg at start and end: every total carries its noise context.
+    load1 = [round(os.getloadavg()[0], 1)]
     spark = get_spark(app_name="fsc_etl_spark_bench")
-
-    # One warmup pass of the cheapest query amortizes JVM/codegen
-    # startup out of the per-query numbers.
+    # One untimed run of the cheapest query takes JVM/codegen startup
+    # out of the per-query numbers.
     run_query(spark, "q1_pricing_summary", sf_dir)
 
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
-        # Clean slate per query: accumulated persisted frames from
-        # earlier queries otherwise LRU-evict a later query's own
-        # caches mid-plan, adding arbitrary recomputation noise.
+        # Clean slate per query, so earlier caches cannot evict this one's.
         spark.catalog.clearCache()
         timings[name] = round(run_query(spark, name, sf_dir), 4)
 
     total = round(sum(timings.values()), 3)
-    # ONE compact JSON line on stdout, nothing else. The driver
-    # tail-captures ~2000 chars of stdout, and the full 70+-query dict
-    # is ~2100 chars — over the window (this is what nulled r01's
-    # parse). Keep the line safely short: report the slowest 40
-    # queries inline (everything material; the tail queries are all
-    # sub-second) and write the complete per-query dict to
-    # bench_full.json beside this script for the repo record.
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:40])
-    # Host 1-min loadavg at start and end of the run: the r10 driver
-    # bench regressed +18% purely from host load (BASELINE §c10), so
-    # every recorded total carries its noise context (VERDICT r10 #6).
-    load_end = round(os.getloadavg()[0], 1)
+    load1.append(round(os.getloadavg()[0], 1))
+    head = {"metric": "headline_queries_total", "value": total, "unit": "sec"}
+    # stdout is read from a ~2000-char tail, so the line carries the
+    # slowest 40 queries; bench_full.json beside this script has them all.
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:40]
     line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": {k: round(v, 2) for k, v in slowest.items()},
-            "sf": sf,
-            "n_queries": len(timings),
-            "load1": [load_start, load_end],
-        },
+        {**head, "queries": {k: round(v, 2) for k, v in slowest}, "sf": sf,
+         "n_queries": len(timings), "load1": load1},
         separators=(",", ":"),
     )
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
     with open(full_path, "w") as f:
-        json.dump(
-            {"metric": "headline_queries_total", "value": total, "unit": "sec",
-             "queries": timings, "sf": sf, "load1": [load_start, load_end]},
-            f,
-            indent=1,
-            sort_keys=True,
-        )
+        json.dump({**head, "queries": timings, "sf": sf, "load1": load1}, f, indent=1, sort_keys=True)
     print(line, flush=True)
 
 

@@ -190,8 +190,8 @@ def scaled_codebook_size(
     so per-cell population stays ~``target_cell`` as the corpus grows
     and any within-cell pairwise step stays LINEAR in the corpus (the
     way SemDeDup's own paper sizes ~50k clusters for LAION scale).
-    Integer-exact and shared by the driver queries and the scale probe
-    so both grow the same codebook (scripts/scale_probe.py)."""
+    Integer-exact and shared by the trained queries and their oracle
+    generators, so both grow the same codebook."""
     return max(k_min, min(k_max, n_vectors // target_cell))
 
 

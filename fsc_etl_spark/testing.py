@@ -141,24 +141,17 @@ def check_query(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import __spark_entry__ as entrymod
 
     qfn = entrymod.queries()[name]
-    # Trained-quantizer oracles are fixture-dependent: the static
-    # oracle_sql() strings are generated at the driver's gate scale
-    # (DRIVER_SF_DIR); when comparing at any SF, regenerate the SQL
-    # for THIS fixture (same replicated-training recipe). Regenerate
-    # UNCONDITIONALLY for generator-backed names — the generator needs
-    # only sf_dir, so the check must not silently weaken to rows-only
-    # on machines where the static entry was never populated
-    # (ADVICE r7, medium).
+    # The static oracle_sql() strings of the fixture-trained queries
+    # are generated at the driver's gate scale (DRIVER_SF_DIR); at any
+    # SF the check regenerates them for THIS fixture (same replicated
+    # training recipe). A name with no oracle raises KeyError.
     from fsc_etl_spark.plans.oracles_training import SF_ORACLE_GENERATORS
 
     if name in SF_ORACLE_GENERATORS:
         sql = SF_ORACLE_GENERATORS[name](sf_dir)
     else:
-        sql = entrymod.oracle_sql().get(name)
+        sql = entrymod.oracle_sql()[name]
     df = qfn(spark, sf_dir)
-    if sql is None:
-        assert df.count() >= 0  # rows-only check, like the driver
-        return df
     con = duckdb_connection(sf_dir)
     try:
         compare_with_oracle(df, con, sql, name=name)

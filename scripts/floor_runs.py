@@ -1,15 +1,10 @@
-"""Isolated min-of-3 floor table for the bench's top-10 queries
-(VERDICT r11 #4).
+"""Min-of-3 floor table for the bench's 10 most expensive queries.
 
-The driver's single bench pass rides whatever the host is doing —
-BENCH_r11 started at load1 6.0 and the whole graph family moved ±2 s
-with zero plan changes. This script records the reproducible number:
-each of the top-10 most expensive benched queries run 3× on an
-otherwise-idle host (fresh cache per run, same session), reporting
-the per-query MIN — the noise-floor convention BASELINE.md §c9+
-already uses for like-for-like deltas. Paste the table into the
-round's BASELINE.md §c{N} so per-query verdicts never ride one loaded
-run.
+A single bench pass rides whatever the host is doing, so a per-query
+claim uses this floor instead: each query runs once untimed (its own
+codegen and file listing warm), then 3 timed runs, each from a clean
+cache in the same session, through ``bench.run_query`` (the noop
+sink). The per-query MIN is the floor.
 
 Run (idle host): python scripts/floor_runs.py [name ...]
 Defaults to the top-10 of the latest bench_full.json.
@@ -20,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
@@ -30,7 +24,7 @@ RUNS = 3
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
+    from bench import run_query
     from fsc_etl_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,21 +36,14 @@ def main() -> None:
             for k, _ in sorted(full["queries"].items(), key=lambda kv: -kv[1])[:10]
         ]
     spark = get_spark(app_name="floor_runs")
-    queries = entrymod.queries()
-    # warmup amortizes JVM/codegen startup (the bench convention)
-    queries["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
     rows: dict[str, dict] = {}
     for name in names:
+        spark.catalog.clearCache()
+        run_query(spark, name, sf_dir)  # warm-up, untimed
         walls = []
         for _ in range(RUNS):
             spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            walls.append(round(time.perf_counter() - t0, 2))
+            walls.append(round(run_query(spark, name, sf_dir), 2))
         rows[name] = {"runs": walls, "floor": min(walls)}
         print(f"{name}: runs={walls} floor={min(walls)}")
     out = {

@@ -1,7 +1,8 @@
 """Regenerate docs/QUERIES.md — the full query-surface index — from
-the driver contract (__spark_entry__.queries() / oracle_sql()).
+the driver contract (__spark_entry__.queries()) and bench.OFF_BENCH.
 
-Run after adding or reordering queries: python scripts/gen_query_index.py
+Run after adding, reordering or un-benching queries:
+python scripts/gen_query_index.py
 """
 
 from __future__ import annotations
@@ -13,28 +14,27 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
+from bench import OFF_BENCH
 
 HEADER = """# Query surface index
 
-Auto-generated from `__spark_entry__.queries()` / `oracle_sql()`
+Auto-generated from `__spark_entry__.queries()` and `bench.OFF_BENCH`
 (`python scripts/gen_query_index.py`). Position = driver sample order
-(the driver oracle-checks roughly the first 50 per round). "hash" =
-full DuckDB value-hash oracle; "rows-only" = approximate/sketch query
-checked for row count and schema only, by design.
+(the driver oracle-checks the first 50). Every query has a DuckDB
+value-hash oracle. "bench" = `yes` when `bench.py` times the query,
+else the reason it is off the bench.
 
-| # | query | module | check |
+| # | query | module | bench |
 |---|---|---|---|
 """
 
 
 def main() -> None:
-    q = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     rows = []
-    for i, (name, fn) in enumerate(q.items()):
+    for i, (name, fn) in enumerate(entrymod.queries().items()):
         mod = fn.__module__.replace("fsc_etl_spark.plans.", "")
-        check = "hash" if name in oracles else "rows-only"
-        rows.append(f"| {i} | `{name}` | {mod} | {check} |")
+        bench = OFF_BENCH.get(name, "yes").replace("|", "\\|")
+        rows.append(f"| {i} | `{name}` | {mod} | {bench} |")
     out = ROOT / "docs" / "QUERIES.md"
     out.write_text(HEADER + "\n".join(rows) + "\n")
     print(f"wrote {out} ({len(rows)} queries)")

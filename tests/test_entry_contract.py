@@ -97,14 +97,32 @@ def test_oracle_columns_use_only_proven_types(sf_smoke):
         con.close()
 
 
+def test_registry_states_each_query_once():
+    """The module tables are disjoint, every registered query has an
+    oracle, every OFF_BENCH key is a registered query, and the driver
+    window holds 50 distinct registered names. Starts no Spark session."""
+    import bench
+    from fsc_etl_spark.plans.oracles_training import SF_ORACLE_GENERATORS
+
+    names = set(entrymod.queries())
+    assert sum(len(module.QUERIES) for module, _ in entrymod.MODULES) == len(names), (
+        "a name is registered by more than one module"
+    )
+    tables = [set(table) for _, table in entrymod.MODULES]
+    assert sum(map(len, tables)) == len(set().union(*tables)), (
+        "a name has an oracle in more than one table"
+    )
+    assert names == set(SF_ORACLE_GENERATORS).union(*tables)
+    assert set(bench.OFF_BENCH) <= names
+    window = entrymod.DRIVER_WINDOW
+    assert len(window) == len(set(window)) == 50
+    assert set(window) <= names
+
+
 def test_driver_sample_prefix_covers_priority_groups():
-    """The driver oracle-checks roughly the first 50 queries() entries.
-    Round-6 rotation (VERDICT r5 item 3): every query with no driver
-    CORRECTNESS row across rounds 1-5 must sit in the 50-slot window
-    — so after r6 every query in the repo has a driver row. The
-    never-sampled set is derived from the committed CORRECTNESS
-    artifacts, so adding a new query without windowing it fails here
-    until the window (or a future round's rotation) covers it."""
+    """The driver oracle-checks the first 50 queries() entries. Every
+    query with no row in the committed CORRECTNESS_r*.json files must
+    sit in that window, and so must the queries named below."""
     import json
     from pathlib import Path
 
@@ -112,19 +130,13 @@ def test_driver_sample_prefix_covers_priority_groups():
     prefix = set(names[:50])
     root = Path(__file__).resolve().parent.parent
     sampled: set[str] = set()
-    # r* (not r0*): the single-digit glob stopped matching at round 10,
-    # which would mark every r10-debuted query "never sampled" forever.
     for p in sorted(root.glob("CORRECTNESS_r*.json")):
         sampled |= set(json.loads(p.read_text()))
     never = [n for n in names if n not in sampled]
     missing = [n for n in never if n not in prefix]
     assert not missing, f"never-sampled queries fell out of the driver window: {missing}"
-    # Queries whose behavior or checking contract changed recently
-    # must sit in the sample window so the driver re-verifies them:
-    # round 13 — the eager-checkpoint-then-unpersist cache lifecycle
-    # applied to the leaked pair cache (VERDICT r12 #2; results
-    # unchanged). The operators.cache.plan_only context changes no
-    # query result and needs no window slot beyond this one.
+    # Queries whose cache lifecycle changed and that the driver has to
+    # re-verify.
     changed_this_round = {
         "graph_common_neighbors",
     }
