@@ -1,7 +1,7 @@
 """Distributed graph primitives over edge DataFrames.
 
 No reference twin: the reference (a 549-line Databricks notebook ETL,
-/root/reference/main.py) has no graph operators. These extend
+``main.py``) has no graph operators. These extend
 SURVEY.md §2.12's training-pipeline surface — web-graph quality
 signals (PageRank-style authority, triangle/wedge density) are
 standard corpus-curation features for large-scale training data.
@@ -14,7 +14,10 @@ which is what lets the DuckDB oracles hash-match.
 
 Scale posture: each PageRank iteration is one shuffle-on-dst
 aggregation over the edge list (the same join shape GraphX/Pregel
-lowers to); the per-source degree join is computed once and reused.
+lowers to); the per-source degree is computed once and reused.
+Personalized PageRank is the same loop (``pagerank_integer(seeds=)``)
+with the teleport mass on the seeds; HITS keeps its own loop, since
+its L1 renormalisation shares no arithmetic with damping.
 Triangle counting joins the canonical (lo < hi) edge list to itself
 on the shared middle vertex, then closes wedges with a semi join —
 never materialising anything bigger than the wedge set, which is the
@@ -28,16 +31,16 @@ from pyspark.sql import functions as F
 
 from fsc_etl_spark.operators.cache import cache_scope
 
-#: fixed-point scale for integer PageRank: rank 1.0 == 10^9 units.
+#: fixed-point scale for integer PageRank and HITS: rank 1.0 == 10^9 units.
 RANK_SCALE = 10**9
+#: PageRank damping 85/100, an exact rational.
+DAMPING_NUM, DAMPING_DEN = 85, 100
 
 
 def pagerank_integer(
     edges: DataFrame,
     iters: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    init_rank: int = RANK_SCALE,
+    seeds: DataFrame | None = None,
     every_node_has_inflow: bool = False,
     weight_col: str | None = None,
     dangling: str = "error",
@@ -46,11 +49,24 @@ def pagerank_integer(
 ) -> DataFrame:
     """Fixed-iteration integer PageRank over directed ``(src, dst)``.
 
-    ``rank_{i+1}(v) = base + (d_num * sum_{u->v} (rank_i(u) div deg(u)))
-    div d_den`` with ``base = ((d_den - d_num) * init) div d_den`` —
-    all BIGINT floor arithmetic, so the result is exactly reproducible
-    (the small mass lost to flooring is the documented fixed-point
-    trade; relative ordering of authorities is what the score is for).
+    ``rank_{i+1}(v) = base(v) + (85 * inflow_i(v)) div 100`` with
+    ``inflow_i(v) = sum_{u->v} (rank_i(u) div deg(u))`` — all BIGINT
+    floor arithmetic, so the result is exactly reproducible (the small
+    mass lost to flooring is the documented fixed-point trade; relative
+    ordering of authorities is what the score is for). Ranks are in
+    ``RANK_SCALE`` units and start at ``RANK_SCALE``; without seeds
+    ``base(v) = (15 * RANK_SCALE) div 100`` for every node.
+
+    ``seeds`` (a one-column ``node`` frame) makes it personalized
+    PageRank: the teleport mass lands ONLY on the seeds, so rank
+    measures proximity to them — the corpus-expansion primitive (grow
+    a trusted seed cohort outward through the interaction graph).
+    Seeds are intersected with the node set (a seed with no edges can
+    neither receive nor spread mass); ranks start at ``RANK_SCALE`` on
+    seeds and 0 elsewhere, and ``base(v) = (15 * RANK_SCALE *
+    n_nodes) div (100 * n_seeds)`` on seeds and 0 elsewhere, so the
+    total teleport mass matches the uniform variant. No seed in the
+    node set raises ``ValueError``; seeds require ``dangling="error"``.
 
     Nodes are the union of edge endpoints. ``dangling`` controls nodes
     with no out-edge:
@@ -81,11 +97,11 @@ def pagerank_integer(
     rank·w must stay under 2^63; ``validate=True`` (default) enforces
     both with one aggregate over the weighted edge list (duplicate
     pairs → ValueError; conservative overflow bound
-    ``max_w · 2·n_edges · init < 2^63`` → ValueError). Trusted callers
-    that construct unique pairs structurally (e.g. via groupBy) may
-    pass ``validate=False`` to skip that one job.
+    ``max_w · 2·n_edges · RANK_SCALE < 2^63`` → ValueError). Trusted
+    callers that construct unique pairs structurally (e.g. via
+    groupBy) may pass ``validate=False`` to skip that one job.
 
-    Returns (node, rank) with rank BIGINT in ``init_rank`` units.
+    Returns (node, rank) with rank BIGINT.
     """
     if dangling not in ("error", "drop", "redistribute"):
         raise ValueError(f"dangling must be error|drop|redistribute, got {dangling!r}")
@@ -94,6 +110,8 @@ def pagerank_integer(
             "every_node_has_inflow asserts the graph has no dangling nodes "
             "(so there is no mass to redistribute) — drop one of the two flags"
         )
+    if seeds is not None and dangling != "error":
+        raise ValueError(f"seeds require dangling='error', got {dangling!r}")
     if weight_col is None:
         # assume_distinct: caller guarantees unique (src, dst) pairs
         # structurally (e.g. distinct canonical pairs + a parity-keyed
@@ -124,11 +142,12 @@ def pagerank_integer(
                 )
             # rank(v) <= sum(ranks) <= n_nodes*init <= 2*n_edges*init, so
             # rank*w stays in BIGINT if max_w * 2*ne * init < 2^63.
-            if chk["mw"] is not None and chk["mw"] * 2 * chk["ne"] * init_rank >= 2**63:
+            mw, ne = chk["mw"], chk["ne"]
+            if mw is not None and mw * 2 * ne * RANK_SCALE >= 2**63:
                 raise ValueError(
                     "weighted PageRank rank*weight may overflow BIGINT: "
-                    f"max_w={chk['mw']}, n_edges={chk['ne']}, init={init_rank} — "
-                    "rescale weights or init_rank, or cast the rank chain to decimal"
+                    f"max_w={mw}, n_edges={ne} — "
+                    "rescale weights, or cast the rank chain to decimal"
                 )
 
         # Built once, reused by every iteration — pre-hashed on src so the
@@ -147,12 +166,12 @@ def pagerank_integer(
             )
         )
 
-        dangling_nodes = None
         n_nodes = None
         if every_node_has_inflow:
             # symmetrised contract: src set == dst set == node set, so the
             # out-edge owners ARE the nodes and dangling is impossible.
-            nodes = edges_deg.select(F.col("src").alias("node")).distinct()
+            # Persisted: the seed semi-join and the node count re-read it.
+            nodes = cs.persist(edges_deg.select(F.col("src").alias("node")).distinct())
         else:
             # both endpoints in one pass over the edge cache
             nodes = cs.persist(
@@ -175,70 +194,78 @@ def pagerank_integer(
                 if dangling == "redistribute":
                     n_nodes = nodes.count()
 
-        base = ((damping_den - damping_num) * init_rank) // damping_den
-        ranks = nodes.withColumn("rank", F.lit(init_rank).cast("long"))
-        redistribute = (
-            dangling == "redistribute" and dangling_nodes is not None and n_nodes
-        )
+        seed_flag = None
+        if seeds is None:
+            base = F.lit(((DAMPING_DEN - DAMPING_NUM) * RANK_SCALE) // DAMPING_DEN)
+            ranks = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("long"))
+        else:
+            seed_distinct = seeds.select("node").distinct()
+            seed_nodes = cs.persist(seed_distinct.join(nodes, "node", "left_semi"))
+            # n_nodes and n_seeds in ONE action: count every node row and
+            # count the non-null seed flags of the same broadcast left join.
+            seed_hit = F.broadcast(seed_distinct.withColumn("__s", F.lit(True)))
+            counts = nodes.join(seed_hit, "node", "left").agg(
+                F.count(F.lit(1)).alias("__nn"), F.count("__s").alias("__ns")
+            ).first()
+            if counts["__ns"] == 0:
+                raise ValueError("no seed intersects the graph's node set")
+            teleport = (DAMPING_DEN - DAMPING_NUM) * RANK_SCALE * counts["__nn"]
+            base_seed = teleport // (DAMPING_DEN * counts["__ns"])
+            seed_flag = seed_nodes.withColumn("__is_seed", F.lit(True))
+            is_seed = F.coalesce(F.col("__is_seed"), F.lit(False))
+            base = F.when(is_seed, F.lit(base_seed)).otherwise(F.lit(0)).cast("long")
+            nodes = cs.persist(nodes.join(F.broadcast(seed_flag), "node", "left"))
+            init = F.when(is_seed, F.lit(RANK_SCALE)).otherwise(F.lit(0))
+            ranks = nodes.select("node", init.cast("long").alias("rank"))
+        redistribute = dangling == "redistribute" and n_nodes
         for it in range(iters):
             if it == 0:
                 # ROUND 1 collapses algebraically: every node's rank is
-                # the init constant, so the rank join is a no-op —
-                # inline the constant instead of shuffling the node-sized
-                # rank frame. Same floor arithmetic, bit-identical.
-                contrib = (
-                    edges_deg.select(
-                        F.col("dst").alias("node"),
-                        F.expr(
-                            f"(CAST({init_rank} AS BIGINT) * __w) div deg"
-                        ).alias("c"),
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("inflow"))
-                )
+                # the init constant (with seeds: init on seeds, 0
+                # elsewhere), so the node-sized rank shuffle join becomes
+                # the inlined constant — with seeds, a BROADCAST left join
+                # of the contract-small seed set. LEFT (not semi): every
+                # dst must keep its contrib row, because the
+                # every_node_has_inflow path assigns ranks = contrib.
+                # Same floor arithmetic, bit-identical.
+                c = F.expr(f"(CAST({RANK_SCALE} AS BIGINT) * __w) div deg")
+                pushed = edges_deg
+                if seed_flag is not None:
+                    by_src = F.broadcast(seed_flag.withColumnRenamed("node", "src"))
+                    pushed = edges_deg.join(by_src, "src", "left")
+                    c = F.when(is_seed, c).otherwise(F.lit(0).cast("long"))
             else:
                 r = ranks.select(
                     F.col("node").alias("__rn"), F.col("rank").alias("__rr")
                 )
-                contrib = (
-                    edges_deg.join(r, edges_deg["src"] == r["__rn"])
-                    .select(
-                        F.col("dst").alias("node"),
-                        F.expr("(__rr * __w) div deg").alias("c"),
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("inflow"))
-                )
-            damped = (
-                F.lit(base)
-                + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
-            ).cast("long")
-            if every_node_has_inflow:
-                ranks = contrib.select("node", damped.alias("rank"))
-            elif redistribute:
+                pushed = edges_deg.join(r, edges_deg["src"] == r["__rn"])
+                c = F.expr("(__rr * __w) div deg")
+            contrib = (
+                pushed.select(F.col("dst").alias("node"), c.alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"))
+            )
+            if not every_node_has_inflow:
+                contrib = nodes.join(contrib, "node", "left")
+            elif seed_flag is not None:
+                # contrib covers the full node set each round, so the seed
+                # flag attaches as a broadcast map-side join
+                contrib = contrib.join(F.broadcast(seed_flag), "node", "left")
+            inflow = "coalesce(inflow, 0L)"
+            if redistribute:
                 # total dangling rank this round, spread evenly: one tiny
                 # aggregate (dangling set is persisted) broadcast to all.
                 share = ranks.join(dangling_nodes, "node", "left_semi").agg(
                     F.expr(f"coalesce(sum(rank), 0L) div {n_nodes}").alias("__share")
                 )
-                ranks = (
-                    nodes.join(contrib, "node", "left")
-                    .crossJoin(F.broadcast(share))
-                    .select(
-                        "node",
-                        (
-                            F.lit(base)
-                            + F.expr(
-                                f"({damping_num} * (coalesce(inflow, 0L) + __share)) "
-                                f"div {damping_den}"
-                            )
-                        ).cast("long").alias("rank"),
-                    )
-                )
-            else:
-                ranks = nodes.join(contrib, "node", "left").select(
-                    "node", damped.alias("rank")
-                )
+                contrib = contrib.crossJoin(F.broadcast(share))
+                inflow = f"({inflow} + __share)"
+            ranks = contrib.select(
+                "node",
+                (base + F.expr(f"({DAMPING_NUM} * {inflow}) div {DAMPING_DEN}"))
+                .cast("long")
+                .alias("rank"),
+            )
             if redistribute:
                 # share + next round's contrib each re-read ranks: without
                 # a per-round materialisation the lineage doubles per
@@ -271,10 +298,11 @@ def label_propagation(
     votes on dst — both keyed aggregations ((node, label) counts, then
     the per-node argmax via one struct-max) run exchange-free on top
     of it, since HashPartitioning(dst) satisfies both groupings. Work
-    per round is O(edges), rounds are fixed. (r14: the former
+    per round is O(edges), rounds are fixed. (The former
     two-exchange agg chain — partial-agg on (dst, label), exchange,
     then a second exchange on dst — measured 1.3x slower at sf0.1 and
-    2.2x slower at the 10x probe than this single raw-vote exchange;
+    2.2x slower at ten times that scale than this single raw-vote
+    exchange;
     the two stage barriers cost more than the partial aggregation
     saves.)
 
@@ -300,7 +328,7 @@ def label_propagation(
     edges = edges.select("src", "dst")
     if not assume_distinct:
         edges = edges.distinct()
-    # ROUND 1 collapses algebraically (r13): with identity
+    # ROUND 1 collapses algebraically: with identity
     # initialization every neighbor contributes exactly ONE distinct
     # label (its own id) over the distinct edge list — all counts are
     # 1, so argmax-by-(count, label) is simply the LARGEST neighbor
@@ -317,9 +345,9 @@ def label_propagation(
             edges.join(lab, edges["src"] == lab["__n"])
             # ONE exchange of the raw votes on dst: HashPartitioning(dst)
             # satisfies both downstream groupings, so the (node, label)
-            # count and the argmax run exchange-free on top of it (r14 —
-            # measured faster than the partial-agg two-exchange chain at
-            # x1 AND x10; see the docstring's scale-shape note).
+            # count and the argmax run exchange-free on top of it
+            # (measured faster than the partial-agg two-exchange chain at
+            # sf0.1 AND ten times that; see the docstring's scale-shape note).
             .repartition(F.col("dst"))
             .groupBy(F.col("dst").alias("node"), F.col("__l").alias("lab"))
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -692,160 +720,6 @@ def bfs_hops(
         return cs.result(cs.checkpoint(visited))
 
 
-def personalized_pagerank_integer(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iters: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    init_rank: int = RANK_SCALE,
-    symmetric: bool = False,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """Personalized PageRank: the teleport mass lands ONLY on the seed
-    set, so rank measures proximity to the seeds — the corpus-
-    expansion primitive (grow a trusted seed cohort outward through
-    the interaction graph). ``seeds`` is a one-column ``node`` frame;
-    it is intersected with the graph's node set first (a seed with no
-    edges can neither receive nor spread mass).
-
-    Same fixed-point BIGINT arithmetic as :func:`pagerank_integer`:
-    ``rank_{i+1}(v) = base(v) + (d_num · inflow(v)) div d_den`` with
-    ``base(v) = ((d_den−d_num) · init · n_nodes) div (d_den · n_seeds)``
-    for seeds and 0 otherwise (total teleport mass matches the uniform
-    variant, concentrated on the seeds), starting from rank init on
-    seeds / 0 elsewhere. Floor-division mass loss is the documented
-    fixed-point trade. Bit-reproducible, so the unrolled-CTE oracle
-    hash-matches.
-
-    Scale shape: identical to the general PageRank path — one join
-    against pre-hashed cached edges + one shuffle-on-dst aggregation
-    per round, plus the nodes-side left join; the seed flag rides as
-    a broadcast semi/left join. n_nodes/n_seeds are two bounded
-    driver scalars (counts). Dangling nodes are rejected loudly, as
-    in the default ``pagerank_integer`` contract; ``symmetric=True``
-    skips that validation AND the nodes-side union-distinct (src set
-    == node set) — ONLY safe when the caller constructs an
-    undirected/symmetrised edge list, where dangling nodes are
-    structurally impossible.
-
-    Returns (node, rank), rank BIGINT.
-    """
-    edges = edges.select("src", "dst")
-    if not assume_distinct:
-        edges = edges.distinct()
-    with cache_scope() as cs:
-        edges = cs.persist(edges)
-        # Degree attaches via a src-partitioned window over the one
-        # pre-hash exchange (see pagerank_integer — the former
-        # groupBy+join+repartition build cost two edge-sized exchanges
-        # and a node-sized join side that can't broadcast at scale).
-        edges_deg = cs.persist(
-            edges.repartition(F.col("src")).withColumn(
-                "deg", F.count(F.lit(1)).over(Window.partitionBy("src")).cast("long")
-            )
-        )
-        if symmetric:
-            nodes = cs.persist(edges_deg.select(F.col("src").alias("node")).distinct())
-        else:
-            # both endpoints in one pass over the edge cache
-            nodes = cs.persist(
-                edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct()
-            )
-            n_dangling = nodes.join(
-                edges_deg.select(F.col("src").alias("node")), "node", "left_anti"
-            ).count()
-            if n_dangling:
-                raise ValueError(
-                    f"{n_dangling} node(s) have no out-edge; personalized PageRank "
-                    "would lose their rank mass — symmetrise the graph or drop sinks"
-                )
-        seed_distinct = seeds.select("node").distinct()
-        seed_nodes = cs.persist(seed_distinct.join(nodes, "node", "left_semi"))
-        # n_nodes and n_seeds in ONE action: count every node row and
-        # count the non-null seed flags of the same broadcast left join —
-        # two separate .count() jobs were pure per-query driver latency.
-        counts = nodes.join(
-            F.broadcast(seed_distinct.withColumn("__s", F.lit(True))), "node", "left"
-        ).agg(
-            F.count(F.lit(1)).alias("__nn"), F.count("__s").alias("__ns")
-        ).first()
-        n_nodes, n_seeds = counts["__nn"], counts["__ns"]
-        if n_seeds == 0:
-            raise ValueError("no seed intersects the graph's node set")
-        base_seed = ((damping_den - damping_num) * init_rank * n_nodes) // (
-            damping_den * n_seeds
-        )
-        seed_flag = seed_nodes.withColumn("__is_seed", F.lit(True))
-        base = F.when(
-            F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(base_seed)
-        ).otherwise(F.lit(0)).cast("long")
-        flagged = cs.persist(nodes.join(F.broadcast(seed_flag), "node", "left"))
-        ranks = flagged.select(
-            "node",
-            F.when(
-                F.coalesce(F.col("__is_seed"), F.lit(False)), F.lit(init_rank)
-            ).otherwise(F.lit(0)).cast("long").alias("rank"),
-        )
-        for it in range(iters):
-            if it == 0:
-                # ROUND 1 collapses: rank is init on seeds and 0
-                # elsewhere, so the node-sized shuffle join degenerates to
-                # a BROADCAST left join against the contract-small seed
-                # set with the init constant inlined. LEFT (not semi):
-                # every dst must keep its contrib row — the symmetric path
-                # assigns ranks = contrib, and dropping zero-inflow rows
-                # would erase non-seed-adjacent nodes' rank rows (and with
-                # them a seed's teleport base next round).
-                sflag = seed_nodes.select(
-                    F.col("node").alias("__rn"), F.lit(True).alias("__s")
-                )
-                contrib = (
-                    edges_deg.join(
-                        F.broadcast(sflag), edges_deg["src"] == sflag["__rn"], "left"
-                    )
-                    .select(
-                        F.col("dst").alias("node"),
-                        F.when(
-                            F.coalesce(F.col("__s"), F.lit(False)),
-                            F.expr(f"CAST({init_rank} AS BIGINT) div deg"),
-                        )
-                        .otherwise(F.lit(0).cast("long"))
-                        .alias("c"),
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("inflow"))
-                )
-            else:
-                r = ranks.select(
-                    F.col("node").alias("__rn"), F.col("rank").alias("__rr")
-                )
-                contrib = (
-                    edges_deg.join(r, edges_deg["src"] == r["__rn"])
-                    .select(F.col("dst").alias("node"), F.expr("__rr div deg").alias("c"))
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("inflow"))
-                )
-            damped = (
-                base
-                + F.expr(f"({damping_num} * coalesce(inflow, 0L)) div {damping_den}")
-            ).cast("long")
-            if symmetric:
-                # every node has in-edges (src set == dst set == node
-                # set) and every node holds a rank row, so contrib covers
-                # the full node set each round: the seed flag attaches as
-                # a broadcast map-side join — one fewer node-sized
-                # shuffle join per round than the general path below.
-                ranks = contrib.join(F.broadcast(seed_flag), "node", "left").select(
-                    "node", damped.alias("rank")
-                )
-            else:
-                ranks = flagged.join(contrib, "node", "left").select(
-                    "node", damped.alias("rank")
-                )
-        return cs.result(cs.checkpoint(ranks))
-
-
 def kcore_degrees(
     edges: DataFrame,
     k: int,
@@ -1001,21 +875,17 @@ def skyline_2d(
     )
 
 
-def hits_integer(
-    edges: DataFrame,
-    iters: int = 2,
-    scale: int = RANK_SCALE,
-) -> tuple[DataFrame, DataFrame]:
+def hits_integer(edges: DataFrame, iters: int = 2) -> tuple[DataFrame, DataFrame]:
     """Fixed-iteration integer HITS (Kleinberg 1999) over directed
     ``(src, dst)``: hubs live on the src side, authorities on the dst
     side. Per iteration ``a_raw(v) = sum_{u->v} h(u)`` then
     ``h_raw(u) = sum_{u->v} a(v)``, each L1-renormalized to total mass
-    ``scale`` in pure integer arithmetic —
-    ``x' = (x_raw · scale) div sum(x_raw)`` computed over
-    DECIMAL(38,0) so the product never wraps (x_raw <= deg·scale ~
-    1e15; times scale ~ 1e24, far inside 38 digits; the BIGINT `div`
-    result is <= scale). Floor-division mass loss is the documented
-    fixed-point trade (same contract as :func:`pagerank_integer`);
+    ``RANK_SCALE`` in pure integer arithmetic —
+    ``x' = (x_raw · RANK_SCALE) div sum(x_raw)`` computed over
+    DECIMAL(38,0) so the product never wraps (x_raw <= deg·RANK_SCALE
+    ~ 1e15; times RANK_SCALE ~ 1e24, far inside 38 digits; the BIGINT
+    `div` result is <= RANK_SCALE). Floor division loses a little
+    mass, the fixed-point trade :func:`pagerank_integer` also makes;
     everything is bit-reproducible, so an unrolled-CTE oracle using
     HUGEINT `//` matches exactly (both are floor-on-positive).
 
@@ -1034,7 +904,7 @@ def hits_integer(
     per iteration.
 
     Returns ``(authorities, hubs)``: (node, auth) over the dst set and
-    (node, hub) over the src set, both BIGINT in ``scale`` units.
+    (node, hub) over the src set, both BIGINT in ``RANK_SCALE`` units.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -1053,23 +923,23 @@ def hits_integer(
             return raw.crossJoin(F.broadcast(tot)).select(
                 "node",
                 F.expr(
-                    f"CAST((CAST(raw AS DECIMAL(38,0)) * {scale}) div __tot AS BIGINT)"
+                    f"CAST((CAST(raw AS DECIMAL(38,0)) * {RANK_SCALE}) div __tot "
+                    "AS BIGINT)"
                 ).alias("score"),
             )
 
-        hubs = e_by_src.select(F.col("src").alias("node")).distinct().withColumn(
-            "score", F.lit(scale).cast("long")
-        )
-        auth = None
+        auth = hubs = None
         for it in range(iters):
             if it == 0:
-                # ROUND 1 collapses: every hub score is the init
-                # constant, so sum(__hs) per dst == in-count * scale —
-                # skip both the hub-init distinct and the join. Same
+                # ROUND 1 collapses: every hub score starts at
+                # RANK_SCALE, so sum(__hs) per dst == in-count *
+                # RANK_SCALE — no hub-init distinct and no join. Same
                 # integer arithmetic, bit-identical.
                 auth = _normalize(
                     e_by_src.groupBy(F.col("dst").alias("node")).agg(
-                        (F.count(F.lit(1)) * F.lit(scale).cast("long")).alias("raw")
+                        (F.count(F.lit(1)) * F.lit(RANK_SCALE).cast("long")).alias(
+                            "raw"
+                        )
                     )
                 )
             else:

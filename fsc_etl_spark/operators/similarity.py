@@ -1163,11 +1163,12 @@ def pq_topk(
       cosine re-rank of that bounded set to ``k`` (same rounding +
       tie-break discipline as the exact path).
 
-    Approximate by design (quantization error), so no SQL oracle for
-    the TRAINED mode: recall vs :func:`cosine_topk` is asserted in
-    tests/test_dedup_similarity.py, and the driver records a rows-only
-    check. ``codebooks``: optional PINNED per-subspace codebooks
-    (``[subspace][code][dim]``) that bypass Lloyd training — with
+    Approximate by design (quantization error): recall vs
+    :func:`cosine_topk` is asserted in tests/test_dedup_similarity.py,
+    and the TRAINED mode's hash oracle replays the same Lloyd training
+    (plans/oracles_training). ``codebooks``: optional PINNED
+    per-subspace codebooks (``[subspace][code][dim]``) that bypass
+    Lloyd training — with
     data-independent literal codebooks every step (encode argmin, ADC
     ranking, refine cutoff, exact re-rank) is deterministic and the
     query admits a full DuckDB hash oracle (the audited-ANN contract;

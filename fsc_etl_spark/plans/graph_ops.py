@@ -28,7 +28,6 @@ from fsc_etl_spark.operators.graph import (
     ktruss_support,
     label_propagation,
     pagerank_integer,
-    personalized_pagerank_integer,
     triangle_counts_per_node,
     triangle_stats,
 )
@@ -446,8 +445,8 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
     lands only on that cohort, so the top-20 ranks are the parts (and
     customers) closest to the cohort's buying neighborhood — the
     seed-expansion primitive for growing a trusted subset outward
-    (operators/graph.personalized_pagerank_integer, 3 BIGINT-exact
-    rounds, unrolled-CTE oracle).
+    (operators/graph.pagerank_integer(seeds=), 3 BIGINT-exact rounds,
+    unrolled-CTE oracle).
 
     Nodes iterate as BIGINT (2·custkey / 2·partkey+1) and render to
     'c…'/'p…' labels only in the final top-20 projection.
@@ -462,8 +461,12 @@ def ppr_copurchase_seeds(spark: SparkSession, sf: str) -> DataFrame:
         )
         # symmetrised union -> src set == node set, no dangling possible:
         # the structural fast path skips the union-distinct + check action
-        ranks = personalized_pagerank_integer(
-            edges, seeds, iters=_PPR_ITERS, symmetric=True, assume_distinct=True
+        ranks = pagerank_integer(
+            edges,
+            iters=_PPR_ITERS,
+            seeds=seeds,
+            every_node_has_inflow=True,
+            assume_distinct=True,
         )
     return (
         ranks.select(render_node("node").alias("node"), "rank")
@@ -961,7 +964,7 @@ def _pagerank_dangling_oracle(iters: int = _DANGLING_ITERS, topk: int = _TOPK) -
 
 
 def _ppr_oracle(iters: int = _PPR_ITERS, topk: int = _TOPK) -> str:
-    """Unrolled CTE mirroring personalized_pagerank_integer on the
+    """Unrolled CTE mirroring pagerank_integer(seeds=) on the
     nation-0-seeded co-purchase graph: teleport base lands only on
     seed nodes, scaled (15·init·n_nodes)//(100·n_seeds); rank starts
     at init on seeds, 0 elsewhere."""

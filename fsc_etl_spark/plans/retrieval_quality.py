@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark.functions.text import tokens
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.similarity import cosine_topk
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
@@ -409,57 +410,56 @@ def embed_covariance_topk(spark: SparkSession, sf: str) -> DataFrame:
     partials = emb.mapInPandas(
         _quantized_moment_partials(diag_k=1), schema="di int, dj int, v long"
     )
-    # Three branches (pairs / moments / n) read the aggregated
-    # partials; without a lineage break each branch re-runs the full
-    # corpus scan + matmul (verified: MapInPandas appeared 3x in the
-    # physical plan). The agg result is O(d^2) rows and DETERMINISTIC
-    # (exact int sums), so the eager localCheckpoint is safe (the
-    # ADVICE r6 nondeterminism hazard does not apply).
-    sums = (
-        partials.groupBy("di", "dj")
-        .agg(F.sum("v").alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    pair = sums.filter(F.col("dj") > 0)
-    mom = sums.filter((F.col("di") > 0) & (F.col("dj") == 0)).select(
-        F.col("di").alias("d"), F.col("v").alias("s1")
-    )
-    # Runtime overflow guard (ADVICE r8): raise — via a filter the
-    # optimizer cannot prune — rather than silently wrap past the
-    # documented int64 headroom. assert_true returns NULL when the
-    # predicate holds, so the filter keeps every row.
-    n = (
-        sums.filter(F.col("di") == 0)
-        .select(F.col("v").alias("n_rows"))
-        .filter(
-            F.assert_true(
-                F.col("n_rows") <= _MOMENT_SAFE_ROWS,
-                F.lit(
-                    "embed_covariance_topk: corpus exceeds the 2^18-grid "
-                    f"int64 headroom ({_MOMENT_SAFE_ROWS} rows); lower "
-                    "_COV_SCALE or shard the statistic"
+    with cache_scope() as cs:
+        # Three branches (pairs / moments / n) read the aggregated
+        # partials; without a lineage break each branch re-runs the full
+        # corpus scan + matmul (verified: MapInPandas appeared 3x in the
+        # physical plan). The agg result is O(d^2) rows and DETERMINISTIC
+        # (exact int sums), so the eager checkpoint is safe (a
+        # nondeterministic plan could differ between its branches).
+        sums = cs.checkpoint(partials.groupBy("di", "dj").agg(F.sum("v").alias("v")))
+        pair = sums.filter(F.col("dj") > 0)
+        mom = sums.filter((F.col("di") > 0) & (F.col("dj") == 0)).select(
+            F.col("di").alias("d"), F.col("v").alias("s1")
+        )
+        # Runtime overflow guard: raise — via a filter the
+        # optimizer cannot prune — rather than silently wrap past the
+        # documented int64 headroom. assert_true returns NULL when the
+        # predicate holds, so the filter keeps every row.
+        n = (
+            sums.filter(F.col("di") == 0)
+            .select(F.col("v").alias("n_rows"))
+            .filter(
+                F.assert_true(
+                    F.col("n_rows") <= _MOMENT_SAFE_ROWS,
+                    F.lit(
+                        "embed_covariance_topk: corpus exceeds the 2^18-grid "
+                        f"int64 headroom ({_MOMENT_SAFE_ROWS} rows); lower "
+                        "_COV_SCALE or shard the statistic"
+                    ),
+                ).isNull()
+            )
+        )
+        mom_i = mom.withColumnRenamed("d", "di").withColumnRenamed("s1", "si")
+        mom_j = mom.withColumnRenamed("d", "dj").withColumnRenamed("s1", "sj")
+        cov = (
+            pair.join(F.broadcast(mom_i), "di")
+            .join(F.broadcast(mom_j), "dj")
+            .crossJoin(F.broadcast(n))
+            .select(
+                "di",
+                "dj",
+                (F.col("n_rows") * F.col("v") - F.col("si") * F.col("sj")).alias(
+                    "cov_q"
                 ),
-            ).isNull()
+            )
         )
-    )
-    cov = (
-        pair.join(F.broadcast(mom.withColumnRenamed("d", "di").withColumnRenamed("s1", "si")), "di")
-        .join(F.broadcast(mom.withColumnRenamed("d", "dj").withColumnRenamed("s1", "sj")), "dj")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "di",
-            "dj",
-            (F.col("n_rows") * F.col("v") - F.col("si") * F.col("sj")).alias(
-                "cov_q"
-            ),
+        w = Window.orderBy(F.abs(F.col("cov_q")).desc(), F.col("di"), F.col("dj"))
+        return cs.result(
+            cov.withColumn("rank", F.row_number().over(w).cast("int"))
+            .filter(F.col("rank") <= 10)
+            .select("rank", "di", "dj", "cov_q")
         )
-    )
-    w = Window.orderBy(F.abs(F.col("cov_q")).desc(), F.col("di"), F.col("dj"))
-    return (
-        cov.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 10)
-        .select("rank", "di", "dj", "cov_q")
-    )
 
 
 #: Power-iteration constants. Vector grid 2^12, matrix rescaled to

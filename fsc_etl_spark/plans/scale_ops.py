@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fsc_etl_spark.operators.bloom import bloom_pruned_semi_join
+from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.sketches import (
     CMS_DEPTH,
     CMS_WIDTH,
@@ -385,6 +386,8 @@ def value_drift_buckets(spark: SparkSession, sf: str) -> DataFrame:
 #: PSI buckets (fixed cent boundaries over value*100) and Laplace +1.
 _PSI_BOUNDS = [250, 500, 1000, 1500, 2000, 3000, 4000, 6000, 8000]
 _PSI_B = len(_PSI_BOUNDS) + 1
+#: the ln arguments num and den must stay integer-exact as doubles
+_PSI_EXACT_BOUND = 2**53
 
 
 def psi_value_drift(spark: SparkSession, sf: str) -> DataFrame:
@@ -393,10 +396,11 @@ def psi_value_drift(spark: SparkSession, sf: str) -> DataFrame:
     monitoring; PSI < 0.1 stable / > 0.25 shifted), complementing
     value_drift_buckets' log-free flag with the standard magnitude.
 
-    EAGER BUILDER (ADVICE r11): unlike most plan builders this one
-    runs Spark jobs at construction time — the bounded (type, bucket)
-    counts are localCheckpoint'ed and a 1-row ``.first()`` validates
-    the 2^53 exactness precondition below — so schema-only callers
+    EAGER BUILDER: unlike most plan builders this one runs Spark jobs
+    at construction time — the bounded (type, bucket) counts are
+    checkpointed in a cache scope (released if the check raises) and a
+    1-row ``.first()`` validates the 2^53 exactness precondition
+    below — so schema-only callers
     (e.g. the final-schema gate) pay one full execution of the
     bounded-counts aggregate. Deliberate: the guard must run before
     the returned plan can be trusted, and the checkpoint caps the
@@ -429,78 +433,80 @@ def psi_value_drift(spark: SparkSession, sf: str) -> DataFrame:
     for i, bound in enumerate(_PSI_BOUNDS[1:], start=1):
         bucket = bucket.when(F.col("vc") < bound, i)
     bucket = bucket.otherwise(len(_PSI_BOUNDS))
-    counts = (
-        ev.select("event_type", bucket.alias("b"))
-        .groupBy("event_type", "b")
-        .agg(F.count(F.lit(1)).alias("h"))
-        .localCheckpoint(eager=True)  # bounded: <= |types|*B rows
-    )
-    corpus = counts.groupBy("b").agg(F.sum("h").alias("g"))
-    ntot = counts.groupBy("event_type").agg(F.sum("h").alias("n_events"))
-    mtot = corpus.agg(F.sum("g").alias("m_total"))
-    # Validate the documented exactness precondition instead of
-    # assuming it (ADVICE r10, same style as weighted PageRank's
-    # overflow check in operators/graph.py): the shared ln argument is
-    # only bit-identical across engines while num = hp*(m_total+B) and
-    # den = gp*(n_events+B) are integer-exact as doubles, i.e. < 2^53.
-    # One 1-row collect over the already-checkpointed bounded counts.
-    chk = (
-        counts.agg(F.max("h").alias("hmax"))
-        .crossJoin(corpus.agg(F.max("g").alias("gmax"), F.sum("g").alias("mt")))
-        .crossJoin(ntot.agg(F.max("n_events").alias("nmax")))
-        .first()
-    )
-    if chk["mt"] is not None and max(
-        (chk["hmax"] + 1) * (chk["mt"] + _PSI_B),
-        (chk["gmax"] + 1) * (chk["nmax"] + _PSI_B),
-    ) >= 2**53:
-        raise ValueError(
-            "psi_value_drift: hp*(m_total+B) or gp*(n_events+B) exceeds "
-            f"2^53 (m_total={chk['mt']}) — the micro-nat ln quantization "
-            "is no longer cross-engine exact; pre-aggregate per shard or "
-            "rescale counts before calling"
+    with cache_scope() as cs:
+        counts = cs.checkpoint(  # bounded: <= |types|*B rows
+            ev.select("event_type", bucket.alias("b"))
+            .groupBy("event_type", "b")
+            .agg(F.count(F.lit(1)).alias("h"))
         )
-    grid = ntot.crossJoin(
-        F.broadcast(
-            spark.range(_PSI_B).select(F.col("id").cast("int").alias("b"))
+        corpus = counts.groupBy("b").agg(F.sum("h").alias("g"))
+        ntot = counts.groupBy("event_type").agg(F.sum("h").alias("n_events"))
+        mtot = corpus.agg(F.sum("g").alias("m_total"))
+        # Validate the documented exactness precondition instead of
+        # assuming it (the style of weighted PageRank's overflow check in
+        # operators/graph.py): the shared ln argument is only
+        # bit-identical across engines while num = hp*(m_total+B) and
+        # den = gp*(n_events+B) are integer-exact as doubles, i.e. < 2^53.
+        # One 1-row collect over the already-checkpointed bounded counts.
+        chk = (
+            counts.agg(F.max("h").alias("hmax"))
+            .crossJoin(
+                corpus.agg(F.max("g").alias("gmax"), F.sum("g").alias("mt"))
+            )
+            .crossJoin(ntot.agg(F.max("n_events").alias("nmax")))
+            .first()
         )
-    )
-    full = (
-        grid.join(counts, ["event_type", "b"], "left")
-        .join(F.broadcast(corpus), "b", "left")
-        .crossJoin(F.broadcast(mtot))
-        .select(
+        if chk["mt"] is not None and max(
+            (chk["hmax"] + 1) * (chk["mt"] + _PSI_B),
+            (chk["gmax"] + 1) * (chk["nmax"] + _PSI_B),
+        ) >= _PSI_EXACT_BOUND:
+            raise ValueError(
+                "psi_value_drift: hp*(m_total+B) or gp*(n_events+B) exceeds "
+                f"2^53 (m_total={chk['mt']}) — the micro-nat ln quantization "
+                "is no longer cross-engine exact; pre-aggregate per shard or "
+                "rescale counts before calling"
+            )
+        grid = ntot.crossJoin(
+            F.broadcast(
+                spark.range(_PSI_B).select(F.col("id").cast("int").alias("b"))
+            )
+        )
+        full = (
+            grid.join(counts, ["event_type", "b"], "left")
+            .join(F.broadcast(corpus), "b", "left")
+            .crossJoin(F.broadcast(mtot))
+            .select(
+                "event_type",
+                "n_events",
+                "m_total",
+                (F.coalesce(F.col("h"), F.lit(0)) + 1).alias("hp"),
+                (F.coalesce(F.col("g"), F.lit(0)) + 1).alias("gp"),
+            )
+        )
+        num = F.col("hp") * (F.col("m_total") + _PSI_B)
+        den = F.col("gp") * (F.col("n_events") + _PSI_B)
+        lnq = F.floor(
+            F.lit(1e6) * F.log(num.cast("double") / den.cast("double"))
+        ).cast("long")
+        dec = "decimal(38,0)"
+        terms = full.select(
             "event_type",
             "n_events",
             "m_total",
-            (F.coalesce(F.col("h"), F.lit(0)) + 1).alias("hp"),
-            (F.coalesce(F.col("g"), F.lit(0)) + 1).alias("gp"),
+            ((num.cast(dec) - den.cast(dec)) * lnq.cast(dec)).alias("term"),
         )
-    )
-    num = F.col("hp") * (F.col("m_total") + _PSI_B)
-    den = F.col("gp") * (F.col("n_events") + _PSI_B)
-    lnq = F.floor(
-        F.lit(1e6) * F.log(num.cast("double") / den.cast("double"))
-    ).cast("long")
-    dec = "decimal(38,0)"
-    terms = full.select(
-        "event_type",
-        "n_events",
-        "m_total",
-        ((num.cast(dec) - den.cast(dec)) * lnq.cast(dec)).alias("term"),
-    )
-    return (
-        terms.groupBy("event_type", "n_events", "m_total")
-        .agg(F.sum("term").alias("psi_num"))
-        .select(
-            "event_type",
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.expr(
-                f"psi_num div (CAST(n_events + {_PSI_B} AS DECIMAL(38,0))"
-                f" * CAST(m_total + {_PSI_B} AS DECIMAL(38,0)))"
-            ).cast("bigint").alias("psi_micro"),
+        return cs.result(
+            terms.groupBy("event_type", "n_events", "m_total")
+            .agg(F.sum("term").alias("psi_num"))
+            .select(
+                "event_type",
+                F.col("n_events").cast("bigint").alias("n_events"),
+                F.expr(
+                    f"psi_num div (CAST(n_events + {_PSI_B} AS DECIMAL(38,0))"
+                    f" * CAST(m_total + {_PSI_B} AS DECIMAL(38,0)))"
+                ).cast("bigint").alias("psi_micro"),
+            )
         )
-    )
 
 
 def cusum_changepoint(spark: SparkSession, sf: str) -> DataFrame:
@@ -970,8 +976,8 @@ def hll_register_build(spark: SparkSession, sf: str) -> DataFrame:
     fold is order-dependent) the sketch STATE itself is verified
     bit-for-bit against the oracle replaying the same md5/bin
     arithmetic. Map-side max-merge to <= 64 cells before the exchange;
-    `hll_daily_users` remains the approx_count_distinct consumer
-    (rows-only by design).
+    `hll_daily_users` remains the approx_count_distinct consumer (its
+    oracle checks the estimates' error bounds, not the raw estimates).
     """
     ev = t(spark, sf, "events").select("user_id")
     return hll_registers(ev, "user_id")
@@ -1013,27 +1019,31 @@ def csv_corrupt_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     )
     path = scratch_path("quarantine") + "/orders_csv"
     src.select(line.alias("value")).write.mode("overwrite").text(path)
-    parsed = spark.read.csv(
-        path,
-        schema="o_orderkey LONG, cents LONG, o_orderpriority STRING, _corrupt_record STRING",
-        mode="PERMISSIVE",
-        columnNameOfCorruptRecord="_corrupt_record",
-    # Spark disallows plans whose scan projects ONLY the internal
-    # corrupt-record column (the quarantine count below does exactly
-    # that); materializing the parse first is the documented pattern.
-    ).localCheckpoint(eager=True)
-    clean = parsed.filter(F.col("_corrupt_record").isNull())
-    bad = parsed.filter(F.col("_corrupt_record").isNotNull())
-    c = clean.agg(
-        F.count(F.lit(1)).alias("n_clean"),
-        F.sum("cents").alias("sum_price_cents"),
-    )
-    q = bad.agg(
-        F.count(F.lit(1)).alias("n_quarantined"),
-        F.min("_corrupt_record").alias("min_corrupt"),
-        F.max("_corrupt_record").alias("max_corrupt"),
-    )
-    return c.crossJoin(q)
+    with cache_scope() as cs:
+        # Spark disallows plans whose scan projects ONLY the internal
+        # corrupt-record column (the quarantine count below does exactly
+        # that); materializing the parse first is the documented pattern.
+        parsed = cs.checkpoint(
+            spark.read.csv(
+                path,
+                schema="o_orderkey LONG, cents LONG, o_orderpriority STRING, "
+                "_corrupt_record STRING",
+                mode="PERMISSIVE",
+                columnNameOfCorruptRecord="_corrupt_record",
+            )
+        )
+        clean = parsed.filter(F.col("_corrupt_record").isNull())
+        bad = parsed.filter(F.col("_corrupt_record").isNotNull())
+        c = clean.agg(
+            F.count(F.lit(1)).alias("n_clean"),
+            F.sum("cents").alias("sum_price_cents"),
+        )
+        q = bad.agg(
+            F.count(F.lit(1)).alias("n_quarantined"),
+            F.min("_corrupt_record").alias("min_corrupt"),
+            F.max("_corrupt_record").alias("max_corrupt"),
+        )
+        return cs.result(c.crossJoin(q))
 
 
 def hll_estimate_users(spark: SparkSession, sf: str) -> DataFrame:
@@ -1043,8 +1053,8 @@ def hll_estimate_users(spark: SparkSession, sf: str) -> DataFrame:
     the harmonic sum folds dyadic 2^-register terms in bucket order —
     identical IEEE additions in identical sequence — making even the
     approximate-aggregate surface hash-checkable (hll_daily_users
-    remains the engine-native approx_count_distinct consumer,
-    rows-only by design).
+    remains the engine-native approx_count_distinct consumer, whose
+    oracle checks error bounds rather than the raw estimates).
     """
     ev = t(spark, sf, "events").select("user_id")
     regs = hll_registers(ev, "user_id")

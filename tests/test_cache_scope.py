@@ -69,12 +69,11 @@ def _pagerank_sink(spark, sf_smoke, monkeypatch):
 
 
 def _ppr_no_seed(spark, sf_smoke, monkeypatch):
-    from fsc_etl_spark.operators.graph import personalized_pagerank_integer
+    from fsc_etl_spark.operators.graph import pagerank_integer
 
     seeds = spark.createDataFrame([("z",)], "node string")
-    personalized_pagerank_integer(
-        _edges(spark, [("a", "b"), ("b", "a")]), seeds, symmetric=True
-    )
+    edges = _edges(spark, [("a", "b"), ("b", "a")])
+    pagerank_integer(edges, seeds=seeds, every_node_has_inflow=True)
 
 
 def _kcore_unconverged(spark, sf_smoke, monkeypatch):
@@ -104,6 +103,15 @@ def _pagerank_copurchase_operator_raises(spark, sf_smoke, monkeypatch):
     gops.pagerank_copurchase(spark, sf_smoke)
 
 
+def _psi_not_exact(spark, sf_smoke, monkeypatch):
+    import fsc_etl_spark.plans.scale_ops as sops
+
+    # every count exceeds a zero bound: the exactness check raises
+    # after the bounded counts are checkpointed
+    monkeypatch.setattr(sops, "_PSI_EXACT_BOUND", 0)
+    sops.psi_value_drift(spark, sf_smoke)
+
+
 @pytest.mark.parametrize(
     "call, error",
     [
@@ -114,6 +122,7 @@ def _pagerank_copurchase_operator_raises(spark, sf_smoke, monkeypatch):
         pytest.param(
             _pagerank_copurchase_operator_raises, RuntimeError, id="pagerank_copurchase"
         ),
+        pytest.param(_psi_not_exact, ValueError, id="psi_value_drift"),
     ],
 )
 def test_builder_that_raises_leaves_no_rdd_persisted(

@@ -156,8 +156,8 @@ def test_ann_query_recall_floor_on_real_fixtures(spark, sf_smoke, name, floor):
     """Recall floors for the PRODUCTION ANN query entries on the real
     (near-orthogonal, worst-case) fixture embeddings — the measured
     values above minus headroom, so a plane-set, probe-ranking, or
-    refine-pool regression fails loudly even though these queries are
-    rows-only at the driver."""
+    refine-pool regression fails loudly even when the queries' oracles,
+    which replay the same approximation, still match."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

@@ -41,7 +41,7 @@ def test_pagerank_two_iterations_hand_computed(spark):
 
 
 def test_pagerank_symmetric_cycle_is_fixpoint(spark):
-    # In a 2-cycle every node keeps exactly init_rank: inflow == init,
+    # In a 2-cycle every node keeps exactly RANK_SCALE: inflow == init,
     # base + 85% of init == init with these integers.
     edges = _edges(spark, [("x", "y"), ("y", "x")])
     got = {r["node"]: r["rank"] for r in pagerank_integer(edges, iters=3).collect()}
@@ -533,8 +533,6 @@ def _py_ppr(pairs, seeds, iters, init=10**9):
 
 
 def test_ppr_hand_graph_matches_reference(spark):
-    from fsc_etl_spark.operators.graph import personalized_pagerank_integer
-
     # symmetric triangle + pendant pair, seeded on one triangle corner
     und = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
     pairs = und + [(y, x) for x, y in und]
@@ -542,7 +540,7 @@ def test_ppr_hand_graph_matches_reference(spark):
     seeds = spark.createDataFrame([("a",)], "node string")
     got = {
         r["node"]: r["rank"]
-        for r in personalized_pagerank_integer(edges, seeds, iters=3).collect()
+        for r in pagerank_integer(edges, iters=3, seeds=seeds).collect()
     }
     assert got == _py_ppr(pairs, ["a"], 3)
     # seed-proximity: the seed's direct neighbors outrank the pendant
@@ -550,36 +548,40 @@ def test_ppr_hand_graph_matches_reference(spark):
 
 
 def test_ppr_rejects_dangling_and_disjoint_seeds(spark):
-    from fsc_etl_spark.operators.graph import personalized_pagerank_integer
-
     directed = _edges(spark, [("a", "b")])  # b has no out-edge
     seeds = spark.createDataFrame([("a",)], "node string")
     with pytest.raises(ValueError, match="no out-edge"):
-        personalized_pagerank_integer(directed, seeds)
+        pagerank_integer(directed, iters=3, seeds=seeds)
     sym = _edges(spark, [("a", "b"), ("b", "a")])
     ghost = spark.createDataFrame([("zz",)], "node string")
     with pytest.raises(ValueError, match="no seed"):
-        personalized_pagerank_integer(sym, ghost)
+        pagerank_integer(sym, iters=3, seeds=ghost)
 
 
 def test_ppr_symmetric_fast_path_matches_general(spark):
-    from fsc_etl_spark.operators.graph import personalized_pagerank_integer
-
     und = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")]
     pairs = und + [(y, x) for x, y in und]
     edges = _edges(spark, pairs)
     seeds = spark.createDataFrame([("a",), ("d",)], "node string")
     slow = {
         r["node"]: r["rank"]
-        for r in personalized_pagerank_integer(edges, seeds, iters=3).collect()
+        for r in pagerank_integer(edges, iters=3, seeds=seeds).collect()
     }
     fast = {
         r["node"]: r["rank"]
-        for r in personalized_pagerank_integer(
-            edges, seeds, iters=3, symmetric=True
+        for r in pagerank_integer(
+            edges, iters=3, seeds=seeds, every_node_has_inflow=True
         ).collect()
     }
     assert slow == fast
+
+
+@pytest.mark.parametrize("dangling", ["drop", "redistribute"])
+def test_ppr_rejects_dangling_modes_other_than_error(spark, dangling):
+    edges = _edges(spark, [("a", "b"), ("b", "a")])
+    seeds = spark.createDataFrame([("a",)], "node string")
+    with pytest.raises(ValueError, match="seeds require dangling='error'"):
+        pagerank_integer(edges, iters=1, seeds=seeds, dangling=dangling)
 
 
 def test_hits_integer_tiny_graph(spark):
@@ -706,7 +708,6 @@ def test_assume_distinct_call_sites_pass_unique_edges(spark, sf_smoke, monkeypat
 
     real_lpa = og.label_propagation
     real_pr = og.pagerank_integer
-    real_ppr = og.personalized_pagerank_integer
 
     def lpa(edges, *a, **kw):
         if kw.get("assume_distinct"):
@@ -718,19 +719,11 @@ def test_assume_distinct_call_sites_pass_unique_edges(spark, sf_smoke, monkeypat
             _assert_unique(edges, "pagerank_integer")
         return real_pr(edges, *a, **kw)
 
-    def ppr(edges, seeds, *a, **kw):
-        if kw.get("assume_distinct"):
-            _assert_unique(edges, "personalized_pagerank_integer")
-        return real_ppr(edges, seeds, *a, **kw)
-
     # the plans module imported the names directly — patch BOTH the
     # operator module and the plan module's bindings
     for mod in (og, gops):
         monkeypatch.setattr(mod, "label_propagation", lpa, raising=True)
         monkeypatch.setattr(mod, "pagerank_integer", pr, raising=True)
-        monkeypatch.setattr(
-            mod, "personalized_pagerank_integer", ppr, raising=True
-        )
 
     wired = [
         "pagerank_copurchase",
