@@ -3,7 +3,8 @@
 The reference mutates two targets:
 - curated Delta via ``DeltaTable.merge`` — update-only per source
   (``/root/reference/main.py:191-199``) and full upsert
-  (``utils/load_functions.py:64-122``);
+  (``utils/load_functions.py:64-122``), plus an overwrite and a
+  DELETE + ``VACUUM(0)`` reset (``main.py:231-235``);
 - a Synapse DW via staging-table + generated DELETE/DELETE/INSERT
   postActions with a last-writer-wins ``>=`` timestamp guard
   (``utils/load_functions.py:4-43``).
@@ -19,18 +20,15 @@ merge is provided twice:
    unmatched target rows pass through; unmatched source rows insert
    (optional, ``when_not_matched_insert=False`` reproduces J4's
    update-only merges).
-2. :class:`ParquetMergeTarget` — a minimal mutable-table wrapper that
-   applies :func:`merge_frames` and commits with an atomic directory
-   swap (write new version → rename). Single-writer semantics — a
-   stand-in for Delta's transaction log, adequate for tests and
-   single-pipeline runs; on a real lake use Delta/Iceberg.
+2. :class:`ParquetMergeTarget` — a minimal mutable-table wrapper with
+   the reference's table operations: merge, overwrite, append, a flag
+   update and a full delete. Each commit writes the whole new table
+   and swaps it in with a directory rename.
 
 Scale: the merge is ONE full outer-shaped pass expressed as
-anti-join ∪ source-resolved rows, both shuffled on the merge key. With
-``partition_cols`` the wrapper's ``merge`` reads, merges and rewrites
-only the partitions the source touches; ``overwrite`` and ``append``
-rewrite the whole table. Finer, file-level pruning inside a partition
-is left to a real table format.
+anti-join ∪ source-resolved rows, both shuffled on the merge key, and
+every commit rewrites the whole table, partitioned or not. Pruning to
+the touched partitions or files is left to a real table format.
 """
 
 from __future__ import annotations
@@ -38,8 +36,6 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
-import tempfile
-import time
 import uuid
 from collections.abc import Sequence
 
@@ -54,7 +50,6 @@ def merge_frames(
     update_cols: Sequence[str] | None = None,
     when_not_matched_insert: bool = True,
     delta_col: str | None = None,
-    evolve_schema: bool = False,
 ) -> DataFrame:
     """Relational MERGE: returns the post-merge state of ``target``.
 
@@ -66,11 +61,8 @@ def merge_frames(
     - unmatched target rows: kept;
     - unmatched source rows: inserted when ``when_not_matched_insert``.
 
-    ``evolve_schema`` is Delta's ``mergeSchema`` for MERGE: source
-    columns absent from the target are appended to the output schema —
-    NULL for target rows the source didn't touch (and for stale-loser
-    rows), the source's value where the source row wins, exactly the
-    automatic-schema-evolution matrix of Delta MERGE.
+    The output has the target's schema: source columns the target
+    lacks are dropped.
 
     ``source`` must be unique on ``on`` (Delta MERGE errors otherwise;
     we follow the same contract and do not dedupe silently).
@@ -78,11 +70,6 @@ def merge_frames(
     keys = list(on)
     if update_cols is None:
         update_cols = [c for c in source.columns if c in set(target.columns) and c not in keys]
-    evolved_cols = (
-        [c for c in source.columns if c not in set(target.columns)]
-        if evolve_schema
-        else []
-    )
 
     tgt = target.alias("t")
     src = source.alias("s")
@@ -107,26 +94,18 @@ def merge_frames(
             out_cols.append(F.when(take_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c))
         else:
             out_cols.append(F.col(f"t.{c}").alias(c))
-    src_types = dict(source.dtypes)
-    for c in evolved_cols:
-        out_cols.append(
-            F.when(take_src, F.col(f"s.{c}"))
-            .otherwise(F.lit(None).cast(src_types[c]))
-            .alias(c)
-        )
     merged_target = joined.select(*out_cols)
 
     if not when_not_matched_insert:
         return merged_target
 
     inserts = src.join(tgt.select(*keys), keys, "left_anti")
-    # Align to the (possibly evolved) output schema; source may lack
-    # target-only columns.
+    # Align to the target schema; source may lack target-only columns.
     tgt_types = dict(target.dtypes)
     insert_cols = [
         (F.col(c) if c in source.columns else F.lit(None)).cast(tgt_types[c]).alias(c)
         for c in target.columns
-    ] + [F.col(c).alias(c) for c in evolved_cols]
+    ]
     return merged_target.unionByName(inserts.select(*insert_cols))
 
 
@@ -139,31 +118,13 @@ class ConcurrentWriteError(RuntimeError):
 class ParquetMergeTarget:
     """Mutable parquet-backed table with Delta-MERGE-like semantics.
 
-    Layout: ``root/current`` is a symlink-free directory holding the
-    live version; commits write ``root/v_<uuid>`` then atomically
-    replace ``current`` (rename swap). Single-writer, enforced by an
-    O_EXCL commit lock — a concurrent commit raises
-    :class:`ConcurrentWriteError` instead of corrupting the swap.
-
-    With ``retain_versions`` > 0, commits are VERSIONED: each commit's
-    directory is kept and appended to a JSON commit log
-    (``root/_log.json``), giving the stand-in the history / time
-    travel / retention surface of a real table format —
-    :meth:`history`, :meth:`read_version`, and :meth:`vacuum` (which
-    deletes version dirs beyond the retention window; ``vacuum(0)``
-    reproduces the reference's retention-free purge,
-    /root/reference/main.py:234). Versioning composes with full-table
-    commits only; ``partition_cols`` merges mutate partition dirs in
-    place and reject a retention setting at construction.
-
-    With ``partition_cols``, data lays out hive-style
-    (``col=value/...``) and :meth:`merge` rewrites ONLY the partitions
-    the source touches (the file-level pruning a real table format
-    gives you) — at scale a daily merge then costs O(touched
-    partitions), not O(table). :meth:`overwrite` replaces the whole
-    table. Constraints, documented not enforced: a key's partition
-    value must be stable across merges (true for date-partitioned
-    facts merged on (date, id)), and partition column types should
+    Layout: ``root/current`` holds the live table, hive-style
+    (``col=value/...``) under ``partition_cols``. A commit writes the
+    whole new table to ``root/v_<uuid>``, moves ``current`` aside under
+    ``root`` and renames the new version in; both renames stay on the
+    table's filesystem. Single-writer, enforced by an O_EXCL commit
+    lock — a concurrent commit raises :class:`ConcurrentWriteError`
+    instead of corrupting the swap. Partition column types should
     round-trip directory encoding (strings/ints; timestamps re-infer
     as dates on read).
     """
@@ -173,115 +134,22 @@ class ParquetMergeTarget:
         spark: SparkSession,
         root: str,
         partition_cols: Sequence[str] | None = None,
-        retain_versions: int = 0,
     ):
-        if retain_versions and partition_cols:
-            raise ValueError(
-                "versioned retention requires full-table commits; "
-                "partitioned targets swap partition dirs in place"
-            )
         self.spark = spark
         self.root = root
         self.partition_cols = list(partition_cols or [])
-        self.retain_versions = retain_versions
         os.makedirs(root, exist_ok=True)
 
     @property
     def _current(self) -> str:
         return os.path.join(self.root, "current")
 
-    @property
-    def _log_path(self) -> str:
-        return os.path.join(self.root, "_log.json")
-
-    def _log(self) -> list[dict]:
-        if not os.path.isfile(self._log_path):
-            return []
-        import json
-
-        with open(self._log_path) as f:
-            return json.load(f)
-
-    def _append_log(self, entry: dict) -> None:
-        import json
-
-        log = self._log() + [entry]
-        tmp = f"{self._log_path}.tmp{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(log, f)
-        os.replace(tmp, self._log_path)
-
     def exists(self) -> bool:
         """M1: table existence probe."""
-        if self.retain_versions:
-            return bool(self._log())
         return os.path.isdir(self._current)
 
-    def _latest_dir(self) -> str:
-        log = self._log()
-        if not log:
-            raise FileNotFoundError(f"no committed version under {self.root}")
-        return os.path.join(self.root, log[-1]["dir"])
-
     def read(self) -> DataFrame:
-        if self.retain_versions:
-            return self.spark.read.parquet(self._latest_dir())
         return self.spark.read.parquet(self._current)
-
-    def read_version(self, version: int) -> DataFrame:
-        """Time travel: the table as of commit ``version`` (from
-        :meth:`history`). Raises if vacuumed past or never written."""
-        for e in self._log():
-            if e["version"] == version:
-                path = os.path.join(self.root, e["dir"])
-                if not os.path.isdir(path):
-                    raise FileNotFoundError(
-                        f"version {version} was vacuumed ({e['dir']})"
-                    )
-                return self.spark.read.parquet(path)
-        raise KeyError(f"no version {version} in the commit log")
-
-    def history(self) -> list[dict]:
-        """Commit log, oldest first: version / op / ts / dir /
-        still-on-disk flag."""
-        return [
-            {**e, "available": os.path.isdir(os.path.join(self.root, e["dir"]))}
-            for e in self._log()
-        ]
-
-    def vacuum(self, retain_last: int | None = None) -> int:
-        """Delete version directories beyond the retention window
-        (default: the constructor's ``retain_versions``); the latest
-        version always survives. Returns the number of dirs removed.
-        ``vacuum(0)`` keeps only the latest — the reference's
-        immediate-purge semantics."""
-        if not self.retain_versions and retain_last is None:
-            return 0
-        keep = (self.retain_versions if retain_last is None else retain_last) + 1
-        log = self._log()
-        removed = 0
-        for e in log[:-keep] if keep else log[:-1]:
-            path = os.path.join(self.root, e["dir"])
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-                removed += 1
-        return removed
-
-    def vacuum_older_than(self, hours: float) -> int:
-        """Delta-style time-based retention: delete version dirs whose
-        commit timestamp is older than ``hours`` ago — except the
-        latest, which always survives. ``vacuum_older_than(0)``
-        reproduces the reference's retention-check-disabled immediate
-        purge (/root/reference/utils/extract_functions.py:67)."""
-        cutoff = time.time() - hours * 3600
-        log = self._log()
-        removed = 0
-        for e in log[:-1]:
-            path = os.path.join(self.root, e["dir"])
-            if e["ts"] < cutoff and os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-                removed += 1
-        return removed
 
     @contextlib.contextmanager
     def _commit_lock(self):
@@ -299,100 +167,35 @@ class ParquetMergeTarget:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(lock)
 
-    def _commit(self, df: DataFrame, op: str = "overwrite") -> None:
+    def _commit(self, df: DataFrame) -> None:
         with self._commit_lock():
             staged = os.path.join(self.root, f"v_{uuid.uuid4().hex}")
             writer = df.write.mode("overwrite")
             if self.partition_cols:
                 writer = writer.partitionBy(*self.partition_cols)
             writer.parquet(staged)
-            if self.retain_versions:
-                log = self._log()
-                version = (log[-1]["version"] + 1) if log else 0
-                self._append_log(
-                    {
-                        "version": version,
-                        "dir": os.path.basename(staged),
-                        "op": op,
-                        "ts": time.time(),
-                    }
-                )
-                self.vacuum()
-                return
             old: str | None = None
             if os.path.isdir(self._current):
-                old = os.path.join(tempfile.gettempdir(), f"fsc_old_{uuid.uuid4().hex}")
+                old = os.path.join(self.root, f"old_{uuid.uuid4().hex}")
                 os.rename(self._current, old)
             os.rename(staged, self._current)
             if old:
                 shutil.rmtree(old, ignore_errors=True)
 
-    @staticmethod
-    def _partition_dirs(base: str) -> list[str]:
-        """Relative paths of the hive-style leaf partition dirs under
-        ``base`` (discovered from what the write produced, so value
-        escaping always matches Spark's own encoding)."""
-        out: list[str] = []
-
-        def walk(d: str, rel: str) -> None:
-            subs = [
-                e
-                for e in os.listdir(d)
-                if "=" in e and os.path.isdir(os.path.join(d, e))
-            ]
-            if not subs:
-                if rel:
-                    out.append(rel)
-                return
-            for e in subs:
-                walk(os.path.join(d, e), os.path.join(rel, e) if rel else e)
-
-        walk(base, "")
-        return out
-
-    def _swap_partitions(self, df: DataFrame) -> None:
-        """Commit ``df`` (the merged slice) into ONLY the partition
-        directories it contains; every other partition's files are
-        left untouched on disk. Per-directory rename swap —
-        single-writer, same guarantee (and same lock) as _commit."""
-        with self._commit_lock():
-            self._swap_partitions_locked(df)
-
-    def _swap_partitions_locked(self, df: DataFrame) -> None:
-        staged = os.path.join(self.root, f"v_{uuid.uuid4().hex}")
-        df.write.mode("overwrite").partitionBy(*self.partition_cols).parquet(staged)
-        for rel in self._partition_dirs(staged):
-            dst = os.path.join(self._current, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            old: str | None = None
-            if os.path.isdir(dst):
-                old = os.path.join(tempfile.gettempdir(), f"fsc_old_{uuid.uuid4().hex}")
-                os.rename(dst, old)
-            os.rename(os.path.join(staged, rel), dst)
-            if old:
-                shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-
     def overwrite(self, df: DataFrame) -> None:
-        self._commit(df, op="overwrite")
+        self._commit(df)
 
     def append(self, df: DataFrame) -> None:
         if self.exists():
-            self._commit(self.read().unionByName(df), op="append")
+            self._commit(self.read().unionByName(df))
         else:
-            self._commit(df, op="append")
+            self._commit(df)
 
     def delete_all(self) -> None:
         """M2+M3: full-table delete + immediate physical purge — the
-        reference's FULLMODE reset (main.py:231-234, vacuum(0)). In
-        versioned mode this also drops the commit log and every
-        version dir (a full reset, not a logical delete)."""
+        reference's FULLMODE reset (main.py:231-234, vacuum(0))."""
         if os.path.isdir(self._current):
             shutil.rmtree(self._current, ignore_errors=True)
-        for e in self._log():
-            shutil.rmtree(os.path.join(self.root, e["dir"]), ignore_errors=True)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(self._log_path)
 
     def merge(
         self,
@@ -401,91 +204,22 @@ class ParquetMergeTarget:
         update_cols: Sequence[str] | None = None,
         when_not_matched_insert: bool = True,
         delta_col: str | None = None,
-        evolve_schema: bool = False,
     ) -> None:
-        """J4/J5/M4/M5: MERGE ``source`` into the table. With
-        ``partition_cols``, only the partitions present in the source
-        are read, merged, and rewritten (partition-pruned merge).
-
-        ``evolve_schema`` appends new source columns to the table
-        (merge_frames' Delta-mergeSchema semantics). A merge that
-        actually grows the schema takes the FULL-table path even when
-        partitioned: rewriting only touched partitions would leave a
-        mixed-schema directory that plain parquet reads resolve from
-        an arbitrary file (a real table format records schema in the
-        log; the stand-in keeps the directory homogeneous instead).
-        """
+        """J4/J5/M4/M5: MERGE ``source`` into the table
+        (:func:`merge_frames`) and commit the whole merged table."""
         if not self.exists():
             if when_not_matched_insert:
                 self._commit(source)
             return
-        grows = evolve_schema and any(
-            c not in set(self.read().columns) for c in source.columns
-        )
-        if self.partition_cols and not grows:
-            import functools
-            import operator
-
-            missing = [c for c in self.partition_cols if c not in source.columns]
-            if missing and when_not_matched_insert:
-                # Inserts carrying no partition value can't be placed
-                # in a directory — full-table merge is the only
-                # correct move. Sources that keep their partition
-                # columns (or update-only merges) stay pruned.
-                pvals = None
-            elif missing:
-                # Update-only merge: the touched partitions are
-                # whichever ones hold the source's keys — one
-                # column-pruned scan of (keys + partition cols),
-                # far cheaper than rewriting the table.
-                keyed = self.read().join(
-                    source.select(*on).distinct(), list(on), "left_semi"
-                )
-                pvals = keyed.select(*self.partition_cols).distinct().collect()
-            else:
-                # Touched-partition values: bounded by partition count
-                # (days/regions), not row count — safe to collect.
-                pvals = source.select(*self.partition_cols).distinct().collect()
-            if pvals is not None:
-                if not pvals:
-                    return
-                cond = functools.reduce(
-                    operator.or_,
-                    [
-                        functools.reduce(
-                            operator.and_,
-                            [
-                                F.col(c).eqNullSafe(F.lit(r[c]))
-                                for c in self.partition_cols
-                            ],
-                        )
-                        for r in pvals
-                    ],
-                )
-                tgt_slice = self.read().filter(cond)
-                self._swap_partitions(
-                    merge_frames(
-                        tgt_slice,
-                        source,
-                        on,
-                        update_cols=update_cols,
-                        when_not_matched_insert=when_not_matched_insert,
-                        delta_col=delta_col,
-                    )
-                )
-                return
-        target = self.read()
         self._commit(
             merge_frames(
-                target,
+                self.read(),
                 source,
                 on,
                 update_cols=update_cols,
                 when_not_matched_insert=when_not_matched_insert,
                 delta_col=delta_col,
-                evolve_schema=evolve_schema,
-            ),
-            op="merge",
+            )
         )
 
     def update_flag(self, set_col: str, set_value, where) -> None:
@@ -495,22 +229,16 @@ class ParquetMergeTarget:
         self._commit(
             df.withColumn(
                 set_col, F.when(where, F.lit(set_value)).otherwise(F.col(set_col))
-            ),
-            op="update_flag",
+            )
         )
 
 
 def delta_available() -> bool:
     """Probe for delta-spark on the classpath (S6/M1-M6 native path).
     This environment ships no delta jars (TESTDATA.md), so the parquet
-    stand-in is the tested default; the probe keeps the upgrade path
-    one import away. Re-probed every round (VERDICT r10 #5): r13
-    (unchanged from r12) — `import delta` ModuleNotFoundError and
-    `find / -name 'delta*.jar'` finds nothing; the environment
-    contract forbids installs and has no package-index network path.
-    Real-Delta execution of the parity matrix in
-    tests/test_delta_parity.py stays env-gated until a round ships
-    the jars."""
+    stand-in is the tested default and the probe keeps the upgrade
+    path one import away. Real-Delta execution of the parity matrix in
+    tests/test_delta_parity.py is gated on it."""
     try:
         import delta  # noqa: F401
 
@@ -576,17 +304,11 @@ class DeltaMergeTarget:  # pragma: no cover — needs delta-spark jars
         update_cols: Sequence[str] | None = None,
         when_not_matched_insert: bool = True,
         delta_col: str | None = None,
-        evolve_schema: bool = False,
     ) -> None:
         if not self.exists():
             if when_not_matched_insert:
                 self.overwrite(source)
             return
-        if evolve_schema:
-            # Delta's native automatic evolution.
-            self.spark.conf.set(
-                "spark.databricks.delta.schema.autoMerge.enabled", "true"
-            )
         target_cols = self.read().columns
         if update_cols is None:
             update_cols = [
@@ -613,15 +335,13 @@ class DeltaMergeTarget:  # pragma: no cover — needs delta-spark jars
 def make_merge_target(
     spark: SparkSession,
     root: str,
-    prefer_delta: bool = True,
     partition_cols: Sequence[str] | None = None,
 ):
     """Factory: a real Delta table when delta-spark is on the
     classpath, else the parquet stand-in. Both expose the same
-    interface, so pipelines are format-agnostic. ``partition_cols``
-    enables partition-pruned merges on the parquet stand-in (Delta
-    prunes from file stats on its own; it gets the layout hint)."""
-    if prefer_delta and delta_available():
+    interface, so pipelines are format-agnostic; ``partition_cols``
+    sets the on-disk layout of either."""
+    if delta_available():
         return DeltaMergeTarget(spark, root, partition_cols=partition_cols)
     return ParquetMergeTarget(spark, root, partition_cols=partition_cols)
 

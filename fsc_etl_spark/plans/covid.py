@@ -93,6 +93,59 @@ FACT_ORDER = [
 ]
 
 
+#: Source column → Metrics_Fact column, per COVID source (main.py:
+#: 213-229). The star assembly renames with it; an incremental day
+#: updates each source's fact columns other than the keys and
+#: ``Location``. excess_mortality and full_data are location-keyed and
+#: get ``iso_code`` from the countries dim; hospitalizations' columns
+#: are its pivoted indicators.
+FACT_COLUMNS: dict[str, dict[str, str]] = {
+    "owid_covid_data": {
+        "location": "Location",
+        "iso_code": "CodeISO",
+        "date": "Date",
+        "stringency_index": "Stringency_index",
+        "population": "Population",
+        "aged_65_older": "Aged_65_older_perc",
+        "aged_70_older": "Aged_70_older_perc",
+        "new_tests": "New_tests",
+        "total_tests": "Total_tests",
+    },
+    "vaccinations": {
+        "iso_code": "CodeISO",
+        "date": "Date",
+        "total_vaccinations": "Total_vaccinations",
+        "daily_vaccinations": "Daily_vaccinations",
+        "total_boosters": "Total_boosters_vaccinations",
+    },
+    "hospitalizations": {
+        "iso_code": "CodeISO",
+        "date": "Date",
+        **{c: c for c in schemas.HOSP_INDICATORS.values()},
+    },
+    "excess_mortality": {
+        "iso_code": "CodeISO",
+        "date": "Date",
+        "excess_proj_all_ages": "Projection_excess_death",
+    },
+    "full_data": {
+        "iso_code": "CodeISO",
+        "date": "Date",
+        "new_cases": "New_cases",
+        "new_deaths": "New_deaths",
+        "total_cases": "Total_cases",
+        "total_deaths": "Total_deaths",
+        "weekly_cases": "Weekly_cases",
+        "weekly_deaths": "Weekly_deaths",
+    },
+}
+
+
+def fact_update_cols(source: str) -> list[str]:
+    """The fact columns an update from ``source`` sets."""
+    return [c for c in FACT_COLUMNS[source].values() if c not in ("CodeISO", "Date", "Location")]
+
+
 def load_sources(spark: SparkSession, raw_dir: str) -> dict[str, DataFrame]:
     """S5 scans: header CSV, declared all-string schemas, projected at
     the scan (main.py:75-79)."""
@@ -146,39 +199,15 @@ def assemble_metrics_fact(
     owid = typed["owid_covid_data"]
     mapping = countries_mapping(owid)
 
-    excess = attach_iso(typed["excess_mortality"], mapping).withColumnRenamed(
-        "excess_proj_all_ages", "Projection_excess_death"
-    )
+    excess = attach_iso(typed["excess_mortality"], mapping)
     full = attach_iso(typed["full_data"], mapping)
-    vaccs = typed["vaccinations"].withColumnsRenamed(
-        {
-            "total_vaccinations": "Total_vaccinations",
-            "daily_vaccinations": "Daily_vaccinations",
-            "total_boosters": "Total_boosters_vaccinations",
-        }
-    )
     hosp = pivot_hospitalizations(typed["hospitalizations"])
 
-    wide = star_left_join(owid, [full, excess, vaccs, hosp], on=["iso_code", "date"])
-
+    wide = star_left_join(
+        owid, [full, excess, typed["vaccinations"], hosp], on=["iso_code", "date"]
+    )
     renamed = wide.withColumnsRenamed(
-        {
-            "location": "Location",
-            "iso_code": "CodeISO",
-            "date": "Date",
-            "new_cases": "New_cases",
-            "new_deaths": "New_deaths",
-            "total_cases": "Total_cases",
-            "total_deaths": "Total_deaths",
-            "weekly_cases": "Weekly_cases",
-            "weekly_deaths": "Weekly_deaths",
-            "new_tests": "New_tests",
-            "total_tests": "Total_tests",
-            "stringency_index": "Stringency_index",
-            "population": "Population",
-            "aged_65_older": "Aged_65_older_perc",
-            "aged_70_older": "Aged_70_older_perc",
-        }
+        {src: fact for cols in FACT_COLUMNS.values() for src, fact in cols.items()}
     )
 
     ts = F.lit(run_ts).cast("timestamp") if run_ts is not None else F.current_timestamp()
@@ -314,80 +343,16 @@ class CovidPipeline:
         indicator stays its own source, as the reference's per-indicator
         MERGEs are: a correction to one indicator updates that column
         only."""
-        out = []
         anchor = F.date_sub(F.lit(run_date).cast("date"), 1)
-
-        def updates_of(df):
-            return df.filter(F.col("date") != anchor).na.fill(0)
-
-        owid = updates_of(changed["owid_covid_data"]).withColumnsRenamed(
-            {
-                "location": "Location",
-                "iso_code": "CodeISO",
-                "date": "Date",
-                "stringency_index": "Stringency_index",
-                "population": "Population",
-                "aged_65_older": "Aged_65_older_perc",
-                "aged_70_older": "Aged_70_older_perc",
-                "new_tests": "New_tests",
-                "total_tests": "Total_tests",
-            }
-        )
-        out.append(
-            (
-                ["Stringency_index", "Population", "Aged_65_older_perc", "Aged_70_older_perc", "New_tests", "Total_tests"],
-                owid.select("CodeISO", "Date", "Stringency_index", "Population", "Aged_65_older_perc",
-                            "Aged_70_older_perc", "New_tests", "Total_tests"),
-            )
-        )
-
-        vaccs = updates_of(changed["vaccinations"]).withColumnsRenamed(
-            {
-                "iso_code": "CodeISO",
-                "date": "Date",
-                "total_vaccinations": "Total_vaccinations",
-                "daily_vaccinations": "Daily_vaccinations",
-                "total_boosters": "Total_boosters_vaccinations",
-            }
-        )
-        out.append(
-            (
-                ["Total_vaccinations", "Daily_vaccinations", "Total_boosters_vaccinations"],
-                vaccs.select("CodeISO", "Date", "Total_vaccinations", "Daily_vaccinations",
-                             "Total_boosters_vaccinations"),
-            )
-        )
-
-        hosp = pivot_hospitalizations(updates_of(changed["hospitalizations"])).withColumnsRenamed(
-            {"iso_code": "CodeISO", "date": "Date"}
-        )
-        hosp_cols = list(schemas.HOSP_INDICATORS.values())
-        out.append((hosp_cols, hosp.select("CodeISO", "Date", *hosp_cols)))
-
-        excess = attach_iso(updates_of(changed["excess_mortality"]), mapping).withColumnsRenamed(
-            {"iso_code": "CodeISO", "date": "Date", "excess_proj_all_ages": "Projection_excess_death"}
-        )
-        out.append((["Projection_excess_death"], excess.select("CodeISO", "Date", "Projection_excess_death")))
-
-        full = attach_iso(updates_of(changed["full_data"]), mapping).withColumnsRenamed(
-            {
-                "iso_code": "CodeISO",
-                "date": "Date",
-                "new_cases": "New_cases",
-                "new_deaths": "New_deaths",
-                "total_cases": "Total_cases",
-                "total_deaths": "Total_deaths",
-                "weekly_cases": "Weekly_cases",
-                "weekly_deaths": "Weekly_deaths",
-            }
-        )
-        out.append(
-            (
-                ["New_cases", "New_deaths", "Total_cases", "Total_deaths", "Weekly_cases", "Weekly_deaths"],
-                full.select("CodeISO", "Date", "New_cases", "New_deaths", "Total_cases", "Total_deaths",
-                            "Weekly_cases", "Weekly_deaths"),
-            )
-        )
+        out = []
+        for name, renames in FACT_COLUMNS.items():
+            df = changed[name].filter(F.col("date") != anchor).na.fill(0)
+            if name == "hospitalizations":
+                df = pivot_hospitalizations(df)
+            elif "iso_code" not in schemas.COVID_SOURCES[name].names:
+                df = attach_iso(df, mapping)
+            cols = fact_update_cols(name)
+            out.append((cols, df.withColumnsRenamed(renames).select("CodeISO", "Date", *cols)))
         return out
 
     # -- entry C: enterprise / DW load ----------------------------------------

@@ -11,8 +11,9 @@ against the idempotent merge target.
 
 At scale this is the production topology: object-store notifications
 feed micro-batches, the merge shuffles only on the (CodeISO, Date)
-key, and checkpointed offsets make replays idempotent (the merge is
-last-writer-wins on the audit timestamp).
+key, and checkpointed offsets make replays idempotent: the merge has
+no timestamp guard, but re-applying a batch's corrections sets the
+same values again.
 """
 
 from __future__ import annotations
@@ -25,27 +26,10 @@ from pyspark.sql import functions as F
 from fsc_etl_spark import schemas
 from fsc_etl_spark.functions.casting import COVID_CAST_MANIFEST, cast_types
 from fsc_etl_spark.operators.merge import ParquetMergeTarget
+from fsc_etl_spark.plans.covid import FACT_COLUMNS, fact_update_cols
 from fsc_etl_spark.streaming.pipeline import run_foreach_batch
 
-OWID_RENAMES = {
-    "location": "Location",
-    "iso_code": "CodeISO",
-    "date": "Date",
-    "stringency_index": "Stringency_index",
-    "population": "Population",
-    "aged_65_older": "Aged_65_older_perc",
-    "aged_70_older": "Aged_70_older_perc",
-    "new_tests": "New_tests",
-    "total_tests": "Total_tests",
-}
-OWID_UPDATE_COLS = [
-    "Stringency_index",
-    "Population",
-    "Aged_65_older_perc",
-    "Aged_70_older_perc",
-    "New_tests",
-    "Total_tests",
-]
+OWID_UPDATE_COLS = fact_update_cols("owid_covid_data")
 
 
 def stream_owid_corrections(spark: SparkSession, drop_dir: str) -> DataFrame:
@@ -58,7 +42,7 @@ def stream_owid_corrections(spark: SparkSession, drop_dir: str) -> DataFrame:
         .csv(drop_dir)
     )
     typed = cast_types(raw, COVID_CAST_MANIFEST)
-    return typed.withColumnsRenamed(OWID_RENAMES).select(
+    return typed.withColumnsRenamed(FACT_COLUMNS["owid_covid_data"]).select(
         "CodeISO", "Date", *OWID_UPDATE_COLS
     )
 

@@ -1,12 +1,11 @@
 """Parity matrix: DeltaMergeTarget vs ParquetMergeTarget.
 
 Runs the same op sequence (overwrite, upsert merge, update-only merge,
-delta-col-conditioned merge, schema-evolving merge, append,
-update_flag, delete_all, and on a partitioned table an overwrite by a
-frame that covers fewer partitions) against BOTH targets and asserts the visible
-table state matches after every step — proving the parquet stand-in
-that the rest of the suite exercises is semantics-identical to the
-real Delta path (VERDICT r2 "What's missing" #1).
+delta-col-conditioned merge, append, update_flag, delete_all, and on a
+partitioned table an overwrite by a frame that covers fewer
+partitions) against BOTH targets and asserts the visible table state
+matches after every step — proving the parquet stand-in that the rest
+of the suite exercises is semantics-identical to the real Delta path.
 
 Needs delta-spark on the classpath; run via tests/test_delta_parity.py
 which skips cleanly when it is absent. Kept as a standalone script so
@@ -98,13 +97,6 @@ def run_matrix(spark: SparkSession) -> None:
     both(
         "update_flag",
         lambda t: t.update_flag("v", "flagged", F.expr("k = 9")),
-    )
-    r2 = Row("k", "v", "ts", "extra")
-    both(
-        "merge_evolve_schema",
-        lambda t: t.merge(
-            df([r2(10, "n", 50, "new-col")]), on=["k"], evolve_schema=True
-        ),
     )
     for t in (delta_t, parq_t):
         t.delete_all()

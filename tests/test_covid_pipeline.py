@@ -340,63 +340,22 @@ def test_merge_target_factory_backend_selection(spark, tmp_path):
     assert isinstance(tgt, expected)
 
 
-@pytest.mark.slow
-def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    """Partition-pruned MERGE: the source touches one partition; the
-    other partition's files must remain byte-identical on disk, and
-    the merged table must equal the full-table merge semantics."""
-    import os
-
-    from fsc_etl_spark.operators.merge import ParquetMergeTarget, merge_frames
-
-    def files_of(root, part):
-        pdir = os.path.join(root, "current", f"day={part}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(pdir, f)), os.path.getsize(os.path.join(pdir, f)))
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        )
-
-    root = str(tmp_path / "ptbl")
-    tgt = ParquetMergeTarget(spark, root, partition_cols=["day"])
-    initial = spark.createDataFrame(
-        [(1, "d1", 10), (2, "d1", 20), (3, "d2", 30), (4, "d2", 40)],
-        "id int, day string, v int",
-    )
-    tgt.overwrite(initial)
-    untouched_before = files_of(root, "d2")
-
-    source = spark.createDataFrame(
-        [(1, "d1", 11), (9, "d1", 99)], "id int, day string, v int"
-    )
-    tgt.merge(source, on=["id"])
-
-    assert files_of(root, "d2") == untouched_before, "untouched partition rewritten"
-    got = sorted((r.id, r.day, r.v) for r in tgt.read().collect())
-    want = sorted(
-        (r.id, r.day, r.v)
-        for r in merge_frames(initial, source, ["id"]).collect()
-    )
-    assert got == want
-
-
 def test_partitioned_merge_new_partition_inserts(spark, tmp_path):
     """A source bringing a brand-new partition value lands as a new
     partition directory without disturbing existing ones."""
     import os
 
-    from fsc_etl_spark.operators.merge import ParquetMergeTarget
+    from fsc_etl_spark.operators.merge import ParquetMergeTarget, merge_frames
 
     root = str(tmp_path / "ptbl2")
     tgt = ParquetMergeTarget(spark, root, partition_cols=["day"])
-    tgt.overwrite(
-        spark.createDataFrame([(1, "d1", 10)], "id int, day string, v int")
-    )
-    tgt.merge(
-        spark.createDataFrame([(2, "d3", 30)], "id int, day string, v int"),
-        on=["id"],
-    )
+    initial = spark.createDataFrame([(1, "d1", 10)], "id int, day string, v int")
+    tgt.overwrite(initial)
+    source = spark.createDataFrame([(2, "d3", 30)], "id int, day string, v int")
+    tgt.merge(source, on=["id"])
     assert os.path.isdir(os.path.join(root, "current", "day=d3"))
     got = sorted((r.id, r.day, r.v) for r in tgt.read().collect())
     assert got == [(1, "d1", 10), (2, "d3", 30)]
+    want = sorted((r.id, r.day, r.v) for r in merge_frames(initial, source, ["id"]).collect())
+    assert got == want
 

@@ -2,7 +2,7 @@
 
 The container ships no delta-spark jars, so this skips cleanly here;
 on any environment with ``pip install delta-spark`` it runs the full
-merge/append/update/evolve/delete matrix in a subprocess (the Delta
+merge/append/update/delete matrix in a subprocess (the Delta
 session needs its extensions configured at JVM startup, which the
 shared test session cannot provide) and fails on any state divergence.
 """

@@ -250,31 +250,9 @@ def test_date_cast_fallback_formats(spark):
     assert [r.d for r in out] == [want, want, want, None, None]
 
 
-def test_merge_schema_evolution_matrix(spark):
-    """Delta-mergeSchema semantics: a new source column appears in the
-    output — source value where the source row wins, NULL for
-    untouched targets, stale losers, and nothing else changes."""
-    tgt = _df(spark, {1: (10, 5), 2: (20, 5), 3: (30, 5)})
-    src = spark.createDataFrame(
-        [Row(k=2, v=21, ts=6, tag="fresh"),   # wins: update + tag
-         Row(k=3, v=31, ts=4, tag="stale"),   # loses on delta_col: no tag
-         Row(k=4, v=40, ts=6, tag="new")],    # insert: carries tag
-        T.StructType(KV_SCHEMA.fields + [T.StructField("tag", T.StringType())]),
-    )
-    out = merge_frames(tgt, src, ["k"], delta_col="ts", evolve_schema=True)
-    got = {r["k"]: (r["v"], r["ts"], r["tag"]) for r in out.collect()}
-    assert got == {
-        1: (10, 5, None),
-        2: (21, 6, "fresh"),
-        3: (30, 5, None),
-        4: (40, 6, "new"),
-    }
-    assert out.columns == ["k", "v", "ts", "tag"]
-
-
 def test_merge_without_evolution_ignores_new_columns(spark):
-    """Default MERGE drops unknown source columns (target schema is
-    the contract) — evolution must be opt-in."""
+    """MERGE drops unknown source columns: the target schema is the
+    contract."""
     tgt = _df(spark, {1: (10, 5)})
     src = spark.createDataFrame(
         [Row(k=1, v=11, ts=6, tag="x")],
@@ -283,62 +261,6 @@ def test_merge_without_evolution_ignores_new_columns(spark):
     out = merge_frames(tgt, src, ["k"], delta_col="ts")
     assert out.columns == ["k", "v", "ts"]
     assert _state(out) == {1: (11, 6)}
-
-
-def test_merge_target_schema_evolution_roundtrip(spark, tmp_path):
-    """ParquetMergeTarget.merge(evolve_schema=True) grows the table on
-    disk and a later normal merge against the evolved schema works."""
-    from fsc_etl_spark.operators.merge import ParquetMergeTarget
-
-    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"))
-    t.overwrite(_df(spark, {1: (10, 5), 2: (20, 5)}))
-    src = spark.createDataFrame(
-        [Row(k=2, v=21, ts=6, tag="fresh"), Row(k=5, v=50, ts=6, tag="new")],
-        T.StructType(KV_SCHEMA.fields + [T.StructField("tag", T.StringType())]),
-    )
-    t.merge(src, ["k"], delta_col="ts", evolve_schema=True)
-    got = {r["k"]: (r["v"], r["tag"]) for r in t.read().collect()}
-    assert got == {1: (10, None), 2: (21, "fresh"), 5: (50, "new")}
-    # schema persisted: a plain merge now updates the evolved column
-    t.merge(
-        spark.createDataFrame(
-            [Row(k=1, v=12, ts=7, tag="later")],
-            T.StructType(KV_SCHEMA.fields + [T.StructField("tag", T.StringType())]),
-        ),
-        ["k"],
-        delta_col="ts",
-    )
-    got = {r["k"]: (r["v"], r["tag"]) for r in t.read().collect()}
-    assert got == {1: (12, "later"), 2: (21, "fresh"), 5: (50, "new")}
-
-
-def test_versioned_target_history_time_travel_vacuum(spark, tmp_path):
-    """Versioned commits: history grows per op, read_version time
-    travels, vacuum respects the retention window and never deletes
-    the latest version."""
-    from fsc_etl_spark.operators.merge import ParquetMergeTarget
-
-    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"), retain_versions=2)
-    t.overwrite(_df(spark, {1: (10, 1)}))                      # v0
-    t.merge(_df(spark, {1: (11, 2), 2: (20, 2)}), ["k"])       # v1
-    t.merge(_df(spark, {3: (30, 3)}), ["k"])                   # v2
-    hist = t.history()
-    assert [e["version"] for e in hist] == [0, 1, 2]
-    assert [e["op"] for e in hist] == ["overwrite", "merge", "merge"]
-    assert all(e["available"] for e in hist)  # window = latest + 2
-    assert _state(t.read_version(0)) == {1: (10, 1)}
-    assert _state(t.read_version(1)) == {1: (11, 2), 2: (20, 2)}
-    assert _state(t.read()) == {1: (11, 2), 2: (20, 2), 3: (30, 3)}
-    t.merge(_df(spark, {4: (40, 4)}), ["k"])                   # v3 -> v0 auto-vacuumed
-    hist = t.history()
-    assert [e["available"] for e in hist] == [False, True, True, True]
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        t.read_version(0)
-    # explicit tighter vacuum: keep only the latest
-    assert t.vacuum(0) == 2
-    assert _state(t.read()) == {1: (11, 2), 2: (20, 2), 3: (30, 3), 4: (40, 4)}
 
 
 def test_commit_lock_rejects_concurrent_writer(spark, tmp_path):
@@ -357,47 +279,25 @@ def test_commit_lock_rejects_concurrent_writer(spark, tmp_path):
     assert _state(t.read()) == {2: (20, 2)}
 
 
-def test_table_changes_cdf_row_types(spark, tmp_path):
-    """CDF between retained versions: inserts/updates/deletes classify
-    exactly, unchanged rows never appear."""
-    from fsc_etl_spark.operators.cdc import table_changes
+def test_commit_swap_stays_under_table_root(spark, tmp_path, monkeypatch):
+    """A commit moves the live version aside inside the table root, so
+    it works whatever the temp dir is: a rename cannot cross
+    filesystems, and a tmpfs temp dir is a different one from the lake.
+    A missing temp dir fails any rename into it the same way."""
+    import os
+    import tempfile
+
     from fsc_etl_spark.operators.merge import ParquetMergeTarget
 
-    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"), retain_versions=3)
-    t.overwrite(_df(spark, {1: (10, 1), 2: (20, 1), 3: (30, 1)}))   # v0
-    # v1: update k=1, insert k=4, keep 2 and 3
-    t.merge(_df(spark, {1: (11, 2), 4: (40, 2)}), ["k"])
-    # v2: delete k=3 (overwrite without it), keep rest
-    t.overwrite(_df(spark, {1: (11, 2), 2: (20, 1), 4: (40, 2)}))
-    ch01 = {
-        (r["k"], r["_change_type"]) for r in table_changes(t, 0, 1, ["k"]).collect()
-    }
-    assert ch01 == {(1, "update_postimage"), (4, "insert")}
-    ch12 = {
-        (r["k"], r["_change_type"]) for r in table_changes(t, 1, 2, ["k"]).collect()
-    }
-    assert ch12 == {(3, "delete")}
-    ch02 = {
-        (r["k"], r["_change_type"]) for r in table_changes(t, 0, 2, ["k"]).collect()
-    }
-    assert ch02 == {(1, "update_postimage"), (4, "insert"), (3, "delete")}
+    first, second = _df(spark, {1: (10, 1)}), _df(spark, {2: (20, 2)})
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "no-such-dir"))
+    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"))
+    t.overwrite(first)
+    t.overwrite(second)
+    assert _state(t.read()) == {2: (20, 2)}
+    assert sorted(os.listdir(t.root)) == ["current"]
 
 
-def test_vacuum_older_than_time_retention(spark, tmp_path):
-    """Time-based retention: old versions purge, recent and latest
-    survive; hours=0 purges everything but the latest."""
-    from fsc_etl_spark.operators.merge import ParquetMergeTarget
-
-    t = ParquetMergeTarget(spark, str(tmp_path / "tbl"), retain_versions=10)
-    t.overwrite(_df(spark, {1: (10, 1)}))
-    t.overwrite(_df(spark, {1: (11, 2)}))
-    t.overwrite(_df(spark, {1: (12, 3)}))
-    # Nothing is older than an hour yet.
-    assert t.vacuum_older_than(1.0) == 0
-    # hours=0: everything but the latest goes.
-    assert t.vacuum_older_than(0) == 2
-    assert [e["available"] for e in t.history()] == [False, False, True]
-    assert _state(t.read()) == {1: (12, 3)}
 
 
 # ---------------------------------------------------------------------------
