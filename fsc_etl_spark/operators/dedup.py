@@ -5,7 +5,7 @@ standard toolbox for training-data pipelines:
 
 - exact: hash-groupBy on canonical text. One shuffle on the hash.
 - MinHash + LSH: shingle → k salted min-hashes → band buckets →
-  candidate pairs by bucket equi-join. Near-linear; the 100 TB path.
+  candidate pairs by bucket equi-join. Near-linear.
 - n-gram Jaccard: inverted-index self-join with exact similarity —
   quadratic in documents sharing a token, used to verify/threshold
   candidates (cap document frequency to bound the blowup at scale).
@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 
 from fsc_etl_spark.functions.text import fingerprint_md5, shingles_from_tokens, tokens
 from fsc_etl_spark.operators.cache import cache_scope
-from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism
+from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism, sym_edges
 
 
 def exact_dedup_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -84,7 +84,7 @@ def minhash_signatures(
     union them back explicitly.
     """
     text = F.lower(F.col(text_col)) if canonicalize else F.col(text_col)
-    # Under-split scan guard (r14): the gate fixtures are single-row-
+    # Under-split scan guard: the gate fixtures are single-row-
     # group parquet, so the tokenize + shingle + salted-md5 work below
     # would otherwise run on ONE core (measured 1.94->0.64 s at
     # sf0.1); a no-op on properly split inputs.
@@ -167,10 +167,10 @@ def lsh_candidate_pairs(
 #: Past this many DISTINCT masks the bitmap path's m×m broadcast mask
 #: pairing stops being the cheap plan (m² two-popcount evaluations plus
 #: an m-row broadcast) and ``auto`` falls back to PPJoin prefix
-#: filtering (VERDICT r9 #3: m ≤ min(n, 2^|vocab|) is NOT small by
-#: construction — a 62-token vocab over a huge corpus can reach
-#: millions of distinct masks). 65_536² ≈ 4.3e9 codegen'd bit-ops is
-#: the measured comfortable ceiling on a 32-thread executor profile.
+#: filtering (m ≤ min(n, 2^|vocab|) is NOT small by construction — a
+#: 62-token vocab over a huge corpus can reach millions of distinct
+#: masks). 65_536² ≈ 4.3e9 codegen'd bit-ops is the measured
+#: comfortable ceiling on a 32-thread executor profile.
 BITMAP_MASK_LIMIT = 65_536
 
 
@@ -202,7 +202,7 @@ def jaccard_token_pairs(
       a prefix token); candidates pass the length filter
       ``t·|A| ≤ |B| ≤ |A|/t`` and are verified exactly against the
       full posting lists. Cost scales with near-dup density, not
-      corpus² — this is the 100 TB path for real text, where the
+      corpus² — this is the path for real text, where the
       frequency-sorted prefix is rare tokens with short posting lists.
 
     ``max_df`` remains an optional LOSSY accelerator (drops tokens
@@ -244,7 +244,7 @@ def _jaccard_toks(
     full (id, tok) distinct shuffle."""
     from fsc_etl_spark.sources.readers import parallel_scan
 
-    # under-split scan guard (r14; see minhash_signatures)
+    # under-split scan guard (see minhash_signatures)
     docs = parallel_scan(docs.select(F.col(id_col), F.col(text_col)))
     toks = docs.select(
         F.col(id_col),
@@ -254,34 +254,6 @@ def _jaccard_toks(
         rare = toks.groupBy("tok").count().filter(F.col("count") <= max_df).select("tok")
         toks = toks.join(rare, "tok", "left_semi")
     return toks
-
-
-def jaccard_chosen_strategy(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-    mask_limit: int = BITMAP_MASK_LIMIT,
-) -> str:
-    """Which physical path ``jaccard_token_pairs(strategy="auto")``
-    would pick for THIS input — probe-only introspection (VERDICT r9
-    #2): the scale probe records the choice per SF so an adaptive
-    strategy switch between scales can't masquerade as (or hide) a
-    plan regression. Runs the same two probes auto runs: the 63-token
-    vocabulary peek, then the distinct-mask count guard."""
-    toks = _jaccard_toks(docs, text_col, id_col, max_df)
-    vocab = [r["tok"] for r in toks.select("tok").distinct().limit(63).collect()]
-    if len(vocab) > 62:
-        return "prefix(vocab>62)"
-    m = (
-        _doc_masks(toks, id_col, sorted(vocab))
-        .select("mask")
-        .distinct()
-        .count()
-    )
-    if m <= mask_limit:
-        return f"bitmap(masks={m})"
-    return f"prefix(mask_guard masks={m})"
 
 
 def _doc_masks(toks: DataFrame, id_col: str, vocab: list[str]) -> DataFrame:
@@ -423,7 +395,7 @@ def simhash_sig(
     portable to the SQL oracle (hex-cast + shifts exist in both).
     """
     assert 1 <= n_bits <= 60, "md5-derived hash provides 60 usable bits"
-    # Under-split scan guard (r14; see minhash_signatures) — the
+    # Under-split scan guard (see minhash_signatures) — the
     # tokenize + md5 vote work below otherwise runs on one core over
     # the single-row-group gate fixtures.
     from fsc_etl_spark.sources.readers import parallel_scan
@@ -506,27 +478,15 @@ def connected_components_min_label(
     per round to truncate lineage, terminating on a converged round
     (fixpoint is unique, so the output is deterministic regardless of
     execution order). Rounds needed = graph diameter; near-dup graphs
-    are star/clique-like (diameter ~2-3). For adversarially long chains
-    at web scale, swap in :func:`connected_components_star` (O(log n)
+    are star/clique-like (diameter ~2-3). For adversarially long chains,
+    swap in :func:`connected_components_star` (O(log n)
     rounds) — same join/groupBy primitives, identical output.
     """
     with cache_scope() as cs:
         # both directions in ONE pass over the pair subtree: the
         # union-of-two-selects form re-ran the whole LSH candidate build
         # once per branch (Catalyst does not reuse it across branches)
-        edges = cs.checkpoint(
-            pairs.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .distinct(),
-            eager=False,
-        )
+        edges = cs.checkpoint(sym_edges(pairs, "id_a", "id_b").distinct(), eager=False)
         converged = False
         # Propagate only over nodes that touch an edge: near-dup graphs
         # are a sliver of the corpus, so the per-round label table (and
@@ -644,16 +604,7 @@ def connected_components_star(
         # form re-ran this sub-round's INPUT subtree per branch — for
         # the small-star that input is the whole un-checkpointed
         # large-star (window included), i.e. the round cost doubled.
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        from pyspark.sql import Window
-
+        sym = sym_edges(e, "src", "dst")
         m = F.least(F.col("src"), F.min("dst").over(Window.partitionBy("src")))
         sm = sym.withColumn("m", m)
         if large:

@@ -18,10 +18,11 @@ lowers to); the per-source degree is computed once and reused.
 Personalized PageRank is the same loop (``pagerank_integer(seeds=)``)
 with the teleport mass on the seeds; HITS keeps its own loop, since
 its L1 renormalisation shares no arithmetic with damping.
-Triangle counting joins the canonical (lo < hi) edge list to itself
-on the shared middle vertex, then closes wedges with a semi join —
-never materialising anything bigger than the wedge set, which is the
-standard distributed algorithm (node-iterator join).
+The triangle census, the per-node triangle counts and the k-truss
+peel read one degree-oriented closure (:func:`triangle_closure`),
+which intersects sorted forward adjacencies and never materialises
+the wedge set. BFS and the per-seed ball sizes share one frontier
+loop (:func:`frontier_bfs`).
 """
 
 from __future__ import annotations
@@ -29,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from fsc_etl_spark.operators.cache import cache_scope
+from fsc_etl_spark.operators.cache import CacheScope, cache_scope
+from fsc_etl_spark.operators.pairs import sym_edges
 
 #: fixed-point scale for integer PageRank and HITS: rank 1.0 == 10^9 units.
 RANK_SCALE = 10**9
@@ -358,6 +360,85 @@ def label_propagation(
     return labels
 
 
+def canonical_edges(edges: DataFrame) -> DataFrame:
+    """The distinct undirected edges ``(lo, hi)``, ``lo < hi``, of a
+    ``(src, dst)`` pair list given in either direction; self-loops
+    drop."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
+        )
+        .filter(F.col("lo") < F.col("hi"))
+        .distinct()
+    )
+
+
+def triangle_closure(cs: CacheScope, canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-oriented triangle closure (compact-forward) of the
+    canonical edges ``canon`` (:func:`canonical_edges`), with its
+    caches made in the caller's scope ``cs``.
+
+    Every edge is oriented from its lower-(degree, id) endpoint ``u``
+    to the higher one ``v``, and each oriented edge is paired with
+    ``ws = N+(u) ∩ N+(v)``, the intersection of the two SORTED
+    forward-adjacency arrays: each triangle closes exactly once, at
+    its lowest-ordered vertex. Max forward degree in this orientation
+    is O(sqrt(m)), so adjacency rows stay bounded under hubs, and the
+    intersection never materialises the wedge set (the wedge-pair
+    join it replaced shuffled ~m^1.5 rows, 41M at sf0.1, before the
+    closing semi join; the intersection does the same work inside a
+    map-side expression over the m oriented edges).
+
+    Both adjacency joins are shuffle-hash, not sort-merge: the
+    adjacency side is one bounded-width row per node (the build
+    side), while sorting would buffer every edge row WITH its attached
+    O(sqrt m) arrays, the sort buffer that blows small heaps. The hash
+    build on the per-node side streams the edges untouched.
+
+    Returns ``(deg, closed)``: ``(node, d)`` for every endpoint, and
+    ``(u, v, ws)`` for every oriented edge whose head has forward
+    neighbours (any other edge closes no triangle).
+    """
+    deg = cs.persist(
+        # both endpoints in ONE pass over the canonical edges: the
+        # union-of-two-selects form raced 2x tasks against the unbuilt
+        # cache partitions — explode reads each partition once.
+        canon.select(F.explode(F.array("lo", "hi")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
+    dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
+    lo_first = (F.col("dlo") < F.col("dhi")) | (
+        (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
+    )
+    oriented = cs.persist(
+        canon.join(dl, "lo")
+        .join(dh, "hi")
+        .select(
+            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
+            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
+        )
+        # read three times (adjacency build + both join streams) and
+        # adj itself feeds two differently-keyed exchanges — without
+        # the persists each consumer re-ran the canon⋈deg⋈deg
+        # orientation from scratch (measured ~25 task-s of duplicate
+        # work at sf0.1).
+    )
+    adj = cs.persist(
+        oriented.groupBy("u")
+        .agg(F.sort_array(F.collect_list("v")).alias("nb"))
+    )
+    a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
+    a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
+    closed = (
+        oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
+        .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
+        .select("u", "v", F.array_intersect("__nbu", "__nbv").alias("ws"))
+    )
+    return deg, closed
+
+
 def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected graph.
 
@@ -370,24 +451,11 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     All of n_nodes / n_edges / n_wedges fall out of ONE aggregate over
     the degree table (sum(d) == 2·edges; wedges == sum d(d-1)/2), so
     the census costs a single groupBy + scalar agg beyond the triangle
-    enumeration itself.
+    closure itself (:func:`triangle_closure`), whose intersections
+    are summed.
     """
     with cache_scope() as cs:
-        canon = cs.persist(
-            edges.select(
-                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-            )
-            .filter(F.col("lo") < F.col("hi"))
-            .distinct()
-        )
-        deg = cs.persist(
-            # both endpoints in ONE pass over the canon cache: the
-            # union-of-two-selects form raced 2x tasks against the unbuilt
-            # cache partitions — explode reads each partition once.
-            canon.select(F.explode(F.array("lo", "hi")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+        deg, closed = triangle_closure(cs, cs.persist(canonical_edges(edges)))
         census = deg.agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.coalesce(F.expr("sum(d) div 2"), F.lit(0).cast("long")).alias("n_edges"),
@@ -395,56 +463,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
                 F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0).cast("long")
             ).alias("n_wedges"),
         )
-        # Degree-oriented counting (compact-forward): orient every edge
-        # from its lower-(degree, id) endpoint to the higher one, then for
-        # each oriented edge (u, v) count |N+(u) ∩ N+(v)| by intersecting
-        # the two SORTED forward-adjacency arrays — each triangle is
-        # counted exactly once, at its lowest-ordered vertex. Max forward
-        # degree in this orientation is O(sqrt(m)), so adjacency rows stay
-        # bounded under hubs, and the intersection form never materialises
-        # the wedge set at all (the wedge-pair join this replaces shuffled
-        # ~m^1.5 rows — 41M at sf0.1 — before the closing semi join; the
-        # intersection does the same work inside a map-side expression
-        # over the m oriented edges).
-        dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
-        dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
-        lo_first = (F.col("dlo") < F.col("dhi")) | (
-            (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
-        )
-        oriented = cs.persist(
-            canon.join(dl, "lo")
-            .join(dh, "hi")
-            .select(
-                F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-                F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-            )
-            # read three times (adjacency build + both join streams) and
-            # adj itself feeds two differently-keyed exchanges — without
-            # the persists each consumer re-ran the canon⋈deg⋈deg
-            # orientation from scratch (measured ~25 task-s of duplicate
-            # work at sf0.1).
-        )
-        adj = cs.persist(
-            oriented.groupBy("u")
-            .agg(F.sort_array(F.collect_list("v")).alias("nb"))
-        )
-        a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
-        a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
-        closed = (
-            # shuffle-hash, not sort-merge: the adjacency side is one
-            # bounded-width row per node (build side), while sorting would
-            # buffer every edge row WITH its attached O(sqrt m) arrays —
-            # that sort buffer is what blows small heaps, and at cluster
-            # scale it's pure wasted width through two sorts. Hash build
-            # on the per-node side streams the edges untouched.
-            oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
-            # inner join: an edge whose head has no forward neighbours
-            # contributes zero triangles and may drop
-            .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
-            .select(F.size(F.array_intersect("__nbu", "__nbv")).alias("k"))
-        )
         n_tri = closed.agg(
-            F.coalesce(F.sum("k"), F.lit(0)).cast("long").alias("n_triangles")
+            F.coalesce(F.sum(F.size("ws")), F.lit(0)).cast("long").alias("n_triangles")
         )
         return cs.result(cs.checkpoint(census.crossJoin(n_tri)))
 
@@ -454,100 +474,38 @@ def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     the node-resolved sibling of :func:`triangle_stats`,
     feeding local-clustering-coefficient readouts.
 
-    Same compact-forward orientation (orient each edge toward the
-    higher-(degree, id) endpoint, forward degree O(sqrt m)): for an
-    oriented edge (u, v) the sorted-adjacency intersection
-    ``N+(u) ∩ N+(v)`` closes each triangle exactly once, so u and v
-    are credited ``|∩|`` and each common neighbor w is credited 1 via
-    one explode — total exploded rows == 3·n_triangles, linear in the
-    triangle count, never the wedge set.
+    Over the closed edges of :func:`triangle_closure`, each oriented
+    edge (u, v) credits u and v with ``|ws|`` and each common neighbor
+    w in ``ws`` with 1 — total credit rows == 3·n_triangles, linear in
+    the triangle count, never the wedge set.
 
     Returns ``(node, d, triangles)`` for EVERY node (distinct-neighbor
     degree; triangles 0 when none), eager-checkpointed with the
     canon/deg caches released.
     """
     with cache_scope() as cs:
-        canon = cs.persist(
-            edges.select(
-                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-            )
-            .filter(F.col("lo") < F.col("hi"))
-            .distinct()
-        )
-        deg = cs.persist(
-            # both endpoints in ONE pass over the canon cache (see
-            # triangle_stats — same union-races-the-unbuilt-cache fix)
-            canon.select(F.explode(F.array("lo", "hi")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        dl = deg.select(F.col("node").alias("lo"), F.col("d").alias("dlo"))
-        dh = deg.select(F.col("node").alias("hi"), F.col("d").alias("dhi"))
-        lo_first = (F.col("dlo") < F.col("dhi")) | (
-            (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
-        )
-        oriented = cs.persist(
-            canon.join(dl, "lo")
-            .join(dh, "hi")
-            .select(
-                F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-                F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-            )
-            # consumed by the adjacency build AND the join stream; adj by
-            # two differently-keyed exchanges — persist both or every
-            # consumer re-runs the orientation joins (triangle_stats
-            # rationale)
-        )
-        adj = cs.persist(
-            oriented.groupBy("u")
-            .agg(F.sort_array(F.collect_list("v")).alias("nb"))
-        )
-        a_u = adj.select(F.col("u").alias("__au"), F.col("nb").alias("__nbu"))
-        a_v = adj.select(F.col("u").alias("__av"), F.col("nb").alias("__nbv"))
-        closed = (
-            # shuffle-hash for the same reason triangle_stats documents:
-            # the adjacency build side is one bounded-width row per node;
-            # sort-merge would buffer edge rows WITH O(sqrt m) arrays.
-            oriented.join(a_u.hint("shuffle_hash"), oriented["u"] == a_u["__au"])
-            .join(a_v.hint("shuffle_hash"), oriented["v"] == a_v["__av"])
-            .select("u", "v", F.array_intersect("__nbu", "__nbv").alias("ws"))
-            .filter(F.size("ws") > 0)
-        )
+        deg, closed = triangle_closure(cs, cs.persist(canonical_edges(edges)))
         # ONE pass over the closed-edge frame: a union of three selects
-        # would recompute the adjacency joins + intersections per branch
-        # (measured 8.75x at the 10x probe vs 3.1x for the global census);
-        # concat the u/v credits with the per-w credits into a single
-        # exploded struct array instead — map-side, joins evaluated once.
-        credits = closed.select(
+        # would recompute the adjacency joins + intersections per
+        # branch; concat the u/v credits with the per-w credits into a
+        # single exploded struct array instead — map-side, joins
+        # evaluated once.
+        credit = lambda node, c: F.struct(node.alias("node"), c.alias("c"))
+        credits = closed.filter(F.size("ws") > 0).select(
             F.explode(
                 F.concat(
                     F.array(
-                        F.struct(
-                            F.col("u").alias("node"), F.size("ws").alias("c")
-                        ),
-                        F.struct(
-                            F.col("v").alias("node"), F.size("ws").alias("c")
-                        ),
+                        credit(F.col("u"), F.size("ws")), credit(F.col("v"), F.size("ws"))
                     ),
-                    F.transform(
-                        "ws",
-                        lambda w: F.struct(
-                            w.alias("node"), F.lit(1).alias("c")
-                        ),
-                    ),
+                    F.transform("ws", lambda w: credit(w, F.lit(1))),
                 )
             ).alias("x")
         ).select(F.col("x.node").alias("node"), F.col("x.c").alias("c"))
         tri = credits.groupBy("node").agg(F.sum("c").cast("long").alias("triangles"))
-        out = (
-            deg.join(tri, "node", "left")
-            .select(
-                "node",
-                F.col("d").cast("long").alias("d"),
-                F.coalesce(F.col("triangles"), F.lit(0).cast("long")).alias(
-                    "triangles"
-                ),
-            )
+        out = deg.join(tri, "node", "left").select(
+            "node",
+            F.col("d").cast("long").alias("d"),
+            F.coalesce(F.col("triangles"), F.lit(0).cast("long")).alias("triangles"),
         )
         return cs.result(cs.checkpoint(out))
 
@@ -571,14 +529,12 @@ def ktruss_support(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     CTE-for-CTE. If the loop exhausts ``rounds`` unconverged, raise —
     a caller can never mistake a partial peel for the truss.
 
-    Scale shape: per round, support comes from degree-ORIENTED
-    triangle enumeration (the triangle_stats orientation — forward
-    adjacency bounded O(sqrt m) under hubs, so wedge work is O(m^1.5)
-    not sum-of-degree-squares), each found triangle exploding to its
-    3 member edges and sum-reducing on the canonical edge key; the
-    peel is one left join + filter. Survivors are eagerly
-    checkpointed per round (the round reads its predecessor many
-    times). Integer-only, bit-reproducible.
+    Scale shape: per round, support comes from the surviving edges'
+    :func:`triangle_closure`, each closed triangle exploding to its 3
+    member edges and sum-reducing on the canonical edge key; the peel
+    is one left join + filter. Survivors are checkpointed per round
+    (the round reads its predecessor many times). Integer-only,
+    bit-reproducible.
 
     Returns (lo, hi, sup): every truss edge with its within-truss
     support (BIGINT). Empty frame if the k-truss is empty.
@@ -588,86 +544,52 @@ def ktruss_support(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     with cache_scope() as cs:
-        cur = cs.checkpoint(
-            edges.select(
-                F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-            )
-            .filter(F.col("lo") < F.col("hi"))
-            .distinct()
-        )
+        cur = cs.checkpoint(canonical_edges(edges))
         prev: tuple[DataFrame, ...] = ()
         for _ in range(rounds):
-            # both directed orientations in ONE pass over the survivor
-            # frame (the union form scanned it twice)
-            und = cur.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("lo").alias("u"), F.col("hi").alias("v")),
-                        F.struct(F.col("hi").alias("u"), F.col("lo").alias("v")),
-                    )
-                ).alias("e")
-            ).select("e.u", "e.v")
-            deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-            ud = (
-                und.join(deg, "u")
-                .join(
-                    deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
-                )
-            )
-            # fwd feeds the adjacency build AND the triangle join stream;
-            # adj feeds two differently-keyed exchanges — persist both or
-            # each consumer re-runs the degree-orientation joins (the
-            # triangle_stats rationale). Released after the round's probe
-            # (the materializing action) below.
-            fwd = cs.persist(
-                ud.filter(
-                    (F.col("d") < F.col("dv"))
-                    | ((F.col("d") == F.col("dv")) & (F.col("u") < F.col("v")))
-                ).select("u", "v")
-            )
-            adj = cs.persist(
-                fwd.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
-            )
-            # every found triangle (u, v, w ∈ N+(u)∩N+(v)) contributes to
-            # its 3 member edges in ONE explode over the closed-edge rows:
-            # a tri-then-3-way-union would re-run the adjacency joins +
-            # intersections once per branch.
-            contrib = (
-                fwd.join(adj.select(F.col("u"), F.col("nb").alias("nb_u")), "u")
-                .join(
-                    adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
-                )
-                .select(
+            # the round's closure caches live in their own scope, which
+            # releases them once the under-support probe has
+            # materialised e
+            with cache_scope() as rs:
+                _, closed = triangle_closure(rs, cur)
+                # every closed triangle (u, v, w ∈ ws) supports its 3
+                # member edges in ONE explode over the closed-edge rows:
+                # a tri-then-3-way-union would re-run the adjacency
+                # joins + intersections once per branch.
+                contrib = closed.select(
                     F.explode(
                         F.expr(
-                            "flatten(transform(array_intersect(nb_u, nb_v), w ->"
+                            "flatten(transform(ws, w ->"
                             " array(struct(least(u, v) AS lo, greatest(u, v) AS hi),"
                             "       struct(least(u, w) AS lo, greatest(u, w) AS hi),"
                             "       struct(least(v, w) AS lo, greatest(v, w) AS hi))))"
                         )
                     ).alias("p")
+                ).select("p.lo", "p.hi")
+                s = contrib.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("sup"))
+                # Persisted, not checkpointed: once the under-support
+                # probe right below has materialised it (round and cache
+                # in ONE job), its statistics are its real size, so the
+                # survivors read from it start the next round's size
+                # estimate afresh. A checkpoint keeps the closure's
+                # estimate, the product of its cached join inputs, and
+                # its digit count then multiplies every round until
+                # planning alone stalls.
+                e = cs.persist(
+                    cur.join(s, ["lo", "hi"], "left").select(
+                        "lo",
+                        "hi",
+                        F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup"),
+                    )
                 )
-                .select("p.lo", "p.hi")
-            )
-            s = contrib.groupBy("lo", "hi").agg(F.count(F.lit(1)).alias("sup"))
-            # lazy: the under-support probe right below materializes
-            # round + checkpoint in ONE job
-            e = cs.checkpoint(
-                cur.join(s, ["lo", "hi"], "left").select(
-                    "lo",
-                    "hi",
-                    F.coalesce(F.col("sup"), F.lit(0)).cast("long").alias("sup"),
-                ),
-                eager=False,
-            )
-            n_under = e.filter(F.col("sup") < k - 2).count()
-            # e is materialised: this round's inputs and the previous
+                n_under = e.filter(F.col("sup") < k - 2).count()
+            # e is materialised: this round's input and the previous
             # round's support frame (read only by cur) are done
-            cs.release(cur, fwd, adj, *prev)
+            cs.release(cur, *prev)
             if n_under == 0:
-                return cs.result(e)
+                return cs.result(cs.checkpoint(e))
             # survivors stay lazy too — next round's probe materializes
-            # them off e's already-checkpointed partitions
+            # them off e's cached partitions
             cur = cs.checkpoint(
                 e.filter(F.col("sup") >= k - 2).select("lo", "hi"), eager=False
             )
@@ -677,6 +599,46 @@ def ktruss_support(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
         )
 
 
+def frontier_bfs(
+    cs: CacheScope, edges: DataFrame, start: DataFrame, keys: list[str], max_hops: int
+) -> DataFrame:
+    """Bounded-depth BFS rounds over directed ``(src, dst)``, with its
+    caches made in the caller's scope ``cs``.
+
+    ``start`` holds the hop-0 rows ``keys + [dist]``; ``keys`` ends
+    with ``node``, and the key columns before it (a BFS label such as
+    the seed) ride along unchanged. Each round joins ONLY the new
+    frontier against the edge list, dedups, then anti-joins the
+    visited set on ``keys`` — work per round is proportional to the
+    frontier, not the graph, and a key is labelled the first round it
+    is reached, which IS its minimum distance (no re-visits, no min
+    reduction needed).
+
+    Returns the visited rows ``keys + [dist]`` within ``max_hops``.
+    """
+    # pre-hashed on src once: each round's frontier join reuses the
+    # cache's HashPartitioning(src), so only the (small) frontier side
+    # shuffles — the edge list never re-exchanges per round
+    edges = cs.persist(edges.select("src", "dst").repartition(F.col("src")))
+    label = keys[:-1]
+    visited = start
+    frontier = visited.select(*keys)
+    for h in range(1, max_hops + 1):
+        # each round's frontier is materialised once; without this the
+        # visited lineage is re-evaluated 2^h times (it feeds both the
+        # anti-join and the union)
+        nxt = cs.persist(
+            frontier.join(edges, frontier["node"] == edges["src"])
+            .select(*label, F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select(*keys), keys, "left_anti")
+            .withColumn("dist", F.lit(h).cast("long"))
+        )
+        visited = visited.union(nxt)
+        frontier = nxt.select(*keys)
+    return visited
+
+
 def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
@@ -684,40 +646,16 @@ def bfs_hops(
 ) -> DataFrame:
     """Bounded-depth BFS over directed ``(src, dst)``: minimum hop
     distance (0..max_hops) from any node in ``sources`` (a one-column
-    ``node`` frame).
-
-    Pregel-shaped frontier expansion: each round joins ONLY the new
-    frontier against the edge list (shuffle keyed on src), then
-    anti-joins the visited set — work per round is proportional to the
-    frontier, not the graph, and a node is labelled the first round it
-    is reached, which IS its minimum distance (no re-visits, no min
-    reduction needed). Integer hop counts, so exactly reproducible.
+    ``node`` frame), by the Pregel-shaped frontier rounds of
+    :func:`frontier_bfs`. Integer hop counts, so exactly reproducible.
 
     Returns (node, dist) for every node within ``max_hops``.
     """
     with cache_scope() as cs:
-        # pre-hashed on src once: each round's frontier join reuses the
-        # cache's HashPartitioning(src), so only the (small) frontier
-        # side shuffles — the edge list never re-exchanges per round
-        edges = cs.persist(edges.select("src", "dst").repartition(F.col("src")))
-        visited = sources.select("node").distinct().withColumn(
+        start = sources.select("node").distinct().withColumn(
             "dist", F.lit(0).cast("long")
         )
-        frontier = visited.select("node")
-        for h in range(1, max_hops + 1):
-            # each round's frontier is materialised once; without this
-            # the visited lineage is re-evaluated 2^h times (it feeds
-            # both the anti-join and the union)
-            nxt = cs.persist(
-                frontier.join(edges, frontier["node"] == edges["src"])
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("dist", F.lit(h).cast("long"))
-            )
-            visited = visited.union(nxt)
-            frontier = nxt.select("node")
-        return cs.result(cs.checkpoint(visited))
+        return cs.result(cs.checkpoint(frontier_bfs(cs, edges, start, ["node"], max_hops)))
 
 
 def kcore_degrees(
@@ -734,8 +672,8 @@ def kcore_degrees(
     distinct undirected edges (self-loops dropped). At most ``rounds``
     peel rounds run, with an early exit the first round that finds no
     under-degree node (one cheap count per round on the degree
-    aggregate the peel needs anyway — at 10x data the post-fixpoint
-    rounds were the dominant cost). Peeling is monotone, so a fixed
+    aggregate the peel needs anyway; without it the rounds past the
+    fixpoint dominate the cost on larger inputs). Peeling is monotone, so a fixed
     ``rounds``-deep SQL unroll computes the SAME fixpoint the early
     exit does whenever convergence happens within ``rounds`` — which
     is what lets the oracle mirror the computation CTE-for-CTE (same
@@ -761,32 +699,16 @@ def kcore_degrees(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
     with cache_scope() as cs:
         # symmetric directed form: degree(v) == out-degree(v), and removing
         # a node means dropping rows where it appears on EITHER side. Both
-        # directions in ONE pass over the canonical list, then pre-hashed
-        # on src ONCE: every peel round's degree aggregate reuses the
-        # checkpoint's HashPartitioning(src) exchange-free, and the
-        # (small) peel sets anti-join as broadcasts that preserve it — so
-        # the per-round exchange disappears entirely.
+        # directions of the canonical list, then pre-hashed on src ONCE:
+        # every peel round's degree aggregate reuses the checkpoint's
+        # HashPartitioning(src) exchange-free, and the (small) peel sets
+        # anti-join as broadcasts that preserve it — so the per-round
+        # exchange disappears entirely.
         cur = cs.checkpoint(
-            canon.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("lo").alias("src"), F.col("hi").alias("dst")),
-                        F.struct(F.col("hi").alias("src"), F.col("lo").alias("dst")),
-                    )
-                ).alias("e")
-            )
-            .select("e.src", "e.dst")
-            .repartition(F.col("src"))
+            sym_edges(canonical_edges(edges), "lo", "hi").repartition(F.col("src"))
         )
         converged = False
         # The survivor checkpoint is LAZY: the next round's bad.count()
@@ -976,36 +898,20 @@ def multi_source_ball_sizes(
     state is the labeled visited set, Σ_seeds |ball(seed, h)| rows,
     linear in seeds x reach by construction).
 
-    Pregel-shaped labeled BFS on the composite (seed, node) key:
-    each round joins ONLY the new frontier against the edge list
-    (shuffle keyed on node=src), dedups, then anti-joins the visited
-    set on (seed, node) — a node is labeled per seed the first round
-    it is reached, which IS its distance from that seed. Integer
-    arithmetic only; per-round frontiers are persisted (each feeds
-    both the anti join and the union, the bfs_hops discipline).
+    The labeled BFS of :func:`frontier_bfs` on the composite (seed,
+    node) key: a node is labeled per seed the first round it is
+    reached, which IS its distance from that seed. Integer arithmetic
+    only.
 
     Returns (seed, dist, n_nodes), zero rows for hops past exhaustion.
     """
     with cache_scope() as cs:
-        # pre-hashed on src once (the bfs_hops discipline): only the
-        # frontier side shuffles per round
-        edges = cs.persist(edges.select("src", "dst").repartition(F.col("src")))
-        visited = (
+        start = (
             seeds.select("node")
             .distinct()
             .select(F.col("node").alias("seed"), F.col("node"), F.lit(0).cast("long").alias("dist"))
         )
-        frontier = visited.select("seed", "node")
-        for h in range(1, max_hops + 1):
-            nxt = cs.persist(
-                frontier.join(edges, frontier["node"] == edges["src"])
-                .select("seed", F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("seed", "node"), ["seed", "node"], "left_anti")
-                .withColumn("dist", F.lit(h).cast("long"))
-            )
-            visited = visited.union(nxt)
-            frontier = nxt.select("seed", "node")
+        visited = frontier_bfs(cs, edges, start, ["seed", "node"], max_hops)
         return cs.result(
             cs.checkpoint(
                 visited.groupBy("seed", "dist").agg(F.count(F.lit(1)).alias("n_nodes"))

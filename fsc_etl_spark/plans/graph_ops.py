@@ -187,8 +187,8 @@ _KTRUSS_ROUNDS = 16
 
 
 def ktruss_coparts(spark: SparkSession, sf: str) -> DataFrame:
-    """4-truss of the part co-occurrence graph (round 11 —
-    operators/graph.ktruss_support): the maximal subgraph where every
+    """4-truss of the part co-occurrence graph
+    (operators/graph.ktruss_support): the maximal subgraph where every
     edge sits in >= 2 triangles, by fixed-round support peeling with
     early exit (Cohen 2008) — the cohesive-community step past the
     k-core (every k-truss nests inside the (k-1)-core but is strictly
@@ -197,9 +197,9 @@ def ktruss_coparts(spark: SparkSession, sf: str) -> DataFrame:
     range — so the oracle hashes the full peel without shipping ~1e5
     edge rows.
 
-    Scale shape: per round one degree-oriented triangle enumeration
-    (forward adjacency O(sqrt m) under hubs — the triangle_stats
-    orientation, so wedge work is O(m^1.5)), one 3-way edge-explode +
+    Scale shape: per round one degree-oriented triangle closure
+    (forward adjacency O(sqrt m) under hubs — operators/graph.
+    triangle_closure, so wedge work is O(m^1.5)), one 3-way edge-explode +
     keyed sum, one left-join peel; survivors checkpoint eagerly.
     Converges in 3 rounds at sf0.01 but 8 at sf0.1 (the sparser
     co-parts graph has a long peel tail), so the fixed unroll is
@@ -711,7 +711,7 @@ def graph_conductance(spark: SparkSession, sf: str) -> DataFrame:
 
 def local_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
     """Local-clustering-coefficient histogram of the part co-occurrence
-    graph (round 13 — operators/graph.triangle_counts_per_node): per
+    graph (operators/graph.triangle_counts_per_node): per
     node lcc = 2·tri(v) / (d(v)·(d(v)−1)) (Watts & Strogatz 1998),
     the node-resolved companion of `triangle_count_coparts`'s global
     census — a curation pipeline reads the lcc distribution to

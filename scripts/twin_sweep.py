@@ -5,15 +5,18 @@ scale — a divergence means one path has an accumulation-order,
 rounding, or tie-break dependency the oracle gate alone might sample
 past.
 
-Run: python scripts/twin_sweep.py  (prints one PASS/FAIL line per
-(pair, sf) and a final summary; exit 1 on any divergence).
+Run: python scripts/twin_sweep.py  (from any directory; prints one
+PASS/FAIL line per (pair, sf) and a final summary; exit 1 on any
+divergence).
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+REPO_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO_ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from fsc_etl_spark.session import get_spark  # noqa: E402

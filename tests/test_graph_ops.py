@@ -17,8 +17,10 @@ from fsc_etl_spark.operators.cache import checkpoint_rdd_ids
 from fsc_etl_spark.operators.graph import (
     bfs_hops,
     kcore_degrees,
+    ktruss_support,
     pagerank_integer,
     skyline_2d,
+    triangle_counts_per_node,
     triangle_stats,
 )
 from fsc_etl_spark.testing import persisted_rdd_ids
@@ -92,16 +94,27 @@ def test_triangle_stats_known_graph(spark):
         5,
         1,
     )
+    pernode = {
+        r["node"]: (r["d"], r["triangles"])
+        for r in triangle_counts_per_node(edges).collect()
+    }
+    assert pernode == {"1": (2, 1), "2": (2, 1), "3": (3, 1), "4": (1, 0)}
+    truss = {(r["lo"], r["hi"], r["sup"]) for r in ktruss_support(edges, k=3).collect()}
+    assert truss == {("1", "2", 1), ("1", "3", 1), ("2", "3", 1)}
+    assert ktruss_support(edges, k=4).collect() == []
 
 
 def test_triangle_stats_empty(spark):
-    row = triangle_stats(_edges(spark, []).filter(F.lit(False))).collect()[0]
+    empty = _edges(spark, []).filter(F.lit(False))
+    row = triangle_stats(empty).collect()[0]
     assert (row["n_nodes"], row["n_edges"], row["n_wedges"], row["n_triangles"]) == (
         0,
         0,
         0,
         0,
     )
+    assert triangle_counts_per_node(empty).collect() == []
+    assert ktruss_support(empty, k=3).collect() == []
 
 
 def test_bfs_hops_min_distance_and_bound(spark):
