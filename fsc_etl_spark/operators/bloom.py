@@ -124,8 +124,6 @@ def bloom_pruned_semi_join(
     keys: DataFrame,
     fact_col: str,
     key_col: str,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
     """Exact semi join with a bloom pre-filter on the fact side.
 
@@ -136,7 +134,7 @@ def bloom_pruned_semi_join(
     bloom fits in a literal; with a broadcastable key set the plain
     broadcast semi join (J3) is already optimal.
     """
-    words = build_bloom(keys, key_col, num_bits, num_hashes)
-    pruned = fact.filter(might_contain(words, F.col(fact_col), num_hashes))
+    words = build_bloom(keys, key_col)
+    pruned = fact.filter(might_contain(words, F.col(fact_col)))
     rhs = keys.select(F.col(key_col).alias(fact_col)).distinct()
     return pruned.join(rhs, fact_col, "left_semi")

@@ -27,12 +27,18 @@ from pyspark.sql import functions as F
 
 from fsc_etl_spark.operators.cache import cache_scope
 
+#: quantization grid: floor(x * QUANT_SCALE); the oracles replay the
+#: same floor(x*127)
+QUANT_SCALE = 127
 
-def quantize(col: Column, scale: int = 127) -> Column:
-    """float array -> exact int64 array: floor(x * scale). One float
-    multiply + floor — both correctly-rounded IEEE ops, so identical
-    across engines."""
-    return F.transform(col, lambda x: F.floor(x.cast("double") * scale).cast("long"))
+
+def quantize(col: Column) -> Column:
+    """float array -> exact int64 array: floor(x * QUANT_SCALE). One
+    float multiply + floor — both correctly-rounded IEEE ops, so
+    identical across engines."""
+    return F.transform(
+        col, lambda x: F.floor(x.cast("double") * QUANT_SCALE).cast("long")
+    )
 
 
 def _dist_to(vec: Column, centroid: list[int]) -> Column:
@@ -46,10 +52,11 @@ def _dist_to(vec: Column, centroid: list[int]) -> Column:
     )
 
 
-def assign_clusters(vectors: DataFrame, centroids: list[list[int]], vec_col: str = "q") -> DataFrame:
-    """Map-side assignment: argmin over the centroid literals with a
-    lowest-id tie-break. Adds ``cluster`` and ``dist`` columns."""
-    dists = [_dist_to(F.col(vec_col), c) for c in centroids]
+def assign_clusters(vectors: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """Map-side assignment of the quantized vectors in column ``q``:
+    argmin over the centroid literals with a lowest-id tie-break. Adds
+    ``cluster`` and ``dist`` columns."""
+    dists = [_dist_to(F.col("q"), c) for c in centroids]
     best_cluster = F.lit(0)
     best_dist = dists[0]
     for i, d in enumerate(dists[1:], start=1):
@@ -59,15 +66,13 @@ def assign_clusters(vectors: DataFrame, centroids: list[list[int]], vec_col: str
     return vectors.withColumn("cluster", best_cluster).withColumn("dist", best_dist)
 
 
-def update_centroids(
-    assigned: DataFrame, prev: list[list[int]], vec_col: str = "q"
-) -> list[list[int]]:
-    """One partial-agg shuffle of (cluster, dim) integer sums, then
-    floor-div means collected as the next k x d literal state. Empty
-    clusters keep their previous centroid."""
+def update_centroids(assigned: DataFrame, prev: list[list[int]]) -> list[list[int]]:
+    """One partial-agg shuffle of (cluster, dim) integer sums of column
+    ``q``, then floor-div means collected as the next k x d literal
+    state. Empty clusters keep their previous centroid."""
     k, d = len(prev), len(prev[0])
     per_dim = (
-        assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("dim", "val"))
+        assigned.select("cluster", F.posexplode(F.col("q")).alias("dim", "val"))
         .groupBy("cluster", "dim")
         .agg(F.expr("sum(val) div count(1)").alias("m"))
     )
@@ -81,9 +86,6 @@ def train_codebook(
     emb: DataFrame,
     k: int = 64,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 127,
 ) -> list[list[float]]:
     """Distributed deterministic Lloyd training of a SCALE-SIZED float
     codebook (VERDICT r6 "What's missing" #2): the trainer behind the
@@ -94,7 +96,7 @@ def train_codebook(
     scale.
 
     Same exact-arithmetic discipline as :func:`kmeans_exact` — vectors
-    quantize to int64 (``floor(x*scale)``), every distance decision
+    quantize to int64 (:func:`quantize`), every distance decision
     and centroid update is integer-exact, init is the ``k`` lowest-id
     vectors, ties break on lowest cluster id, empty clusters keep
     their centroid — so the result is a pure function of the data (no
@@ -113,14 +115,14 @@ def train_codebook(
     (partial-agg collapses map-side), one bounded k*d driver collect —
     the classic broadcast-the-model shape; nothing scales with corpus
     size except the scan. Returns centroids DEQUANTIZED to floats
-    (``m/scale``), ready for :func:`assign_cells_pandas` /
+    (``m/QUANT_SCALE``), ready for :func:`assign_cells_pandas` /
     ``semdedup_prune(assign_strategy="pandas")``.
     """
     import numpy as np
     import pandas as pd
 
-    q = emb.select(F.col(id_col), quantize(F.col(vec_col), scale).alias("q"))
-    init = q.orderBy(id_col).limit(k).collect()  # bounded: k rows
+    q = emb.select("vec_id", quantize(F.col("embedding")).alias("q"))
+    init = q.orderBy("vec_id").limit(k).collect()  # bounded: k rows
     if not init:
         raise ValueError("train_codebook: empty input")
     cent = [list(r["q"]) for r in init]
@@ -180,34 +182,31 @@ def train_codebook(
         for r in rows:
             nxt[r["cluster"]][r["dim"]] = r["m"]
         cent = nxt
-    return [[c / float(scale) for c in row] for row in cent]
+    return [[c / float(QUANT_SCALE) for c in row] for row in cent]
 
 
-def scaled_codebook_size(
-    n_vectors: int, target_cell: int = 512, k_min: int = 8, k_max: int = 1024
-) -> int:
-    """Data-grown codebook size: k = clamp(n/target_cell, k_min, k_max),
-    so per-cell population stays ~``target_cell`` as the corpus grows
+def scaled_codebook_size(n_vectors: int) -> int:
+    """Data-grown codebook size: k = clamp(n // 512, 8, 1024), so
+    per-cell population stays ~512 as the corpus grows
     and any within-cell pairwise step stays LINEAR in the corpus (the
     way SemDeDup's own paper sizes ~50k clusters for LAION scale).
     Integer-exact and shared by the trained queries and their oracle
     generators, so both grow the same codebook."""
-    return max(k_min, min(k_max, n_vectors // target_cell))
+    return max(8, min(1024, n_vectors // 512))
 
 
 def kmeans_exact(
     emb: DataFrame,
     k: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic Lloyd K-Means; returns per-cluster
-    (cluster_id, n_members, total_dist) after ``iters`` update rounds
-    plus a final assignment — all exact integers."""
-    q = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("q"))
+    """Deterministic Lloyd K-Means of ``embedding`` keyed by ``vec_id``;
+    returns per-cluster (cluster_id, n_members, total_dist) after
+    ``iters`` update rounds plus a final assignment — all exact
+    integers."""
+    q = emb.select("vec_id", quantize(F.col("embedding")).alias("q"))
     init = (
-        q.orderBy(id_col).limit(k).collect()
+        q.orderBy("vec_id").limit(k).collect()
     )  # k lowest ids — bounded, deterministic
     centroids = [list(r["q"]) for r in init]
     for _ in range(iters):
@@ -226,19 +225,17 @@ def kmeans_exact(
 def kcenter_greedy(
     emb: DataFrame,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 127,
 ) -> DataFrame:
-    """Deterministic greedy k-center coreset (Gonzalez 1985): pick the
-    lowest-id vector, then ``k-1`` times the point FARTHEST from the
-    chosen set (squared L2, ties to the lowest id) — the classic
-    2-approximation to the k-center cover and the standard diverse-
-    coreset selector for training-data subset curation (Sener &
-    Savarese 2018 use exactly this rule for active-learning coresets).
+    """Deterministic greedy k-center coreset (Gonzalez 1985) of
+    ``embedding`` keyed by ``vec_id``: pick the lowest-id vector, then
+    ``k-1`` times the point FARTHEST from the chosen set (squared L2,
+    ties to the lowest id) — the classic 2-approximation to the
+    k-center cover and the standard diverse-coreset selector for
+    training-data subset curation (Sener & Savarese 2018 use exactly
+    this rule for active-learning coresets).
 
     Same exact-arithmetic discipline as :func:`train_codebook`:
-    vectors quantize to int64 (``floor(x·scale)``), every distance is
+    vectors quantize to int64 (:func:`quantize`), every distance is
     an exact int64 fold, the argmax is a (dist DESC, id ASC) total
     order — a pure function of the data, so an unrolled SQL twin
     matches bit-for-bit.
@@ -258,7 +255,7 @@ def kcenter_greedy(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     spark = emb.sparkSession
-    q = emb.select(F.col(id_col).alias("__id"), quantize(F.col(vec_col), scale).alias("q"))
+    q = emb.select(F.col("vec_id").alias("__id"), quantize(F.col("embedding")).alias("q"))
     # k must not exceed the input row count: once every point is a
     # center all residual distances are 0 and the (md DESC, id ASC)
     # argmax would silently re-pick the lowest-id point each remaining

@@ -29,21 +29,21 @@ from fsc_etl_spark.operators.cache import cache_scope
 from fsc_etl_spark.operators.pairs import expand_pairs, shuffle_parallelism, sym_edges
 
 
-def exact_dedup_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_stats(docs: DataFrame) -> DataFrame:
     """Per content-fingerprint group: the survivor (min id) + group
     size. The keep-lowest-id rule makes survivorship deterministic."""
     return (
-        docs.withColumn("fp", fingerprint_md5(F.col(text_col)))
+        docs.withColumn("fp", fingerprint_md5(F.col("text")))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """The deduplicated corpus: one row (lowest id) per fingerprint."""
-    fp = docs.withColumn("fp", fingerprint_md5(F.col(text_col)))
-    keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return fp.join(keep, ["fp", id_col], "left_semi").drop("fp")
+    fp = docs.withColumn("fp", fingerprint_md5(F.col("text")))
+    keep = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
+    return fp.join(keep, ["fp", "doc_id"], "left_semi").drop("fp")
 
 
 def _paired_min_exprs(k: int) -> list[Column]:
@@ -68,14 +68,12 @@ def minhash_signatures(
     docs: DataFrame,
     k: int = 8,
     shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    canonicalize: bool = True,
 ) -> DataFrame:
-    """k salted-md5 min-hashes over word n-gram shingles.
+    """k salted-md5 min-hashes over word n-gram shingles of ``text``,
+    keyed by ``doc_id``.
 
-    ``canonicalize`` lowercases before shingling so near-dup detection
-    is case-insensitive (the same canonical form exact dedup uses).
+    Text is lowercased before shingling so near-dup detection is
+    case-insensitive (the same canonical form exact dedup uses).
 
     One explode + one groupBy(id): the shuffle carries (id, shingle)
     pairs; all k mins are computed in the same aggregate pass
@@ -83,43 +81,42 @@ def minhash_signatures(
     too short to have a shingle drop out — callers who need them must
     union them back explicitly.
     """
-    text = F.lower(F.col(text_col)) if canonicalize else F.col(text_col)
+    text = F.lower(F.col("text"))
     # Under-split scan guard: the gate fixtures are single-row-
     # group parquet, so the tokenize + shingle + salted-md5 work below
     # would otherwise run on ONE core (measured 1.94->0.64 s at
     # sf0.1); a no-op on properly split inputs.
     from fsc_etl_spark.sources.readers import parallel_scan
 
-    base = parallel_scan(docs.select(F.col(id_col), text.alias("__txt")))
+    base = parallel_scan(docs.select(F.col("doc_id"), text.alias("__txt")))
     # Materialize the token array BEFORE shingling: higher-order-
     # function bodies re-evaluate non-lambda subexpressions per
     # element, so shingling over split(text) inline is O(L²) per doc.
-    toked = base.select(F.col(id_col), tokens(F.col("__txt")).alias("__tk"))
+    toked = base.select(F.col("doc_id"), tokens(F.col("__txt")).alias("__tk"))
     # No per-doc shingle dedup: min() over duplicates equals min() over
     # the distinct set, so the dropDuplicates shuffle this used to pay
     # bought nothing.
     sh = toked.select(
-        F.col(id_col), F.explode(shingles_from_tokens(F.col("__tk"), shingle_n)).alias("sh")
+        F.col("doc_id"), F.explode(shingles_from_tokens(F.col("__tk"), shingle_n)).alias("sh")
     )
     # ceil(k/2) md5s materialized once per shingle row; each yields two
     # 16-hex min slots (_paired_min_exprs) — half the hash work of one
     # salted md5 per slot, which dominates this stage's cost.
     n_md5 = (k + 1) // 2
     hashed = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
             F.md5(F.concat(F.lit(f"s{j}:"), F.col("sh"))).alias(f"__h{j}")
             for j in range(n_md5)
         ],
     )
-    return hashed.groupBy(id_col).agg(*_paired_min_exprs(k))
+    return hashed.groupBy("doc_id").agg(*_paired_min_exprs(k))
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     rows_per_band: int = 2,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Candidate near-dup pairs: docs agreeing on ALL min-hashes of at
     least one band. Band signature = md5(concat of the band's rows);
@@ -135,7 +132,7 @@ def lsh_candidate_pairs(
     bucket's ids; buckets hash-partition freely.
     """
     band_sigs = signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
             F.md5(
                 F.concat_ws(
@@ -146,14 +143,14 @@ def lsh_candidate_pairs(
         ],
     )
     long = band_sigs.selectExpr(
-        id_col,
+        "doc_id",
         "stack({}, {}) as (band_idx, band_sig)".format(
             bands, ", ".join(f"{b}, band{b}" for b in range(bands))
         ),
     )
     buckets = (
         long.groupBy("band_idx", "band_sig")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
         .repartition(shuffle_parallelism(signatures))
     )
@@ -177,8 +174,6 @@ BITMAP_MASK_LIMIT = 65_536
 def jaccard_token_pairs(
     docs: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
     strategy: str = "auto",
     mask_limit: int = BITMAP_MASK_LIMIT,
@@ -209,7 +204,7 @@ def jaccard_token_pairs(
     above a df cap up front, changing the sets similarity is measured
     over).
     """
-    toks = _jaccard_toks(docs, text_col, id_col, max_df)
+    toks = _jaccard_toks(docs, max_df)
 
     if strategy in ("auto", "bitmap"):
         # One tiny action picks the physical plan (runtime stats, à la
@@ -225,30 +220,28 @@ def jaccard_token_pairs(
             # prefix path when m² would dominate. An explicit
             # strategy="bitmap" is honored regardless (caller's call).
             with cache_scope() as cs:
-                bm = cs.checkpoint(_doc_masks(toks, id_col, sorted(vocab)))
+                bm = cs.checkpoint(_doc_masks(toks, sorted(vocab)))
                 if (
                     strategy == "bitmap"
                     or bm.select("mask").distinct().count() <= mask_limit
                 ):
-                    return cs.result(_jaccard_bitmap(bm, threshold, id_col))
+                    return cs.result(_jaccard_bitmap(bm, threshold))
         elif strategy == "bitmap":
             raise ValueError(f"bitmap strategy needs vocabulary <= 62 tokens, got more")
-    return _jaccard_prefix(toks, threshold, id_col)
+    return _jaccard_prefix(toks, threshold)
 
 
-def _jaccard_toks(
-    docs: DataFrame, text_col: str, id_col: str, max_df: int | None
-) -> DataFrame:
+def _jaccard_toks(docs: DataFrame, max_df: int | None) -> DataFrame:
     """(id, tok) with per-doc token SETS via array_distinct BEFORE the
     explode — the dedup happens map-side inside codegen instead of a
     full (id, tok) distinct shuffle."""
     from fsc_etl_spark.sources.readers import parallel_scan
 
     # under-split scan guard (see minhash_signatures)
-    docs = parallel_scan(docs.select(F.col(id_col), F.col(text_col)))
+    docs = parallel_scan(docs.select(F.col("doc_id"), F.col("text")))
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
     )
     if max_df is not None:
         rare = toks.groupBy("tok").count().filter(F.col("count") <= max_df).select("tok")
@@ -256,7 +249,7 @@ def _jaccard_toks(
     return toks
 
 
-def _doc_masks(toks: DataFrame, id_col: str, vocab: list[str]) -> DataFrame:
+def _doc_masks(toks: DataFrame, vocab: list[str]) -> DataFrame:
     """(id, mask): token set → bigint bitmask via a literal token→bit
     map (no vocabulary shuffle)."""
     bit_of = F.create_map(
@@ -264,12 +257,12 @@ def _doc_masks(toks: DataFrame, id_col: str, vocab: list[str]) -> DataFrame:
     )
     return (
         toks.withColumn("bit", bit_of[F.col("tok")])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.expr("bit_or(shiftleft(1L, bit))").alias("mask"))
     )
 
 
-def _jaccard_bitmap(bm: DataFrame, threshold: float, id_col: str) -> DataFrame:
+def _jaccard_bitmap(bm: DataFrame, threshold: float) -> DataFrame:
     """Small-vocabulary fast path over a precomputed ``(id, mask)``
     frame (:func:`_doc_masks`): Jaccard via bit_count.
 
@@ -286,7 +279,7 @@ def _jaccard_bitmap(bm: DataFrame, threshold: float, id_col: str) -> DataFrame:
     # One row per distinct mask; |set bits| == token-set size because
     # distinct tokens map to distinct bits.
     grp = bm.groupBy("mask").agg(
-        F.collect_list(id_col).alias("ids"), F.count(F.lit(1)).alias("n_docs")
+        F.collect_list("doc_id").alias("ids"), F.count(F.lit(1)).alias("n_docs")
     )
 
     a = grp.select(F.col("mask").alias("mask_a"), F.col("ids").alias("ids_a"))
@@ -328,7 +321,7 @@ def _jaccard_bitmap(bm: DataFrame, threshold: float, id_col: str) -> DataFrame:
     return out
 
 
-def _jaccard_prefix(toks: DataFrame, threshold: float, id_col: str) -> DataFrame:
+def _jaccard_prefix(toks: DataFrame, threshold: float) -> DataFrame:
     """General-vocabulary exact path: PPJoin prefix filtering (see
     jaccard_token_pairs docstring)."""
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -337,17 +330,17 @@ def _jaccard_prefix(toks: DataFrame, threshold: float, id_col: str) -> DataFrame
         .withColumn(
             "rnk",
             F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.col("df").asc(), F.col("tok").asc())
+                Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("tok").asc())
             ),
         )
-        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
     prefix = ranked.filter(
         F.col("rnk") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).select(id_col, "tok", "sz")
+    ).select("doc_id", "tok", "sz")
 
-    pa = prefix.select(F.col(id_col).alias("id_a"), "tok", F.col("sz").alias("sz_a"))
-    pb = prefix.select(F.col(id_col).alias("id_b"), "tok", F.col("sz").alias("sz_b"))
+    pa = prefix.select(F.col("doc_id").alias("id_a"), "tok", F.col("sz").alias("sz_a"))
+    pb = prefix.select(F.col("doc_id").alias("id_b"), "tok", F.col("sz").alias("sz_b"))
     cands = (
         pa.join(pb, "tok")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -357,8 +350,8 @@ def _jaccard_prefix(toks: DataFrame, threshold: float, id_col: str) -> DataFrame
         .distinct()
     )
 
-    ta = toks.select(F.col(id_col).alias("id_a"), "tok")
-    tb = toks.select(F.col(id_col).alias("id_b"), "tok")
+    ta = toks.select(F.col("doc_id").alias("id_a"), "tok")
+    tb = toks.select(F.col("doc_id").alias("id_b"), "tok")
     inter = (
         cands.join(ta, "id_a")
         .join(tb, ["id_b", "tok"])
@@ -375,12 +368,7 @@ def _jaccard_prefix(toks: DataFrame, threshold: float, id_col: str) -> DataFrame
     )
 
 
-def simhash_sig(
-    docs: DataFrame,
-    n_bits: int = 60,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash_sig(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     """SimHash signature: per distinct token, a 60-bit md5-derived hash
     votes ±1 on each of ``n_bits`` bit positions; the signature sets
     bit i where the vote sum is positive. Default 60 bits — the full
@@ -400,20 +388,20 @@ def simhash_sig(
     # the single-row-group gate fixtures.
     from fsc_etl_spark.sources.readers import parallel_scan
 
-    docs = parallel_scan(docs.select(F.col(id_col), F.col(text_col)))
+    docs = parallel_scan(docs.select(F.col("doc_id"), F.col("text")))
     # array_distinct before the explode: per-doc token-set dedup runs
     # map-side in codegen, deleting the (id, tok) distinct shuffle that
     # used to precede the vote aggregation.
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
     )
     # Materialize the 60-bit hash once per token: the bit extracts run
     # over a bound attribute instead of re-evaluating md5+conv per bit
     # (CollapseProject keeps multi-referenced non-cheap aliases in
     # their own projection).
     hashed = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("bigint").alias("__h"),
     )
 
@@ -430,7 +418,7 @@ def simhash_sig(
 
     n_packs = (n_bits + 2) // 3
     packs = hashed.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
             sum(
                 F.shiftleft(bit(3 * j + k), 20 * k)
@@ -439,7 +427,7 @@ def simhash_sig(
             for j in range(n_packs)
         ],
     )
-    sums = packs.groupBy(id_col).agg(
+    sums = packs.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("__n"),
         *[F.sum(f"p{j}").alias(f"p{j}") for j in range(n_packs)],
     )
@@ -451,19 +439,18 @@ def simhash_sig(
             F.lit(0).cast("bigint")
         )
         sig = bit_i if sig is None else sig + bit_i
-    return sums.select(F.col(id_col), sig.alias("simhash"))
+    return sums.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 # Backwards-compatible 32-bit variant (kept for callers that want the
 # cheaper signature; near-dup blocking should use the 60-bit default).
-def simhash32(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return simhash_sig(docs, n_bits=32, text_col=text_col, id_col=id_col)
+def simhash32(docs: DataFrame) -> DataFrame:
+    return simhash_sig(docs, n_bits=32)
 
 
 def connected_components_min_label(
     nodes: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     max_iters: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected candidate-pair graph by
@@ -493,13 +480,13 @@ def connected_components_min_label(
         # its checkpoint) is edge-subgraph-sized, not corpus-sized.
         # Singletons re-enter as their own root in the final left join.
         labels = prev = cs.checkpoint(
-            edges.select(F.col("src").alias(id_col))
+            edges.select(F.col("src").alias("doc_id"))
             .distinct()
-            .select(F.col(id_col), F.col(id_col).alias("root")),
+            .select(F.col("doc_id"), F.col("doc_id").alias("root")),
             eager=False,
         )
         for _ in range(max_iters):
-            lbl_src = labels.select(F.col(id_col).alias("src"), F.col("root").alias("src_root"))
+            lbl_src = labels.select(F.col("doc_id").alias("src"), F.col("root").alias("src_root"))
             nbr = edges.join(lbl_src, "src").groupBy("dst").agg(F.min("src_root").alias("nbr_root"))
             # The changed flag rides along in the propagation select, so
             # the convergence probe is a limit(1) scan of the round's
@@ -509,8 +496,8 @@ def connected_components_min_label(
             # instead of two (per-round driver latency was the measured
             # cost of the CC loops, not task work).
             nxt = cs.checkpoint(
-                labels.join(nbr, F.col(id_col) == F.col("dst"), "left").select(
-                    F.col(id_col),
+                labels.join(nbr, F.col("doc_id") == F.col("dst"), "left").select(
+                    F.col("doc_id"),
                     F.least(F.col("root"), F.coalesce(F.col("nbr_root"), F.col("root"))).alias(
                         "root"
                     ),
@@ -539,11 +526,11 @@ def connected_components_min_label(
             )
         labels = cs.result(nxt).drop("__changed")
     return (
-        nodes.select(F.col(id_col))
-        .join(labels.withColumnRenamed("root", "__root"), id_col, "left")
+        nodes.select(F.col("doc_id"))
+        .join(labels.withColumnRenamed("root", "__root"), "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("__root"), F.col(id_col)).alias("cluster_root"),
+            F.col("doc_id"),
+            F.coalesce(F.col("__root"), F.col("doc_id")).alias("cluster_root"),
         )
     )
 
@@ -551,7 +538,6 @@ def connected_components_min_label(
 def connected_components_star(
     nodes: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
     max_iters: int = 25,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
@@ -683,48 +669,39 @@ def connected_components_star(
     roots = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("__root"))
-        .withColumnRenamed("src", id_col)
+        .withColumnRenamed("src", "doc_id")
     )
     return (
-        nodes.select(F.col(id_col))
-        .join(roots, id_col, "left")
+        nodes.select(F.col("doc_id"))
+        .join(roots, "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("__root"), F.col(id_col)).alias("cluster_root"),
+            F.col("doc_id"),
+            F.coalesce(F.col("__root"), F.col("doc_id")).alias("cluster_root"),
         )
     )
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 60,
-    band_bits: int = 15,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs via banded blocking.
 
-    The ``n_bits``-bit signature splits into ``n_bits // band_bits``
-    contiguous chunks; any pair within Hamming distance < n_bands
-    shares at least one identical chunk (pigeonhole), so an equi-join
-    on (band_idx, band_val) finds every candidate without an O(n^2)
-    cross join. Survivors are verified exactly with
-    ``bit_count(sig_a XOR sig_b) <= max_hamming``.
+    The 60-bit signature splits into 4 contiguous 15-bit chunks; any
+    pair within Hamming distance < 4 shares at least one identical
+    chunk (pigeonhole), so an equi-join on (band_idx, band_val) finds
+    every candidate without an O(n^2) cross join. Survivors are
+    verified exactly with ``bit_count(sig_a XOR sig_b) <= 3``.
 
-    Scale: the join key is (band_idx, band_val) — n_bands× data
-    expansion but hash-partitionable. Expected spurious collisions per
-    band ≈ n²/2^band_bits, so the 60-bit/15-bit default keeps the
-    verify stage ~2^7× cheaper than the 32-bit/8-bit configuration at
-    the same corpus size. This is the scalable shape (blocking +
-    verify), same as the MinHash-LSH path in lsh_candidate_pairs.
+    Scale: the join key is (band_idx, band_val) — 4× data expansion
+    but hash-partitionable. Expected spurious collisions per band ≈
+    n²/2^15, so 60-bit/15-bit bands keep the verify stage ~2^7×
+    cheaper than the 32-bit/8-bit configuration at the same corpus
+    size. This is the scalable shape (blocking + verify), same as the
+    MinHash-LSH path in lsh_candidate_pairs.
     """
-    n_bands = n_bits // band_bits
-    assert max_hamming < n_bands, "pigeonhole guarantee needs max_hamming < n_bands"
+    n_bands, band_bits = 4, 15
     mask = (1 << band_bits) - 1
-    sigs = simhash_sig(docs, n_bits=n_bits, text_col=text_col, id_col=id_col)
+    sigs = simhash_sig(docs)
     bands = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.posexplode(
             F.array(
@@ -743,7 +720,11 @@ def simhash_neardup_pairs(
     # carries only true near-dups, not every band collision.
     buckets = (
         bands.groupBy("band_idx", "band_val")
-        .agg(F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sig"))).alias("xs"))
+        .agg(
+            F.collect_list(
+                F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sig"))
+            ).alias("xs")
+        )
         .filter(F.size("xs") >= 2)
     )
     return (
@@ -755,6 +736,6 @@ def simhash_neardup_pairs(
             F.col("b.id").alias("id_b"),
             F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).cast("int").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )

@@ -25,31 +25,20 @@ from pyspark.sql.window import Window
 
 
 def dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str] | None = None,
-    left_col: str | None = None,
-    right_col: str | None = None,
-    how: str = "inner",
-    broadcast_dim: bool = True,
+    fact: DataFrame, dim: DataFrame, left_col: str, right_col: str
 ) -> DataFrame:
-    """Equi-join a fact frame to a small dimension (J1).
-
-    Either ``on=[shared cols]`` or a ``left_col``/``right_col`` pair
-    (the reference joins ``location == location_map``, main.py:102-103).
+    """Inner equi-join of a fact frame to a broadcast dimension on
+    ``fact[left_col] == dim[right_col]`` (J1; the reference joins
+    ``location == location_map``, main.py:102-103).
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    if on is not None:
-        return fact.join(d, list(on), how)
-    cond = fact[left_col] == d[right_col]
-    return fact.join(d, cond, how)
+    d = F.broadcast(dim)
+    return fact.join(d, fact[left_col] == d[right_col], "inner")
 
 
 def star_left_join(
     base: DataFrame,
     satellites: Sequence[DataFrame],
     on: Sequence[str],
-    how: str = "left",
 ) -> DataFrame:
     """Left-join chain assembling a wide fact row (J2, main.py:213-220).
 
@@ -59,24 +48,15 @@ def star_left_join(
     """
     out = base
     for sat in satellites:
-        out = out.join(sat, list(on), how)
+        out = out.join(sat, list(on), "left")
     return out
 
 
-def key_membership_join(
-    df: DataFrame,
-    keys: DataFrame,
-    on: Sequence[str],
-    keep_key_payload: bool = False,
-) -> DataFrame:
-    """Key-membership filter (J3, main.py:277).
-
-    With ``keep_key_payload`` the reference's inner-join behavior is
-    kept (it needs the DW-side ``_SK`` column); otherwise a left-semi
-    join — cheaper, no duplication if ``keys`` is not unique.
+def key_membership_join(df: DataFrame, keys: DataFrame, on: Sequence[str]) -> DataFrame:
+    """Key-membership filter (J3, main.py:277) as a left-semi join:
+    cheaper than the reference's inner join, and no duplication if
+    ``keys`` is not unique.
     """
-    if keep_key_payload:
-        return df.join(keys, list(on), "inner")
     return df.join(keys, list(on), "left_semi")
 
 
@@ -91,10 +71,10 @@ def asof_join(
     on: Sequence[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join: each left row picks the latest right row
-    with ``right_ts <= left_ts`` per key (SQL ``ASOF LEFT JOIN``).
+    with ``right_ts <= left_ts`` per key (SQL ``ASOF LEFT JOIN``); each
+    right payload column ``c`` comes back as ``c_asof``.
 
     Not expressible as an equi-join, and a naive range join is
     quadratic per key. This is the scalable union-scan shape: tag both
@@ -129,7 +109,7 @@ def asof_join(
     filled = u.withColumn("__last_p", F.last("__p", ignorenulls=True).over(w))
     out = filled.filter(F.col("__side") == 1).drop("__t", "__side", "__p")
     for c in payload_cols:
-        out = out.withColumn(f"{c}{suffix}", F.col("__last_p").getField(c))
+        out = out.withColumn(f"{c}_asof", F.col("__last_p").getField(c))
     return out.drop("__last_p")
 
 
@@ -140,11 +120,9 @@ def range_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     lower: str | None = "INTERVAL 30 MINUTES",
-    upper: str | None = None,
-    how: str = "left",
 ) -> DataFrame:
-    """Interval join: right rows with ``left_ts - lower < right_ts <=
-    left_ts + upper`` per key.
+    """Left interval join: right rows with ``left_ts - lower < right_ts
+    <= left_ts`` per key.
 
     Executes as an equi-join on ``on`` with the range as a join-time
     predicate — the shuffle is keyed, so cost is bounded by per-key
@@ -167,14 +145,11 @@ def range_join(
     conds: list[Column] = [lc(k) == rc(k) for k in on]
     if lower is not None:
         conds.append(rc(right_ts) > lc(left_ts) - F.expr(lower))
-    if upper is not None:
-        conds.append(rc(right_ts) <= lc(left_ts) + F.expr(upper))
-    else:
-        conds.append(rc(right_ts) <= lc(left_ts))
+    conds.append(rc(right_ts) <= lc(left_ts))
     cond = conds[0]
     for c in conds[1:]:
         cond = cond & c
-    joined = l.join(r, cond, how)
+    joined = l.join(r, cond, "left")
     return joined.select(
         *[lc(c).alias(c) for c in left.columns],
         *[rc(c).alias(c) for c in right.columns if c not in on],

@@ -126,23 +126,22 @@ def zorder_by(
     path: str,
     col_a: str,
     col_b: str,
-    bits: int = 8,
-    target_file_mb: int = 128,
     n_files: int | None = None,
 ) -> int:
-    """Two-dimensional Z-order rewrite of a parquet directory: quantile
-    boundaries for both columns come from one ``percentile_approx``
-    pass, rows are range-partitioned + sorted on the interleaved
-    z-value, and the directory swaps atomically (same commit as
+    """Two-dimensional Z-order rewrite of a parquet directory: 256
+    quantile bins per column (8 bits) come from one
+    ``percentile_approx`` pass, rows are range-partitioned + sorted on
+    the interleaved z-value, and the directory swaps atomically (same commit as
     :func:`compact`). After the rewrite, min/max file stats are
     selective on BOTH columns — the multi-predicate half of the
     Z-ORDER story :func:`cluster_by`'s single-dimension range
-    clustering can't provide.
+    clustering can't provide. Without ``n_files`` the output is sized
+    at 128 MB per file, as :func:`compact` sizes it.
     """
     if n_files is None:
-        n_files = max(1, -(-_dir_bytes(path) // (target_file_mb << 20)))
+        n_files = max(1, -(-_dir_bytes(path) // (128 << 20)))
     df = spark.read.parquet(path)
-    fracs = [i / (1 << bits) for i in range(1, 1 << bits)]
+    fracs = [i / 256 for i in range(1, 256)]
     row = df.agg(
         F.percentile_approx(F.col(col_a).cast("double"), F.lit(fracs), 10_000).alias("ba"),
         F.percentile_approx(F.col(col_b).cast("double"), F.lit(fracs), 10_000).alias("bb"),
@@ -155,7 +154,7 @@ def zorder_by(
         _atomic_swap(out, path)
         return n_files
     z = zorder_value(
-        F.col(col_a).cast("double"), F.col(col_b).cast("double"), row["ba"], row["bb"], bits
+        F.col(col_a).cast("double"), F.col(col_b).cast("double"), row["ba"], row["bb"]
     )
     out = (
         df.withColumn("__z", z)

@@ -53,6 +53,14 @@ FEATURE_SCHEMA = T.StructType(
 #: representable in float32 (< 2^24)
 _FEAT_MOD = 1_000_003
 
+#: geometry of :func:`documents_as_ppm_media`'s images; the P6 oracles
+#: in plans/oracles_training.py spell the same header ("12 8")
+PPM_WIDTH, PPM_HEIGHT = 12, 8
+
+#: sample rate of :func:`documents_as_wav_media`'s clips; the audio
+#: oracles derive ``duration_us`` from the same 16000
+WAV_SAMPLE_RATE = 16_000
+
 
 def _fake_decode(content: bytes) -> list[float]:
     """Deterministic fallback feature vector for UNRECOGNIZED formats
@@ -107,7 +115,7 @@ def _decode_feature(content: bytes) -> list[float]:
     return _fake_decode(content)
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract each media item via mapInPandas.
 
     Recognized formats (P6 PPM, 24-bit BMP, RIFF/WAVE PCM) go through
@@ -229,17 +237,18 @@ def sample_frames(media: DataFrame, n_frames: int) -> DataFrame:
     return media.mapInPandas(process, schema=FRAME_SCHEMA)
 
 
-def documents_as_ppm_media(docs: DataFrame, width: int = 12, height: int = 8) -> DataFrame:
-    """Adapter: deterministic REAL P6 images from document text — the
-    pixel buffer is the text's bytes cycled to width*height*3, under a
+def documents_as_ppm_media(docs: DataFrame) -> DataFrame:
+    """Adapter: deterministic REAL ``PPM_WIDTH`` x ``PPM_HEIGHT`` P6
+    images from document text — the pixel buffer is the text's bytes
+    cycled to width*height*3, under a
     canonical P6 header. Everything is built with JVM string
     expressions (repeat/substring/concat), so an ANSI-SQL oracle can
     reproduce the exact bytes; the images then exercise the genuine
     codec path in :func:`resize_images` (magic-sniffed as 'ppm')."""
-    need = width * height * 3
+    need = PPM_WIDTH * PPM_HEIGHT * 3
     reps = F.ceil(F.lit(float(need)) / F.greatest(F.length("text"), F.lit(1))).cast("int")
     pixbuf = F.substring(F.repeat(F.col("text"), reps), 1, need)
-    header = F.lit(f"P6\n{width} {height}\n255\n")
+    header = F.lit(f"P6\n{PPM_WIDTH} {PPM_HEIGHT}\n255\n")
     # empty documents carry no pixel bytes to cycle — skip them (a
     # header-only P6 would be invalid; oracles filter the same way)
     docs = docs.filter(F.length("text") > 0)
@@ -326,10 +335,10 @@ AUDIO_STATS_SCHEMA = T.StructType(
 )
 
 
-def documents_as_wav_media(docs: DataFrame, sample_rate: int = 16_000) -> DataFrame:
-    """Adapter: REAL PCM WAV clips from document text — sample i is
-    ``(byte_i - 128) * 256`` (8-bit unsigned centered and widened to
-    int16, the standard WAV convention), encoded through the genuine
+def documents_as_wav_media(docs: DataFrame) -> DataFrame:
+    """Adapter: REAL ``WAV_SAMPLE_RATE`` PCM WAV clips from document
+    text — sample i is ``(byte_i - 128) * 256`` (8-bit unsigned
+    centered and widened to int16, the standard WAV convention), encoded through the genuine
     RIFF writer (operators/audiocodec.py) in an Arrow batch. The
     sample derivation is byte-arithmetic on the text, so a SQL oracle
     can reproduce any downstream integer-exact analysis."""
@@ -343,7 +352,7 @@ def documents_as_wav_media(docs: DataFrame, sample_rate: int = 16_000) -> DataFr
             for text in pdf["text"]:
                 raw = np.frombuffer(text.encode("utf-8"), dtype="u1")
                 samples = ((raw.astype("i2") - 128) << 8).astype("<i2")
-                out.append(encode_wav(samples, sample_rate))
+                out.append(encode_wav(samples, WAV_SAMPLE_RATE))
             yield pd.DataFrame(
                 {
                     "media_id": pdf["doc_id"],

@@ -25,16 +25,15 @@ def pivot_indicator(
     pivot_col: str,
     value_map: Mapping[str, str],
     agg: Column | None = None,
-    value_col: str = "value",
 ) -> DataFrame:
     """Pivot ``pivot_col`` into one column per key of ``value_map``
-    (pivot value → output column name), aggregating ``value_col``.
+    (pivot value → output column name), aggregating column ``value``.
 
     Default aggregate is ``first(value)`` — the reference's long table
     has at most one row per (key, indicator), so ``first`` reproduces
     the filter-and-join semantics exactly.
     """
-    agg_expr = agg if agg is not None else F.first(F.col(value_col))
+    agg_expr = agg if agg is not None else F.first(F.col("value"))
     wide = df.groupBy(*group_cols).pivot(pivot_col, list(value_map.keys())).agg(agg_expr)
     renames = {src: dst for src, dst in value_map.items()}
     return wide.withColumnsRenamed(renames)

@@ -51,7 +51,6 @@ def pps_systematic(
     weight_col: str,
     order_by: Sequence[str],
     n_target: int,
-    hits_col: str = "n_hits",
     n_buckets: int = 64,
 ) -> DataFrame:
     """Systematic PPS draw of ~``n_target`` rows (with multiplicity)
@@ -60,7 +59,7 @@ def pps_systematic(
     numeric/date/timestamp leading column — it feeds the
     percentile_approx bucket boundaries).
 
-    Returns the selected rows — ``df``'s columns plus ``hits_col``
+    Returns the selected rows — ``df``'s columns plus ``n_hits``
     (BIGINT >= 1, the number of times the row is drawn). The draw
     count across all rows is exactly ``total div stride`` (+1 when
     stride divides total), i.e. ~``n_target``.
@@ -139,7 +138,7 @@ def pps_systematic(
     return (
         bucketed.join(F.broadcast(offsets), "__bucket")
         .withColumn("__cb", cb)
-        .withColumn(hits_col, hits.cast("long"))
-        .filter(F.col(hits_col) >= 1)
+        .withColumn("n_hits", hits.cast("long"))
+        .filter(F.col("n_hits") >= 1)
         .drop("__bucket", "__offset", "__cb", "__stride")
     )

@@ -38,6 +38,10 @@ HLL_P_BITS = 6
 HLL_BUCKETS = 1 << HLL_P_BITS
 HLL_RANK_BITS = 60 - HLL_P_BITS
 
+#: Misra–Gries shard count of :func:`mg_frequent`; the oracles replay
+#: the same ``md5(shard_col) mod MG_SHARDS`` sharding.
+MG_SHARDS = 16
+
 
 def _cms_bucket(key: F.Column, j: int) -> F.Column:
     """Row-j counter index for a key: 60 md5 bits mod the row width.
@@ -230,7 +234,6 @@ def mg_prune(
     k: int,
     group_cols: tuple[str, ...] = (),
     key_col: str = "key",
-    count_col: str = "cnt",
 ) -> DataFrame:
     """One Misra–Gries prune step: within each ``group_cols`` group,
     reduce a (key, count) table to at most ``k`` surviving keys by
@@ -256,24 +259,24 @@ def mg_prune(
     the group's distinct-key count) + a map-side subtract/filter. No
     all-pairs, no driver state.
 
-    Returns ``group_cols + (key_col, count_col)`` with the pruned
-    (undercounted) estimates.
+    ``counts`` holds the count in column ``cnt``. Returns ``group_cols +
+    (key_col, cnt)`` with the pruned (undercounted) estimates.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     from pyspark.sql import Window
 
     # The ungrouped prune runs a deliberately UNPARTITIONED window: its
-    # input is always a prior aggregate (<= n_shards·k rows), which the
+    # input is always a prior aggregate (<= MG_SHARDS·k rows), which the
     # plan gate (tests/test_plan_quality.py path-bounded walk) verifies
     # — partitioning by a literal would funnel identically while
     # evading that audit.
     part = Window.partitionBy(*group_cols) if group_cols else Window
-    w = part.orderBy(F.col(count_col).desc(), F.col(key_col).asc())
+    w = part.orderBy(F.col("cnt").desc(), F.col(key_col).asc())
     rn = F.row_number().over(w)
     thresh = counts.withColumn("__rn", rn).filter(F.col("__rn") == k + 1)
     t_frame = thresh.select(
-        *group_cols, F.col(count_col).alias("__t")
+        *group_cols, F.col("cnt").alias("__t")
     )
     if group_cols:
         joined = counts.join(F.broadcast(t_frame), list(group_cols), "left")
@@ -287,10 +290,10 @@ def mg_prune(
             "__j",
             "left",
         )
-    est = (F.col(count_col) - F.coalesce(F.col("__t"), F.lit(0))).cast("long")
+    est = (F.col("cnt") - F.coalesce(F.col("__t"), F.lit(0))).cast("long")
     return (
-        joined.select(*group_cols, key_col, est.alias(count_col))
-        .filter(F.col(count_col) > 0)
+        joined.select(*group_cols, key_col, est.alias("cnt"))
+        .filter(F.col("cnt") > 0)
     )
 
 
@@ -299,13 +302,12 @@ def mg_frequent(
     key_col: str,
     k: int,
     shard_col: str,
-    n_shards: int = 16,
 ) -> DataFrame:
     """Distributed Misra–Gries frequent-items summary over
     ``df[key_col]``: shard rows deterministically by
-    ``md5(shard_col) mod n_shards``, build exact per-shard counts
+    ``md5(shard_col) mod MG_SHARDS``, build exact per-shard counts
     (map-side partial aggregate + one keyed shuffle), prune each shard
-    to k items (:func:`mg_prune`), then merge the <= n_shards·k
+    to k items (:func:`mg_prune`), then merge the <= MG_SHARDS·k
     surviving rows by summed count and prune once more globally.
 
     Guarantee (mergeable-summaries bound): the returned estimate
@@ -327,7 +329,7 @@ def mg_frequent(
             16,
             10,
         ).cast("long")
-        % n_shards
+        % MG_SHARDS
     ).alias("__shard")
     per_shard = (
         df.select(shard, F.col(key_col).alias("key"))

@@ -60,14 +60,13 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     on: Sequence[str],
-    how: str = "inner",
     buckets: int = 16,
 ) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    across all salt values, join on (keys, salt).
+    """Skew-safe inner equi-join: salt the big side, replicate the
+    small side across all salt values, join on (keys, salt).
 
-    Output equals ``big.join(small, on, how)`` for inner/left joins
-    with a unique-keyed small side. Replication multiplies the small
+    Output equals ``big.join(small, on)`` for a unique-keyed small
+    side. Replication multiplies the small
     side by ``buckets`` — keep it for genuinely small/broadcastable
     dims with hot fact keys that overflow a single reducer even under
     AQE.
@@ -79,7 +78,7 @@ def salted_join(
             big.sparkSession.range(buckets).select(F.col("id").cast("int").alias(SALT_COL))
         )
     )
-    return b.join(s, keys + [SALT_COL], how).drop(SALT_COL)
+    return b.join(s, keys + [SALT_COL], "inner").drop(SALT_COL)
 
 
 def heavy_hitters_exact(

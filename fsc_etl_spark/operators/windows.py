@@ -6,10 +6,10 @@ shapes, each designed to keep one shuffle:
 
 - top-k per group: ``row_number`` over (group, order) then filter —
   never a global sort;
-- running/rolling aggregates: frame-bounded window aggs;
+- running aggregates: frame-bounded window aggs;
 - sessionization: lag-gap-cumsum, the classic one-shuffle session
   assignment;
-- time buckets: ``F.window`` tumbling/sliding buckets (batch flavor of
+- time buckets: ``F.window`` tumbling buckets (batch flavor of
   the streaming windows in streaming/events.py).
 """
 
@@ -26,12 +26,12 @@ def top_k_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
-    """Top-k rows per group. ``order_cols`` must be a deterministic
-    total order within each group (include a tie-break key)."""
+    """Top-k rows per group, ranked 1..k in column ``rn``. ``order_cols``
+    must be a deterministic total order within each group (include a
+    tie-break key)."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def global_top_k(df: DataFrame, order_cols: Sequence[Column], k: int) -> DataFrame:
@@ -47,12 +47,10 @@ def with_running(
     order_cols: Sequence[Column],
     agg_col: str,
     out_col: str,
-    rows_back: int | None = None,
 ) -> DataFrame:
-    """Running (or rolling, when ``rows_back`` given) sum over a
-    per-group ordered frame."""
+    """Running sum over a per-group ordered frame."""
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    frame = w.rowsBetween(-rows_back if rows_back is not None else Window.unboundedPreceding, 0)
+    frame = w.rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(out_col, F.sum(agg_col).over(frame))
 
 
@@ -61,9 +59,8 @@ def sessionize(
     user_col: str,
     ts_col: str,
     gap_seconds: int,
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Assign session ids: a new session starts when the gap to the
+    """Assign ``session_id``s: a new session starts when the gap to the
     previous event of the same user exceeds ``gap_seconds``.
 
     lag → gap flag → cumulative sum; one shuffle on ``user_col``.
@@ -73,7 +70,7 @@ def sessionize(
     gap = F.col(ts_col).cast("long") - prev_ts.cast("long")
     new_session = F.when(prev_ts.isNull() | (gap > gap_seconds), F.lit(1)).otherwise(F.lit(0))
     return df.withColumn("__new", new_session).withColumn(
-        session_col, F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        "session_id", F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("__new")
 
 
@@ -83,11 +80,10 @@ def time_bucket_agg(
     duration: str,
     group_cols: Sequence[str],
     aggs: Sequence[Column],
-    slide: str | None = None,
 ) -> DataFrame:
-    """Tumbling (or sliding) time-window aggregation in batch —
-    ``F.window`` buckets; exposes ``window_start``/``window_end``."""
-    win = F.window(F.col(ts_col), duration, slide) if slide else F.window(F.col(ts_col), duration)
+    """Tumbling time-window aggregation in batch — ``F.window``
+    buckets; exposes ``window_start``/``window_end``."""
+    win = F.window(F.col(ts_col), duration)
     return (
         df.groupBy(win.alias("w"), *group_cols)
         .agg(*aggs)

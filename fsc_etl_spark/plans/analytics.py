@@ -257,8 +257,10 @@ def q5_region_volume(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def pivot_event_types(spark: SparkSession, sf: str) -> DataFrame:
-    """P7: single-shuffle groupBy().pivot() with a declared value
-    domain (the reference does this with 4 filters + 4 joins)."""
+    """P7: one groupBy().pivot() with a declared value domain (the
+    reference does this with 4 filters + 4 joins). Spark runs it as two
+    aggregations, so it shuffles twice: on (user_id, event_type), then
+    on user_id."""
     ev = t(spark, sf, "events")
     wide = pivot_indicator(
         ev.withColumn("value", _dec("value", 6)),

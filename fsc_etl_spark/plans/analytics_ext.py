@@ -121,7 +121,6 @@ def range_join_recent_views(spark: SparkSession, sf: str) -> DataFrame:
         left_ts="ts",
         right_ts="view_ts",
         lower="INTERVAL 30 MINUTES",
-        how="left",
     )
     return joined.groupBy("user_id", "event_id").agg(
         F.count("view_id").alias("n_views")

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from fsc_etl_spark.functions.text import shingles_from_tokens, tokens
 from fsc_etl_spark.operators.cache import CacheScope, cache_scope
 from fsc_etl_spark.operators.similarity import cosine_topk
+from fsc_etl_spark.operators.sketches import MG_SHARDS
 from fsc_etl_spark.sources.readers import read_parquet_table as t
 
 #: Perplexity gate in micro-nats/bigram: the deployment-pinned
@@ -1046,7 +1047,7 @@ def mg_frequent_tokens(spark: SparkSession, sf: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
     )
-    summ = mg_frequent(tok, "tok", MG_K, shard_col="doc_id", n_shards=16)
+    summ = mg_frequent(tok, "tok", MG_K, shard_col="doc_id")
     exact = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
     n = tok.agg(F.count(F.lit(1)).alias("n_total"))
     return (
@@ -1546,7 +1547,7 @@ WITH tok AS (
 ),
 sharded AS (
   SELECT CAST(('0x' || substr(md5('mg:' || CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % 16 AS shard,
+              AS BIGINT) % {MG_SHARDS} AS shard,
          tok
   FROM tok
 ),

@@ -11,8 +11,9 @@ Reference lifecycle (``/root/reference/main.py``):
   (208) → enterprise/DW upsert with surrogate keys (252-304).
 
 Differences by design (each justified in SURVEY.md §7):
-- pivot is ONE ``groupBy().pivot()`` (single shuffle) instead of four
-  filter+join passes;
+- pivot is ONE ``groupBy().pivot()`` instead of four filter+join
+  passes; Spark plans it as two aggregations, so it shuffles twice
+  (on iso_code, date, indicator, then on iso_code, date);
 - the countries dim is broadcast;
 - surrogate keys via ``row_number`` window, not ``rdd.zipWithIndex``;
 - no ``coalesce(1)`` on writes; partitioned parquet + atomic-swap
@@ -28,8 +29,10 @@ Differences by design (each justified in SURVEY.md §7):
 - the incremental day's 8 MERGEs and append are one Spark plan and one
   curated commit: the per-source updates are broadcast left joins onto
   the curated fact, the new day's slice is unioned in, and the result
-  overwrites the table, so the snapshots are scanned and diffed once
-  per day rather than once per commit;
+  overwrites the table. The insert assembly, the update frames and the
+  countries mapping each project the diffs differently, so the plan
+  still scans today's owid snapshot 4 times, each other today-snapshot
+  twice and each of yesterday's snapshots once;
 - the full refresh, the day's new curated rows and every enterprise
   load are numbered by a single ``row_number`` window
   (:func:`~fsc_etl_spark.operators.keys.surrogate_keys`). A day's slice
@@ -174,8 +177,9 @@ def attach_iso(df: DataFrame, mapping: DataFrame) -> DataFrame:
 
 
 def pivot_hospitalizations(hosp: DataFrame) -> DataFrame:
-    """P7 idiomatic: indicator long→wide in one shuffle
-    (vs main.py:106-114's 4 filters + 4 joins)."""
+    """P7 idiomatic: indicator long→wide in one ``pivot()``, which
+    Spark runs as two aggregations and two shuffles (vs
+    main.py:106-114's 4 filters + 4 joins)."""
     return pivot_indicator(
         hosp,
         group_cols=["iso_code", "date"],

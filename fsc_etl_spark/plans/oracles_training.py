@@ -910,7 +910,7 @@ def _replicated_quantizers(sf_dir: str):
     oracles).
 
     What this verifies and what it doesn't: the TRAINING recipe is
-    shared code by construction (first 4096 vectors by vec_id ->
+    shared code by construction (first TRAIN_LIMIT vectors by vec_id ->
     float64 widening -> L2 normalize -> `_lloyd_codebook`, the same
     deterministic numpy on the same sample — DuckDB's parquet read
     hands back the identical float32 values Spark's collect does, and
@@ -933,21 +933,28 @@ def _replicated_quantizers(sf_dir: str):
     import duckdb
     import numpy as np
 
-    from fsc_etl_spark.operators.similarity import _lloyd_codebook
+    from fsc_etl_spark.operators.similarity import (
+        TRAIN_ITERS,
+        TRAIN_LIMIT,
+        _lloyd_codebook,
+    )
 
     con = duckdb.connect()
     try:
         rows = con.execute(
             f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
-            "ORDER BY vec_id LIMIT 4096"
+            f"ORDER BY vec_id LIMIT {TRAIN_LIMIT}"
         ).fetchall()
     finally:
         con.close()
     X = np.array([r[0] for r in rows], dtype="float64")
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    ivf = _lloyd_codebook(X, 8, 10)
+    ivf = _lloyd_codebook(X, 8, TRAIN_ITERS)
     sub = X.shape[1] // 8
-    pq = [_lloyd_codebook(X[:, s * sub : (s + 1) * sub], 16, 10) for s in range(8)]
+    pq = [
+        _lloyd_codebook(X[:, s * sub : (s + 1) * sub], 16, TRAIN_ITERS)
+        for s in range(8)
+    ]
     return ivf, pq
 
 

@@ -556,7 +556,7 @@ def streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
     from fsc_etl_spark.streaming.pipeline import run_to_memory
 
     media = documents_as_ppm_media(
-        t(spark, sf, "documents").filter(F.col("doc_id") < 200), width=12, height=8
+        t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     )
     d = tempfile.mkdtemp(prefix="fsc_stream_media_")
     for r in media.select("media_id", "content").collect():
@@ -1087,6 +1087,7 @@ def _streaming_mg_oracle(n_batches: int = 4) -> str:
     step = (hi - lo) // n + 1. Every prune is the value-based
     subtract-(k+1)th under (cnt DESC, tok ASC) — deterministic, so
     the fold is a pure function of the fixture."""
+    from fsc_etl_spark.operators.sketches import MG_SHARDS
     from fsc_etl_spark.plans.corpus_stats import _LT, MG_K
 
     kp1 = MG_K + 1
@@ -1107,7 +1108,7 @@ def _streaming_mg_oracle(n_batches: int = 4) -> str:
         chain.append(
             f"""pc{i} AS (
   SELECT CAST(('0x' || substr(md5('mg:' || CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % 16 AS shard,
+              AS BIGINT) % {MG_SHARDS} AS shard,
          tok, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM alltok WHERE batch = {i} GROUP BY shard, tok
 )"""

@@ -191,9 +191,7 @@ def simhash_signature(spark: SparkSession, sf: str) -> DataFrame:
 def simhash_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """Banded SimHash blocking + exact Hamming verify (<= 3 of 60;
     4×15-bit bands keep band collisions ~n²/2^15)."""
-    return _simhash_pairs(
-        t(spark, sf, "documents"), n_bits=60, band_bits=15, max_hamming=3
-    )
+    return _simhash_pairs(t(spark, sf, "documents"))
 
 
 def dedup_cluster_assign(spark: SparkSession, sf: str) -> DataFrame:
@@ -227,9 +225,9 @@ def cluster_soft_dedup_sample(spark: SparkSession, sf: str) -> DataFrame:
     expectation while flattening duplication mass. The draw is
     RNG-free and integer-exact: keep iff
     ``md5_bucket(doc_id) * cluster_size < 65536`` with the first-4-hex
-    bucket (the same deterministic rule the mixture resampler and the
-    quantizer train_fraction use), so singletons always survive and a
-    size-k cluster keeps ~1 expected doc.
+    bucket (the same deterministic rule the mixture resampler uses),
+    so singletons always survive and a size-k cluster keeps ~1
+    expected doc.
 
     Scale shape: MinHash-LSH candidate pairs (banded, never
     all-pairs) + O(log n)-round star connected components for the
@@ -499,7 +497,7 @@ def embed_knn_label_audit(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: see operators/similarity.knn_label_agreement — one
     cell-blocked pair join, per-vector windows, two vec-keyed aggs."""
     return knn_label_agreement(
-        t(spark, sf, "embeddings", parallel=True), IVF_PINNED_CENTROIDS, k=3
+        t(spark, sf, "embeddings", parallel=True), IVF_PINNED_CENTROIDS
     )
 
 
@@ -536,7 +534,7 @@ def embed_knn_audit_trained(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = t(spark, sf, "embeddings", parallel=True)
     cb = train_codebook(emb, k=16, iters=2)
-    return knn_label_agreement(emb, cb, k=3, assign_strategy="pandas")
+    return knn_label_agreement(emb, cb, assign_strategy="pandas")
 
 
 def embed_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1245,7 +1243,7 @@ def multimodal_resize_codec(spark: SparkSession, sf: str) -> DataFrame:
     item 7)."""
     from fsc_etl_spark.operators.multimodal import documents_as_ppm_media, resize_images
 
-    media = documents_as_ppm_media(t(spark, sf, "documents"), width=12, height=8)
+    media = documents_as_ppm_media(t(spark, sf, "documents"))
     out = resize_images(media, width=6, height=4)
     return out.select(
         "media_id",
@@ -1294,7 +1292,7 @@ def audio_clip_stats(spark: SparkSession, sf: str) -> DataFrame:
     misaligned frame anywhere in encode→decode breaks the match."""
     from fsc_etl_spark.operators.multimodal import analyze_audio, documents_as_wav_media
 
-    media = documents_as_wav_media(t(spark, sf, "documents"), sample_rate=16_000)
+    media = documents_as_wav_media(t(spark, sf, "documents"))
     return analyze_audio(media).select(
         "media_id", "n_frames", "peak", "energy", "duration_us"
     )
@@ -1307,7 +1305,7 @@ def audio_downsample_stats(spark: SparkSession, sf: str) -> DataFrame:
     audio pipeline has."""
     from fsc_etl_spark.operators.multimodal import analyze_audio, documents_as_wav_media
 
-    media = documents_as_wav_media(t(spark, sf, "documents"), sample_rate=16_000)
+    media = documents_as_wav_media(t(spark, sf, "documents"))
     return analyze_audio(media, downsample_factor=4).select(
         "media_id", "n_frames", "peak", "energy", "duration_us"
     )
@@ -1471,7 +1469,7 @@ def binary_file_ingest(spark: SparkSession, sf: str) -> DataFrame:
     from fsc_etl_spark.sources.readers import read_binary_files
 
     media = documents_as_ppm_media(
-        t(spark, sf, "documents").filter(F.col("doc_id") < 200), width=12, height=8
+        t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     )
     d = tempfile.mkdtemp(prefix="fsc_binfiles_")
     # Fixture staging (driver-side by design — writing loose media

@@ -6,8 +6,9 @@ time parser and disables the Delta retention check). Here session
 construction is centralized and scale-aware instead:
 
 - AQE on (runtime coalescing, skew-join handling, broadcast re-plan);
-- shuffle partitions sized to the local core count rather than the
-  200 default (on a real cluster this would be ~2-3x total cores);
+- a fixed ``DEFAULT_SHUFFLE_PARTITIONS`` = 32 shuffle partitions
+  rather than the 200 default, whatever the core count (on a real
+  cluster this would be ~2-3x total cores);
 - UTC session timezone so timestamp semantics match ANSI engines
   (DuckDB oracle parity);
 - Arrow enabled for the pandas-UDF slow path.

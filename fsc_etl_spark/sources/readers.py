@@ -19,6 +19,8 @@ At 100 TB the relevant properties are:
 
 from __future__ import annotations
 
+import os
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,11 +88,40 @@ def read_parquet_table(
     return df
 
 
-#: memo of parallel_scan's under-split probe — scan split count is a
-#: property of the fixture file layout (files x row groups) plus the
-#: session's parallelism target, neither of which changes mid-process
-#: (same invalidation assumption as the footer memo below).
-_SCAN_UNDERSPLIT_CACHE: dict[tuple[str, int], bool] = {}
+def _local_listing(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """(name, size, mtime_ns) of every file under ``path``, sorted; None
+    when ``path`` is not on the local filesystem or does not exist.
+
+    The two path-keyed memos below key on this listing as well as the
+    path, so a table rewritten at the same path (new part files, or the
+    same names with new sizes or times) misses the memo.
+    """
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        if not path.startswith("file:"):
+            return None
+        path = re.sub(r"^file:(//)?", "", path)
+    if not os.path.exists(path):
+        return None
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(root, n) for root, _, names in os.walk(path) for n in names]
+    out = []
+    for f in sorted(files):
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _memo_key(path: str, *extra) -> tuple | None:
+    listing = _local_listing(path)
+    return None if listing is None else (path, *extra, listing)
+
+
+#: memo of parallel_scan's under-split probe, keyed by (path, shuffle
+#: partitions, file listing): the scan's split count follows the file
+#: layout (files x row groups) and the session's parallelism target.
+_SCAN_UNDERSPLIT_CACHE: dict[tuple, bool] = {}
 
 
 def parallel_scan(df, key: str | None = None):
@@ -110,12 +141,12 @@ def parallel_scan(df, key: str | None = None):
     sf0.1, while cheap partial-agg scans LOSE ~0.2-0.3 s to the added
     exchange — so it is deliberately not reader-global).
 
-    ``key``: optional memo key (use the table path) — the probe costs
-    one driver-side plan of the scan; layout never changes
-    mid-process.
+    ``key``: optional table path to memoise the probe under — the
+    probe costs one driver-side plan of the scan. Only a local path is
+    memoised, and a rewrite of its files misses the memo.
     """
     n = shuffle_parallelism(df)
-    memo_key = (key, n) if key is not None else None
+    memo_key = _memo_key(key, n) if key is not None else None
     under = _SCAN_UNDERSPLIT_CACHE.get(memo_key) if memo_key else None
     if under is None:
         under = df.rdd.getNumPartitions() * 2 < n
@@ -124,16 +155,11 @@ def parallel_scan(df, key: str | None = None):
     return df.repartition(n) if under else df
 
 
-#: memo of events_ts_is_long by path — the encoding is a property of
-#: the fixture FILE, which never changes mid-process, while dozens of
-#: event-reading queries each paid the footer-inference round trip at
-#: plan-build time (r13: ~0.1 s x every events query in the bench).
-#: INVALIDATION ASSUMPTION (ADVICE r13): fixtures are generated before
-#: the process starts and never rewritten mid-process — true for the
-#: bench/driver/test contracts. If a workflow ever regenerates a
-#: fixture in-process with a different ts encoding, key this by
-#: (path, mtime) or clear the dict.
-_EVENTS_TS_IS_LONG_CACHE: dict[str, bool] = {}
+#: memo of events_ts_is_long, keyed by (path, file listing): dozens of
+#: event-reading queries would otherwise each pay the footer-inference
+#: round trip at plan-build time (~0.1 s per events query in the
+#: bench), and a fixture rewritten with another ts encoding misses it.
+_EVENTS_TS_IS_LONG_CACHE: dict[tuple, bool] = {}
 
 
 def events_ts_is_long(spark: SparkSession, path: str) -> bool:
@@ -141,18 +167,20 @@ def events_ts_is_long(spark: SparkSession, path: str) -> bool:
     TIMESTAMP(NANOS), which Spark scans as a raw long (nanosAsLong).
 
     Footer-only schema inference — no data is read, so this is a cheap
-    per-plan probe even on object storage (and memoized per path: the
-    encoding is a generation-time property of the fixture file). On a
+    per-plan probe even on object storage (and memoised per local path
+    and file listing). On a
     session without ``spark.sql.legacy.parquet.nanosAsLong`` (the
     driver's vanilla session), inference over a NANOS file throws
     PARQUET_TYPE_ILLEGAL — that exception itself identifies the nanos
     encoding, which the explicit LongType scan schema still reads fine.
     """
-    cached = _EVENTS_TS_IS_LONG_CACHE.get(path)
+    memo_key = _memo_key(path)
+    cached = _EVENTS_TS_IS_LONG_CACHE.get(memo_key) if memo_key else None
     if cached is not None:
         return cached
     result = _events_ts_is_long_uncached(spark, path)
-    _EVENTS_TS_IS_LONG_CACHE[path] = result
+    if memo_key:
+        _EVENTS_TS_IS_LONG_CACHE[memo_key] = result
     return result
 
 

@@ -274,12 +274,13 @@ def test_nn_within_label_symmetric_clusters(emb):
 
 
 def test_ivf_sampled_training_deterministic(emb):
-    """train_fraction < 1 fits the quantizer on a deterministic md5
-    sample: two runs give identical results (no RNG state), and the
-    full-probe configuration still returns exact top-k ids because
-    every vector is assigned to some cell regardless of training."""
+    """The quantizer trains on a deterministic sample (the first
+    vectors by id): two runs give identical results (no RNG state),
+    and the full-probe configuration still returns exact top-k ids
+    because every vector is assigned to some cell regardless of
+    training."""
     queries = emb.filter(F.col("vec_id") < 3)
-    kw = dict(k=3, n_centroids=3, nprobe=3, train_fraction=0.5)
+    kw = dict(k=3, n_centroids=3, nprobe=3)
     a = sorted(tuple(r) for r in ivf_topk(emb, queries, **kw).collect())
     b = sorted(tuple(r) for r in ivf_topk(emb, queries, **kw).collect())
     assert a == b

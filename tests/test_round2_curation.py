@@ -363,7 +363,7 @@ def test_scaled_codebook_assignment_identity(spark, sf_smoke):
     emb = read_parquet_table(spark, sf_smoke, "embeddings")
     for fn, kw in (
         (semdedup_prune, {"threshold": 0.30}),
-        (knn_label_agreement, {"k": 3}),
+        (knn_label_agreement, {}),
     ):
         a = fn(emb, IVF_PINNED_CENTROIDS, assign_strategy="expr", **kw)
         b = fn(emb, IVF_PINNED_CENTROIDS, assign_strategy="pandas", **kw)
